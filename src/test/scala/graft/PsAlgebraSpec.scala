@@ -85,8 +85,25 @@ object Tables0 {
   }
 }
 
+/** Runs `body` once per `spark.sql.shuffle.partitions` value, then
+  * restores the shared session's setting. */
+object PartitionSweep {
+  def apply[T](spark: org.apache.spark.sql.SparkSession, ns: Seq[Int])(body: Int => T): Seq[T] = {
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    try ns.map { n => spark.conf.set(key, n.toLong); body(n) }
+    finally spark.conf.set(key, saved)
+  }
+
+  /** Raw bits, so -0.0/0.0 and NaN payloads count as differences. */
+  def bits(v: Seq[Double]): Seq[Long] = v.map(java.lang.Double.doubleToRawLongBits)
+}
+
 /** Full training-loop convergence (SURVEY §3.2/§3.4 harness). */
 class MfTrainerSpec extends SparkSpec {
+  import org.apache.spark.sql.functions._
+  import spark.implicits._
+
   test("MF training loop monotonically reduces MSE on the ratings matrix") {
     val ratings = Tables0.ratings(spark, sfDir)
     val (p, q, losses) = ps.MfTrainer.train(spark, ratings, k = 8, iters = 4)
@@ -94,23 +111,126 @@ class MfTrainerSpec extends SparkSpec {
     // strictly decreasing loss trajectory (full-batch, small lr)
     losses.sliding(2).foreach { case Seq(a, b) => assert(b < a, losses) }
     // factors stay finite and k-dimensional
-    import org.apache.spark.sql.functions._
     assert(p.filter(size(col("vec")) =!= 8).count() === 0)
     assert(q.filter(size(col("vec")) =!= 8).count() === 0)
+    operators.GraphOps.freeCheckpoint(p)
+    operators.GraphOps.freeCheckpoint(q)
   }
+
+  test("MF losses and factors are bitwise equal at 1, 4 and 7 shuffle partitions") {
+    val ratings = Tables0.ratings(spark, sfDir)
+    def model(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.get(0) -> PartitionSweep.bits(r.getSeq[Double](1))).toMap
+    val setting = spark.conf.get("spark.sql.shuffle.partitions")
+    val runs = PartitionSweep(spark, Seq(1, 4, 7)) { _ =>
+      val (p, q, losses) = ps.MfTrainer.train(spark, ratings, k = 8, iters = 4)
+      val out = (PartitionSweep.bits(losses), model(p), model(q))
+      operators.GraphOps.freeCheckpoint(p)
+      operators.GraphOps.freeCheckpoint(q)
+      out
+    }
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === setting)
+    assert(runs.head._2.nonEmpty && runs.head._3.nonEmpty)
+    runs.tail.foreach { r =>
+      assert(r._1 === runs.head._1, "losses differ across partition counts")
+      assert(r._2 === runs.head._2, "user factors differ across partition counts")
+      assert(r._3 === runs.head._3, "item factors differ across partition counts")
+    }
+  }
+
+  test("MF init is bit for bit the md5-seeded SQL form") {
+    val ids = Seq("0", "7", "123456789012", "-5", "a:b", "ü")
+    val sql = ids.toDF("id").select(col("id"), expr(
+      "transform(sequence(0, 7), j -> cast(-0.1 as double) + " +
+        "(pmod(cast(conv(substring(md5(concat('21:', id, ':', j)), 1, 8), 16, 10) as bigint), 1000) " +
+        "/ cast(1000 as double)) * cast(0.2 as double))").as("vec"))
+      .collect().map(r => r.getString(0) -> PartitionSweep.bits(r.getSeq[Double](1))).toMap
+    ids.foreach(id => assert(PartitionSweep.bits(ps.MfTrainer.initVec(21, id, 8).toSeq) === sql(id), id))
+    assert(ps.MfTrainer.initVec(21, 123456789012L, 8).toSeq ===
+      ps.MfTrainer.initVec(21, "123456789012", 8).toSeq)
+  }
+
+  test("MF output keeps the id column's type") {
+    val ratings = Seq(("u1", 3, 4.0), ("u2", 3, 2.0), ("u1", 5, 1.0)).toDF("user", "item", "rating")
+    val (p, q, _) = ps.MfTrainer.train(spark, ratings, k = 2, iters = 1)
+    assert(p.schema("id").dataType === org.apache.spark.sql.types.StringType)
+    assert(q.schema("id").dataType === org.apache.spark.sql.types.IntegerType)
+    assert(p.collect().map(_.getString(0)).sorted.toSeq === Seq("u1", "u2"))
+    assert(q.collect().map(_.getInt(0)).sorted.toSeq === Seq(3, 5))
+    operators.GraphOps.freeCheckpoint(p)
+    operators.GraphOps.freeCheckpoint(q)
+  }
+
+  test("MF train releases all it persists; freeCheckpoint frees the model") {
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val (p, q, _) = ps.MfTrainer.train(spark, Tables0.ratings(spark, sfDir), k = 4, iters = 2)
+    assert(p.count() > 0 && q.count() > 0)
+    assert(sc.getPersistentRDDs.size === before.size + 2, "only the two model RDDs stay")
+    operators.GraphOps.freeCheckpoint(p)
+    operators.GraphOps.freeCheckpoint(q)
+    assert(sc.getPersistentRDDs.keySet === before)
+    assert(CacheProbe.isEmpty(spark))
+  }
+
+  test("MF rating outside the fixed-point range throws, naming the value") {
+    val ratings = Seq((1L, 1L, 3.0), (1L, 2L, 1e12), (2L, 1L, 4.0)).toDF("user", "item", "rating")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = intercept[ArithmeticException](ps.MfTrainer.train(spark, ratings, k = 4, iters = 2))
+    val v = """value (\S+) outside""".r.findFirstMatchIn(e.getMessage).map(_.group(1).toDouble)
+    assert(v.exists(_ > 1e23), e.getMessage)   // e*e of the 1e12 rating
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
+  }
+}
+
+/** No DataFrame is registered in the session's CacheManager. */
+object CacheProbe {
+  def isEmpty(spark: org.apache.spark.sql.SparkSession): Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sharedState.cacheManager.isEmpty
 }
 
 /** PA full-loop training: hinge loss decreases, accuracy beats chance. */
 class PaTrainerSpec extends SparkSpec {
+  import org.apache.spark.sql.functions._
+  import spark.implicits._
+
+  private def embeddings = graft.sources.Tables.embeddings(spark, sfDir)
+    .select(expr("transform(embedding, v -> cast(v as double))").as("x"),
+      when(col("label") >= 5, 1.0).otherwise(-1.0).as("y"))
+
   test("PA training loop reduces hinge loss on the embeddings") {
-    import org.apache.spark.sql.functions._
-    val data = graft.sources.Tables.embeddings(spark, sfDir)
-      .select(expr("transform(embedding, v -> cast(v as double))").as("x"),
-        when(col("label") >= 5, 1.0).otherwise(-1.0).as("y"))
-    val (w, metrics) = ps.PaTrainer.train(spark, data, dim = 64, iters = 5)
+    val (w, metrics) = ps.PaTrainer.train(spark, embeddings, dim = 64, iters = 5)
     assert(w.length === 64)
     assert(metrics.size === 5)
     assert(metrics.last._1 < metrics.head._1, metrics)   // hinge decreased
     assert(metrics.last._2 > 0.5, metrics)               // beats chance
+  }
+
+  test("PA weights and metrics are bitwise equal at 1, 4 and 7 partitions") {
+    val setting = spark.conf.get("spark.sql.shuffle.partitions")
+    val runs = PartitionSweep(spark, Seq(1, 4, 7)) { n =>
+      val (w, metrics) = ps.PaTrainer.train(spark, embeddings.repartition(n), dim = 64, iters = 5)
+      (PartitionSweep.bits(w.toSeq), metrics.map(m => PartitionSweep.bits(Seq(m._1, m._2))))
+    }
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === setting)
+    runs.tail.foreach(r => assert(r === runs.head, "PA differs across partition counts"))
+  }
+
+  test("PA train releases its cached rows") {
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    ps.PaTrainer.train(spark, embeddings, dim = 64, iters = 2)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
+    assert(CacheProbe.isEmpty(spark))
+  }
+
+  test("PA huge feature overflows the fixed-point hinge sum and throws, naming it") {
+    // iteration 1 sets w0 = 10 * 0.5 / 11; iteration 2's hinge on the
+    // huge row is then 1 + w0 * 1e15, far outside the range
+    val data = (Seq.fill(10)((Seq(1.0, 0.0), 1.0)) :+ ((Seq(1e15, 0.0), -1.0))).toDF("x", "y")
+    val e = intercept[ArithmeticException](ps.PaTrainer.train(spark, data, dim = 2, iters = 2))
+    val v = """value (\S+) outside""".r.findFirstMatchIn(e.getMessage).map(_.group(1).toDouble)
+    assert(v.exists(_ > 4e14), e.getMessage)
   }
 }
