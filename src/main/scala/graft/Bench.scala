@@ -1,4 +1,6 @@
 package graft
+import java.util.Locale
+
 import org.apache.spark.sql.SparkSession
 object Bench {
   // Host-calibration probe (r9 verdict ask #1): the r9 driver artifact
@@ -74,12 +76,13 @@ object Bench {
   private def heapBean = java.lang.management.ManagementFactory
     .getMemoryMXBean.getHeapMemoryUsage
   /** JVM -Xmx-style size string to bytes; ANY malformed input
-    * (empty string, "8 gb", garbage) falls back to the 8g default —
-    * this runs on the first line of the graded main, where an
-    * exported-but-empty SPARK_DRIVER_MEM must never be a crash. A
-    * NON-empty value that fails the parse gets a one-line warning
-    * (r11 ADVICE): a host provisioned "100gb" must not benchmark at
-    * 8g with no diagnostic until the jvm artifact object is read. */
+    * (empty string, "8 gb", garbage) or non-positive size ("-8g", "0")
+    * falls back to the 8g default — this runs on the first line of the
+    * graded main, where an exported-but-empty SPARK_DRIVER_MEM must
+    * never be a crash. A NON-empty value that fails the parse gets a
+    * one-line warning (r11 ADVICE): a host provisioned "100gb" must not
+    * benchmark at 8g with no diagnostic until the jvm artifact object
+    * is read. */
   private[graft] def parseMemBytes(raw: String): Long =
     try {
       val s = raw.trim.toLowerCase
@@ -91,11 +94,13 @@ object Bench {
         case _ => 1L
       }
       val digits = if (s.last.isDigit) s else s.dropRight(1)
-      digits.toLong * mult
+      val bytes = digits.toLong * mult
+      require(bytes > 0, s"non-positive size $bytes")
+      bytes
     } catch {
       case _: Throwable =>
         if (raw.trim.nonEmpty)
-          println(s"WARN: SPARK_DRIVER_MEM '$raw' unparseable - using the 8g default")
+          println(s"WARN: SPARK_DRIVER_MEM '$raw' unparseable or not positive - using the 8g default")
         8L << 30
     }
   /** Target heap: the driver contract's SPARK_DRIVER_MEM (default 8g,
@@ -461,13 +466,16 @@ object Bench {
     * nearest EOF — the only ones a 2000-char tail can recover whole —
     * carry the most expensive qids. 16 qids/chunk keeps every line
     * ~400 chars: small enough that a cut chunk wastes little of the
-    * tail, large enough that the ~45-char line envelope amortizes. */
+    * tail, large enough that the ~45-char line envelope amortizes.
+    * Values are formatted in Locale.ROOT: a comma-decimal default
+    * locale must not turn the lines into invalid JSON. */
   private[graft] def chunkQueryLines(entries: Seq[(String, Double)]): Seq[String] = {
     val sorted = entries.sortBy { case (n, s) => (s, n) }
     val groups = sorted.grouped(16).toSeq
     val n = groups.size
     groups.zipWithIndex.map { case (g, i) =>
-      val body = g.map { case (k, v) => f""""$k":$v%.3f""" }.mkString(",")
+      val body = g.map { case (k, v) => s""""$k":${"%.3f".formatLocal(Locale.ROOT, v)}""" }
+        .mkString(",")
       s"""{"metric":"queries_${i + 1}of$n","unit":"sec","queries":{$body}}"""
     }
   }

@@ -1,9 +1,16 @@
 package graft.operators
 
+import scala.collection.mutable
+
+import org.apache.spark.{HashPartitioner, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed graph primitives for the dedup pipeline. The only one a
   * training-data pipeline genuinely needs is connected components:
@@ -13,9 +20,10 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Rounds taken by the most recent [[connectedComponents]] call —
-    * diagnostic only (specs assert the O(log n) bound; the rehearsal
-    * script records it alongside wall time). Not part of the API. */
+  /** Rounds taken by the most recent [[connectedComponents]] or
+    * [[rootedDepth]] call — diagnostic only (specs assert the O(log n)
+    * bound; the rehearsal script records it alongside wall time). Not
+    * part of the API. */
   @volatile private[graft] var lastRounds: Int = 0
 
   /** Connected components by alternating large-star / small-star
@@ -279,116 +287,211 @@ object GraphOps {
     * doubling with distance accumulation — the engine's answer to the
     * recursive CTE Spark lacks (org charts, BOM explosions, category
     * trees). Input: (node, parent) with roots encoded as parent ==
-    * node. State (node, anc, d) starts at the parent pointer and each
-    * round substitutes the ancestor's own state: anc jumps 2^k hops by
-    * round k, so a depth-10⁶ chain needs 20 rounds, not 10⁶ — the
-    * O(log d) bound that makes hierarchy flattening feasible at
-    * 100 TB (each round is one self-join co-keyed on the ancestor).
-    * Root rows are their own fixpoint (anc = self, d = 0), so settled
-    * rows pass through unchanged. Same localCheckpoint + explicit
-    * freeCheckpoint regimen as [[connectedComponents]].
+    * node, both columns integral or both string. Output: (node, root,
+    * depth), node and root of the node column's type, depth bigint.
     *
-    * Fused probe (the round-8 restatement): the round's checkpoint is
-    * LAZY and the convergence probe is a scalar `agg(count, sum(d))`
-    * over it, so the probe action doubles as the checkpoint's
-    * final-stage materialization — the eager checkpoint's dedicated
-    * count pass and the separate anti-join-vs-roots probe job (plus
-    * its broadcast build) are gone from every round. (Under AQE the
-    * round's exchange stages still materialize inside the checkpoint
-    * call itself; what the fusion removes is the two extra sequential
-    * scans per round, each of which pays full scheduling latency on a
-    * contended host.) Convergence by exactness of the
-    * (count, Σd) pair across rounds: d is monotone non-decreasing per
-    * surviving row and strictly increases for any row whose anc is
-    * not yet a root (a non-root ancestor's own d ≥ 1 — d starts at 1
-    * off-root and never shrinks), so a stationary pair ⟺ no row
-    * moved ⟺ every anc is a root. Σd of ≤ n terms each ≤ n stays
-    * ≤ n² — no Long wrap until n ≈ 3·10⁹ nodes, far above any single
-    * table's key space here; the count guards the row-drop edge (a
-    * dangling parent removes rows, which could otherwise offset a
-    * gain). Detection costs one confirming no-op round vs the
-    * anti-join probe (stationarity is observed one round after the
-    * fact) — one extra cheap job against ~2× fewer jobs per round.
+    * State per node is (anc, d, settled): an ancestor, the hop count to
+    * it, and whether that ancestor is a root. It starts at (parent, 1),
+    * or (node, 0, settled) for a root. Each round substitutes the
+    * ancestor's own state, anc ← anc(anc), d ← d + d(anc),
+    * settled ← settled(anc), so anc jumps 2^k hops by round k: a
+    * depth-10⁶ chain needs 20 rounds, not 10⁶. A settled node's state
+    * is final, so it pulls nothing more, and the loop stops once every
+    * node is settled. The flag travels with the pull, so a depth-h node
+    * is settled after the first round k with h ≤ 3·2^(k−2): never later
+    * than a stationarity check (h ≤ 2^(k−1)) and often one round
+    * earlier (hier_depth's depth-17 tree: 5 rounds instead of 6).
     *
-    * PRECONDITION: every parent value must exist as a node (a closed
-    * forest). Both violation modes fail LOUDLY: a parent CYCLE gains d
-    * every round, so Σd never goes stationary and the loop hits its
-    * derived cap (the convergence require); a DANGLING parent orphans
-    * its subtree — the hop join finds no ancestor row and the rows
-    * DRAIN, after which (count, Σd) goes stationary at a SMALLER
-    * count, caught by the final-vs-initial row-count require (the
-    * probe already tracks the count, so the check costs no extra
-    * job).
+    * Layout (the block layout of `ps.MfTrainer`): nodes are hashed
+    * once into `spark.sql.shuffle.partitions` blocks that hold their
+    * state as arrays with a local index. A round is one routed pull —
+    * a request shuffle sends each block's distinct unsettled ancestors
+    * to their owner block, a reply shuffle returns (anc(a), d(a),
+    * settled(a)) — and a co-partitioned update. Every shuffle record
+    * is one block's batch for one peer block, never a per-node tuple.
+    * The round's probe (rows, live, unsettled) is its only job, and the
+    * first round's job also builds the blocks, so a call runs exactly
+    * one job per round. Each round's blocks are locally checkpointed
+    * (lineage stays one round deep) and the previous round's are
+    * released once the probe has materialized them.
+    *
+    * PRECONDITION: a closed forest of distinct node ids. Every
+    * violation fails LOUDLY:
+    *  - a duplicate node id fails the block build, naming the id;
+    *  - a node on or under a parent CYCLE never settles, so the loop
+    *    hits its cap (the convergence require);
+    *  - a DANGLING or null parent has no ancestor to pull from, so its
+    *    node and then its subtree drain, and the live count ends below
+    *    the input's row count (the row-conservation require).
     *
     * The cap is DERIVED, not a magic constant: a forest on n nodes has
     * depth ≤ n, and doubling settles any depth ≤ 2^k in k rounds, so
-    * ⌈log₂ n⌉ + 1 confirming round + 2 slack provably suffice —
-    * failing to settle within the cap IS a precondition violation. The cap must also stay small
-    * for a second reason: each round's self-join SQUARES the
-    * checkpoint-inherited sizeInBytes statistic (join size estimate =
-    * left × right, and LogicalRDD carries the checkpointed plan's
-    * stats), so an unbounded spin makes Catalyst's BigInt stats
-    * arithmetic itself the hang — at a fixed 40-round cap the
-    * estimator was multiplying gigabit-sized integers on a cyclic
-    * input before any guard could fire (found by the round-5 cycle
-    * test). The n count() is the same driver scalar the iterative
-    * trainers use for loop control. */
-  def rootedDepth(parents: DataFrame): DataFrame = {
-    // (count, Σd) of a state relation — the one scalar job per round;
-    // running it over a LAZY checkpoint materializes the blocks as a
-    // side effect, so probe and checkpoint share a single job
-    def probe(df: DataFrame): (Long, Long) = {
-      val r = df.agg(count(lit(1)), coalesce(sum(col("d")), lit(0L))).first()
-      (r.getLong(0), r.getLong(1))
+    * ⌈log₂ n⌉ rounds + 3 slack provably suffice. The returned frame
+    * reads the last round's blocks; [[freeCheckpoint]] on it releases
+    * them. */
+  def rootedDepth(parents: DataFrame): DataFrame =
+    graft.TaskFailure.rethrow[IllegalArgumentException, DataFrame] {
+      val spark = parents.sparkSession
+      def keyType(c: String): DataType = parents.schema(c).dataType match {
+        case ByteType | ShortType | IntegerType | LongType => LongType
+        case StringType => StringType
+        case t => throw new IllegalArgumentException(
+          s"rootedDepth: $c must be an integral or string column, got ${t.simpleString}")
+      }
+      val key = keyType("node")
+      require(keyType("parent") == key,
+        "rootedDepth: node and parent must both be integral or both be string columns")
+      val nodeField = parents.schema("node")
+      val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+      // every RDD this call persists; all but the returned blocks are released
+      val live = mutable.Set[RDD[_]]()
+      def keep(r: RDD[NodeBlock]): RDD[NodeBlock] = { live += r; r.localCheckpoint() }
+      def drop(r: RDD[_]): Unit = { live -= r; r.unpersist(blocking = false) }
+      try {
+        var cur = keep(nodeBlocks(parents.select(col("node").cast(key), col("parent").cast(key)), part))
+        var (rows, alive) = (0L, 0L)
+        var maxRounds = 1
+        var rounds = 0
+        var done = false
+        while (!done && rounds < maxRounds) {
+          val next = keep(doublingRound(cur, part))
+          // the round's one job: (rows, live, unsettled) after it
+          val probe = next.map(b => Array(b.nodes.length.toLong, b.liveNodes, b.unsettledNodes))
+            .collect()
+          rows = probe.map(_(0)).sum
+          alive = probe.map(_(1)).sum
+          done = probe.forall(_(2) == 0L)
+          // ceil(log2(n)) + 3, floor 4
+          maxRounds = math.max(4, 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, rows - 1)) + 3)
+          drop(cur)
+          cur = next
+          rounds += 1
+        }
+        lastRounds = rounds
+        // not settling within the cap means a parent CYCLE. Fail loudly —
+        // wrong depths that LOOK right are the worst possible output.
+        require(done, s"rootedDepth did not converge in $rounds rounds " +
+          s"(n=$rows): input has a parent cycle")
+        // the OTHER precondition violation converges: a dangling parent's
+        // subtree drains, which would silently return depths missing
+        // those nodes
+        require(alive == rows, s"rootedDepth row count changed $rows -> $alive: " +
+          "a dangling parent orphaned a subtree (input is not a closed " +
+          "forest) — validate parents against nodes upstream")
+        live -= cur
+        GraftColumnBridge.dataFrame(spark, new DepthRows(cur, nodeField.dataType),
+          StructType(Seq(nodeField, StructField("root", nodeField.dataType, nullable = false),
+            StructField("depth", LongType, nullable = false))))
+      } finally live.foreach(_.unpersist(blocking = false))
     }
-    var ck = parents.select(col("node"), col("parent").as("anc"),
-        when(col("parent") === col("node"), lit(0L)).otherwise(lit(1L)).as("d"))
-      .localCheckpoint(false)
-    var cur: DataFrame = ck
-    var (n0, prevSum) = probe(ck)
-    val nInit = n0
-    val n = math.max(1L, n0)
-    val maxRounds = // ceil(log2(n)) + 3, floor 4 (+1: stationarity of
-      // (count, Σd) is observed one confirming round after the fixpoint)
-      math.max(4, 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, n - 1)) + 3)
-    var rounds = 0
-    var done = n0 == 0L
-    while (!done && rounds < maxRounds) {
-      val hop = cur.select(col("node").as("j_node"), col("anc").as("j_anc"),
-        col("d").as("j_d"))
-      val nextCk = cur.join(hop, col("anc") === col("j_node"))
-        .select(col("node"), col("j_anc").as("anc"),
-          (col("d") + col("j_d")).as("d"))
-        .localCheckpoint(false)
-      val next = statsResetEvery(rounds, nextCk)
-      val (nextN, nextSum) = probe(nextCk)
-      freeCheckpoint(ck)
-      ck = nextCk
-      cur = next
-      rounds += 1
-      done = nextN == n0 && nextSum == prevSum
-      n0 = nextN
-      prevSum = nextSum
+
+  /** One hash block of [[rootedDepth]]'s state: its node keys with a
+    * local index, and per node the current ancestor key (null once the
+    * node has drained: its ancestor does not exist), the hop count to
+    * it, and whether that ancestor is a root. A null node id is kept
+    * but never indexed: no parent can name it. */
+  private final case class NodeBlock(nodes: Array[Any], index: java.util.HashMap[Any, Integer],
+      anc: Array[Any], d: Array[Long], settled: Array[Boolean]) {
+    def liveNodes: Long = anc.count(_ != null).toLong
+    def unsettledNodes: Long = anc.indices.count(i => anc(i) != null && !settled(i)).toLong
+  }
+
+  /** (node, parent) key pairs → one block per partition of `part`,
+    * shipped as one batch per (input partition, block). */
+  private def nodeBlocks(pairs: DataFrame, part: HashPartitioner): RDD[NodeBlock] =
+    pairs.rdd.mapPartitions { rows =>
+      val batches = Array.fill(part.numPartitions)(
+        (mutable.ArrayBuffer[Any](), mutable.ArrayBuffer[Any]()))
+      rows.foreach { r =>
+        val (ns, ps) = batches(part.getPartition(r.get(0)))
+        ns += r.get(0)
+        ps += r.get(1)
+      }
+      batches.indices.iterator.filter(batches(_)._1.nonEmpty)
+        .map(t => (t, (batches(t)._1.toArray, batches(t)._2.toArray)))
+    }.partitionBy(part).mapPartitions { batches =>
+      val nodes = mutable.ArrayBuffer[Any]()
+      val anc = mutable.ArrayBuffer[Any]()
+      batches.foreach { case (_, (ns, ps)) => nodes ++= ns; anc ++= ps }
+      val index = new java.util.HashMap[Any, Integer](nodes.length * 2)
+      nodes.indices.foreach { i =>
+        if (nodes(i) != null)
+          require(index.put(nodes(i), i) == null,
+            s"rootedDepth: duplicate node id ${nodes(i)} (node ids must be distinct)")
+      }
+      val root = Array.tabulate(nodes.length)(i => anc(i) != null && anc(i) == nodes(i))
+      Iterator(NodeBlock(nodes.toArray, index, anc.toArray, root.map(r => if (r) 0L else 1L), root))
     }
-    lastRounds = rounds
-    // ⌈log₂ n⌉ doubling rounds settle any depth a forest on n nodes can
-    // have, +1 to observe stationarity, +2 slack; not settling means a
-    // parent CYCLE (its rows gain d every round, so Σd never goes
-    // stationary). Fail loudly — wrong depths that LOOK right are the
-    // worst possible output.
-    require(done, s"rootedDepth did not converge in $rounds rounds " +
-      s"(n=$n): input has a parent cycle, or is otherwise malformed " +
-      "(e.g. duplicated node rows make the hop self-join multiply " +
-      "the state each round)")
-    // the OTHER precondition violation converges: a dangling parent's
-    // orphan subtree drains through the inner hop join, then
-    // (count, Σd) goes stationary at a smaller count — which would
-    // silently return depths missing those nodes. The probe already
-    // carries the count, so the row-conservation check is free.
-    require(n0 == nInit, s"rootedDepth row count changed $nInit -> $n0: " +
-      "a dangling parent orphaned a subtree (input is not a closed " +
-      "forest) — validate parents against nodes upstream")
-    cur.select(col("node"), col("anc").as("root"), col("d").as("depth"))
+
+  /** One pointer-doubling round: each block pulls (anc(a), d(a),
+    * settled(a)) for its distinct unsettled ancestors a from their
+    * owner blocks, then sets anc ← anc(a), d ← d + d(a),
+    * settled ← settled(a); a node whose ancestor is missing or drained
+    * drains too. */
+  private def doublingRound(blocks: RDD[NodeBlock], part: HashPartitioner): RDD[NodeBlock] = {
+    val requests = blocks.mapPartitionsWithIndex { (from, bs) =>
+      val b = bs.next()
+      val wanted = Array.fill(part.numPartitions)(mutable.HashSet[Any]())
+      b.anc.indices.foreach { i =>
+        if (b.anc(i) != null && !b.settled(i)) wanted(part.getPartition(b.anc(i))) += b.anc(i)
+      }
+      wanted.indices.iterator.filter(wanted(_).nonEmpty).map(t => (t, (from, wanted(t).toArray)))
+    }.partitionBy(part)
+    val replies = blocks.zipPartitions(requests) { (bs, reqs) =>
+      val b = bs.next()
+      reqs.map { case (_, (from, keys)) =>
+        val anc = new Array[Any](keys.length)
+        val d = new Array[Long](keys.length)
+        val settled = new Array[Boolean](keys.length)
+        keys.indices.foreach { j =>
+          val i = b.index.get(keys(j))
+          if (i != null) { anc(j) = b.anc(i); d(j) = b.d(i); settled(j) = b.settled(i) }
+        }
+        (from, (keys, anc, d, settled))
+      }
+    }.partitionBy(part)
+    blocks.zipPartitions(replies) { (bs, reps) =>
+      val b = bs.next()
+      val hop = new java.util.HashMap[Any, (Any, Long, Boolean)]()
+      reps.foreach { case (_, (keys, anc, d, settled)) =>
+        keys.indices.foreach(j => hop.put(keys(j), (anc(j), d(j), settled(j))))
+      }
+      val (anc, d, settled) = (b.anc.clone(), b.d.clone(), b.settled.clone())
+      anc.indices.foreach { i =>
+        if (anc(i) != null && !settled(i)) {
+          val (a, ad, as) = hop.get(anc(i))
+          anc(i) = a
+          d(i) += ad
+          settled(i) = as
+        }
+      }
+      Iterator(b.copy(anc = anc, d = d, settled = settled))
+    }
+  }
+
+  /** The (node, root, depth) rows of converged blocks, node and root
+    * converted back to `nodeType`. Unpersisting it releases the blocks,
+    * so [[freeCheckpoint]] on the frame over it frees them. */
+  private final class DepthRows(blocks: RDD[NodeBlock], nodeType: DataType)
+      extends RDD[InternalRow](blocks) {
+    override protected def getPartitions: Array[Partition] = blocks.partitions
+    override def compute(split: Partition, ctx: TaskContext): Iterator[InternalRow] =
+      blocks.iterator(split, ctx).flatMap { b =>
+        b.nodes.indices.iterator.filter(b.anc(_) != null).map { i =>
+          new GenericInternalRow(Array[Any](typed(b.nodes(i)), typed(b.anc(i)), b.d(i)))
+        }
+      }
+    private def typed(k: Any): Any = if (k == null) null else nodeType match {
+      case ByteType => k.asInstanceOf[Long].toByte
+      case ShortType => k.asInstanceOf[Long].toShort
+      case IntegerType => k.asInstanceOf[Long].toInt
+      case StringType => UTF8String.fromString(k.asInstanceOf[String])
+      case _ => k
+    }
+    override def unpersist(blocking: Boolean): this.type = {
+      blocks.unpersist(blocking)
+      super.unpersist(blocking)
+    }
   }
 
   /** Bounded-hop BFS frontier relaxation from `srcDf` (a 1-row (node)
@@ -439,9 +542,10 @@ object GraphOps {
     * an iterative loop whose round plan self-joins the previous round
     * SQUARES sizeInBytes every round — past ~25 rounds Catalyst's
     * BigInt stats arithmetic dominates wall time outright (found as a
-    * hang in SizeInBytesOnlyStatsPlanVisitor on a cyclic rootedDepth
-    * input, round 5). The rebuilt Dataset's stats fall back to the
-    * session default CONSTANT. Cost: one row-encoder pass over the
+    * hang in SizeInBytesOnlyStatsPlanVisitor on a cyclic input to a
+    * self-joining pointer-doubling loop, round 5). The rebuilt
+    * Dataset's stats fall back to the session default CONSTANT.
+    * Cost: one row-encoder pass over the
     * relation at next materialization — measured +20–50% per ROUND on
     * the converging fixpoints (dedup_clusters 10.5 → 12.6 s at sf0.1
     * when applied every round), which is why callers apply it

@@ -1,7 +1,5 @@
 package graft.ps
 
-import org.apache.spark.SparkException
-
 /** Exact fixed-point sums for the trainers' gradients and losses (the
   * `graft.Det` integer-cents idea applied to doubles of any size).
   *
@@ -51,13 +49,5 @@ private[ps] object FixedPoint {
 
   /** Runs a Spark action and rethrows an `ArithmeticException` that
     * failed one of its tasks as itself, not wrapped in the job abort. */
-  def rethrowRange[T](action: => T): T =
-    try action
-    catch {
-      case e: SparkException =>
-        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-          .collectFirst { case a: ArithmeticException => a }
-          .foreach(a => throw a)
-        throw e
-    }
+  def rethrowRange[T](action: => T): T = graft.TaskFailure.rethrow[ArithmeticException, T](action)
 }

@@ -37,6 +37,8 @@ class BenchRegimeSpec extends AnyFunSuite {
     assert(Bench.parseMemBytes("   ") == g8)
     assert(Bench.parseMemBytes("8 gb") == g8)
     assert(Bench.parseMemBytes("lots") == g8)
+    assert(Bench.parseMemBytes("-8g") == g8)   // non-positive sizes too
+    assert(Bench.parseMemBytes("0") == g8)
     assert(Bench.targetHeapBytes > 0L)
   }
 
@@ -184,5 +186,21 @@ class BenchRegimeSpec extends AnyFunSuite {
     // degenerate inputs don't throw
     assert(Bench.chunkQueryLines(Nil).isEmpty)
     assert(Bench.chunkQueryLines(Seq("a" -> 1.0)).size == 1)
+  }
+
+  test("chunkQueryLines: '.' decimals under a comma-decimal default locale") {
+    import java.util.Locale
+    import java.util.Locale.Category.{DISPLAY, FORMAT}
+    val saved = (Locale.getDefault, Locale.getDefault(DISPLAY), Locale.getDefault(FORMAT))
+    Locale.setDefault(Locale.GERMANY)
+    try {
+      assert(String.format("%.3f", Double.box(1.5)) == "1,500", "the locale did not take")
+      assert(Bench.chunkQueryLines(Seq("a" -> 1.5, "b" -> 0.25)) ==
+        Seq("""{"metric":"queries_1of1","unit":"sec","queries":{"b":0.250,"a":1.500}}"""))
+    } finally {
+      Locale.setDefault(saved._1)
+      Locale.setDefault(DISPLAY, saved._2)
+      Locale.setDefault(FORMAT, saved._3)
+    }
   }
 }

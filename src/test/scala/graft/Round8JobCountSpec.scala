@@ -60,7 +60,12 @@ class Round8JobCountSpec extends SparkSpec {
 
   test("rootedDepth: at most 2 actions per round + init pair + output") {
     // chain 1 <- 2 <- ... <- 33: depth 32, settles in 5 doubling
-    // rounds + 1 confirming round
+    // rounds + 1 confirming round.
+    // rootedDepth runs its rounds as RDD jobs over node blocks, and
+    // RDD jobs carry no SQL execution id, so this count sees only the
+    // final count() and can no longer catch an extra per-round job on
+    // its own: RootedDepthSpec's job-budget test (a raw SparkListener
+    // job count) is the per-round lock.
     val chain = (1L to 33L).map(p => (p, math.max(1L, p - 1))).toDF("node", "parent")
     val n = countActions { operators.GraphOps.rootedDepth(chain).count() }
     val rounds = operators.GraphOps.lastRounds

@@ -18,30 +18,7 @@ import org.apache.spark.sql.functions._
   */
 class TrainerBudgetSpec extends SparkSpec {
 
-  /** (jobs started, shuffle-map stages run) while `body` runs
-    * (listener delivery is async, so poll until stable). */
-  private def count(body: => Unit): (Int, Int) = {
-    val jobs = new AtomicInteger
-    val shuffleStages = ConcurrentHashMap.newKeySet[Int]()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskType == "ShuffleMapTask") shuffleStages.add(t.stageId)
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var last = (-1, -1)
-      var stable = 0
-      val deadline = System.nanoTime() + 5_000_000_000L
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val now = (jobs.get, shuffleStages.size)
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      last
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
+  private def count(body: => Unit): (Int, Int) = SchedulerCount(spark)(body)
 
   test("MfTrainer: <= 3 jobs and <= 2 shuffle stages per extra iteration") {
     val ratings = Tables0.ratings(spark, sfDir)
@@ -66,5 +43,34 @@ class TrainerBudgetSpec extends SparkSpec {
     val (j4, _) = run(4)
     assert(j4 > j2, s"no extra jobs for extra iterations ($j2 -> $j4): did the loop run?")
     assert(j4 - j2 <= 2 * 2, s"PaTrainer jobs: $j2 at 2 iterations, $j4 at 4")
+  }
+}
+
+/** Scheduler work while a body runs, from a SparkListener. */
+object SchedulerCount {
+
+  /** (jobs started, shuffle-map stages run) while `body` runs
+    * (listener delivery is async, so poll until stable). */
+  def apply(spark: org.apache.spark.sql.SparkSession)(body: => Unit): (Int, Int) = {
+    val jobs = new AtomicInteger
+    val shuffleStages = ConcurrentHashMap.newKeySet[Int]()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskType == "ShuffleMapTask") shuffleStages.add(t.stageId)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      var last = (-1, -1)
+      var stable = 0
+      val deadline = System.nanoTime() + 5_000_000_000L
+      while (stable < 3 && System.nanoTime() < deadline) {
+        Thread.sleep(100)
+        val now = (jobs.get, shuffleStages.size)
+        if (now == last) stable += 1 else { stable = 0; last = now }
+      }
+      last
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 }
