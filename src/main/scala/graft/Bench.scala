@@ -308,7 +308,7 @@ object Bench {
       else gcBeanNames.headOption.getOrElse("?")
     val heapG = heapBean.getMax / (1024.0 * 1024 * 1024)
     val edenG = edenMaxBytes / (1024.0 * 1024 * 1024)
-    f""","jvm":{"gc":"$gc","heap_g":$heapG%.1f,"eden_g":$edenG%.1f,"presized":$s,"sized":$z,"young_ok":$y,"reexec":$isReexecChild,"regime_ok":${p && s && z && y}}"""
+    s""","jvm":{"gc":"$gc","heap_g":${num(heapG, 1)},"eden_g":${num(edenG, 1)},"presized":$s,"sized":$z,"young_ok":$y,"reexec":$isReexecChild,"regime_ok":${p && s && z && y}}"""
   }
   // (user, nice, system, idle, iowait, irq, softirq, steal, ...) in
   // USER_HZ ticks (100 Hz on every mainstream Linux) summed over cores
@@ -452,6 +452,16 @@ object Bench {
       val (rc, out) = run("git", "rev-parse", "--short=12", "HEAD:src/main")
       if (rc == 0 && out.matches("[0-9a-f]{6,40}")) out else "unknown"
     } catch { case _: Throwable => "unknown" }
+  /** `v` with `digits` decimals and a '.' point under any default
+    * locale. Every number in Bench's JSON lines is formatted here: a
+    * comma-decimal default locale must not make them invalid JSON. */
+  private[graft] def num(v: Double, digits: Int): String =
+    s"%.${digits}f".formatLocal(Locale.ROOT, v)
+
+  /** `{"k":v,...}`, each v through [[num]]. */
+  private[graft] def numMap(kv: Seq[(String, Double)], digits: Int): String =
+    kv.map { case (k, v) => s""""$k":${num(v, digits)}""" }.mkString("{", ",", "}")
+
   /** Fold this sweep's per-query walls into the per-HEAD minima file.
     * Keyed by git HEAD: same HEAD → per-qid min and sweeps+1; HEAD
     * changed or unknowable → start over at this sweep (stale minima
@@ -466,17 +476,13 @@ object Bench {
     * nearest EOF — the only ones a 2000-char tail can recover whole —
     * carry the most expensive qids. 16 qids/chunk keeps every line
     * ~400 chars: small enough that a cut chunk wastes little of the
-    * tail, large enough that the ~45-char line envelope amortizes.
-    * Values are formatted in Locale.ROOT: a comma-decimal default
-    * locale must not turn the lines into invalid JSON. */
+    * tail, large enough that the ~45-char line envelope amortizes. */
   private[graft] def chunkQueryLines(entries: Seq[(String, Double)]): Seq[String] = {
     val sorted = entries.sortBy { case (n, s) => (s, n) }
     val groups = sorted.grouped(16).toSeq
     val n = groups.size
     groups.zipWithIndex.map { case (g, i) =>
-      val body = g.map { case (k, v) => s""""$k":${"%.3f".formatLocal(Locale.ROOT, v)}""" }
-        .mkString(",")
-      s"""{"metric":"queries_${i + 1}of$n","unit":"sec","queries":{$body}}"""
+      s"""{"metric":"queries_${i + 1}of$n","unit":"sec","queries":${numMap(g, 3)}}"""
     }
   }
   /** Parse a minima file body into (head, sweeps, per-qid floor).
@@ -521,9 +527,7 @@ object Bench {
       n -> math.min(s, base.getOrElse(n, Double.MaxValue))
     }.toMap
     val merged = (base ++ updates).toSeq.sortBy(_._1)
-    val qJson = merged.map { case (n, s) => f""""$n":$s%.3f""" }
-      .mkString("{", ",", "}")
-    val body = s"""{"head":"$head","sweeps":$sweeps,"queries":$qJson}"""
+    val body = s"""{"head":"$head","sweeps":$sweeps,"queries":${numMap(merged, 3)}}"""
     Seq(path, java.nio.file.Paths.get("target/bench_queries_min.json"))
       .foreach { p =>
         try java.nio.file.Files.write(p, body.getBytes("UTF-8"))
@@ -835,7 +839,7 @@ object Bench {
     def sampleCal(tag: String): Unit = {
       val (c, s, a) = calibrate(spark)
       cal += ((c, s, a))
-      println(f"""{"cal":"$tag","cpu_sec":$c%.3f,"spark_sec":$s%.3f,"ac_ms":$a%.1f}""")
+      println(s"""{"cal":"$tag","cpu_sec":${num(c, 3)},"spark_sec":${num(s, 3)},"ac_ms":${num(a, 1)}}""")
     }
     sampleCal("start")
     val stat0 = procStat()
@@ -873,7 +877,7 @@ object Bench {
       // the signal the between-query probes structurally miss
       val (st, bo) = hostDelta(hs0, procStat(), cpu)
       val errTag = err.map(e => s""","err":"$e"""").getOrElse("")
-      println(f"""{"query":"$name","sec":$sec%.3f,"cpu":$cpu%.3f,"gc":$gc%.3f,"clk_ms":$clk%.1f,"ac_ms":$ac%.1f,"st":$st%.2f,"bo":$bo%.2f$errTag}""")
+      println(s"""{"query":"$name","sec":${num(sec, 3)},"cpu":${num(cpu, 3)},"gc":${num(gc, 3)},"clk_ms":${num(clk, 1)},"ac_ms":${num(ac, 1)},"st":${num(st, 2)},"bo":${num(bo, 2)}$errTag}""")
       val lastOfFamily = i + 1 >= ordered.size ||
         family(ordered(i + 1)._1) != family(name)
       if (lastOfFamily)
@@ -893,7 +897,7 @@ object Bench {
     // max/min spread IS the throttle depth during the sweep
     val clkJson = if (results.nonEmpty) {
       val cs = results.map(_.clk).sorted
-      f""","clk_ms":{"min":${cs.head}%.1f,"p50":${cs(cs.size / 2)}%.1f,"max":${cs.last}%.1f}"""
+      s""","clk_ms":{"min":${num(cs.head, 1)},"p50":${num(cs(cs.size / 2), 1)},"max":${num(cs.last, 1)}}"""
     } else ""
     // same three-number summary for the all-core channel: ac p50 ≈ clk
     // p50 (modulo SMT) on a healthy host; ac max/p50 spread at flat clk
@@ -903,7 +907,7 @@ object Bench {
     // (r12 ADVICE).
     val acSamples = results.map(_.ac).filter(_ > 0).sorted
     val acJson = if (acSamples.nonEmpty) {
-      f""","ac_ms":{"min":${acSamples.head}%.1f,"p50":${acSamples(acSamples.size / 2)}%.1f,"max":${acSamples.last}%.1f}"""
+      s""","ac_ms":{"min":${num(acSamples.head, 1)},"p50":${num(acSamples(acSamples.size / 2), 1)},"max":${num(acSamples.last, 1)}}"""
     } else ""
     // sweep-level host accounting from /proc/stat (100 Hz USER_HZ
     // ticks): steal = other-tenant hypervisor theft; busy_other =
@@ -911,40 +915,34 @@ object Bench {
     // Both in CPU-core-seconds over the whole sweep.
     val hostJson = if (stat0.isDefined && stat1.isDefined) {
       val (stealS, busyOther) = hostDelta(stat0, stat1, sweepCpu)
-      f""","host":{"steal_s":$stealS%.1f,"busy_other_s":$busyOther%.1f,"my_cpu_s":$sweepCpu%.1f,"gc_s":$sweepGc%.1f,"wall_s":$sweepWall%.1f}"""
+      s""","host":{"steal_s":${num(stealS, 1)},"busy_other_s":${num(busyOther, 1)},"my_cpu_s":${num(sweepCpu, 1)},"gc_s":${num(sweepGc, 1)},"wall_s":${num(sweepWall, 1)}}"""
     } else ""
     // six calibration numbers for the final line: cpu/spark triples in
     // start/mid/end order. ~70 chars — safely inside the 2000-char tail
     // budget the final line must respect.
     val calJson = {
-      val cpus3 = cal.map(c => f"${c._1}%.3f").mkString(",")
-      val sparks3 = cal.map(c => f"${c._2}%.3f").mkString(",")
-      val acs3 = cal.map(c => f"${c._3}%.1f").mkString(",")
+      val cpus3 = cal.map(c => num(c._1, 3)).mkString(",")
+      val sparks3 = cal.map(c => num(c._2, 3)).mkString(",")
+      val acs3 = cal.map(c => num(c._3, 1)).mkString(",")
       s"""{"cpu":[$cpus3],"spark":[$sparks3],"ac":[$acs3]}"""
     }
     val perQuery = results
       .map { r =>
-        f""""${r.name}":${r.sec}%.3f""" +
-          r.err.map(x => f""","${r.name}_err":"$x"""").getOrElse("")
+        s""""${r.name}":${num(r.sec, 3)}""" +
+          r.err.map(x => s""","${r.name}_err":"$x"""").getOrElse("")
       }.mkString("{", ",", "}")
     // per-query process-CPU / clock-sample / GC / all-core / in-window
     // steal / in-window busy-other maps, same flat name→number shape,
     // SEPARATE sibling files (the wall map's flat one-number-per-qid
     // contract stays stable for tooling regardless of registry size)
-    val perQueryCpu = results
-      .map(r => f""""${r.name}":${r.cpu}%.3f""").mkString("{", ",", "}")
-    val perQueryClk = results
-      .map(r => f""""${r.name}":${r.clk}%.1f""").mkString("{", ",", "}")
-    val perQueryGc = results
-      .map(r => f""""${r.name}":${r.gc}%.3f""").mkString("{", ",", "}")
+    val perQueryCpu = numMap(results.map(r => r.name -> r.cpu), 3)
+    val perQueryClk = numMap(results.map(r => r.name -> r.clk), 1)
+    val perQueryGc = numMap(results.map(r => r.name -> r.gc), 3)
     // ac: omit failed probes (-1 sentinel) — a missing key reads as
     // "no sample", never as a fake fast clock (r12 ADVICE)
-    val perQueryAc = results.filter(_.ac > 0)
-      .map(r => f""""${r.name}":${r.ac}%.1f""").mkString("{", ",", "}")
-    val perQuerySt = results
-      .map(r => f""""${r.name}":${r.st}%.2f""").mkString("{", ",", "}")
-    val perQueryBo = results
-      .map(r => f""""${r.name}":${r.bo}%.2f""").mkString("{", ",", "}")
+    val perQueryAc = numMap(results.filter(_.ac > 0).map(r => r.name -> r.ac), 1)
+    val perQuerySt = numMap(results.map(r => r.name -> r.st), 2)
+    val perQueryBo = numMap(results.map(r => r.name -> r.bo), 2)
     // sibling artifacts with the same per-query map, for offline
     // regression attribution (the stdout tail can truncate). TWO
     // copies: target/ for tooling, and a repo-root BENCH_QUERIES_
@@ -1011,7 +1009,7 @@ object Bench {
     // inlined the 180-entry map here, the line outgrew the tail
     // capture, and BENCH_r05 came back parsed:null. Keep this line
     // well under 2000 chars forever.
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"n_err":$nErr,"cpu_total":$cpuTotal%.1f,"cal":$calJson$clkJson$acJson$hostJson$jvmJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","n_queries":${results.size},"n_err":$nErr,"cpu_total":${num(cpuTotal, 1)},"cal":$calJson$clkJson$acJson$hostJson$jvmJson,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -1,11 +1,22 @@
 package graft.operators
 
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+
 import graft.GQuery
 import graft.functions.VectorExprs
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.serializer.KryoSerializer
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** LLM-data-pipeline operators (SURVEY.md §2.C north-star extension):
   * deduplication (exact, n-gram Jaccard, MinHash+LSH bands, SimHash),
@@ -24,10 +35,13 @@ import org.apache.spark.sql.functions._
   *  - All hashes are md5-derived (engine-portable, seedable,
   *    deterministic) — no reliance on Spark-internal hash functions in
   *    any oracle-checked output.
-  *  - Everything stays in built-in codegen'd expressions (HOF array
-  *    functions) except the clearly-marked multimodal decode stub,
-  *    which demonstrates the per-partition batch path (`mapPartitions`
-  *    over a typed Dataset — the Scala analog of `mapInPandas`).
+  *  - Operators are built-in codegen'd expressions (HOF array
+  *    functions), with two exceptions: the clearly-marked multimodal
+  *    decode stub, which demonstrates the per-partition batch path
+  *    (`mapPartitions` over a typed Dataset — the Scala analog of
+  *    `mapInPandas`), and [[shinglePairStats]], one RDD lineage over
+  *    shingle and doc blocks (the ps.MfTrainer layout) exposed as a
+  *    cached DataFrame.
   *
   * Reference analog: the reference's sketch module family
   * (minhash / bloom similarity — SURVEY §2.B sketch_minhash
@@ -50,7 +64,7 @@ object LlmPipeline {
     * but shingling + hashing are CPU-bound per row: spread the rows
     * across the cores first (a ~KB-scale shuffle buying full
     * parallelism — the classic fix for small-input/heavy-compute). */
-  private def shingles(df: DataFrame): DataFrame =
+  private[graft] def shingles(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
       // split ONCE into an array column: `slice(split(text), i, 3)`
       // inside the lambda would re-split the full text for every i —
@@ -84,10 +98,9 @@ object LlmPipeline {
       |FROM documents""".stripMargin
 
   /** FAMILY-SHARED raw shingle postings (doc_id, shingle) — memoized
-    * per (application, dir), persisted MEMORY_AND_DISK_SER. Every
-    * shingle consumer in the dedup family (dedup_clusters' rare-shingle
-    * edges, [[shinglePairStats]]'s inverted index behind dedup_near and
-    * dedup_containment, dedup_minhash's signature pass) reads this ONE
+    * per (application, dir), persisted MEMORY_AND_DISK_SER. The
+    * DataFrame shingle consumers of the dedup family (dedup_clusters'
+    * rare-shingle edges, dedup_minhash's signature pass) read this ONE
     * cached relation, so the document scan + tokenize + explode — the
     * dominant CPU of every shingle query — runs once per family sweep,
     * not once per qid. SERIALIZED storage is deliberate: round 5's
@@ -227,97 +240,367 @@ object LlmPipeline {
       |FROM corpus GROUP BY 1 ORDER BY keep_id""".stripMargin
 
   // ---------------------------------------------------------------- dedup_near
-  /** Near-dup detection by word-3-gram Jaccard ≥ 0.8, exact form: an
-    * inverted-index self-join on the shingle (one row per shared
-    * shingle per pair) aggregated straight to intersection counts — no
-    * materialized candidate set, no DISTINCT over pairs. Cost is
-    * Σ_shingle df² (bounded as long as no shingle is ultra-hot; a df
-    * cap would bound it unconditionally at the price of exactness).
-    * This is the exactness baseline that validates the sub-quadratic
-    * scale paths (dedup_minhash LSH banding, dedup_simhash bands) —
-    * at 100 TB you run those, and this, sampled, to audit their recall.
-    */
   /** Shared pair statistics for the shingle-overlap dedup family:
-    * (da, db, inter, na, nb) — intersection count and per-doc shingle
-    * sizes over the df≤cap shingle universe. dedup_near (Jaccard) and
-    * dedup_containment (Broder containment) are both cheap projections
-    * of THIS relation; building it twice was the bench's single largest
-    * repeated subplan (VERDICT r4 §Performance #4).
+    * (db, da, inter, na, nb) for the doc pairs da < db that share a
+    * shingle of the df≤[[DfCap]] universe — the intersection count and
+    * each doc's shingle count in that universe — that could pass SOME
+    * consumer's threshold. dedup_near (Jaccard) and dedup_containment
+    * (Broder containment) are both projections of THIS relation;
+    * building it twice was the bench's single largest repeated subplan
+    * (VERDICT r4 §Performance #4).
     *
-    * df-cap sampling contract: see [[DfCap]] — the stats describe the
-    * df≤cap shingle universe; at the test SFs the cap never binds and
-    * the result equals exact overlap. The hot set is ≤ |sh|/DfCap
-    * DISTINCT shingles — usually tiny under a Zipfian df distribution
-    * but not provably driver-sized, so the anti join carries no
-    * broadcast hint: AQE converts it when the built side is in fact
-    * small. `sizes` is one row PER DOCUMENT — broadcast-sized at test
-    * SFs, driver-OOM at crawl scale — so those joins carry no hint
-    * either.
-    *
-    * Pair generation is the basket double-explode over
-    * [[shingleBaskets]] (one posting shuffle + the pair-stream
-    * groupBy), not a postings self-join (which shuffles the postings
-    * TWICE before the same groupBy) — the co-purchase basket trade,
-    * re-measured here. Per-shingle pair volume is exactly one row per
-    * shared shingle per a<b pair, identical to the self-join's
-    * multiset, so `inter` is bit-identical. `sizes` explodes the same
-    * baskets back to postings — the df≤cap universe by construction.
-    *
-    * Persisted + memoized per (application, dir): the second family
-    * member reuses the cached relation instead of rebuilding the
-    * inverted index. The memo checks the LIVE storage level, so a
-    * clearCache between the two calls (Verify's per-query hygiene)
-    * just rebuilds — correctness never depends on the cache; freed by
-    * the caller's clearCache (pageRank's contract). */
+    * Built by [[pairStatsOn]] from the documents table. Memoized per
+    * (application, dir) and persisted MEMORY_AND_DISK_SER as a
+    * CacheManager entry: the second family member reuses it, and the
+    * memo checks the LIVE storage level, so a clearCache between the
+    * two calls (Verify's per-query hygiene) just rebuilds — correctness
+    * never depends on the cache; freed by the caller's clearCache
+    * (pageRank's contract). */
   private val pairStatsMemo =
     scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
   private[graft] def shinglePairStats(spark: SparkSession, dir: String): DataFrame = {
     val key = (spark.sparkContext.applicationId, dir)
     pairStatsMemo.get(key)
-      .filter(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+      .filter(_.storageLevel != StorageLevel.NONE)
       .getOrElse {
         graft.BuildLog.log(s"memo miss: shinglePairStats ($dir)")
-        val baskets = shingleBaskets(spark, dir)
-        val sizes = baskets.select(explode(col("docs")).as("doc_id"))
-          .groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
-        val inter = baskets
-          .select(explode(col("docs")).as("da"), col("docs"))
-          .select(col("da"), explode(col("docs")).as("db"))
-          .filter(col("da") < col("db"))
-          .groupBy("da", "db").agg(count(lit(1)).as("inter"))
-        val stats = inter
-          .join(sizes.select(col("doc_id").as("da"), col("n_sh").as("na")), "da")
-          .join(sizes.select(col("doc_id").as("db"), col("n_sh").as("nb")), "db")
-          // family ADMISSION filter (r9): persist only pairs that could
-          // pass SOME consumer's threshold — jaccard ≥ 0.8 (dedup_near)
-          // or containment ≥ 0.9 (dedup_containment), each relaxed by a
-          // safety margin (0.799 / 0.89, integer forms so no IEEE step)
-          // and re-checked exactly by the consumer. The full quadratic
-          // pair stream still flows through the groupBy, but the
-          // PERSISTED relation drops from Σdf²-sized (1.13M rows at
-          // sf0.1, unbounded at crawl scale) to the near-dup survivor
-          // set (~10³) — at 100 TB persisting the raw pair stream is
-          // the difference between caching kilobytes and caching the
-          // corpus square. Consumers' results are bit-identical: the
-          // admission bound is strictly weaker than every consumer
-          // filter (10000·i ≥ 7990·union admits every round(j,4) ≥ 0.8;
-          // 100·i ≥ 89·min admits every (1e6·i) div min ≥ 900000).
-          .filter(
-            col("inter") * 10000 >= (col("na") + col("nb") - col("inter")) * 7990 ||
-              col("inter") * 100 >= least(col("na"), col("nb")) * 89)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        // eager, TIMED materialization (the shingleBaskets pattern,
-        // r9: attribution parity for every family-shared build) —
-        // whichever qid misses this memo first shows a decomposable
-        // build-vs-own-work split in the log next to its bench number
-        val t0 = System.nanoTime()
-        val n = stats.count()
-        graft.BuildLog.log(f"shinglePairStats built in ${(System.nanoTime() - t0) / 1e9}%.2f s ($n pairs, $dir)")
+        val stats = pairStatsOn(Tables.documents(spark, dir), DfCap)
         pairStatsMemo.put(key, stats)
         stats
       }
   }
 
+  /** [[shinglePairStats]] over any (doc_id, text) relation with df cap
+    * `cap`, as ONE RDD lineage in the block layout of ps.MfTrainer and
+    * GraphOps.rootedDepth, over n = spark.sql.shuffle.partitions blocks:
+    *  1. the documents are spread over n doc blocks (one batch per
+    *     input partition and block) and shingled per doc
+    *     ([[textShingles]], row-identical to [[shingles]]);
+    *  2. the postings go to their shingle's owner block, one batch per
+    *     (doc block, shingle block). All postings of a shingle meet
+    *     there, so its df is exact and the cap applies before any pair
+    *     exists: a shingle with df > cap yields no pair and no size;
+    *  3. each shingle block's posting counts per doc go to the doc's
+    *     owner block, one batch per block pair; the owner sums them into
+    *     the doc's size and sends each shingle block the sizes of its
+    *     docs (a routed pull);
+    *  4. each shingle block orders its baskets by (size, id) and sends,
+    *     per doc a, the docs after a in them to owner(a): one record per
+    *     (shingle block, a), sorted by a there by Spark's spillable
+    *     external sort. owner(a) counts inter per doc b in a buffer of
+    *     a's own neighbours; since na <= nb, a pair that could be
+    *     admitted shares at least 1598/1799 of na, and the others stop
+    *     there ([[candidatePairs]]);
+    *  5. the survivors are pushed to owner(b), which joins nb and
+    *     applies the family admission filter ([[admitted]]).
+    * No task-local structure grows with the pair stream: block maps
+    * hold postings or docs, and a per-doc buffer one doc's neighbours.
+    * The DataFrame over that lineage is persisted and materialized
+    * here in one job (its plan has no exchange), then a second job
+    * takes the coverage census; both are timed into the
+    * [[graft.BuildLog]]. Every intermediate RDD is released before
+    * return, and on failure the cache entry too.
+    *
+    * `doc_id` must be integral (da and db keep its type); `text` is
+    * read as a string. A null doc_id counts toward its shingles' df
+    * but gets no pair and no size. Two rows with one doc_id count as
+    * two postings of it, as in the postings self-join. */
+  private[graft] def pairStatsOn(documents: DataFrame, cap: Long): DataFrame = {
+    val spark = documents.sparkSession
+    val idType = documents.schema("doc_id").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"pairStatsOn: doc_id must be an integral column, got ${idType.simpleString}")
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // a doc id's owner block, and a (block, batch) record's block
+    val owner = new HashPartitioner(n)
+    val kryo = new KryoSerializer(spark.sparkContext.getConf)
+    // (block, batch) records to their block, one shuffle
+    def toBlocks[V: ClassTag](batches: RDD[(Int, V)]): RDD[(Int, V)] =
+      new ShuffledRDD[Int, V, V](batches, owner).setSerializer(kryo)
+    def typed(d: Long): Any = idType match {
+      case ByteType => d.toByte
+      case ShortType => d.toShort
+      case IntegerType => d.toInt
+      case _ => d
+    }
+    // every RDD this call persists; all are released before return
+    val live = mutable.Set[RDD[_]]()
+    def keep[T](r: RDD[T]): RDD[T] = { live += r; r.persist(StorageLevel.MEMORY_AND_DISK) }
+    var stats: DataFrame = null
+    try {
+      val t0 = System.nanoTime()
+      val docs = toBlocks(docBatches(
+        documents.select(col("doc_id").cast(LongType), col("text").cast(StringType)), owner))
+      val baskets = keep(toBlocks(postingBatches(docs, n)).mapPartitions(cappedBaskets(_, cap)))
+      // size partials: each shingle block's posting count per doc, one
+      // batch per owner block, which sums them per doc
+      val sizes = keep(toBlocks(baskets.mapPartitionsWithIndex((t, bs) => sizePartials(t, bs.next(), owner)))
+        .mapPartitions(ps => Iterator(SizeBlock(ps.map(_._2).toArray))))
+      // ...and answers each shingle block with the sizes of its docs
+      val replies = toBlocks(sizes.mapPartitions(_.next().replies))
+      // per shingle block and doc a, the docs after a in its baskets'
+      // (size, id) order, so na <= nb for every pair; sorted by a at
+      // owner(a) (spillable), counted there and pruned on na alone
+      val candidates = new ShuffledRDD[Long, Array[Long], Array[Long]](
+        baskets.zipPartitions(replies)((bs, rs) => suffixes(bs.next(), rs)), owner)
+        .setKeyOrdering(Ordering.Long).setSerializer(kryo)
+        .mapPartitions(candidatePairs)
+      // the survivors, pushed to owner(b), where nb joins and the
+      // admission filter runs
+      val rows: RDD[InternalRow] = sizes.zipPartitions(
+        new ShuffledRDD[Long, HalfPair, HalfPair](candidates, owner).setSerializer(kryo)) { (s, ps) =>
+        val size = s.next().total
+        ps.flatMap { case (b, h) =>
+          val nb = size(b)
+          if (!admitted(h.inter, h.na, nb)) Iterator.empty
+          else Iterator(new GenericInternalRow(
+            if (h.a < b) Array[Any](typed(b), typed(h.a), h.inter, h.na, nb)
+            else Array[Any](typed(h.a), typed(b), h.inter, nb, h.na)))
+        }
+      }
+      stats = GraftColumnBridge.dataFrame(spark, rows, StructType(
+        Seq("db", "da").map(StructField(_, idType, nullable = false)) ++
+          Seq("inter", "na", "nb").map(StructField(_, LongType, nullable = false))))
+        .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      // eager, TIMED materialization (the shingleBaskets pattern, r9:
+      // attribution parity for every family-shared build) through the
+      // RDD, so no count aggregate adds an exchange and its jobs; then
+      // the coverage census off the same shuffles (ADVICE r8): a doc whose
+      // every shingle is hotter than the cap has no size and no pair,
+      // a real behavior change vs exact overlap that the fixtures
+      // (max df ≈ 25) never exercise, so a BINDING cap must be loud
+      val nPairs = stats.rdd.count()
+      val (nDocs, nCorpus) = docs.zipPartitions(sizes) { (d, s) =>
+        Iterator((s.next().total.size.toLong, d.map(_._2.ids.length.toLong).sum))
+      }.collect().foldLeft((0L, 0L)) { case ((a, b), (x, y)) => (a + x, b + y) }
+      graft.BuildLog.log(
+        f"shinglePairStats built in ${(System.nanoTime() - t0) / 1e9}%.2f s " +
+          f"($nPairs pairs, $nDocs of $nCorpus docs in the df<=$cap universe)" +
+          (if (nDocs < nCorpus)
+            f" WARNING: ${nCorpus - nDocs} docs outside it (the df cap binds on all" +
+              " their shingles, or their doc_id is null or repeated)"
+          else ""))
+      stats
+    } catch {
+      case e: Throwable =>
+        if (stats != null) stats.unpersist(blocking = false)
+        throw e
+    } finally live.foreach(_.unpersist(blocking = false))
+  }
+
+  /** Family ADMISSION filter (r9) of [[shinglePairStats]]: keep only
+    * pairs that could pass SOME consumer's threshold — jaccard ≥ 0.8
+    * (dedup_near) or containment ≥ 0.9 (dedup_containment), each
+    * relaxed by a safety margin (0.799 / 0.89, integer forms so no IEEE
+    * step) and re-checked exactly by the consumer. The full pair stream
+    * still flows through the combine, but the PERSISTED relation drops
+    * from Σdf²-sized (1.13M rows at sf0.1, unbounded at crawl scale) to
+    * the near-dup survivor set (~10³). Consumers' results are
+    * bit-identical: the admission bound is strictly weaker than every
+    * consumer filter (10000·i ≥ 7990·union admits every
+    * round(j,4) ≥ 0.8; 100·i ≥ 89·min admits every
+    * (1e6·i) div min ≥ 900000). */
+  private def admitted(inter: Long, na: Long, nb: Long): Boolean =
+    inter * 10000 >= (na + nb - inter) * 7990 || inter * 100 >= math.min(na, nb) * 89
+
+  /** Word 3-gram shingles of one text, distinct, as the rows
+    * [[shingles]] yields for it: `split(text, " ")` keeps empty tokens
+    * (leading, trailing or repeated spaces), and a text of fewer than
+    * 3 tokens is one shingle, itself ("" for a null text). */
+  private[graft] def textShingles(text: String): Array[String] =
+    if (text == null) Array("")
+    else {
+      // token i spans [start(i), start(i + 1) - 1), so shingle i is the
+      // text from token i's start to token i + 2's end
+      val start = mutable.ArrayBuilder.make[Int]
+      start += 0
+      var p = text.indexOf(' ')
+      while (p >= 0) {
+        start += p + 1
+        p = text.indexOf(' ', p + 1)
+      }
+      start += text.length + 1
+      val s = start.result()
+      if (s.length < 4) Array(text)
+      else {
+        val out = new java.util.HashSet[String]()
+        for (i <- 0 until s.length - 3) out.add(text.substring(s(i), s(i + 3) - 1))
+        out.toArray(new Array[String](0))
+      }
+    }
+
+  /** Documents of one doc block from one input partition; a null id is
+    * a null element. */
+  private final case class DocBatch(ids: Array[java.lang.Long], texts: Array[String])
+
+  /** One doc block's postings of the shingles of one shingle block:
+    * per shingle, its non-null doc ids and its null-id posting count. */
+  private final case class PostingBatch(shingles: Array[String], docs: Array[Array[Long]],
+      nulls: Array[Int])
+
+  private final class Postings {
+    val docs = new mutable.ArrayBuilder.ofLong
+    var nulls = 0
+  }
+
+  /** (doc_id: bigint, text) rows → one batch per (input partition, doc
+    * block). */
+  private def docBatches(docs: DataFrame, owner: Partitioner): RDD[(Int, DocBatch)] =
+    docs.rdd.mapPartitions { rows =>
+      val batches = Array.fill(owner.numPartitions)(
+        (mutable.ArrayBuffer[java.lang.Long](), mutable.ArrayBuffer[String]()))
+      rows.foreach { r =>
+        val id = if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))
+        val (ids, texts) = batches(owner.getPartition(id))
+        ids += id
+        texts += r.getString(1)
+      }
+      batches.indices.iterator.filter(batches(_)._1.nonEmpty)
+        .map(t => (t, DocBatch(batches(t)._1.toArray, batches(t)._2.toArray)))
+    }
+
+  /** Doc blocks → one batch of postings per (doc block, shingle block),
+    * for `n` shingle blocks. */
+  private def postingBatches(docs: RDD[(Int, DocBatch)], n: Int): RDD[(Int, PostingBatch)] =
+    docs.mapPartitions { batches =>
+      val out = Array.fill(n)(new java.util.HashMap[String, Postings]())
+      batches.foreach { case (_, b) =>
+        b.ids.indices.foreach { i =>
+          textShingles(b.texts(i)).foreach { s =>
+            val p = out(Math.floorMod(s.hashCode, n)).computeIfAbsent(s, _ => new Postings)
+            if (b.ids(i) == null) p.nulls += 1 else p.docs += b.ids(i)
+          }
+        }
+      }
+      out.indices.iterator.filter(!out(_).isEmpty).map { t =>
+        val (shingles, postings) = out(t).asScala.toArray.unzip
+        (t, PostingBatch(shingles, postings.map(_.docs.result()), postings.map(_.nulls)))
+      }
+    }
+
+  /** One shingle block's posting batches → its df≤cap baskets: the
+    * sorted non-null doc ids of every shingle whose df (null ids
+    * included) is at most `cap`. */
+  private def cappedBaskets(batches: Iterator[(Int, PostingBatch)], cap: Long)
+      : Iterator[Array[Array[Long]]] = {
+    val merged = new java.util.HashMap[String, Postings]()
+    batches.foreach { case (_, b) =>
+      b.shingles.indices.foreach { k =>
+        val p = merged.computeIfAbsent(b.shingles(k), _ => new Postings)
+        p.docs ++= b.docs(k)
+        p.nulls += b.nulls(k)
+      }
+    }
+    val out = mutable.ArrayBuffer[Array[Long]]()
+    merged.values.forEach { p =>
+      val d = p.docs.result()
+      if (d.nonEmpty && d.length + p.nulls <= cap) {
+        java.util.Arrays.sort(d)
+        out += d
+      }
+    }
+    Iterator(out.toArray)
+  }
+
+  /** Posting counts of the docs of one shingle block (`from`) that one
+    * doc block owns. */
+  private final case class SizePartial(from: Int, docs: Array[Long], counts: Array[Long])
+
+  /** One doc block's size partials and, per doc, their sum: its
+    * shingle count in the df≤cap universe. */
+  private final case class SizeBlock(partials: Array[SizePartial]) {
+    val total = mutable.LongMap[Long]()
+    partials.foreach(p => p.docs.indices.foreach(i =>
+      total(p.docs(i)) = total.getOrElse(p.docs(i), 0L) + p.counts(i)))
+
+    /** Per partial, the sizes of its docs, back to its shingle block. */
+    def replies: Iterator[(Int, (Array[Long], Array[Long]))] =
+      partials.iterator.map(p => (p.from, (p.docs, p.docs.map(total))))
+  }
+
+  private def sizePartials(from: Int, baskets: Array[Array[Long]], owner: Partitioner)
+      : Iterator[(Int, SizePartial)] = {
+    val counts = mutable.LongMap[Long]()
+    baskets.foreach(_.foreach(d => counts(d) = counts.getOrElse(d, 0L) + 1))
+    counts.toArray.groupBy { case (d, _) => owner.getPartition(d) }.iterator.map { case (o, dc) =>
+      (o, SizePartial(from, dc.map(_._1), dc.map(_._2)))
+    }
+  }
+
+  /** One shingle block's suffix records, given the sizes of its docs:
+    * for each doc a with a doc after it in one of the block's baskets,
+    * in (size, id) order, (a, [na, every such doc, once per posting of
+    * a]), by increasing a. A doc's duplicate postings (one doc_id in
+    * two rows) are adjacent in that order and pair with neither each
+    * other nor themselves. The record is a's alone: it holds the docs a
+    * shares a shingle of this block with. */
+  private def suffixes(baskets: Array[Array[Long]],
+      sizes: Iterator[(Int, (Array[Long], Array[Long]))]): Iterator[(Long, Array[Long])] = {
+    val size = mutable.LongMap[Long]()
+    sizes.foreach { case (_, (docs, ns)) => docs.indices.foreach(i => size(docs(i)) = ns(i)) }
+    val ordered = baskets.map(_.sortWith((x, y) => size(x) < size(y) || size(x) == size(y) && x < y))
+    // per doc, the (basket, first position after it) of its postings
+    val after = mutable.LongMap[mutable.ArrayBuilder.ofLong]()
+    ordered.indices.foreach { k =>
+      val b = ordered(k)
+      b.indices.foreach { i =>
+        val j = b.indexWhere(_ != b(i), i + 1)
+        if (j > 0) after.getOrElseUpdate(b(i), new mutable.ArrayBuilder.ofLong) += (k.toLong << 32 | j)
+      }
+    }
+    after.keys.toArray.sorted.iterator.map { a =>
+      val out = new mutable.ArrayBuilder.ofLong
+      out += size(a)
+      after(a).result().foreach(kj => out ++= ordered((kj >>> 32).toInt).drop(kj.toInt))
+      (a, out.result())
+    }
+  }
+
+  /** A pair candidate pushed to owner(b): the other doc `a`, the shared
+    * shingle count and a's size. */
+  private final case class HalfPair(a: Long, inter: Long, na: Long)
+
+  /** One doc block's suffix records, sorted by a → (b, (a, inter, na))
+    * for each doc b that shares inter shingles with a and could pass
+    * the admission filter. inter is the number of times a's records
+    * hold b: one per shared shingle, and per posting as in the postings
+    * self-join. a's records are gathered, sorted and counted in a
+    * buffer that holds only the docs a shares a shingle with. Since
+    * na <= nb, an admitted pair shares at least 1598/1799 of na:
+    * [[admitted]] with nb >= na implies 1799·inter >= 1598·na. */
+  private def candidatePairs(records: Iterator[(Long, Array[Long])]): Iterator[(Long, HalfPair)] = {
+    val in = records.buffered
+    var buf = new Array[Long](64)
+    Iterator.continually(in.hasNext).takeWhile(identity).flatMap { _ =>
+      val (a, first) = in.head
+      val na = first(0)
+      var n = 0
+      while (in.hasNext && in.head._1 == a) {
+        val bs = in.next()._2
+        if (n + bs.length > buf.length) buf = java.util.Arrays.copyOf(buf, 2 * (n + bs.length))
+        System.arraycopy(bs, 1, buf, n, bs.length - 1)
+        n += bs.length - 1
+      }
+      java.util.Arrays.sort(buf, 0, n)
+      val out = mutable.ArrayBuffer[(Long, HalfPair)]()
+      var i = 0
+      while (i < n) {
+        var j = i + 1
+        while (j < n && buf(j) == buf(i)) j += 1
+        if (1799L * (j - i) >= 1598L * na) out += ((buf(i), HalfPair(a, j - i, na)))
+        i = j
+      }
+      out
+    }
+  }
+
+  /** Near-dup detection by word-3-gram Jaccard ≥ 0.8, exact over the
+    * df-capped shingle universe: a projection of [[shinglePairStats]]
+    * (intersection counts from the shingle blocks, no materialized
+    * candidate set). This is the exactness baseline that validates the
+    * sub-quadratic scale paths (dedup_minhash LSH banding, dedup_simhash
+    * bands) — at 100 TB you run those, and this, sampled, to audit their
+    * recall. */
   def dedupNear(spark: SparkSession, dir: String): DataFrame =
     shinglePairStats(spark, dir)
       .withColumn("jaccard",

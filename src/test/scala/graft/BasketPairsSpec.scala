@@ -97,13 +97,8 @@ class BasketPairsSpec extends SparkSpec {
       // distinct postings: a doc lists a shingle at most once
       val sh = randomRows(seed).select(col("v").as("doc"), col("k").as("shingle"))
         .distinct().cache()
-      val hot = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
-        .filter(col("df") > cap).select("shingle")
-      val capped = sh.join(hot, Seq("shingle"), "left_anti")
-      val bySelfJoin = capped.as("x").join(capped.as("y"),
-          col("x.shingle") === col("y.shingle") && col("x.doc") < col("y.doc"))
-        .groupBy(col("x.doc").as("da"), col("y.doc").as("db"))
-        .agg(count(lit(1)).as("inter"))
+      val capped = CappedSelfJoin.capped(sh, cap)
+      val bySelfJoin = CappedSelfJoin.inter(capped)
       val baskets = capped.groupBy("shingle")
         .agg(sort_array(collect_list(col("doc"))).as("docs")).cache()
       val byBasket = baskets
@@ -132,4 +127,24 @@ class BasketPairsSpec extends SparkSpec {
       baskets.unpersist(); sh.unpersist()
     }
   }
+}
+
+/** The capped postings self-join: the reference form of the shingle
+  * pair stats over (doc, shingle) postings. */
+object CappedSelfJoin {
+
+  /** The postings of keys whose df (all rows, null docs included) is
+    * at most `cap`. */
+  def capped(sh: DataFrame, cap: Long): DataFrame = {
+    val hot = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
+      .filter(col("df") > cap).select("shingle")
+    sh.join(hot, Seq("shingle"), "left_anti")
+  }
+
+  /** (da, db, inter): shared keys per doc pair da < db. */
+  def inter(capped: DataFrame): DataFrame =
+    capped.as("x").join(capped.as("y"),
+        col("x.shingle") === col("y.shingle") && col("x.doc") < col("y.doc"))
+      .groupBy(col("x.doc").as("da"), col("y.doc").as("db"))
+      .agg(count(lit(1)).as("inter"))
 }

@@ -188,19 +188,40 @@ class BenchRegimeSpec extends AnyFunSuite {
     assert(Bench.chunkQueryLines(Seq("a" -> 1.0)).size == 1)
   }
 
-  test("chunkQueryLines: '.' decimals under a comma-decimal default locale") {
+  /** Runs `body` under Locale.GERMANY (comma decimals), then restores
+    * every default locale category. */
+  private def underGermanLocale(body: => Unit): Unit = {
     import java.util.Locale
     import java.util.Locale.Category.{DISPLAY, FORMAT}
     val saved = (Locale.getDefault, Locale.getDefault(DISPLAY), Locale.getDefault(FORMAT))
     Locale.setDefault(Locale.GERMANY)
     try {
       assert(String.format("%.3f", Double.box(1.5)) == "1,500", "the locale did not take")
-      assert(Bench.chunkQueryLines(Seq("a" -> 1.5, "b" -> 0.25)) ==
-        Seq("""{"metric":"queries_1of1","unit":"sec","queries":{"b":0.250,"a":1.500}}"""))
+      body
     } finally {
       Locale.setDefault(saved._1)
       Locale.setDefault(DISPLAY, saved._2)
       Locale.setDefault(FORMAT, saved._3)
     }
+  }
+
+  test("chunkQueryLines: '.' decimals under a comma-decimal default locale") {
+    underGermanLocale {
+      assert(Bench.chunkQueryLines(Seq("a" -> 1.5, "b" -> 0.25)) ==
+        Seq("""{"metric":"queries_1of1","unit":"sec","queries":{"b":0.250,"a":1.500}}"""))
+    }
+  }
+
+  test("num and numMap: '.' decimals under a comma-decimal default locale") {
+    val saved = java.util.Locale.getDefault(java.util.Locale.Category.FORMAT)
+    underGermanLocale {
+      assert(Bench.num(1234.5678, 3) == "1234.568")
+      assert(Bench.num(-0.5, 1) == "-0.5")
+      assert(Bench.num(2.0, 2) == "2.00")
+      assert(Bench.numMap(Seq("q1" -> 0.5, "q2" -> 12.25), 2) == """{"q1":0.50,"q2":12.25}""")
+      assert(Bench.numMap(Nil, 3) == "{}")
+    }
+    assert(java.util.Locale.getDefault(java.util.Locale.Category.FORMAT) == saved,
+      "the default locale must be restored")
   }
 }

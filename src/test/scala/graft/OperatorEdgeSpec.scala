@@ -375,10 +375,20 @@ class Round2PlanSpec extends SparkSpec {
       "GreaterThan(o_totalprice,200000.0)]"), plan)
   }
 
-  test("dedup_near df-cap anti-join broadcasts the hot-shingle set") {
-    val plan = operators.LlmPipeline.queries.find(_.id == "dedup_near").get
-      .fn(spark, sfDir).queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"), plan)
+  test("dedup_near reads the cached block build, no postings join") {
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val df = operators.LlmPipeline.queries.find(_.id == "dedup_near").get.fn(spark, sfDir)
+    val cached = df.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
+    assert(cached.size == 1, df.queryExecution.withCachedData.toString)
+    // the cache entry scans the pair-stats RDD lineage, with no plan of
+    // its own: one leaf, no exchange
+    val built = cached.head.cacheBuilder.cachedPlan
+    assert(built.collectLeaves().map(_.getClass) == Seq(classOf[RDDScanExec]), built.toString)
+    assert(!built.toString.contains("Exchange"), built.toString)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("Join"), plan)
+    spark.catalog.clearCache()
   }
 
   test("sketch_cms probes join the 1024-cell sketch by broadcast") {
