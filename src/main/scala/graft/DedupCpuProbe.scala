@@ -5,11 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 
-/** Scratch diagnostic (r14): decompose the dedup family's two hot
-  * shared builds — simhashes (tokenize + 2 md5/(doc,tok) + UDAF) and
-  * shingleBase (tokenize + 3-gram explode) — into phase CPU, plus the
-  * cardinalities that decide whether a distinct-token hash pass can
-  * pay for its exchanges. Dev tool, not driver contract.
+/** Scratch diagnostic (r14): decompose the DataFrame forms of two dedup
+  * family builds into phase CPU — the token groupBy plus 2 md5 per
+  * (doc, tok) that the simhash relation used before LlmPipeline.docTerms
+  * and its per-block simhash fold replaced it (phases A–C), and the
+  * shingles explode behind shingleBase (phase D on) — plus the
+  * cardinalities that decide whether a distinct-token hash pass can pay
+  * for its exchanges. Dev tool, not driver contract.
   */
 object DedupCpuProbe {
   def main(args: Array[String]): Unit = {

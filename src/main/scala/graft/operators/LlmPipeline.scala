@@ -17,6 +17,7 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 /** LLM-data-pipeline operators (SURVEY.md §2.C north-star extension):
   * deduplication (exact, n-gram Jaccard, MinHash+LSH bands, SimHash),
@@ -36,12 +37,15 @@ import org.apache.spark.storage.StorageLevel
   *    deterministic) — no reliance on Spark-internal hash functions in
   *    any oracle-checked output.
   *  - Operators are built-in codegen'd expressions (HOF array
-  *    functions), with two exceptions: the clearly-marked multimodal
+  *    functions), with these exceptions: the clearly-marked multimodal
   *    decode stub, which demonstrates the per-partition batch path
   *    (`mapPartitions` over a typed Dataset — the Scala analog of
-  *    `mapInPandas`), and [[shinglePairStats]], one RDD lineage over
-  *    shingle and doc blocks (the ps.MfTrainer layout) exposed as a
-  *    cached DataFrame.
+  *    `mapInPandas`), and the block builds in the ps.MfTrainer layout,
+  *    RDD lineages over doc, shingle, band and term blocks exposed as
+  *    DataFrames: [[shinglePairStats]] and [[docTerms]] (both cached),
+  *    and over docTerms dedup_simhash ([[simhashJoin]]),
+  *    dedup_simhash_recall's blocked side and text_tfidf
+  *    ([[tfidfTopOn]]).
   *
   * Reference analog: the reference's sketch module family
   * (minhash / bloom similarity — SURVEY §2.B sketch_minhash
@@ -307,9 +311,8 @@ object LlmPipeline {
     * two postings of it, as in the postings self-join. */
   private[graft] def pairStatsOn(documents: DataFrame, cap: Long): DataFrame = {
     val spark = documents.sparkSession
-    val idType = documents.schema("doc_id").dataType
-    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
-      s"pairStatsOn: doc_id must be an integral column, got ${idType.simpleString}")
+    val idType = integralIdType(documents, "pairStatsOn")
+    val typed = typedId(idType)
     val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // a doc id's owner block, and a (block, batch) record's block
     val owner = new HashPartitioner(n)
@@ -317,12 +320,6 @@ object LlmPipeline {
     // (block, batch) records to their block, one shuffle
     def toBlocks[V: ClassTag](batches: RDD[(Int, V)]): RDD[(Int, V)] =
       new ShuffledRDD[Int, V, V](batches, owner).setSerializer(kryo)
-    def typed(d: Long): Any = idType match {
-      case ByteType => d.toByte
-      case ShortType => d.toShort
-      case IntegerType => d.toInt
-      case _ => d
-    }
     // every RDD this call persists; all are released before return
     val live = mutable.Set[RDD[_]]()
     def keep[T](r: RDD[T]): RDD[T] = { live += r; r.persist(StorageLevel.MEMORY_AND_DISK) }
@@ -387,6 +384,29 @@ object LlmPipeline {
         throw e
     } finally live.foreach(_.unpersist(blocking = false))
   }
+
+  /** `doc_id`'s type in `documents`, which must be integral: the block
+    * builds carry ids as longs and give them back in this type
+    * ([[typedId]]). */
+  private def integralIdType(documents: DataFrame, op: String): DataType = {
+    val idType = documents.schema("doc_id").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
+      s"$op: doc_id must be an integral column, got ${idType.simpleString}")
+    idType
+  }
+
+  /** A long doc id as a value of the integral type `idType`. */
+  private def typedId(idType: DataType): Long => Any = idType match {
+    case ByteType => _.toByte
+    case ShortType => _.toShort
+    case IntegerType => _.toInt
+    case _ => d => d
+  }
+
+  /** (key, value) records to the partition `to` gives their key, in one
+    * Kryo shuffle. */
+  private def blockShuffle[K: ClassTag, V: ClassTag](records: RDD[(K, V)], to: Partitioner): RDD[(K, V)] =
+    new ShuffledRDD[K, V, V](records, to).setSerializer(new KryoSerializer(records.sparkContext.getConf))
 
   /** Family ADMISSION filter (r9) of [[shinglePairStats]]: keep only
     * pairs that could pass SOME consumer's threshold — jaccard ≥ 0.8
@@ -791,15 +811,109 @@ object LlmPipeline {
        |ORDER BY da, db""".stripMargin
   }
 
+  // ------------------------------------------------------------------ doc terms
+  /** FAMILY-SHARED per-doc term counts (doc_id, term, tf): one row per
+    * doc_id and `split(text, " ")` token, with the token's count in the
+    * doc — the rows of `explode(split(text, " "))` grouped by (doc_id,
+    * term). dedup_simhash, dedup_simhash_recall and text_tfidf read this
+    * ONE relation, so the documents are scanned and tokenized once per
+    * family sweep. Built by [[docTermsOn]]; memo contract as
+    * [[shinglePairStats]]: a hit requires a LIVE storage level, so a
+    * clearCache just rebuilds. */
+  private val docTermsMemo =
+    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
+  private[graft] def docTerms(spark: SparkSession, dir: String): DataFrame = {
+    val key = (spark.sparkContext.applicationId, dir)
+    docTermsMemo.get(key)
+      .filter(_.storageLevel != StorageLevel.NONE)
+      .getOrElse {
+        graft.BuildLog.log(s"memo miss: docTerms ($dir)")
+        val terms = docTermsOn(Tables.documents(spark, dir))
+        docTermsMemo.put(key, terms)
+        terms
+      }
+  }
+
+  /** [[docTerms]] over any (doc_id, text) relation, in the doc-block
+    * layout of [[pairStatsOn]]: the documents are spread once over
+    * n = spark.sql.shuffle.partitions doc blocks ([[docBatches]]) and
+    * each block counts its docs' tokens ([[termCounts]]). Partition i
+    * of the result, and of any scan of its cache entry, is doc block i:
+    * all rows of a doc_id are in it, contiguous, by increasing doc_id
+    * (null first). The simhash fold and the tf-idf doc count rely on
+    * that. The DataFrame is persisted MEMORY_AND_DISK_SER as a
+    * CacheManager entry and materialized here in one job, timed into
+    * the [[graft.BuildLog]]; on failure the entry is dropped.
+    *
+    * `doc_id` must be integral and keeps its type; `text` is read as a
+    * string. A null text has no token; `""` is one empty token, and
+    * leading, trailing or repeated spaces give empty tokens as
+    * `split` does. Rows with one doc_id, null included, count as one
+    * doc. */
+  private[graft] def docTermsOn(documents: DataFrame): DataFrame = {
+    val spark = documents.sparkSession
+    val idType = integralIdType(documents, "docTermsOn")
+    val typed = typedId(idType)
+    val owner = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    var terms: DataFrame = null
+    try {
+      val t0 = System.nanoTime()
+      val rows: RDD[InternalRow] = blockShuffle(docBatches(
+          documents.select(col("doc_id").cast(LongType), col("text").cast(StringType)), owner), owner)
+        .mapPartitions(bs => termCounts(bs.map(_._2)).map { case (id, term, tf) =>
+          new GenericInternalRow(Array[Any](if (id == null) null else typed(id), term, tf))
+        })
+      terms = GraftColumnBridge.dataFrame(spark, rows, StructType(Seq(
+        StructField("doc_id", idType),
+        StructField("term", StringType, nullable = false),
+        StructField("tf", LongType, nullable = false))))
+        .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      // eager, TIMED materialization through the RDD (the
+      // shinglePairStats pattern): one job, no count aggregate
+      val nRows = terms.rdd.count()
+      graft.BuildLog.log(
+        f"docTerms built in ${(System.nanoTime() - t0) / 1e9}%.2f s ($nRows doc-term rows)")
+      terms
+    } catch {
+      case e: Throwable =>
+        if (terms != null) terms.unpersist(blocking = false)
+        throw e
+    }
+  }
+
+  /** One doc block's documents → (doc_id, term, tf) for the
+    * `split(text, " ")` tokens of each doc_id, by increasing doc_id
+    * (null first); the rows of two documents with one doc_id are
+    * counted together. */
+  private def termCounts(batches: Iterator[DocBatch]): Iterator[(java.lang.Long, UTF8String, Long)] = {
+    val bs = batches.toArray
+    val ids = bs.flatMap(_.ids)
+    val texts = bs.flatMap(_.texts)
+    val order = ids.indices.sortBy(i => Option(ids(i)).map(_.longValue)).toArray
+    val counts = new java.util.HashMap[String, Array[Long]]()
+    var i = 0
+    Iterator.continually(i < order.length).takeWhile(identity).flatMap { _ =>
+      val id = ids(order(i))
+      counts.clear()
+      while (i < order.length && java.util.Objects.equals(ids(order(i)), id)) {
+        val text = texts(order(i))
+        if (text != null) text.split(" ", -1).foreach(t => counts.computeIfAbsent(t, _ => Array(0L))(0) += 1)
+        i += 1
+      }
+      counts.asScala.map { case (t, c) => (id, UTF8String.fromString(t), c(0)) }.toList
+    }
+  }
+
+  /** [[docTerms]] rows with doc_id as a bigint, partition by partition. */
+  private def termRows(terms: DataFrame): RDD[InternalRow] =
+    terms.select(col("doc_id").cast(LongType), col("term"), col("tf")).queryExecution.toRdd
+
   // ------------------------------------------------------------- dedup_simhash
   /** Tf-weighted 63-bit simhash fold as a typed Aggregator: the buffer
     * is the 63 signed bit-sums, `reduce` folds one (hash, tf) token row
-    * in a tight JVM loop, `merge` is vector add (mergeable partials →
-    * map-side combine works), and `finish` assembles the simhash long
-    * directly. This replaces 63 codegen'd conditional `sum(when(...))`
-    * expressions per group — which risked codegen-size fallback and was
-    * the CPU hot spot of round 1's bench — with one ObjectHashAggregate
-    * whose per-row cost is a 63-iteration primitive loop.
+    * in a tight JVM loop, `merge` is vector add, and `finish` assembles
+    * the simhash long directly. [[simhashes]] folds each doc's
+    * [[docTerms]] rows with `reduce` and `finish` inside its doc block.
     */
   object SimHashAgg extends Aggregator[(Long, Long), Array[Long], Long] {
     def zero: Array[Long] = new Array[Long](63)
@@ -821,87 +935,132 @@ object LlmPipeline {
       while (i < 63) { if (b(i) > 0) sim |= (1L << i); i += 1 }
       sim
     }
-    // ExpressionEncoder (ARRAY<BIGINT>), not java serialization: every
-    // map-side partial crossing the partial->final exchange pays this
-    // encoder, and the native array codec is far cheaper than an
-    // ObjectOutputStream round trip per 63-long buffer.
     def bufferEncoder: org.apache.spark.sql.Encoder[Array[Long]] =
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
     def outputEncoder: org.apache.spark.sql.Encoder[Long] =
       org.apache.spark.sql.Encoders.scalaLong
   }
 
-  /** Per-doc 63-bit tf-weighted simhash — shared by dedup_simhash (the
-    * band-blocked near-dup join) and dedup_simhash_recall (the exact
-    * all-pairs audit of that blocking). Memoized + persisted per
-    * (application, dir) so the two qids pay the token explode +
-    * UDAF aggregation once per bench family (the shinglePairStats
-    * contract: live-storage-checked, clearCache just rebuilds). */
-  private val simhashMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private def simhashes(spark: SparkSession, dir: String): DataFrame = {
-    val key = (spark.sparkContext.applicationId, dir)
-    simhashMemo.get(key)
-      .filter(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      .getOrElse {
-        graft.BuildLog.log(s"memo miss: simhashes ($dir)")
-        val toks = Tables.documents(spark, dir)
-          .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-          .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
-          .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-          // 63-bit positive hash: top word masked to 31 bits so every value
-          // (and every sum of distinct bit powers) stays in positive BIGINT
-          // range in both engines — no sign-extension/overflow divergence.
-          .withColumn("h",
-            expr(s"shiftleft(${h32("tok", 7)} & 2147483647, 32) | ${h32("tok", 8)}"))
-        val simAgg = udaf(SimHashAgg)
-        val sim = toks.groupBy("doc_id")
-          .agg(simAgg(col("h"), col("tf")).as("simhash"))
-          .persist()
-        // eager, TIMED materialization — same attribution contract as
-        // shingleBaskets/shinglePairStats/coPurchaseAll (r9)
-        val t0 = System.nanoTime()
-        val n = sim.count()
-        graft.BuildLog.log(f"simhashes built in ${(System.nanoTime() - t0) / 1e9}%.2f s ($n docs, $dir)")
-        simhashMemo.put(key, sim)
-        sim
+  /** The 63-bit token hash of the simhash, equal to the SQL form
+    * `shiftleft(h32(tok, 7) & 2147483647, 32) | h32(tok, 8)` of the
+    * oracle: two seeded 32-bit md5 hashes, the top one masked to 31
+    * bits so every value stays a positive BIGINT in both engines. */
+  private[graft] def tokenHash(token: String): Long =
+    tokenHash(token.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+      java.security.MessageDigest.getInstance("MD5"))
+
+  private def tokenHash(utf8: Array[Byte], md5: java.security.MessageDigest): Long = {
+    // the first 8 hex digits of md5(seed || ':' || token) as an unsigned int
+    def h32(seed: Int): Long = {
+      md5.update(s"$seed:".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
+      md5.update(utf8)
+      val d = md5.digest()
+      (d(0) & 0xffL) << 24 | (d(1) & 0xffL) << 16 | (d(2) & 0xffL) << 8 | (d(3) & 0xffL)
+    }
+    (h32(7) & 0x7fffffffL) << 32 | h32(8)
+  }
+
+  /** Per doc block of [[docTerms]], (doc_id, simhash) for each doc with
+    * a non-null doc_id: its contiguous rows folded by [[SimHashAgg]]'s
+    * `reduce`/`finish`, token hashes cached per block. A doc without a
+    * token (null text) has no row in docTerms and so no simhash. */
+  private[graft] def simhashes(terms: DataFrame): RDD[(Long, Long)] =
+    termRows(terms).mapPartitions { rows =>
+      val md5 = java.security.MessageDigest.getInstance("MD5")
+      val hashes = new java.util.HashMap[UTF8String, java.lang.Long]()
+      val in = rows.filter(!_.isNullAt(0)).buffered
+      Iterator.continually(in.hasNext).takeWhile(identity).map { _ =>
+        val id = in.head.getLong(0)
+        val bits = SimHashAgg.zero
+        while (in.hasNext && in.head.getLong(0) == id) {
+          // the scan reuses its row: read it before advancing
+          val r = in.next()
+          val t = r.getUTF8String(1)
+          var h = hashes.get(t)
+          if (h == null) {
+            h = tokenHash(t.getBytes, md5)
+            hashes.put(t.clone(), h)
+          }
+          SimHashAgg.reduce(bits, (h.longValue, r.getLong(2)))
+        }
+        (id, SimHashAgg.finish(bits))
       }
+    }
+
+  /** The lowest 16-bit band in which two simhashes agree, given their
+    * xor (4 when none does). */
+  private def lowestSharedBand(xor: Long): Int = {
+    var b = 0
+    while (b < 4 && ((xor >>> (16 * b)) & 0xffffL) != 0) b += 1
+    b
   }
 
-  /** Band-blocked candidate pairs with their hamming distance (the
-    * recall-bearing inner join of dedup_simhash). Bands are 4 × 16 bits
-    * (the Manku-style table split), NOT 8 × 8: pigeonhole still holds
-    * (≤ 3 flipped bits touch ≤ 3 of 4 bands, so one band always
-    * matches), but each band key has 2^16 values instead of 2^8 —
-    * bucket population is n/65536, and the round-4 scale rehearsal
-    * measured the difference directly: with 8-bit bands candidate
-    * volume grew O(n²/256) and the 50× corpus took 27 s; 16-bit bands
-    * restore near-linear growth (docs/DESIGN.md table). */
-  private def simhashBandPairs(sim: DataFrame): DataFrame = {
-    val banded = sim.select(col("doc_id"), col("simhash"),
-      posexplode(expr("transform(sequence(0, 3), b -> shiftright(simhash, b * 16) & 65535)"))
-        .as(Seq("band", "bv")))
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
-        expr("bit_count(a.simhash ^ b.simhash)").as("hamming"))
-      .distinct()
+  /** (doc_id, simhash) per doc block → the pairs (da, db, hamming) with
+    * da < db at hamming ≤ 3, by band blocking over 4 × 16-bit bands.
+    * Each doc goes once per band to the owner block of its band key
+    * (band, value), one batch per (doc block, band block), n =
+    * spark.sql.shuffle.partitions. There every bucket (the docs of one
+    * band key) compares its docs pairwise and keeps a pair only in the
+    * lowest band its docs share, so each pair leaves exactly one bucket
+    * and no distinct is needed. By pigeonhole, ≤ 3 flipped bits touch
+    * ≤ 3 of the 4 bands, so every pair at hamming ≤ 3 shares one:
+    * recall is 1.0 against all pairs (dedup_simhash_recall audits it).
+    * 16-bit bands, not 8-bit: a bucket holds n/65536 docs instead of
+    * n/256, and the round-4 scale rehearsal measured the 8-bit form's
+    * O(n²/256) candidate growth (docs/DESIGN.md). `idType` is the
+    * type da and db take. */
+  private[graft] def simhashJoin(spark: SparkSession, sims: RDD[(Long, Long)], idType: DataType)
+      : DataFrame = {
+    val typed = typedId(idType)
+    val owner = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    // (band key, doc_id, simhash) triples per band block
+    val batches = sims.mapPartitions { ds =>
+      val out = Array.fill(owner.numPartitions)(new mutable.ArrayBuilder.ofLong)
+      ds.foreach { case (id, sim) =>
+        for (b <- 0 until 4) {
+          val key = b.toLong << 16 | (sim >>> (16 * b)) & 0xffffL
+          out(owner.getPartition(key)) += key += id += sim
+        }
+      }
+      out.indices.iterator.filter(out(_).length > 0).map(t => (t, out(t).result()))
+    }
+    val rows: RDD[InternalRow] = blockShuffle(batches, owner).mapPartitions { bs =>
+      val buckets = mutable.LongMap[mutable.ArrayBuilder.ofLong]()
+      bs.foreach { case (_, b) =>
+        for (i <- b.indices by 3) buckets.getOrElseUpdate(b(i), new mutable.ArrayBuilder.ofLong) += b(i + 1) += b(i + 2)
+      }
+      buckets.iterator.flatMap { case (key, docs) =>
+        val band = (key >>> 16).toInt
+        val d = docs.result()
+        for {
+          i <- (0 until d.length by 2).iterator
+          j <- (i + 2 until d.length by 2).iterator
+          xor = d(i + 1) ^ d(j + 1)
+          hamming = java.lang.Long.bitCount(xor)
+          if hamming <= 3 && lowestSharedBand(xor) == band
+        } yield new GenericInternalRow(Array[Any](
+          typed(math.min(d(i), d(j))), typed(math.max(d(i), d(j))), hamming)): InternalRow
+      }
+    }
+    GraftColumnBridge.dataFrame(spark, rows, StructType(Seq(
+      StructField("da", idType), StructField("db", idType),
+      StructField("hamming", IntegerType, nullable = false))))
   }
 
-  /** SimHash near-dup: 64-bit tf-weighted simhash per doc (two seeded
-    * 32-bit md5 hashes per token concatenated); pairs within Hamming
-    * distance ≤ 3 found by *band blocking* over 4 16-bit bands — by
-    * pigeonhole a pair at distance ≤ 3 shares at least 1 band, so the
-    * equi-join has guaranteed recall while scanning only O(Σ bucket²)
-    * candidates. The band join is what keeps the operator linear-ish at
-    * crawl scale; 64 bits keeps random collisions negligible. The
-    * recall guarantee is driver-checked as data by dedup_simhash_recall.
-    */
+  /** SimHash near-dup: 63-bit tf-weighted simhash per doc (two seeded
+    * 32-bit md5 hashes per token concatenated), folded in the doc
+    * blocks of [[docTerms]] ([[simhashes]]); pairs within Hamming
+    * distance ≤ 3 found by the band-block join [[simhashJoin]], which
+    * scans only O(Σ bucket²) candidates. The band join is what keeps
+    * the operator linear-ish at crawl scale; 63 bits keep random
+    * collisions negligible. The recall guarantee is driver-checked as
+    * data by dedup_simhash_recall. */
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
-    simhashBandPairs(simhashes(spark, dir))
-      .filter(col("hamming") <= 3)
-      .orderBy(col("da"), col("db"))
+    simhashPairsOn(docTerms(spark, dir)).orderBy(col("da"), col("db"))
+
+  /** dedup_simhash's rows, unordered, from a [[docTerms]] relation. */
+  private[graft] def simhashPairsOn(terms: DataFrame): DataFrame =
+    simhashJoin(terms.sparkSession, simhashes(terms), terms.schema("doc_id").dataType)
 
   /** Shared DuckDB CTE prefix computing (doc_id, simhash) — used by the
     * dedup_simhash and dedup_simhash_recall oracles. */
@@ -940,7 +1099,8 @@ object LlmPipeline {
     * any pair at hamming ≤ 3 differs in at most 3 of the 4 16-bit
     * bands, so it SHARES at least 1 — band blocking has recall 1.0
     * against the true hamming-≤3 pair set, and `n_missed` is provably 0.
-    * The exact side is an all-pairs self-join on the (doc_id, simhash)
+    * The blocked side is dedup_simhash's own [[simhashJoin]]; the exact
+    * side is an all-pairs self-join on the same (doc_id, simhash)
     * relation — ONE long per doc, so the audit is O(docs²) on an
     * 8-byte key, not O(corpus²) on text. That is the standard sampled
     * recall-audit shape at 100 TB: run it over a deterministic doc
@@ -948,14 +1108,18 @@ object LlmPipeline {
     * verified SFs the full corpus IS the sample. Output is one row:
     * (n_exact, n_missed, recall_ok). */
   def dedupSimhashRecall(spark: SparkSession, dir: String): DataFrame = {
-    // the memoized persisted relation; caller-freed (pageRank's contract)
-    val sim = simhashes(spark, dir)
+    val terms = docTerms(spark, dir)
+    val idType = terms.schema("doc_id").dataType
+    val typed = typedId(idType)
+    val sims = simhashes(terms)
+    val sim = GraftColumnBridge.dataFrame(spark,
+      sims.map { case (id, s) => new GenericInternalRow(Array[Any](typed(id), s)): InternalRow },
+      StructType(Seq(StructField("doc_id", idType), StructField("simhash", LongType, nullable = false))))
     val exact = sim.as("a").join(sim.as("b"), col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
         expr("bit_count(a.simhash ^ b.simhash)").as("hamming"))
       .filter(col("hamming") <= 3)
-    val blocked = simhashBandPairs(sim).filter(col("hamming") <= 3)
-      .select(col("da"), col("db"))
+    val blocked = simhashJoin(spark, sims, idType).select(col("da"), col("db"))
     val nExact = exact.agg(count(lit(1)).as("n_exact"))
     val nMissed = exact.join(blocked, Seq("da", "db"), "left_anti")
       .agg(count(lit(1)).as("n_missed"))
@@ -1308,31 +1472,112 @@ object LlmPipeline {
 
   // ----------------------------------------------------------------- text_tfidf
   /** tf-idf: top-3 scoring terms per document (doc_id < 100), idf over
-    * the full corpus. Explode → two groupBys → join — every stage is a
-    * keyed shuffle. The BOUNDED side of the scoring join is the
-    * query-band tf slice (≤100 docs' terms), so THAT side broadcasts;
-    * the df relation is the full corpus VOCABULARY — Heaps-law
-    * unbounded, billions of terms at crawl scale — and must stream.
-    * (Round 6 scale audit: this originally broadcast df_, the same
-    * unbounded-broadcast class as the fixed-width LSH keys — fine on
-    * the fixture, an executor OOM on a real corpus.) */
-  def textTfidf(spark: SparkSession, dir: String): DataFrame = {
-    val d = Tables.documents(spark, dir)
-    val nDocs = d.select(countDistinct("doc_id").as("n"))
-    val toks = d.select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
-    val tf = toks.groupBy("doc_id", "term").agg(count(lit(1)).as("tf"))
-    val df_ = toks.select("doc_id", "term").distinct()
-      .groupBy("term").agg(count(lit(1)).as("df"))
-    broadcast(tf.filter(col("doc_id") < 100))
-      .join(df_, "term")
-      .crossJoin(broadcast(nDocs))
-      .withColumn("tfidf", round(col("tf") * log(col("n").cast("double") / col("df")), 6))
-      .withColumn("rk", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy("doc_id")
-          .orderBy(col("tfidf").desc, col("term"))))
-      .filter(col("rk") <= 3)
-      .select(col("doc_id"), col("rk"), col("term"), col("tfidf"))
-      .orderBy(col("doc_id"), col("rk"))
+    * the full corpus, read from the [[docTerms]] memo by
+    * [[tfidfTopOn]]. */
+  def textTfidf(spark: SparkSession, dir: String): DataFrame =
+    tfidfTopOn(docTerms(spark, dir)).orderBy(col("doc_id"), col("rk"))
+
+  /** What one doc block sends one term block: its distinct non-null
+    * doc count, the df partials of its terms owned by the term block,
+    * and its query-band (doc_id < 100) tf rows of those terms. */
+  private final case class TermBatch(docs: Long, terms: Array[UTF8String], df: Array[Long],
+      bandIds: Array[Long], bandTerms: Array[UTF8String], bandTf: Array[Long])
+
+  /** text_tfidf's rows (doc_id, rk, term, tfidf), unordered, from a
+    * [[docTerms]] relation in its doc-block layout, over n =
+    * spark.sql.shuffle.partitions term blocks:
+    *  1. ONE shuffle from the doc blocks to the term blocks, one batch
+    *     per block pair ([[TermBatch]]). A term's df partials all meet
+    *     at its owner block, so its df is exact; every term block gets
+    *     every doc block's doc count, so each knows n;
+    *  2. each term block scores its band rows, round(tf·ln(n/df), 6)
+    *     ([[tfidf]]), and sends them to their doc's owner block, where
+    *     the top 3 are ranked by tfidf desc, then term in Spark's
+    *     (UTF-8 byte) order.
+    * n counts the distinct non-null doc_ids with a token, as the oracle
+    * does; df counts a null doc_id as one doc, as the oracle's DISTINCT
+    * does. Only the band's rows and per-term counts travel: nothing
+    * corpus-sized is broadcast or gathered. */
+  private[graft] def tfidfTopOn(terms: DataFrame): DataFrame = {
+    val spark = terms.sparkSession
+    val idType = terms.schema("doc_id").dataType
+    val typed = typedId(idType)
+    val owner = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val batches = termRows(terms).mapPartitions(termBatches(_, owner))
+    val scores = blockShuffle(batches, owner).mapPartitions(scoreBand)
+    val rows: RDD[InternalRow] = blockShuffle(scores, owner).mapPartitions { ss =>
+      val byDoc = mutable.LongMap[mutable.ArrayBuffer[(UTF8String, Double)]]()
+      ss.foreach { case (d, s) => byDoc.getOrElseUpdate(d, mutable.ArrayBuffer()) += s }
+      byDoc.keys.toArray.sorted.iterator.flatMap { d =>
+        byDoc(d).sortWith { case ((ta, a), (tb, b)) => a > b || a == b && ta.compareTo(tb) < 0 }
+          .take(3).zipWithIndex.map { case ((t, s), r) =>
+            new GenericInternalRow(Array[Any](typed(d), r + 1, t, s)): InternalRow
+          }
+      }
+    }
+    GraftColumnBridge.dataFrame(spark, rows, StructType(Seq(
+      StructField("doc_id", idType),
+      StructField("rk", IntegerType, nullable = false),
+      StructField("term", StringType, nullable = false),
+      StructField("tfidf", DoubleType))))
+  }
+
+  /** One doc block's [[docTerms]] rows (doc_id as bigint) → exactly one
+    * [[TermBatch]] per term block. */
+  private def termBatches(rows: Iterator[InternalRow], owner: Partitioner): Iterator[(Int, TermBatch)] = {
+    val df = Array.fill(owner.numPartitions)(new java.util.HashMap[UTF8String, Array[Long]]())
+    val band = Array.fill(owner.numPartitions)(
+      (new mutable.ArrayBuilder.ofLong, mutable.ArrayBuffer[UTF8String](), new mutable.ArrayBuilder.ofLong))
+    var docs = 0L
+    var last = 0L
+    rows.foreach { r =>
+      // the scan reuses its row and term buffer: copy what is kept
+      val t = r.getUTF8String(1)
+      val b = owner.getPartition(t)
+      val partial = df(b).get(t)
+      if (partial == null) df(b).put(t.clone(), Array(1L)) else partial(0) += 1
+      if (!r.isNullAt(0)) {
+        val id = r.getLong(0)
+        // a doc's rows are contiguous in its block
+        if (docs == 0 || id != last) { docs += 1; last = id }
+        if (id < 100) {
+          val (ids, ts, tfs) = band(b)
+          ids += id
+          ts += t.clone()
+          tfs += r.getLong(2)
+        }
+      }
+    }
+    Iterator.tabulate(owner.numPartitions) { b =>
+      val (ts, partials) = df(b).asScala.toArray.unzip
+      val (ids, bts, tfs) = band(b)
+      (b, TermBatch(docs, ts, partials.map(_(0)), ids.result(), bts.toArray, tfs.result()))
+    }
+  }
+
+  /** One term block's batches → (doc_id, (term, tfidf)) for the band
+    * rows of its terms. */
+  private def scoreBand(batches: Iterator[(Int, TermBatch)]): Iterator[(Long, (UTF8String, Double))] = {
+    val df = new java.util.HashMap[UTF8String, Array[Long]]()
+    var n = 0L
+    val band = mutable.ArrayBuffer[TermBatch]()
+    batches.foreach { case (_, b) =>
+      n += b.docs
+      b.terms.indices.foreach(i => df.computeIfAbsent(b.terms(i), _ => Array(0L))(0) += b.df(i))
+      if (b.bandIds.nonEmpty) band += b
+    }
+    band.iterator.flatMap(b => b.bandIds.indices.iterator.map { i =>
+      (b.bandIds(i), (b.bandTerms(i), tfidf(b.bandTf(i), n, df.get(b.bandTerms(i))(0))))
+    })
+  }
+
+  /** `round(tf * log(n / df), 6)` as Spark evaluates it on doubles:
+    * `StrictMath.log`, then HALF_UP rounding of the double's decimal
+    * (`Double.toString`) form. */
+  private[graft] def tfidf(tf: Long, n: Long, df: Long): Double = {
+    val x = tf * StrictMath.log(n.toDouble / df)
+    if (x.isNaN || x.isInfinite) x
+    else BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
   private val textTfidfOracle =

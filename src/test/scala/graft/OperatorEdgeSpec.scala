@@ -361,10 +361,26 @@ class Round2PlanSpec extends SparkSpec {
     assert(plan.contains("array_dot_product"), plan)
   }
 
-  test("dedup_simhash aggregates via the typed SimHashAgg (object hash agg)") {
-    val plan = operators.LlmPipeline.queries.find(_.id == "dedup_simhash").get
-      .fn(spark, sfDir).queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate"), plan)
+  test("dedup_simhash reads the cached docTerms build, no join") {
+    import org.apache.spark.rdd.RDD
+    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    spark.catalog.clearCache()
+    val df = operators.LlmPipeline.queries.find(_.id == "dedup_simhash").get.fn(spark, sfDir)
+    // the docTerms cache entry the query was built over
+    val entry = operators.LlmPipeline.docTerms(spark, sfDir).queryExecution.withCachedData
+      .collect { case r: InMemoryRelation => r }
+    assert(entry.size == 1)
+    val cached = entry.head.cacheBuilder.cachedColumnBuffers
+    // the query scans one RDD lineage, and that lineage reads the entry
+    val leaves = df.queryExecution.analyzed.collectLeaves()
+    assert(leaves.size == 1, df.queryExecution.analyzed.toString)
+    def lineage(r: RDD[_]): Seq[RDD[_]] = r +: r.dependencies.flatMap(d => lineage(d.rdd))
+    val scanned = leaves.collect { case l: LogicalRDD => l.rdd }
+    assert(scanned.flatMap(lineage).exists(_.id == cached.id), "dedup_simhash does not read the docTerms entry")
+    val plan = df.queryExecution.executedPlan.toString
+    assert(!plan.contains("Join"), plan)
+    spark.catalog.clearCache()
   }
 
   test("source_orc pushes the price predicate into the ORC scan") {

@@ -4,7 +4,7 @@ import org.apache.spark.storage.StorageLevel
 
 /** Contract tests for the family-shared memoized relations
   * (LlmPipeline.shinglePairStats, Relational.coPurchaseCanon,
-  * the simhash memo behind dedup_simhash*): within a session the same
+  * LlmPipeline.docTerms behind dedup_simhash* and text_tfidf): within a session the same
   * persisted instance is reused; after a clearCache the memo must
   * REBUILD (detect the dead storage level), not hand back a handle to
   * dropped blocks — Verify's per-query clearCache hygiene and the
@@ -23,6 +23,21 @@ class SharedRelationsSpec extends SparkSpec {
     assert(!(b eq a), "after clearCache the memo must rebuild, not reuse")
     assert(b.storageLevel != StorageLevel.NONE, "rebuild must re-persist")
     assert(b.orderBy("da", "db").collect().sameElements(rowsA),
+      "rebuild must reproduce identical content")
+    spark.catalog.clearCache()
+  }
+
+  test("docTerms: reused while cached, rebuilt after clearCache, same rows") {
+    val a = operators.LlmPipeline.docTerms(spark, sfDir)
+    val rowsA = a.orderBy("doc_id", "term").collect()
+    assert(operators.LlmPipeline.docTerms(spark, sfDir) eq a,
+      "second call while cached must return the memoized instance")
+    spark.catalog.clearCache()
+    assert(a.storageLevel == StorageLevel.NONE, "clearCache should drop the blocks")
+    val b = operators.LlmPipeline.docTerms(spark, sfDir)
+    assert(!(b eq a), "after clearCache the memo must rebuild, not reuse")
+    assert(b.storageLevel != StorageLevel.NONE, "rebuild must re-persist")
+    assert(b.orderBy("doc_id", "term").collect().sameElements(rowsA),
       "rebuild must reproduce identical content")
     spark.catalog.clearCache()
   }
