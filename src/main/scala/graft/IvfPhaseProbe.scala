@@ -55,7 +55,6 @@ object IvfPhaseProbe {
       exactSet.unpersist(blocking = false)
       println(f"RECALL dir=$dir nhits=$nhits/$nExact (${nhits.toDouble / math.max(1L, nExact)}%.2f)")
       spark.catalog.clearCache()
-      ml.MlBridges.clearIvfMemo()
     }
     spark.stop()
   }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Dev probe: per-round wall time of the NN-Descent loop — the
   * attribution tool behind the round-7 sim_knn_graph budget work.

@@ -54,7 +54,7 @@ object MinhashProbe {
         .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
         .distinct().localCheckpoint())
       println(s"candidates: ${cand.count()}")
-      val sizes = t("sizes groupBy over postings")(
+      t("sizes groupBy over postings")(
         sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh")).localCheckpoint())
       val inter = cand
         .join(sh.as("x"), col("da") === col("x.doc_id"))

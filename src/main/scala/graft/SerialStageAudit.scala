@@ -1,7 +1,5 @@
 package graft
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
 import org.apache.spark.sql.execution.{CoalesceExec, QueryExecution, SparkPlan}

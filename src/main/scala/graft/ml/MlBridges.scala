@@ -196,11 +196,7 @@ object MlBridges {
           (col("qn") * col("c.n")), 6).as("cos"))
   }
 
-  /** Dev/probe hook: drop the memo so a fresh build can be timed. */
-  private[graft] def clearIvfMemo(): Unit = ivfMemo.clear()
-
-  private val ivfMemo = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int, Option[Int]), DataFrame]
+  private val ivfMemo = new graft.blocks.Blocks.Memo[(String, Int, Option[Int])]
 
   /** FAMILY-SHARED full IVF candidate relation: [[ivfCandidates]] at
     * nprobeMax = nCells — every (query, candidate≠query) pair tagged
@@ -215,18 +211,11 @@ object MlBridges {
     * with the live-storage contract of the other family memos;
     * persisted SER (build-once, read-per-qid). */
   def ivfCandidatesShared(spark: SparkSession, dir: String, nCells: Int,
-      qidBound: Option[Int]): DataFrame = {
-    val key = (spark.sparkContext.applicationId, dir, nCells, qidBound)
-    ivfMemo.get(key)
-      .filter(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      .getOrElse {
-        graft.BuildLog.log(s"memo miss: ivfCandidatesShared ($dir, nCells=$nCells, band=$qidBound)")
-        val full = ivfCandidates(spark, dir, nCells, nCells, qidBound)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        ivfMemo.put(key, full)
-        full
-      }
-  }
+      qidBound: Option[Int]): DataFrame =
+    ivfMemo(spark, (dir, nCells, qidBound), s"ivfCandidatesShared ($dir, nCells=$nCells, band=$qidBound)") {
+      ivfCandidates(spark, dir, nCells, nCells, qidBound)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    }
 
   /** MinHashLSH approximate-similarity join over token sets — the
     * near-dup scale path. Returns candidate pairs at Jaccard ≥ minJ

@@ -2,7 +2,8 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.{HashPartitioner, Partition, TaskContext}
+import graft.blocks.Blocks
+import org.apache.spark.{Partitioner, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -10,7 +11,6 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Distributed graph primitives for the dedup pipeline. The only one a
   * training-data pipeline genuinely needs is connected components:
@@ -302,13 +302,11 @@ object GraphOps {
     * than a stationarity check (h ≤ 2^(k−1)) and often one round
     * earlier (hier_depth's depth-17 tree: 5 rounds instead of 6).
     *
-    * Layout (the block layout of `ps.MfTrainer`): nodes are hashed
-    * once into `spark.sql.shuffle.partitions` blocks that hold their
-    * state as arrays with a local index. A round is one routed pull —
-    * a request shuffle sends each block's distinct unsettled ancestors
-    * to their owner block, a reply shuffle returns (anc(a), d(a),
-    * settled(a)) — and a co-partitioned update. Every shuffle record
-    * is one block's batch for one peer block, never a per-node tuple.
+    * Layout ([[graft.blocks.Blocks]]): nodes are hashed once into
+    * owner blocks that hold their state as arrays with a local index.
+    * A round is one routed pull — a request shuffle sends each block's
+    * distinct unsettled ancestors to their owner block, a reply shuffle
+    * returns (anc(a), d(a), settled(a)) — and a co-partitioned update.
     * The round's probe (rows, live, unsettled) is its only job, and the
     * first round's job also builds the blocks, so a call runs exactly
     * one job per round. Each round's blocks are locally checkpointed
@@ -330,60 +328,50 @@ object GraphOps {
     * reads the last round's blocks; [[freeCheckpoint]] on it releases
     * them. */
   def rootedDepth(parents: DataFrame): DataFrame =
-    graft.TaskFailure.rethrow[IllegalArgumentException, DataFrame] {
+    graft.TaskFailure.rethrow[IllegalArgumentException, DataFrame](Blocks.scope { live =>
       val spark = parents.sparkSession
-      def keyType(c: String): DataType = parents.schema(c).dataType match {
-        case ByteType | ShortType | IntegerType | LongType => LongType
-        case StringType => StringType
-        case t => throw new IllegalArgumentException(
-          s"rootedDepth: $c must be an integral or string column, got ${t.simpleString}")
-      }
-      val key = keyType("node")
-      require(keyType("parent") == key,
+      val nodeType = Blocks.idType(parents, "node", "rootedDepth", orString = true)
+      require((Blocks.idType(parents, "parent", "rootedDepth", orString = true) == StringType) ==
+        (nodeType == StringType),
         "rootedDepth: node and parent must both be integral or both be string columns")
+      val key = if (nodeType == StringType) StringType else LongType
+      val part = Blocks.owner(spark)
+      var cur = live.checkpoint(nodeBlocks(parents.select(col("node").cast(key), col("parent").cast(key)), part))
+      var (rows, alive) = (0L, 0L)
+      var maxRounds = 1
+      var rounds = 0
+      var done = false
+      while (!done && rounds < maxRounds) {
+        val next = live.checkpoint(doublingRound(cur, part))
+        // the round's one job: (rows, live, unsettled) after it
+        val probe = next.map(b => Array(b.nodes.length.toLong, b.liveNodes, b.unsettledNodes))
+          .collect()
+        rows = probe.map(_(0)).sum
+        alive = probe.map(_(1)).sum
+        done = probe.forall(_(2) == 0L)
+        // ceil(log2(n)) + 3, floor 4
+        maxRounds = math.max(4, 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, rows - 1)) + 3)
+        live.release(cur)
+        cur = next
+        rounds += 1
+      }
+      lastRounds = rounds
+      // not settling within the cap means a parent CYCLE. Fail loudly —
+      // wrong depths that LOOK right are the worst possible output.
+      require(done, s"rootedDepth did not converge in $rounds rounds " +
+        s"(n=$rows): input has a parent cycle")
+      // the OTHER precondition violation converges: a dangling parent's
+      // subtree drains, which would silently return depths missing
+      // those nodes
+      require(alive == rows, s"rootedDepth row count changed $rows -> $alive: " +
+        "a dangling parent orphaned a subtree (input is not a closed " +
+        "forest) — validate parents against nodes upstream")
+      live.handOver(cur)
       val nodeField = parents.schema("node")
-      val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-      // every RDD this call persists; all but the returned blocks are released
-      val live = mutable.Set[RDD[_]]()
-      def keep(r: RDD[NodeBlock]): RDD[NodeBlock] = { live += r; r.localCheckpoint() }
-      def drop(r: RDD[_]): Unit = { live -= r; r.unpersist(blocking = false) }
-      try {
-        var cur = keep(nodeBlocks(parents.select(col("node").cast(key), col("parent").cast(key)), part))
-        var (rows, alive) = (0L, 0L)
-        var maxRounds = 1
-        var rounds = 0
-        var done = false
-        while (!done && rounds < maxRounds) {
-          val next = keep(doublingRound(cur, part))
-          // the round's one job: (rows, live, unsettled) after it
-          val probe = next.map(b => Array(b.nodes.length.toLong, b.liveNodes, b.unsettledNodes))
-            .collect()
-          rows = probe.map(_(0)).sum
-          alive = probe.map(_(1)).sum
-          done = probe.forall(_(2) == 0L)
-          // ceil(log2(n)) + 3, floor 4
-          maxRounds = math.max(4, 64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, rows - 1)) + 3)
-          drop(cur)
-          cur = next
-          rounds += 1
-        }
-        lastRounds = rounds
-        // not settling within the cap means a parent CYCLE. Fail loudly —
-        // wrong depths that LOOK right are the worst possible output.
-        require(done, s"rootedDepth did not converge in $rounds rounds " +
-          s"(n=$rows): input has a parent cycle")
-        // the OTHER precondition violation converges: a dangling parent's
-        // subtree drains, which would silently return depths missing
-        // those nodes
-        require(alive == rows, s"rootedDepth row count changed $rows -> $alive: " +
-          "a dangling parent orphaned a subtree (input is not a closed " +
-          "forest) — validate parents against nodes upstream")
-        live -= cur
-        GraftColumnBridge.dataFrame(spark, new DepthRows(cur, nodeField.dataType),
-          StructType(Seq(nodeField, StructField("root", nodeField.dataType, nullable = false),
-            StructField("depth", LongType, nullable = false))))
-      } finally live.foreach(_.unpersist(blocking = false))
-    }
+      GraftColumnBridge.dataFrame(spark, new DepthRows(cur, nodeType),
+        StructType(Seq(nodeField, StructField("root", nodeType, nullable = false),
+          StructField("depth", LongType, nullable = false))))
+    })
 
   /** One hash block of [[rootedDepth]]'s state: its node keys with a
     * local index, and per node the current ancestor key (null once the
@@ -398,17 +386,15 @@ object GraphOps {
 
   /** (node, parent) key pairs → one block per partition of `part`,
     * shipped as one batch per (input partition, block). */
-  private def nodeBlocks(pairs: DataFrame, part: HashPartitioner): RDD[NodeBlock] =
+  private def nodeBlocks(pairs: DataFrame, part: Partitioner): RDD[NodeBlock] =
     pairs.rdd.mapPartitions { rows =>
-      val batches = Array.fill(part.numPartitions)(
-        (mutable.ArrayBuffer[Any](), mutable.ArrayBuffer[Any]()))
-      rows.foreach { r =>
-        val (ns, ps) = batches(part.getPartition(r.get(0)))
-        ns += r.get(0)
-        ps += r.get(1)
-      }
-      batches.indices.iterator.filter(batches(_)._1.nonEmpty)
-        .map(t => (t, (batches(t)._1.toArray, batches(t)._2.toArray)))
+      Blocks.spread(part)((mutable.ArrayBuffer[Any](), mutable.ArrayBuffer[Any]())) { to =>
+        rows.foreach { r =>
+          val (ns, ps) = to(r.get(0))
+          ns += r.get(0)
+          ps += r.get(1)
+        }
+      } { case (ns, ps) => (ns.toArray, ps.toArray) }
     }.partitionBy(part).mapPartitions { batches =>
       val nodes = mutable.ArrayBuffer[Any]()
       val anc = mutable.ArrayBuffer[Any]()
@@ -428,14 +414,12 @@ object GraphOps {
     * owner blocks, then sets anc ← anc(a), d ← d + d(a),
     * settled ← settled(a); a node whose ancestor is missing or drained
     * drains too. */
-  private def doublingRound(blocks: RDD[NodeBlock], part: HashPartitioner): RDD[NodeBlock] = {
+  private def doublingRound(blocks: RDD[NodeBlock], part: Partitioner): RDD[NodeBlock] = {
     val requests = blocks.mapPartitionsWithIndex { (from, bs) =>
       val b = bs.next()
-      val wanted = Array.fill(part.numPartitions)(mutable.HashSet[Any]())
-      b.anc.indices.foreach { i =>
-        if (b.anc(i) != null && !b.settled(i)) wanted(part.getPartition(b.anc(i))) += b.anc(i)
-      }
-      wanted.indices.iterator.filter(wanted(_).nonEmpty).map(t => (t, (from, wanted(t).toArray)))
+      Blocks.spread(part)(mutable.HashSet[Any]()) { to =>
+        b.anc.indices.foreach(i => if (b.anc(i) != null && !b.settled(i)) to(b.anc(i)) += b.anc(i))
+      }(wanted => (from, wanted.toArray))
     }.partitionBy(part)
     val replies = blocks.zipPartitions(requests) { (bs, reqs) =>
       val b = bs.next()
@@ -475,18 +459,13 @@ object GraphOps {
   private final class DepthRows(blocks: RDD[NodeBlock], nodeType: DataType)
       extends RDD[InternalRow](blocks) {
     override protected def getPartitions: Array[Partition] = blocks.partitions
-    override def compute(split: Partition, ctx: TaskContext): Iterator[InternalRow] =
+    override def compute(split: Partition, ctx: TaskContext): Iterator[InternalRow] = {
+      val typed = Blocks.catalystId(nodeType)
       blocks.iterator(split, ctx).flatMap { b =>
         b.nodes.indices.iterator.filter(b.anc(_) != null).map { i =>
           new GenericInternalRow(Array[Any](typed(b.nodes(i)), typed(b.anc(i)), b.d(i)))
         }
       }
-    private def typed(k: Any): Any = if (k == null) null else nodeType match {
-      case ByteType => k.asInstanceOf[Long].toByte
-      case ShortType => k.asInstanceOf[Long].toShort
-      case IntegerType => k.asInstanceOf[Long].toInt
-      case StringType => UTF8String.fromString(k.asInstanceOf[String])
-      case _ => k
     }
     override def unpersist(blocking: Boolean): this.type = {
       blocks.unpersist(blocking)

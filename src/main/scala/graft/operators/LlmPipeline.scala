@@ -2,14 +2,13 @@ package graft.operators
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
-import scala.reflect.ClassTag
 
 import graft.GQuery
+import graft.blocks.Blocks
 import graft.functions.VectorExprs
 import graft.sources.Tables
-import org.apache.spark.{HashPartitioner, Partitioner}
-import org.apache.spark.rdd.{RDD, ShuffledRDD}
-import org.apache.spark.serializer.KryoSerializer
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -40,7 +39,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    functions), with these exceptions: the clearly-marked multimodal
   *    decode stub, which demonstrates the per-partition batch path
   *    (`mapPartitions` over a typed Dataset — the Scala analog of
-  *    `mapInPandas`), and the block builds in the ps.MfTrainer layout,
+  *    `mapInPandas`), and the block builds on [[graft.blocks.Blocks]],
   *    RDD lineages over doc, shingle, band and term blocks exposed as
   *    DataFrames: [[shinglePairStats]] and [[docTerms]] (both cached),
   *    and over docTerms dedup_simhash ([[simhashJoin]]),
@@ -112,33 +111,23 @@ object LlmPipeline {
     * deserialized rows on the contended grading host, and reading a fat
     * deserialized spill cost more than recomputing; SER keeps the
     * resident bytes ~3× smaller and makes the disk-backed path compact.
-    * Memo contract as [[shinglePairStats]]: a hit requires a LIVE
-    * storage level, so any clearCache just causes a rebuild —
-    * correctness never depends on cache residency. */
-  private val shingleBaseMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private[graft] def shingleBase(spark: SparkSession, dir: String): DataFrame = {
-    val key = (spark.sparkContext.applicationId, dir)
-    shingleBaseMemo.get(key)
-      .filter(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      .getOrElse {
-        graft.BuildLog.log(s"memo miss: shingleBase ($dir)")
-        // persisted ALREADY HASH-PARTITIONED on the shingle — the
-        // inverted-index layout. Every shingle-keyed consumer (the df
-        // census, the hot-set anti join, the basket groupBy, minhash's
-        // per-distinct-shingle hashing) then reads the cached
-        // partitioning instead of re-exchanging the postings per
-        // aggregation: one shuffle at build time replaces two at first
-        // family use (pageRank's cached-partitioning trade, measured
-        // there). doc_id-keyed consumers re-shuffle exactly as they
-        // did from the unpartitioned cache — no regression path.
-        val sh = shingles(Tables.documents(spark, dir))
-          .repartition(col("shingle"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        shingleBaseMemo.put(key, sh)
-        sh
-      }
-  }
+    * Memo contract: [[graft.blocks.Blocks.Memo]]. */
+  private val shingleBaseMemo = new Blocks.Memo[String]
+  private[graft] def shingleBase(spark: SparkSession, dir: String): DataFrame =
+    shingleBaseMemo(spark, dir, s"shingleBase ($dir)") {
+      // persisted ALREADY HASH-PARTITIONED on the shingle — the
+      // inverted-index layout. Every shingle-keyed consumer (the df
+      // census, the hot-set anti join, the basket groupBy, minhash's
+      // per-distinct-shingle hashing) then reads the cached
+      // partitioning instead of re-exchanging the postings per
+      // aggregation: one shuffle at build time replaces two at first
+      // family use (pageRank's cached-partitioning trade, measured
+      // there). doc_id-keyed consumers re-shuffle exactly as they
+      // did from the unpartitioned cache — no regression path.
+      shingles(Tables.documents(spark, dir))
+        .repartition(col("shingle"))
+        .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    }
 
   /** df cap for the pair-generating shingle universe: one ultra-hot
     * shingle makes Σdf² quadratic at crawl scale while carrying no
@@ -163,57 +152,50 @@ object LlmPipeline {
     * the aggregation buffer exists) and per-basket pair volume is
     * ≤ DfCap² via the streaming double explode, never an in-row
     * materialized pair array. */
-  private val shingleBasketsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private[graft] def shingleBaskets(spark: SparkSession, dir: String): DataFrame = {
-    val key = (spark.sparkContext.applicationId, dir)
-    shingleBasketsMemo.get(key)
-      .filter(_.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
-      .getOrElse {
-        graft.BuildLog.log(s"memo miss: shingleBaskets ($dir)")
-        // hot-set built inline, un-persisted: this aggregation runs
-        // exactly once per basket build (itself memoized), so caching
-        // the full (shingle, df) relation for the family's lifetime
-        // would be dead residency on a contended host
-        val hot = shingleBase(spark, dir)
-          .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-          .filter(col("df") > DfCap).select("shingle")
-        val baskets = shingleBase(spark, dir)
-          .join(hot, Seq("shingle"), "left_anti")
-          .groupBy(col("shingle"))
-          .agg(sort_array(collect_list(col("doc_id"))).as("docs"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-        // eager, TIMED materialization: the basket build is the dedup
-        // family's dominant shared ETL, and fusing it into whichever
-        // qid happens to run first made that qid's bench number
-        // unattributable (the r6→r7 "dedup regression" debate). The
-        // materializing scan doubles as a COVERAGE census (ADVICE r8):
-        // a doc whose every shingle is hotter than [[DfCap]] lands in
-        // no basket, gets no minhash signature, and can never be
-        // flagged near-duplicate — a real behavior change vs the
-        // uncapped per-posting shape that the fixtures (max df ≈ 25)
-        // can never exercise, so a BINDING cap must be loud in the
-        // log, not silent. The corpus count is parquet-metadata-only.
-        val t0 = System.nanoTime()
-        val cov = baskets.select(explode(col("docs")).as("d"))
-          .agg(count(lit(1)), countDistinct(col("d"))).head()
-        val (nPost, nDocs) = (cov.getLong(0), cov.getLong(1))
-        val nCorpus = Tables.documents(spark, dir).count()
-        graft.BuildLog.log(
-          f"shingleBaskets built in ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-            f"($nDocs of $nCorpus docs in the df<=$DfCap universe, $nPost postings, $dir)" +
-            (if (nDocs < nCorpus)
-              // two causes land a doc outside the basket universe: every
-              // shingle hotter than the cap, OR text too short to yield
-              // any shingle — name both so triage doesn't hunt for a
-              // binding cap on a short-doc corpus
-              f" WARNING: ${nCorpus - nDocs} signature-less docs" +
-                " (df cap binds on all their shingles, or too short to shingle)"
-            else ""))
-        shingleBasketsMemo.put(key, baskets)
-        baskets
-      }
-  }
+  private val shingleBasketsMemo = new Blocks.Memo[String]
+  private[graft] def shingleBaskets(spark: SparkSession, dir: String): DataFrame =
+    shingleBasketsMemo(spark, dir, s"shingleBaskets ($dir)") {
+      // hot-set built inline, un-persisted: this aggregation runs
+      // exactly once per basket build (itself memoized), so caching
+      // the full (shingle, df) relation for the family's lifetime
+      // would be dead residency on a contended host
+      val hot = shingleBase(spark, dir)
+        .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+        .filter(col("df") > DfCap).select("shingle")
+      val baskets = shingleBase(spark, dir)
+        .join(hot, Seq("shingle"), "left_anti")
+        .groupBy(col("shingle"))
+        .agg(sort_array(collect_list(col("doc_id"))).as("docs"))
+        .persist(StorageLevel.MEMORY_AND_DISK_SER)
+      // eager, TIMED materialization: the basket build is the dedup
+      // family's dominant shared ETL, and fusing it into whichever
+      // qid happens to run first made that qid's bench number
+      // unattributable (the r6→r7 "dedup regression" debate). The
+      // materializing scan doubles as a COVERAGE census (ADVICE r8):
+      // a doc whose every shingle is hotter than [[DfCap]] lands in
+      // no basket, gets no minhash signature, and can never be
+      // flagged near-duplicate — a real behavior change vs the
+      // uncapped per-posting shape that the fixtures (max df ≈ 25)
+      // can never exercise, so a BINDING cap must be loud in the
+      // log, not silent. The corpus count is parquet-metadata-only.
+      val t0 = System.nanoTime()
+      val cov = baskets.select(explode(col("docs")).as("d"))
+        .agg(count(lit(1)), countDistinct(col("d"))).head()
+      val (nPost, nDocs) = (cov.getLong(0), cov.getLong(1))
+      val nCorpus = Tables.documents(spark, dir).count()
+      graft.BuildLog.log(
+        f"shingleBaskets built in ${(System.nanoTime() - t0) / 1e9}%.2f s " +
+          f"($nDocs of $nCorpus docs in the df<=$DfCap universe, $nPost postings, $dir)" +
+          (if (nDocs < nCorpus)
+            // two causes land a doc outside the basket universe: every
+            // shingle hotter than the cap, OR text too short to yield
+            // any shingle — name both so triage doesn't hunt for a
+            // binding cap on a short-doc corpus
+            f" WARNING: ${nCorpus - nDocs} signature-less docs" +
+              " (df cap binds on all their shingles, or too short to shingle)"
+          else ""))
+      baskets
+    }
 
   // ---------------------------------------------------------------- dedup_exact
   /** Exact dedup by normalized-text hash. The corpus has no literal
@@ -253,41 +235,27 @@ object LlmPipeline {
     * building it twice was the bench's single largest repeated subplan
     * (VERDICT r4 §Performance #4).
     *
-    * Built by [[pairStatsOn]] from the documents table. Memoized per
-    * (application, dir) and persisted MEMORY_AND_DISK_SER as a
-    * CacheManager entry: the second family member reuses it, and the
-    * memo checks the LIVE storage level, so a clearCache between the
-    * two calls (Verify's per-query hygiene) just rebuilds — correctness
-    * never depends on the cache; freed by the caller's clearCache
-    * (pageRank's contract). */
-  private val pairStatsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private[graft] def shinglePairStats(spark: SparkSession, dir: String): DataFrame = {
-    val key = (spark.sparkContext.applicationId, dir)
-    pairStatsMemo.get(key)
-      .filter(_.storageLevel != StorageLevel.NONE)
-      .getOrElse {
-        graft.BuildLog.log(s"memo miss: shinglePairStats ($dir)")
-        val stats = pairStatsOn(Tables.documents(spark, dir), DfCap)
-        pairStatsMemo.put(key, stats)
-        stats
-      }
-  }
+    * Built by [[pairStatsOn]] from the documents table and memoized
+    * per (application, dir) ([[graft.blocks.Blocks.Memo]]): the second
+    * family member reuses it, a clearCache between the two calls
+    * (Verify's per-query hygiene) just rebuilds, and the caller's
+    * clearCache frees it (pageRank's contract). */
+  private val pairStatsMemo = new Blocks.Memo[String]
+  private[graft] def shinglePairStats(spark: SparkSession, dir: String): DataFrame =
+    pairStatsMemo(spark, dir, s"shinglePairStats ($dir)")(pairStatsOn(Tables.documents(spark, dir), DfCap))
 
   /** [[shinglePairStats]] over any (doc_id, text) relation with df cap
-    * `cap`, as ONE RDD lineage in the block layout of ps.MfTrainer and
-    * GraphOps.rootedDepth, over n = spark.sql.shuffle.partitions blocks:
-    *  1. the documents are spread over n doc blocks (one batch per
-    *     input partition and block) and shingled per doc
-    *     ([[textShingles]], row-identical to [[shingles]]);
-    *  2. the postings go to their shingle's owner block, one batch per
-    *     (doc block, shingle block). All postings of a shingle meet
-    *     there, so its df is exact and the cap applies before any pair
-    *     exists: a shingle with df > cap yields no pair and no size;
+    * `cap`, as ONE RDD lineage over the owner blocks of
+    * [[graft.blocks.Blocks]]:
+    *  1. the documents are spread over the doc blocks and shingled per
+    *     doc ([[textShingles]], row-identical to [[shingles]]);
+    *  2. the postings go to their shingle's owner block. All postings
+    *     of a shingle meet there, so its df is exact and the cap applies
+    *     before any pair exists: a shingle with df > cap yields no pair
+    *     and no size;
     *  3. each shingle block's posting counts per doc go to the doc's
-    *     owner block, one batch per block pair; the owner sums them into
-    *     the doc's size and sends each shingle block the sizes of its
-    *     docs (a routed pull);
+    *     owner block, which sums them into the doc's size and sends each
+    *     shingle block the sizes of its docs (a routed pull);
     *  4. each shingle block orders its baskets by (size, id) and sends,
     *     per doc a, the docs after a in them to owner(a): one record per
     *     (shingle block, a), sorted by a there by Spark's spillable
@@ -299,114 +267,61 @@ object LlmPipeline {
     *     applies the family admission filter ([[admitted]]).
     * No task-local structure grows with the pair stream: block maps
     * hold postings or docs, and a per-doc buffer one doc's neighbours.
-    * The DataFrame over that lineage is persisted and materialized
-    * here in one job (its plan has no exchange), then a second job
-    * takes the coverage census; both are timed into the
-    * [[graft.BuildLog]]. Every intermediate RDD is released before
-    * return, and on failure the cache entry too.
+    * The result is a [[graft.blocks.Blocks.cached]] build whose report
+    * takes the coverage census in a second job.
     *
     * `doc_id` must be integral (da and db keep its type); `text` is
     * read as a string. A null doc_id counts toward its shingles' df
     * but gets no pair and no size. Two rows with one doc_id count as
     * two postings of it, as in the postings self-join. */
-  private[graft] def pairStatsOn(documents: DataFrame, cap: Long): DataFrame = {
+  private[graft] def pairStatsOn(documents: DataFrame, cap: Long): DataFrame = Blocks.scope { live =>
     val spark = documents.sparkSession
-    val idType = integralIdType(documents, "pairStatsOn")
-    val typed = typedId(idType)
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // a doc id's owner block, and a (block, batch) record's block
-    val owner = new HashPartitioner(n)
-    val kryo = new KryoSerializer(spark.sparkContext.getConf)
-    // (block, batch) records to their block, one shuffle
-    def toBlocks[V: ClassTag](batches: RDD[(Int, V)]): RDD[(Int, V)] =
-      new ShuffledRDD[Int, V, V](batches, owner).setSerializer(kryo)
-    // every RDD this call persists; all are released before return
-    val live = mutable.Set[RDD[_]]()
-    def keep[T](r: RDD[T]): RDD[T] = { live += r; r.persist(StorageLevel.MEMORY_AND_DISK) }
-    var stats: DataFrame = null
-    try {
-      val t0 = System.nanoTime()
-      val docs = toBlocks(docBatches(
-        documents.select(col("doc_id").cast(LongType), col("text").cast(StringType)), owner))
-      val baskets = keep(toBlocks(postingBatches(docs, n)).mapPartitions(cappedBaskets(_, cap)))
-      // size partials: each shingle block's posting count per doc, one
-      // batch per owner block, which sums them per doc
-      val sizes = keep(toBlocks(baskets.mapPartitionsWithIndex((t, bs) => sizePartials(t, bs.next(), owner)))
-        .mapPartitions(ps => Iterator(SizeBlock(ps.map(_._2).toArray))))
-      // ...and answers each shingle block with the sizes of its docs
-      val replies = toBlocks(sizes.mapPartitions(_.next().replies))
-      // per shingle block and doc a, the docs after a in its baskets'
-      // (size, id) order, so na <= nb for every pair; sorted by a at
-      // owner(a) (spillable), counted there and pruned on na alone
-      val candidates = new ShuffledRDD[Long, Array[Long], Array[Long]](
-        baskets.zipPartitions(replies)((bs, rs) => suffixes(bs.next(), rs)), owner)
-        .setKeyOrdering(Ordering.Long).setSerializer(kryo)
-        .mapPartitions(candidatePairs)
-      // the survivors, pushed to owner(b), where nb joins and the
-      // admission filter runs
-      val rows: RDD[InternalRow] = sizes.zipPartitions(
-        new ShuffledRDD[Long, HalfPair, HalfPair](candidates, owner).setSerializer(kryo)) { (s, ps) =>
-        val size = s.next().total
-        ps.flatMap { case (b, h) =>
-          val nb = size(b)
-          if (!admitted(h.inter, h.na, nb)) Iterator.empty
-          else Iterator(new GenericInternalRow(
-            if (h.a < b) Array[Any](typed(b), typed(h.a), h.inter, h.na, nb)
-            else Array[Any](typed(h.a), typed(b), h.inter, nb, h.na)))
-        }
+    val idType = Blocks.idType(documents, "doc_id", "pairStatsOn")
+    val typed = Blocks.catalystId(idType)
+    val owner = Blocks.owner(spark)
+    val docs = docBatches(documents, owner).partitionBy(owner)
+    val baskets = live.persist(postingBatches(docs, owner).partitionBy(owner).mapPartitions(cappedBaskets(_, cap)))
+    // size partials: each shingle block's posting count per doc, one
+    // batch per owner block, which sums them per doc
+    val sizes = live.persist(baskets.mapPartitionsWithIndex((t, bs) => sizePartials(t, bs.next(), owner))
+      .partitionBy(owner).mapPartitions(ps => Iterator(SizeBlock(ps.map(_._2).toArray))))
+    // ...and answers each shingle block with the sizes of its docs
+    val replies = sizes.mapPartitions(_.next().replies).partitionBy(owner)
+    // per shingle block and doc a, the docs after a in its baskets'
+    // (size, id) order, so na <= nb for every pair; sorted by a at
+    // owner(a) (spillable), counted there and pruned on na alone
+    val candidates = baskets.zipPartitions(replies)((bs, rs) => suffixes(bs.next(), rs))
+      .repartitionAndSortWithinPartitions(owner)
+      .mapPartitions(candidatePairs)
+    // the survivors, pushed to owner(b), where nb joins and the
+    // admission filter runs
+    val rows: RDD[InternalRow] = sizes.zipPartitions(candidates.partitionBy(owner)) { (s, ps) =>
+      val size = s.next().total
+      ps.flatMap { case (b, h) =>
+        val nb = size(b)
+        if (!admitted(h.inter, h.na, nb)) Iterator.empty
+        else Iterator(new GenericInternalRow(
+          if (h.a < b) Array[Any](typed(b), typed(h.a), h.inter, h.na, nb)
+          else Array[Any](typed(h.a), typed(b), h.inter, nb, h.na)))
       }
-      stats = GraftColumnBridge.dataFrame(spark, rows, StructType(
-        Seq("db", "da").map(StructField(_, idType, nullable = false)) ++
-          Seq("inter", "na", "nb").map(StructField(_, LongType, nullable = false))))
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
-      // eager, TIMED materialization (the shingleBaskets pattern, r9:
-      // attribution parity for every family-shared build) through the
-      // RDD, so no count aggregate adds an exchange and its jobs; then
-      // the coverage census off the same shuffles (ADVICE r8): a doc whose
-      // every shingle is hotter than the cap has no size and no pair,
-      // a real behavior change vs exact overlap that the fixtures
+    }
+    val schema = StructType(Seq("db", "da").map(StructField(_, idType, nullable = false)) ++
+      Seq("inter", "na", "nb").map(StructField(_, LongType, nullable = false)))
+    Blocks.cached(spark, "shinglePairStats", rows, schema) { nPairs =>
+      // the coverage census off the same shuffles (ADVICE r8): a doc
+      // whose every shingle is hotter than the cap has no size and no
+      // pair, a real behavior change vs exact overlap that the fixtures
       // (max df ≈ 25) never exercise, so a BINDING cap must be loud
-      val nPairs = stats.rdd.count()
       val (nDocs, nCorpus) = docs.zipPartitions(sizes) { (d, s) =>
         Iterator((s.next().total.size.toLong, d.map(_._2.ids.length.toLong).sum))
       }.collect().foldLeft((0L, 0L)) { case ((a, b), (x, y)) => (a + x, b + y) }
-      graft.BuildLog.log(
-        f"shinglePairStats built in ${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          f"($nPairs pairs, $nDocs of $nCorpus docs in the df<=$cap universe)" +
-          (if (nDocs < nCorpus)
-            f" WARNING: ${nCorpus - nDocs} docs outside it (the df cap binds on all" +
-              " their shingles, or their doc_id is null or repeated)"
-          else ""))
-      stats
-    } catch {
-      case e: Throwable =>
-        if (stats != null) stats.unpersist(blocking = false)
-        throw e
-    } finally live.foreach(_.unpersist(blocking = false))
+      f"($nPairs pairs, $nDocs of $nCorpus docs in the df<=$cap universe)" +
+        (if (nDocs < nCorpus)
+          f" WARNING: ${nCorpus - nDocs} docs outside it (the df cap binds on all" +
+            " their shingles, or their doc_id is null or repeated)"
+        else "")
+    }
   }
-
-  /** `doc_id`'s type in `documents`, which must be integral: the block
-    * builds carry ids as longs and give them back in this type
-    * ([[typedId]]). */
-  private def integralIdType(documents: DataFrame, op: String): DataType = {
-    val idType = documents.schema("doc_id").dataType
-    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(idType),
-      s"$op: doc_id must be an integral column, got ${idType.simpleString}")
-    idType
-  }
-
-  /** A long doc id as a value of the integral type `idType`. */
-  private def typedId(idType: DataType): Long => Any = idType match {
-    case ByteType => _.toByte
-    case ShortType => _.toShort
-    case IntegerType => _.toInt
-    case _ => d => d
-  }
-
-  /** (key, value) records to the partition `to` gives their key, in one
-    * Kryo shuffle. */
-  private def blockShuffle[K: ClassTag, V: ClassTag](records: RDD[(K, V)], to: Partitioner): RDD[(K, V)] =
-    new ShuffledRDD[K, V, V](records, to).setSerializer(new KryoSerializer(records.sparkContext.getConf))
 
   /** Family ADMISSION filter (r9) of [[shinglePairStats]]: keep only
     * pairs that could pass SOME consumer's threshold — jaccard ≥ 0.8
@@ -463,38 +378,35 @@ object LlmPipeline {
     var nulls = 0
   }
 
-  /** (doc_id: bigint, text) rows → one batch per (input partition, doc
-    * block). */
-  private def docBatches(docs: DataFrame, owner: Partitioner): RDD[(Int, DocBatch)] =
-    docs.rdd.mapPartitions { rows =>
-      val batches = Array.fill(owner.numPartitions)(
-        (mutable.ArrayBuffer[java.lang.Long](), mutable.ArrayBuffer[String]()))
-      rows.foreach { r =>
-        val id = if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))
-        val (ids, texts) = batches(owner.getPartition(id))
-        ids += id
-        texts += r.getString(1)
-      }
-      batches.indices.iterator.filter(batches(_)._1.nonEmpty)
-        .map(t => (t, DocBatch(batches(t)._1.toArray, batches(t)._2.toArray)))
+  /** The (doc_id, text) documents → one batch per (input partition, doc
+    * block), doc_id as a long. */
+  private def docBatches(documents: DataFrame, owner: Partitioner): RDD[(Int, DocBatch)] =
+    documents.select(col("doc_id").cast(LongType), col("text").cast(StringType)).rdd.mapPartitions { rows =>
+      Blocks.spread(owner)((mutable.ArrayBuffer[java.lang.Long](), mutable.ArrayBuffer[String]())) { to =>
+        rows.foreach { r =>
+          val id = if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))
+          val (ids, texts) = to(id)
+          ids += id
+          texts += r.getString(1)
+        }
+      } { case (ids, texts) => DocBatch(ids.toArray, texts.toArray) }
     }
 
-  /** Doc blocks → one batch of postings per (doc block, shingle block),
-    * for `n` shingle blocks. */
-  private def postingBatches(docs: RDD[(Int, DocBatch)], n: Int): RDD[(Int, PostingBatch)] =
+  /** Doc blocks → one batch of postings per (doc block, shingle block). */
+  private def postingBatches(docs: RDD[(Int, DocBatch)], owner: Partitioner): RDD[(Int, PostingBatch)] =
     docs.mapPartitions { batches =>
-      val out = Array.fill(n)(new java.util.HashMap[String, Postings]())
-      batches.foreach { case (_, b) =>
-        b.ids.indices.foreach { i =>
-          textShingles(b.texts(i)).foreach { s =>
-            val p = out(Math.floorMod(s.hashCode, n)).computeIfAbsent(s, _ => new Postings)
-            if (b.ids(i) == null) p.nulls += 1 else p.docs += b.ids(i)
+      Blocks.spread(owner)(new java.util.HashMap[String, Postings]()) { to =>
+        batches.foreach { case (_, b) =>
+          b.ids.indices.foreach { i =>
+            textShingles(b.texts(i)).foreach { s =>
+              val p = to(s).computeIfAbsent(s, _ => new Postings)
+              if (b.ids(i) == null) p.nulls += 1 else p.docs += b.ids(i)
+            }
           }
         }
-      }
-      out.indices.iterator.filter(!out(_).isEmpty).map { t =>
-        val (shingles, postings) = out(t).asScala.toArray.unzip
-        (t, PostingBatch(shingles, postings.map(_.docs.result()), postings.map(_.nulls)))
+      } { postings =>
+        val (shingles, ps) = postings.asScala.toArray.unzip
+        PostingBatch(shingles, ps.map(_.docs.result()), ps.map(_.nulls))
       }
     }
 
@@ -542,9 +454,13 @@ object LlmPipeline {
       : Iterator[(Int, SizePartial)] = {
     val counts = mutable.LongMap[Long]()
     baskets.foreach(_.foreach(d => counts(d) = counts.getOrElse(d, 0L) + 1))
-    counts.toArray.groupBy { case (d, _) => owner.getPartition(d) }.iterator.map { case (o, dc) =>
-      (o, SizePartial(from, dc.map(_._1), dc.map(_._2)))
-    }
+    Blocks.spread(owner)((new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofLong)) { to =>
+      counts.foreachEntry { (d, c) =>
+        val (ds, cs) = to(d)
+        ds += d
+        cs += c
+      }
+    } { case (ds, cs) => SizePartial(from, ds.result(), cs.result()) }
   }
 
   /** One shingle block's suffix records, given the sizes of its docs:
@@ -817,22 +733,11 @@ object LlmPipeline {
     * doc — the rows of `explode(split(text, " "))` grouped by (doc_id,
     * term). dedup_simhash, dedup_simhash_recall and text_tfidf read this
     * ONE relation, so the documents are scanned and tokenized once per
-    * family sweep. Built by [[docTermsOn]]; memo contract as
-    * [[shinglePairStats]]: a hit requires a LIVE storage level, so a
-    * clearCache just rebuilds. */
-  private val docTermsMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
-  private[graft] def docTerms(spark: SparkSession, dir: String): DataFrame = {
-    val key = (spark.sparkContext.applicationId, dir)
-    docTermsMemo.get(key)
-      .filter(_.storageLevel != StorageLevel.NONE)
-      .getOrElse {
-        graft.BuildLog.log(s"memo miss: docTerms ($dir)")
-        val terms = docTermsOn(Tables.documents(spark, dir))
-        docTermsMemo.put(key, terms)
-        terms
-      }
-  }
+    * family sweep. Built by [[docTermsOn]]; memo contract:
+    * [[graft.blocks.Blocks.Memo]]. */
+  private val docTermsMemo = new Blocks.Memo[String]
+  private[graft] def docTerms(spark: SparkSession, dir: String): DataFrame =
+    docTermsMemo(spark, dir, s"docTerms ($dir)")(docTermsOn(Tables.documents(spark, dir)))
 
   /** [[docTerms]] over any (doc_id, text) relation, in the doc-block
     * layout of [[pairStatsOn]]: the documents are spread once over
@@ -841,9 +746,7 @@ object LlmPipeline {
     * of the result, and of any scan of its cache entry, is doc block i:
     * all rows of a doc_id are in it, contiguous, by increasing doc_id
     * (null first). The simhash fold and the tf-idf doc count rely on
-    * that. The DataFrame is persisted MEMORY_AND_DISK_SER as a
-    * CacheManager entry and materialized here in one job, timed into
-    * the [[graft.BuildLog]]; on failure the entry is dropped.
+    * that. The result is a [[graft.blocks.Blocks.cached]] build.
     *
     * `doc_id` must be integral and keeps its type; `text` is read as a
     * string. A null text has no token; `""` is one empty token, and
@@ -852,33 +755,17 @@ object LlmPipeline {
     * doc. */
   private[graft] def docTermsOn(documents: DataFrame): DataFrame = {
     val spark = documents.sparkSession
-    val idType = integralIdType(documents, "docTermsOn")
-    val typed = typedId(idType)
-    val owner = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    var terms: DataFrame = null
-    try {
-      val t0 = System.nanoTime()
-      val rows: RDD[InternalRow] = blockShuffle(docBatches(
-          documents.select(col("doc_id").cast(LongType), col("text").cast(StringType)), owner), owner)
-        .mapPartitions(bs => termCounts(bs.map(_._2)).map { case (id, term, tf) =>
-          new GenericInternalRow(Array[Any](if (id == null) null else typed(id), term, tf))
-        })
-      terms = GraftColumnBridge.dataFrame(spark, rows, StructType(Seq(
-        StructField("doc_id", idType),
-        StructField("term", StringType, nullable = false),
-        StructField("tf", LongType, nullable = false))))
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
-      // eager, TIMED materialization through the RDD (the
-      // shinglePairStats pattern): one job, no count aggregate
-      val nRows = terms.rdd.count()
-      graft.BuildLog.log(
-        f"docTerms built in ${(System.nanoTime() - t0) / 1e9}%.2f s ($nRows doc-term rows)")
-      terms
-    } catch {
-      case e: Throwable =>
-        if (terms != null) terms.unpersist(blocking = false)
-        throw e
-    }
+    val idType = Blocks.idType(documents, "doc_id", "docTermsOn")
+    val typed = Blocks.catalystId(idType)
+    val owner = Blocks.owner(spark)
+    val rows: RDD[InternalRow] = docBatches(documents, owner).partitionBy(owner)
+      .mapPartitions(bs => termCounts(bs.map(_._2)).map { case (id, term, tf) =>
+        new GenericInternalRow(Array[Any](typed(id), term, tf))
+      })
+    Blocks.cached(spark, "docTerms", rows, StructType(Seq(
+      StructField("doc_id", idType),
+      StructField("term", StringType, nullable = false),
+      StructField("tf", LongType, nullable = false))))(nRows => s"($nRows doc-term rows)")
   }
 
   /** One doc block's documents → (doc_id, term, tf) for the
@@ -998,8 +885,7 @@ object LlmPipeline {
   /** (doc_id, simhash) per doc block → the pairs (da, db, hamming) with
     * da < db at hamming ≤ 3, by band blocking over 4 × 16-bit bands.
     * Each doc goes once per band to the owner block of its band key
-    * (band, value), one batch per (doc block, band block), n =
-    * spark.sql.shuffle.partitions. There every bucket (the docs of one
+    * (band, value). There every bucket (the docs of one
     * band key) compares its docs pairwise and keeps a pair only in the
     * lowest band its docs share, so each pair leaves exactly one bucket
     * and no distinct is needed. By pigeonhole, ≤ 3 flipped bits touch
@@ -1011,20 +897,20 @@ object LlmPipeline {
     * type da and db take. */
   private[graft] def simhashJoin(spark: SparkSession, sims: RDD[(Long, Long)], idType: DataType)
       : DataFrame = {
-    val typed = typedId(idType)
-    val owner = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    val typed = Blocks.catalystId(idType)
+    val owner = Blocks.owner(spark)
     // (band key, doc_id, simhash) triples per band block
     val batches = sims.mapPartitions { ds =>
-      val out = Array.fill(owner.numPartitions)(new mutable.ArrayBuilder.ofLong)
-      ds.foreach { case (id, sim) =>
-        for (b <- 0 until 4) {
-          val key = b.toLong << 16 | (sim >>> (16 * b)) & 0xffffL
-          out(owner.getPartition(key)) += key += id += sim
+      Blocks.spread(owner)(new mutable.ArrayBuilder.ofLong) { to =>
+        ds.foreach { case (id, sim) =>
+          for (b <- 0 until 4) {
+            val key = b.toLong << 16 | (sim >>> (16 * b)) & 0xffffL
+            to(key) += key += id += sim
+          }
         }
-      }
-      out.indices.iterator.filter(out(_).length > 0).map(t => (t, out(t).result()))
+      }(_.result())
     }
-    val rows: RDD[InternalRow] = blockShuffle(batches, owner).mapPartitions { bs =>
+    val rows: RDD[InternalRow] = batches.partitionBy(owner).mapPartitions { bs =>
       val buckets = mutable.LongMap[mutable.ArrayBuilder.ofLong]()
       bs.foreach { case (_, b) =>
         for (i <- b.indices by 3) buckets.getOrElseUpdate(b(i), new mutable.ArrayBuilder.ofLong) += b(i + 1) += b(i + 2)
@@ -1110,7 +996,7 @@ object LlmPipeline {
   def dedupSimhashRecall(spark: SparkSession, dir: String): DataFrame = {
     val terms = docTerms(spark, dir)
     val idType = terms.schema("doc_id").dataType
-    val typed = typedId(idType)
+    val typed = Blocks.catalystId(idType)
     val sims = simhashes(terms)
     val sim = GraftColumnBridge.dataFrame(spark,
       sims.map { case (id, s) => new GenericInternalRow(Array[Any](typed(id), s)): InternalRow },
@@ -1501,11 +1387,10 @@ object LlmPipeline {
   private[graft] def tfidfTopOn(terms: DataFrame): DataFrame = {
     val spark = terms.sparkSession
     val idType = terms.schema("doc_id").dataType
-    val typed = typedId(idType)
-    val owner = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    val batches = termRows(terms).mapPartitions(termBatches(_, owner))
-    val scores = blockShuffle(batches, owner).mapPartitions(scoreBand)
-    val rows: RDD[InternalRow] = blockShuffle(scores, owner).mapPartitions { ss =>
+    val typed = Blocks.catalystId(idType)
+    val owner = Blocks.owner(spark)
+    val scores = termRows(terms).mapPartitions(termBatches(_, owner)).partitionBy(owner).mapPartitions(scoreBand)
+    val rows: RDD[InternalRow] = scores.partitionBy(owner).mapPartitions { ss =>
       val byDoc = mutable.LongMap[mutable.ArrayBuffer[(UTF8String, Double)]]()
       ss.foreach { case (d, s) => byDoc.getOrElseUpdate(d, mutable.ArrayBuffer()) += s }
       byDoc.keys.toArray.sorted.iterator.flatMap { d =>

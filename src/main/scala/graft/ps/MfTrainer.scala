@@ -5,6 +5,7 @@ import java.security.MessageDigest
 
 import scala.collection.mutable
 
+import graft.blocks.Blocks
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
@@ -13,14 +14,14 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Full synchronous matrix-factorization training loop — the
   * vector-model realization of `FlinkParameterServer.transform` +
   * `PSOnlineMatrixFactorization` (SURVEY §3.2 [K-high]) in Spark's
   * bulk-synchronous model (§3.4), laid out the PS2 way (Parameter
   * Server on Spark, SIGMOD 2019): data co-partitioned with its model
-  * shard, one combined push.
+  * shard, one combined push, on the owner blocks and release scope of
+  * [[graft.blocks.Blocks]].
   *
   *  - User blocks: ratings hash-partitioned by user once; block b holds
   *    its users' ratings AND their P rows, so the P pull and push are
@@ -218,11 +219,12 @@ object MfTrainer {
 
   /** Rows of `(id, vec)` for a factor matrix: ids of `idType`. */
   private def factorRows(ids: Array[Any], m: Array[Double], k: Int, idType: DataType)
-      : Iterator[InternalRow] =
+      : Iterator[InternalRow] = {
+    val typed = Blocks.catalystId(idType)
     ids.indices.iterator.map { t =>
-      val id = if (idType == StringType) UTF8String.fromString(ids(t).asInstanceOf[String]) else ids(t)
-      new GenericInternalRow(Array[Any](id, new GenericArrayData(m.slice(t * k, t * k + k))))
+      new GenericInternalRow(Array[Any](typed(ids(t)), new GenericArrayData(m.slice(t * k, t * k + k))))
     }
+  }
 
   /** Train k-dim factors for `iters` full-batch iterations; returns
     * (userFactors(id, vec), itemFactors(id, vec), lossPerIter). The
@@ -230,51 +232,40 @@ object MfTrainer {
     * `GraphOps.freeCheckpoint`. */
   def train(spark: SparkSession, ratings: DataFrame, k: Int = 8,
       iters: Int = 5, lr: Double = 0.002, reg: Double = 0.01)
-      : (DataFrame, DataFrame, Seq[Double]) = FixedPoint.rethrowRange {
-    def idType(c: String): DataType = {
-      val t = ratings.schema(c).dataType
-      require(Seq(ByteType, ShortType, IntegerType, LongType, StringType).contains(t),
-        s"MfTrainer: $c must be an integral or string column, got ${t.simpleString}")
-      t
-    }
-    val (userType, itemType) = (idType("user"), idType("item"))
-    val part = new HashPartitioner(spark.conf.get("spark.sql.shuffle.partitions").toInt)
-    // every RDD this call persists; all but the two returned are released
-    val live = mutable.Set[RDD[_]]()
-    def keep[T](r: RDD[T]): RDD[T] = { live += r; r.localCheckpoint() }
-    def drop(r: RDD[_]): Unit = { live -= r; r.unpersist(blocking = false) }
+      : (DataFrame, DataFrame, Seq[Double]) = FixedPoint.rethrowRange(Blocks.scope { live =>
+    val userType = Blocks.idType(ratings, "user", "MfTrainer", orString = true)
+    val itemType = Blocks.idType(ratings, "item", "MfTrainer", orString = true)
+    val part = Blocks.owner(spark)
     def frame(rows: RDD[InternalRow], t: DataType) = GraftColumnBridge.dataFrame(spark, rows,
       StructType(Seq(StructField("id", t), StructField("vec", ArrayType(DoubleType)))))
-    try {
-      // setup job: the user blocks, then the routed Q shards
-      var blocks = keep(userBlocks(ratings, part, k))
-      var blocksHeld: RDD[_] = blocks
-      var qs = keep(qShards(blocks, part, k))
-      qs.count()
-      val losses = mutable.ArrayBuffer[Double]()
-      for (_ <- 1 to iters) {
-        val steps = keep(blocks.zipPartitions(shipQ(qs, part, k)) { (b, q) =>
-          val blk = b.next()
-          Iterator(step(blk, localQ(blk, q, k), k, lr, reg))
-        })
-        val qNew = keep(pushQ(qs, steps, part, k, lr))
-        qNew.count()
-        losses += mse(steps.map(s => (s.sqErr, s.block.rr.length)).collect())
-        drop(blocksHeld)
-        drop(qs)
-        blocksHeld = steps
-        blocks = steps.map(_.block)
-        qs = qNew
-      }
-      losses += mse(blocks.zipPartitions(shipQ(qs, part, k)) { (b, q) =>
+    // setup job: the user blocks, then the routed Q shards
+    var blocks = live.checkpoint(userBlocks(ratings, part, k))
+    var blocksHeld: RDD[_] = blocks
+    var qs = live.checkpoint(qShards(blocks, part, k))
+    qs.count()
+    val losses = mutable.ArrayBuffer[Double]()
+    for (_ <- 1 to iters) {
+      val steps = live.checkpoint(blocks.zipPartitions(shipQ(qs, part, k)) { (b, q) =>
         val blk = b.next()
-        Iterator((sqErr(blk, localQ(blk, q, k), k), blk.rr.length))
-      }.collect())
-      val pRows = keep(blocks.flatMap(b => factorRows(b.users, b.p, k, userType)))
-      val qRows = keep(qs.flatMap(s => factorRows(s.items, s.q, k, itemType)))
-      pRows.union(qRows).count()
-      live --= Seq(pRows, qRows)
-      (frame(pRows, userType), frame(qRows, itemType), losses.toSeq)
-    } finally live.foreach(_.unpersist(blocking = false))
-  }
+        Iterator(step(blk, localQ(blk, q, k), k, lr, reg))
+      })
+      val qNew = live.checkpoint(pushQ(qs, steps, part, k, lr))
+      qNew.count()
+      losses += mse(steps.map(s => (s.sqErr, s.block.rr.length)).collect())
+      live.release(blocksHeld)
+      live.release(qs)
+      blocksHeld = steps
+      blocks = steps.map(_.block)
+      qs = qNew
+    }
+    losses += mse(blocks.zipPartitions(shipQ(qs, part, k)) { (b, q) =>
+      val blk = b.next()
+      Iterator((sqErr(blk, localQ(blk, q, k), k), blk.rr.length))
+    }.collect())
+    val pRows = live.checkpoint(blocks.flatMap(b => factorRows(b.users, b.p, k, userType)))
+    val qRows = live.checkpoint(qs.flatMap(s => factorRows(s.items, s.q, k, itemType)))
+    pRows.union(qRows).count()
+    live.handOver(pRows, qRows)
+    (frame(pRows, userType), frame(qRows, itemType), losses.toSeq)
+  })
 }

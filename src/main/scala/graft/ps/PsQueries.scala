@@ -4,7 +4,7 @@ import graft.GQuery
 import graft.Det._
 import graft.functions.VectorExprs
 import graft.sources.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

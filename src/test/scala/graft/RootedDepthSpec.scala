@@ -70,9 +70,13 @@ class RootedDepthSpec extends SparkSpec {
     assert(sc.getPersistentRDDs.size === before.size + 1, "only the last round's blocks stay")
     operators.GraphOps.freeCheckpoint(d)
     assert(sc.getPersistentRDDs.keySet === before)
-    // the loud failures release everything too
-    intercept[IllegalArgumentException](operators.GraphOps.rootedDepth(
-      Seq((1L, 1L), (2L, 3L), (3L, 2L)).toDF("node", "parent")))
-    assert(sc.getPersistentRDDs.keySet === before)
+    // the loud failures release everything too: a duplicate node id,
+    // a dangling parent and a parent cycle
+    Seq(Seq((1L, Some(1L)), (2L, Some(1L)), (3L, Some(2L)), (3L, Some(1L))),
+        Seq((1L, Some(1L)), (2L, Some(1L)), (3L, None)),
+        Seq((1L, Some(1L)), (2L, Some(3L)), (3L, Some(2L)))).foreach { rows =>
+      intercept[IllegalArgumentException](operators.GraphOps.rootedDepth(rows.toDF("node", "parent")))
+      assert(sc.getPersistentRDDs.keySet === before, s"a failed call on $rows left RDDs persisted")
+    }
   }
 }

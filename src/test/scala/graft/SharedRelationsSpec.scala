@@ -1,10 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** Contract tests for the family-shared memoized relations
-  * (LlmPipeline.shinglePairStats, Relational.coPurchaseCanon,
-  * LlmPipeline.docTerms behind dedup_simhash* and text_tfidf): within a session the same
+  * (graft.blocks.Blocks.Memo and its callers): within a session the same
   * persisted instance is reused; after a clearCache the memo must
   * REBUILD (detect the dead storage level), not hand back a handle to
   * dropped blocks — Verify's per-query clearCache hygiene and the
@@ -12,34 +12,29 @@ import org.apache.spark.storage.StorageLevel
   */
 class SharedRelationsSpec extends SparkSpec {
 
-  test("shinglePairStats: reused while cached, rebuilt after clearCache, same rows") {
-    val a = operators.LlmPipeline.shinglePairStats(spark, sfDir)
-    val rowsA = a.orderBy("da", "db").collect()
-    assert(operators.LlmPipeline.shinglePairStats(spark, sfDir) eq a,
-      "second call while cached must return the memoized instance")
-    spark.catalog.clearCache()
-    assert(a.storageLevel == StorageLevel.NONE, "clearCache should drop the blocks")
-    val b = operators.LlmPipeline.shinglePairStats(spark, sfDir)
-    assert(!(b eq a), "after clearCache the memo must rebuild, not reuse")
-    assert(b.storageLevel != StorageLevel.NONE, "rebuild must re-persist")
-    assert(b.orderBy("da", "db").collect().sameElements(rowsA),
-      "rebuild must reproduce identical content")
-    spark.catalog.clearCache()
-  }
+  // every family memo: the build under test, as its callers reach it
+  private val memos: Seq[(String, () => DataFrame)] = Seq(
+    "shinglePairStats" -> (() => operators.LlmPipeline.shinglePairStats(spark, sfDir)),
+    "docTerms" -> (() => operators.LlmPipeline.docTerms(spark, sfDir)),
+    "coPurchaseAll" -> (() => operators.Relational.coPurchaseAll(spark, sfDir)),
+    "coPurchaseCanon" -> (() => operators.Relational.coPurchaseCanon(spark, sfDir)),
+    "ivfCandidatesShared" -> (() => ml.MlBridges.ivfCandidatesShared(spark, sfDir,
+      operators.LlmPipeline.AnnNCells, Some(operators.LlmPipeline.AnnQueryBand))))
 
-  test("docTerms: reused while cached, rebuilt after clearCache, same rows") {
-    val a = operators.LlmPipeline.docTerms(spark, sfDir)
-    val rowsA = a.orderBy("doc_id", "term").collect()
-    assert(operators.LlmPipeline.docTerms(spark, sfDir) eq a,
-      "second call while cached must return the memoized instance")
-    spark.catalog.clearCache()
-    assert(a.storageLevel == StorageLevel.NONE, "clearCache should drop the blocks")
-    val b = operators.LlmPipeline.docTerms(spark, sfDir)
-    assert(!(b eq a), "after clearCache the memo must rebuild, not reuse")
-    assert(b.storageLevel != StorageLevel.NONE, "rebuild must re-persist")
-    assert(b.orderBy("doc_id", "term").collect().sameElements(rowsA),
-      "rebuild must reproduce identical content")
-    spark.catalog.clearCache()
+  memos.foreach { case (name, build) =>
+    test(s"$name: reused while cached, rebuilt after clearCache, same rows") {
+      def rows(df: DataFrame) = df.orderBy(df.columns.head, df.columns.tail.toIndexedSeq: _*).collect()
+      val a = build()
+      val rowsA = rows(a)
+      assert(build() eq a, "second call while cached must return the memoized instance")
+      spark.catalog.clearCache()
+      assert(a.storageLevel == StorageLevel.NONE, "clearCache should drop the blocks")
+      val b = build()
+      assert(!(b eq a), "after clearCache the memo must rebuild, not reuse")
+      assert(b.storageLevel != StorageLevel.NONE, "rebuild must re-persist")
+      assert(rows(b).sameElements(rowsA), "rebuild must reproduce identical content")
+      spark.catalog.clearCache()
+    }
   }
 
   test("shingleBase: reused while cached, rebuilt after clearCache, consistent") {
@@ -105,17 +100,6 @@ class SharedRelationsSpec extends SparkSpec {
     val half = all.filter(col("src") < col("dst"))
     assert(half.exceptAll(indep).isEmpty && indep.exceptAll(half).isEmpty,
       "src<dst half of the shared relation must equal the direct canonical build")
-    spark.catalog.clearCache()
-  }
-
-  test("coPurchaseCanon: reused while cached, rebuilt after clearCache, same rows") {
-    val a = operators.Relational.coPurchaseCanon(spark, sfDir)
-    val rowsA = a.orderBy("u", "v").collect()
-    assert(operators.Relational.coPurchaseCanon(spark, sfDir) eq a)
-    spark.catalog.clearCache()
-    val b = operators.Relational.coPurchaseCanon(spark, sfDir)
-    assert(!(b eq a))
-    assert(b.orderBy("u", "v").collect().sameElements(rowsA))
     spark.catalog.clearCache()
   }
 }
