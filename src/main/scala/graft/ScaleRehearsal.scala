@@ -215,7 +215,7 @@ object ScaleRehearsal {
       .repartition(32).write.mode("overwrite")
       .parquet(s"$outDir/events.parquet")
     // part replicates FULL-COLUMN (r9: the key-only replica broke the
-    // six part-attribute qids under BroadcastAudit's all-qid sweep);
+    // six part-attribute qids under the broadcast audit's all-qid sweep);
     // the key shift stays max(key)+1 so the hierarchy keyspace keeps
     // hier_depth's documented dense-closed-forest precondition
     val pt = spark.read.parquet(s"$baseDir/part.parquet")
@@ -234,7 +234,7 @@ object ScaleRehearsal {
     * replicas above hold per-key group sizes CONSTANT by construction,
     * which is the right invariant for growth curves but blind to the
     * quadratic class real crawl data triggers — zipf keys and
-    * power-law duplicate mass (ShuffleGrowthAudit only caught
+    * power-law duplicate mass (the shuffle audit only caught
     * join_fuzzy/dedup_embed because verbatim replicas happen to create
     * duplicate values). `zx{k}` dirs differ from `x{k}` in exactly two
     * tables:
@@ -256,7 +256,7 @@ object ScaleRehearsal {
     * Embeddings/lineitem/orders/etc. inherit the namespaced replication
     * (embeddings are ALREADY 100% verbatim-duplicate mass there — the
     * harsher shape). Audits take these dirs as args:
-    * `graft.ShuffleGrowthAudit /tmp/graft_scale/zx1 /tmp/graft_scale/zx10`. */
+    * `graft.Audit shuffle /tmp/graft_scale/zx1 /tmp/graft_scale/zx10`. */
   private def synthSkew(spark: SparkSession, scale: Int, outDir: String): Unit = {
     val out = new java.io.File(outDir)
     if (new java.io.File(out, "_DONE_SKEW").exists()) return
@@ -311,16 +311,7 @@ object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
     val skewMode = sys.env.contains("SPARK_GRAFT_REHEARSE_SKEW")
     val scales = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 5, 10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = obs.Diag.session()
     // warm codegen/ICU once so x1 isn't charged JVM setup
     spark.read.parquet(s"$baseDir/documents.parquet").limit(200)
       .select(md5(col("text")).as("h"), explode(split(col("text"), " ")).as("t"))
@@ -342,7 +333,7 @@ object ScaleRehearsal {
           if (qid == "dedup_clusters")
             s""","cc_rounds":${graft.operators.GraphOps.lastRounds}"""
           else ""
-        println(f"""{"qid":"$qid","scale":$scale,"sec":$sec%.2f,"rows":$rows$extra}""")
+        println(s"""{"qid":"$qid","scale":$scale,"sec":${Bench.num(sec, 2)},"rows":$rows$extra}""")
         try spark.catalog.clearCache() catch { case _: Throwable => () }
       }
     }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,23 +8,9 @@ object Verify {
     // optional trailing qids: dump only those (dev iteration; the driver
     // always calls with two args and gets the full dump)
     val only = args.drop(2).toSet
-    // default to every core (results are parallelism-independent by the
-    // Det contract; this only shortens the wall time of the dump)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.ts is parquet TIMESTAMP(NANOS) which Spark 4 rejects by
-      // default; read as long and convert in graft.sources.Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // keep managed-table writes (join_bucketed) off the launch CWD,
-      // and per-process so concurrent JVMs can't race the table builds
-      .config("spark.sql.warehouse.dir", Warehouse.dir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // every core by default: results are parallelism-independent by the
+    // Det contract; this only shortens the wall time of the dump
+    val spark = obs.Diag.session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => only.isEmpty || only(q._1)).foreach { case (name, fn) =>
       try {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * restatements (the MinhashTwinSpec pattern): join_fuzzy and
   * dedup_embed now band/bucket, verify, and score DISTINCT values and
   * expand matches through the id tables only after matching — the
-  * duplicate-mass fix ShuffleGrowthAudit forced (identical replica
+  * duplicate-mass fix the shuffle audit forced (identical replica
   * values made every block grow with multiplicity, pair volume Σm²).
   * The naive twins below are the old per-row shapes inlined, so a
   * future edit to the production path is checked against the

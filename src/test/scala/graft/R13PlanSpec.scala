@@ -76,7 +76,7 @@ class R13PlanSpec extends SparkSpec {
     // a round must carry TWO shuffled hash joins (e ⋈ share and
     // deg ⋈ ranks) and no sort-merge or broadcast join anywhere —
     // every relation in the loop is edge- or node-proportional, so
-    // any broadcast here is the unbounded-build class BroadcastAudit
+    // any broadcast here is the unbounded-build class the broadcast audit
     // rejects.
     val nodes = executedNodes("graph_pagerank")
     assert(nodes.collect { case s: SortMergeJoinExec => s }.isEmpty,

@@ -1,29 +1,29 @@
 package graft
 
-/** Structural locks for the round-9 ScanAudit restatements. Each of
+/** Structural locks for the round-9 scan-audit restatements. Each of
   * these queries was rewritten so every consumer derives from ONE read
   * (or the documented floor) of its big table; moving back to the old
   * union-of-branches / aggregate-join shapes would keep results
   * bit-identical and only re-inflate the read volume — exactly the
   * regression a correctness suite cannot see. The lock is the live
-  * parquet-scan count in the EXECUTED adaptive plan (ScanAudit's
-  * metric: scans reachable without crossing a ReusedExchange or
-  * InMemoryTableScan), after a collect so AQE has materialized its
-  * reuse decisions — count() would prune columns and legitimately
-  * restructure branches (see ScanAudit's scaladoc).
+  * parquet-scan count in the EXECUTED adaptive plan (the scan audit's
+  * metric, `obs.Plans.liveScans`: scans reachable without crossing a
+  * ReusedExchange or InMemoryTableScan), after a collect so AQE has
+  * materialized its reuse decisions — count() would prune columns and
+  * legitimately restructure branches (see `graft.Audit`'s scaladoc).
   */
 class Round9PlanSpec extends SparkSpec {
 
   private def liveScanCount(qid: String): Int = {
     val df = Registry.byId(qid).fn(spark, sfDir)
     df.collect()
-    ScanAudit.liveScans(df.queryExecution.executedPlan).size
+    obs.Plans.liveScans(df.queryExecution.executedPlan).size
   }
 
   private def liveExchangeDupes(qid: String): Int = {
     val df = Registry.byId(qid).fn(spark, sfDir)
     df.collect()
-    ScanAudit.liveExchanges(df.queryExecution.executedPlan)
+    obs.Plans.liveExchanges(df.queryExecution.executedPlan)
       .groupBy(_.canonicalized.semanticHash()).values.count(_.size > 1)
   }
 

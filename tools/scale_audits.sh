@@ -12,48 +12,38 @@ cd "$(dirname "$0")/.."
 OUT="${1:-/tmp/graft_audits}"
 mkdir -p "$OUT"
 
-# a compile failure must be LOUD: running the audits on stale
-# bytecode would "confirm" a fix while measuring the pre-fix code
-if ! sbt -batch compile > /tmp/graft_audit_compile.log 2>&1; then
-  echo "COMPILE FAILED — refusing to audit stale classes" >&2
-  grep -E "error" /tmp/graft_audit_compile.log | head >&2
+# run_main.sh compiles first and stops on a failure: running the
+# audits on stale bytecode would "confirm" a fix while measuring the
+# pre-fix code
+RUN="tools/run_main.sh"
+
+# corpora (synth is _DONE-gated, so this is a no-op when present).
+# The first call also compiles; its log holds either failure.
+if ! SPARK_GRAFT_REHEARSE_QIDS=none $RUN graft.ScaleRehearsal 1 10 \
+  > "$OUT/synth.log" 2>&1; then
+  echo "compile or synth FAILED:" >&2
+  tail -20 "$OUT/synth.log" >&2
   exit 1
 fi
 
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-RUN="java $ADD_OPENS -Xmx100g -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
-  -cp target/scala-2.13/classes:/opt/spark/jars/*"
-
-# corpora (synth is _DONE-gated, so this is a no-op when present).
-# Keep the synth log: when it fails, set -e aborts the script and the
-# log is the only diagnostic.
-SPARK_GRAFT_REHEARSE_QIDS=none $RUN graft.ScaleRehearsal 1 10 \
-  > "$OUT/synth.log" 2>&1
-
-echo "== ScanAudit (default + scale-path)";
-$RUN graft.ScanAudit /root/testdata/sf0.01 2>/dev/null \
+echo "== scan audit (default + scale-path)"
+$RUN graft.Audit scan /root/testdata/sf0.01 2>/dev/null \
   | tee "$OUT/scan_default.log" | tail -3
-SPARK_GRAFT_NO_BCAST=1 $RUN graft.ScanAudit /root/testdata/sf0.01 2>/dev/null \
+SPARK_GRAFT_NO_BCAST=1 $RUN graft.Audit scan /root/testdata/sf0.01 2>/dev/null \
   | tee "$OUT/scan_nobcast.log" | tail -3
 
-echo "== BroadcastAudit (hinted mode — the decisive one)"
-SPARK_GRAFT_NO_BCAST=1 $RUN graft.BroadcastAudit 2>/dev/null \
+echo "== broadcast audit (hinted mode — the decisive one)"
+SPARK_GRAFT_NO_BCAST=1 $RUN graft.Audit broadcast 2>/dev/null \
   | tee "$OUT/broadcast_hinted.log" | tail -3
 
-echo "== ShjBuildAudit (SHJ build bytes/partition, width-scaled 1x->10x)"
-$RUN graft.ShjBuildAudit 2>/dev/null \
+echo "== SHJ audit (largest task build bytes, width-scaled 1x->10x)"
+$RUN graft.Audit shj 2>/dev/null \
   | tee "$OUT/shj_build.log" | tail -4
 
-echo "== SerialStageAudit (default + scale-path)"
-$RUN graft.SerialStageAudit 2>/dev/null \
+echo "== serial-stage audit (default + scale-path)"
+$RUN graft.Audit serial 2>/dev/null \
   | tee "$OUT/serial_default.log" | tail -10
-SPARK_GRAFT_NO_BCAST=1 $RUN graft.SerialStageAudit 2>/dev/null \
+SPARK_GRAFT_NO_BCAST=1 $RUN graft.Audit serial 2>/dev/null \
   | tee "$OUT/serial_nobcast.log" | tail -10
 
 # NOTE: the shuffle audit now runs ONCE in 4-dir cross-family mode
@@ -73,34 +63,35 @@ Z1=/tmp/graft_scale/zx1; Z10=/tmp/graft_scale/zx10
 # (r13): snapshot-backed relations (graft_ratings_* in java.io.tmpdir)
 # are built by each corpus dir's FIRST consumer, and the uniform
 # family's snapshots already exist by now (built during the uniform
-# SerialStageAudit legs above). If the shuffle audit were the zx
+# serial-stage legs above). If the shuffle audit were the zx
 # dirs' first consumer, mf_baseline — the first ratings() qid in the
 # alphabetical sweep — would carry the one-time orders⋈lineitem
 # snapshot build (exactly |orders|+|lineitem| shuffle rows: +7.5M at
 # 10x) in the ZX column only, and the cross-family 10x volume
 # invariant would read that warm-state asymmetry as drift (the r13
-# false positive, adjudicated in docs/TODO_r13.md §8). Running the
+# false positive, adjudicated in the retired r13 round log §8,
+# `git show 6bea8bd:docs/TODO_r13.md`). Running the
 # skew serial legs first gives both families identical pre-warm, so
 # the invariant compares steady-state query volumes.
-echo "== SerialStageAudit (default + no-bcast, SKEW)"
-$RUN graft.SerialStageAudit "$Z1" "$Z10" 2>/dev/null \
+echo "== serial-stage audit (default + no-bcast, SKEW)"
+$RUN graft.Audit serial "$Z1" "$Z10" 2>/dev/null \
   | tee "$OUT/skew_serial_default.log" | tail -10
-SPARK_GRAFT_NO_BCAST=1 $RUN graft.SerialStageAudit "$Z1" "$Z10" 2>/dev/null \
+SPARK_GRAFT_NO_BCAST=1 $RUN graft.Audit serial "$Z1" "$Z10" 2>/dev/null \
   | tee "$OUT/skew_serial_nobcast.log" | tail -10
 
-echo "== ShuffleGrowthAudit (no-bcast, BOTH families + 10x volume invariant)"
-SPARK_GRAFT_NO_BCAST=1 $RUN graft.ShuffleGrowthAudit \
+echo "== shuffle audit (no-bcast, BOTH families + 10x volume invariant)"
+SPARK_GRAFT_NO_BCAST=1 $RUN graft.Audit shuffle \
   /tmp/graft_scale/x1 /tmp/graft_scale/x10 "$Z1" "$Z10" 2>/dev/null \
   | tee "$OUT/shuffle_nobcast_both.log" | grep -vE "^SKIP" | tail -45
 
-echo "== BroadcastAudit (hinted, SKEW)"
-SPARK_GRAFT_NO_BCAST=1 $RUN graft.BroadcastAudit "$Z1" "$Z10" 2>/dev/null \
+echo "== broadcast audit (hinted, SKEW)"
+SPARK_GRAFT_NO_BCAST=1 $RUN graft.Audit broadcast "$Z1" "$Z10" 2>/dev/null \
   | tee "$OUT/skew_broadcast_hinted.log" | tail -5
 
-echo "== ScanAudit (default + no-bcast, SKEW zx10)"
-$RUN graft.ScanAudit "$Z10" 2>/dev/null \
+echo "== scan audit (default + no-bcast, SKEW zx10)"
+$RUN graft.Audit scan "$Z10" 2>/dev/null \
   | tee "$OUT/skew_scan_default.log" | tail -4
-SPARK_GRAFT_NO_BCAST=1 $RUN graft.ScanAudit "$Z10" 2>/dev/null \
+SPARK_GRAFT_NO_BCAST=1 $RUN graft.Audit scan "$Z10" 2>/dev/null \
   | tee "$OUT/skew_scan_nobcast.log" | tail -4
 
 echo "logs in $OUT"

@@ -2,19 +2,4 @@
 # 10x scale rehearsal: synthesize 1x/2x/5x/10x sf0.1 corpora (namespaced
 # id-shifted replication) under /tmp/graft_scale and time the dedup/ANN
 # family against each. Usage: tools/scale_rehearsal.sh [scale...]
-set -e
-cd "$(dirname "$0")/.."
-
-sbt -batch compile >/dev/null 2>&1 || true
-
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-
-java $ADD_OPENS -Xmx16g \
-  -Dspark.ui.enabled=false \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.ScaleRehearsal "$@"
+exec "$(dirname "$0")/run_main.sh" graft.ScaleRehearsal "$@"

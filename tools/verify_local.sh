@@ -8,20 +8,11 @@ shift || true
 OUT=/tmp/graft_verify_out
 rm -rf "$OUT"
 
-sbt -batch compile 2>&1 | grep -E "error|warn.*deprecat" || true
-
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-
-java $ADD_OPENS -Xmx8g \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.Verify "$SF_DIR" "$OUT" "$@" 2>&1 | grep -vE "^\s*$|INFO|WARN" || true
+# a failed compile or a crashed JVM stops here, before the compare
+set +e
+tools/run_main.sh graft.Verify "$SF_DIR" "$OUT" "$@" 2>&1 | grep -vE "^\s*$|INFO|WARN"
+STATUS=${PIPESTATUS[0]}
+set -e
+[ "$STATUS" -eq 0 ] || exit "$STATUS"
 
 python3 tools/check_oracle.py "$OUT" "$SF_DIR" "$@"
