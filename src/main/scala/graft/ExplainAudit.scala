@@ -14,7 +14,10 @@ import org.apache.spark.sql.functions._
   */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = obs.Diag.session()
+    // a fixed width of 4, whatever the host: the hashpartitioning
+    // counts and skew splits in the committed docs/PLANS.txt then
+    // compare across machines
+    val spark = obs.Diag.session(cpus = "4")
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val qids = if (args.nonEmpty) args.toSeq else Seq(
       "scan_pruned", "join_broadcast", "q1_pricing", "sim_cosine",

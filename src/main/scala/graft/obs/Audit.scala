@@ -10,8 +10,9 @@ import graft.obs.{Diag, PlanMeter, Plans, ShjMeter}
 /** The empirical scale audits: `graft.Audit <audit> [dir...]`. Each is a
   * plan measure from [[obs.Plans]], taken per qid by [[obs.Diag.sweep]],
   * plus a report. SPARK_GRAFT_ONLY narrows the qids to its prefixes;
-  * SPARK_GRAFT_NO_BCAST turns broadcast joins off (the scale-path mode,
-  * [[obs.Diag.session]]). The two-dir audits compare the 1× and 10×
+  * SPARK_GRAFT_NO_BCAST turns broadcast joins off: every join takes the
+  * shape a non-broadcastable (100 TB) side gets, which is the scale-path
+  * mode. The two-dir audits compare the 1× and 10×
   * rehearsal corpora (`ScaleRehearsal`'s namespaced id-shifted
   * replication: vocabulary, doc count and key universes all scale k×).
   *
@@ -83,6 +84,10 @@ object Audit {
   def main(args: Array[String]): Unit = {
     val audit = args.headOption.getOrElse("")
     val spark = Diag.session()
+    if (sys.env.contains("SPARK_GRAFT_NO_BCAST")) {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
+    }
     val code =
       try run(spark, audit, args.drop(1).toSeq, Diag.selected(if (audit == "shj") ShjQids else Diag.allQids))
       finally spark.stop()

@@ -14,28 +14,21 @@ import graft.{Registry, Warehouse}
   * walker and the plan measures are in [[Plans]].
   */
 object Diag {
-  /** `local[SPARK_GRAFT_CPUS or max(4, nproc)]` with one shuffle
-    * partition per core, UTC, parquet TIMESTAMP(NANOS) read as long
-    * (`Tables.events` converts it), no UI and a per-process warehouse.
-    * With SPARK_GRAFT_NO_BCAST set, broadcast joins are off: every join
-    * takes the shape a non-broadcastable (100 TB) side gets, which is
-    * the scale-path mode of the audits. The engine's own extensions
-    * are not installed (that is `GraftSession`). */
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val builder = SparkSession.builder()
+  /** `local[cpus]` with one shuffle partition per core, UTC, parquet
+    * TIMESTAMP(NANOS) read as long (`Tables.events` converts it), no UI
+    * and a per-process warehouse. `cpus` defaults to SPARK_GRAFT_CPUS or
+    * max(4, nproc). The engine's own extensions are not installed (that
+    * is `GraftSession`). */
+  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      math.max(4, Runtime.getRuntime.availableProcessors()).toString)): SparkSession = {
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir", Warehouse.dir)
-    if (sys.env.contains("SPARK_GRAFT_NO_BCAST")) {
-      builder.config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      builder.config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    }
-    val spark = builder.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     spark
   }

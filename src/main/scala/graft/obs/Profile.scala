@@ -1,5 +1,6 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -36,13 +37,24 @@ import graft.obs.{Diag, Meter, Plans}
 object Profile {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: graft.Profile <sfDir> <qid...>")
+    if (!benchRegime) System.err.println("REGIME MISMATCH: not ParallelGC on a pre-sized heap, " +
+      "so these timings carry a GC tax graft.Bench's do not; launch through tools/run_main.sh")
     val spark = Diag.session()
     try run(spark, args.head, args.drop(1).toSeq) finally spark.stop()
   }
 
+  /** Whether this JVM runs `graft.Bench`'s timing regime: ParallelGC on
+    * a pre-sized heap (initial ≈ max), as build.sbt's forked `runMain`
+    * launches it. */
+  def benchRegime: Boolean = {
+    val heap = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage
+    ManagementFactory.getGarbageCollectorMXBeans.asScala.exists(_.getName.startsWith("PS ")) &&
+      heap.getInit >= heap.getMax - heap.getMax / 10
+  }
+
   def run(spark: SparkSession, dir: String, qids: Seq[String]): Unit = {
     val fns = qids.map(q => q -> Registry.byId(q).fn)
-    val os = java.lang.management.ManagementFactory.getOperatingSystemMXBean
+    val os = ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
     val meter = new RunMeter
     meter.attach(spark)

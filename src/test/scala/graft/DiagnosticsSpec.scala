@@ -45,6 +45,12 @@ class DiagnosticsSpec extends SparkSpec {
     assert(json.exists(_.has("stage")) && json.exists(_.has("node")))
   }
 
+  test("Profile's timings are taken under Bench's regime in the forked JVM") {
+    // this JVM gets build.sbt's javaOptions, as tools/run_main.sh's
+    // `sbt runMain` does: ParallelGC on a pre-sized heap
+    assert(Profile.benchRegime)
+  }
+
   private val auditQids = Seq("graph_pagerank", "join_skew_salt", "stream_live_tumble")
 
   test("the plan audits over sf0.001 at both scales: no growth verdict, stream_live skipped loudly") {

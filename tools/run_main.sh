@@ -1,35 +1,13 @@
 #!/bin/bash
-# Compile, then run one main of this repo on the Spark jars.
-# Usage: tools/run_main.sh <Main> [args...]   e.g. tools/run_main.sh graft.Audit scan
-# A failed compile stops here: running stale classes would report on
-# code that no longer compiles. The heap is SPARK_DRIVER_MEM (default
-# 8g); a size that is malformed or not positive falls back to 8g, as in
-# build.sbt.
-set -eo pipefail
+# Run one main of this repo: tools/run_main.sh <Main> [args...]
+# e.g. tools/run_main.sh graft.Audit scan
+# It goes through build.sbt's forked `runMain`, which compiles first and
+# stops on a compile error (stale classes never run), and gives the main
+# build.sbt's add-opens and timing regime: a pre-sized SPARK_DRIVER_MEM
+# heap (default 8g), ParallelGC and a capped young generation. A main's
+# nonzero exit code reaches the shell as 1.
+set -e
 cd "$(dirname "$0")/.."
 MAIN="${1:?usage: tools/run_main.sh <Main> [args...]}"
 shift
-
-LOG="$(mktemp)"
-if ! sbt -batch compile > "$LOG" 2>&1; then
-  echo "COMPILE FAILED — not running stale classes" >&2
-  grep -E "error" "$LOG" | head -20 >&2
-  rm -f "$LOG"
-  exit 1
-fi
-rm -f "$LOG"
-
-MEM="$(echo "${SPARK_DRIVER_MEM:-8g}" | tr -d '[:space:]' | tr '[:upper:]' '[:lower:]')"
-if ! [[ "$MEM" =~ ^[0-9]+[kmgt]?$ && "${MEM%[kmgt]}" =~ [1-9] ]]; then
-  MEM=8g
-fi
-
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-
-exec java $ADD_OPENS -Xmx"$MEM" -Dspark.ui.enabled=false \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$MAIN" "$@"
+exec sbt -batch --error "runMain $MAIN $*"

@@ -12,9 +12,9 @@ cd "$(dirname "$0")/.."
 OUT="${1:-/tmp/graft_audits}"
 mkdir -p "$OUT"
 
-# run_main.sh compiles first and stops on a failure: running the
-# audits on stale bytecode would "confirm" a fix while measuring the
-# pre-fix code
+# run_main.sh (sbt runMain) compiles first and stops on a failure:
+# running the audits on stale bytecode would "confirm" a fix while
+# measuring the pre-fix code
 RUN="tools/run_main.sh"
 
 # corpora (synth is _DONE-gated, so this is a no-op when present).
