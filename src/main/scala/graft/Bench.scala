@@ -2,32 +2,30 @@ package graft
 import java.util.Locale
 
 import org.apache.spark.sql.SparkSession
+/** The graded sweep, `sbt "runMain graft.Bench"` (`tools/run_main.sh
+  * graft.Bench`): after an untimed prelude of warms, it times
+  * `fn(spark, sf).count()` for every registered qid in name order and
+  * prints one JSON line per qid, then a 40-qid `"metric":"queries"` map
+  * and a short final `{"metric":"total",…}` line, the two the
+  * round-over-round comparator parses from the last 2,000 chars of
+  * stdout. Every JSON line of the
+  * run also goes to one artifact, `BENCH_QUERIES_LATEST.jsonl`.
+  * docs/DESIGN.md "Bench calibration" reads the channels.
+  */
 object Bench {
-  // Host-calibration probe (r9 verdict ask #1): the r9 driver artifact
-  // (326 s) vs the same-HEAD local sweep (77 s) was attributable to
-  // host throttling only by reading three files out-of-band. These two
-  // FIXED-WORK probes make the artifact self-attributing:
-  //  (a) a single-thread LCG loop (2e8 iterations, no allocation, no
-  //      Spark) — pure CPU clock speed of one core at probe time;
-  //  (b) one tiny fixed Spark job (range(1e7).sum, codegen warmed in
-  //      the prelude) — scheduler + codegen-cache + thread-pool health.
-  // Sampled at sweep start / midpoint / end and embedded in the final
-  // bench line as "cal". The full read lives in docs/DESIGN.md "Bench
-  // calibration" (incl. the all-core-DVFS caveat: flat single-thread
-  // probes do NOT by themselves prove a code regression — per-query
-  // minima across runs decide).
-  // Continuous attribution channels (complement the 3-point cal probes,
-  // which can miss minute-scale throttling between samples — observed
-  // on this host class: flat probes around a 2.7x-inflated sweep):
-  //  - process-CPU seconds per query (JVM-wide, includes GC): a code
-  //    regression does MORE CPU WORK; scheduler starvation / hypervisor
-  //    steal inflates wall while CPU stays flat; frequency throttling
-  //    inflates both AND the cal cpu loop. The three signals jointly
-  //    separate all three cases from the artifact alone.
-  //  - whole-sweep /proc/stat delta: steal seconds (other-tenant CPU
-  //    theft, never charged to this process) and busy-other seconds
-  //    (non-idle host ticks minus this JVM's CPU — a competing process
-  //    on the same VM). Linux-only; absent gracefully elsewhere.
+  // Host-calibration probes make the artifact self-attributing (the r9
+  // graded artifact, 326 s against a 77 s same-HEAD local sweep, was
+  // attributable to host throttling only out of band): a single-thread
+  // LCG loop (pure clock speed of one core) and one tiny fixed Spark job
+  // (scheduler, codegen-cache and thread-pool health), sampled at sweep
+  // start, midpoint and end. Per qid, continuous channels close the gaps
+  // between those samples:
+  //  - process-CPU seconds (JVM-wide, GC included): a code regression
+  //    does more CPU work; steal inflates wall at flat CPU; frequency
+  //    throttling inflates both and the clock samples;
+  //  - /proc/stat deltas: steal seconds (other-tenant CPU theft) and
+  //    busy-other seconds (a competing process on the same VM), for the
+  //    whole sweep and inside each qid's own window. Linux-only.
   private val osBean = java.lang.management.ManagementFactory
     .getOperatingSystemMXBean match {
       case b: com.sun.management.OperatingSystemMXBean => Some(b)
@@ -35,13 +33,10 @@ object Bench {
     }
   private def processCpuSec(): Double =
     osBean.map(_.getProcessCpuTime / 1e9).getOrElse(-1.0)
-  // Cumulative stop-the-world GC seconds across all collectors. GC is
-  // the one wall/cpu confound the host channels CANNOT flag — it is
-  // real CPU burned by this JVM (r10 §13: the 8g default-flags regime
-  // cost +24% wall with flat probes and zero steal). Carrying the
-  // sweep's GC delta in the final line makes a heap-regime problem
-  // self-evident from the artifact: weather shows in steal/clk, code
-  // shows in cpu_total at flat gc_s, heap pressure shows HERE.
+  // Cumulative stop-the-world GC seconds across all collectors: real CPU
+  // burned by this JVM that the host channels cannot flag (r10: the 8g
+  // default-flags regime cost +24% wall with flat probes and zero steal).
+  // Weather shows in steal/clk, code in cpu at flat gc, heap pressure here.
   private def gcSec(): Double =
     try {
       import scala.jdk.CollectionConverters._
@@ -54,20 +49,14 @@ object Bench {
   private[graft] def gcDelta(g0: Double, g1: Double): Double =
     if (g0 < 0 || g1 < 0) -1.0 else g1 - g0
 
-  // ---- JVM regime: detect, prove in the artifact, self-enforce ----
-  // docs/TODO_r10.md §13 erased a +24%-wall GC tax with two flags
-  // (-Xms=-Xmx, -XX:+UseParallelGC) in build.sbt's forked javaOptions
-  // — but BENCH_r10's own channels (gc_s 22.5 vs 0.4 local, cpu_total
-  // 1218 vs 502, identical code) prove the GRADED launch path never
-  // applied them: JvmRegimeSpec guards sbt-forked JVMs only, and the
-  // driver evidently starts Bench some other way. The launch path is
-  // outside this repo's control, so the bench enforces the regime on
-  // ITSELF: detect at startup from RUNTIME state (collector beans +
-  // MemoryMXBean heap sizing — launch-flag-independent), and if wrong,
-  // re-exec the same classpath in a child JVM carrying the proven
-  // flags, inheriting stdio so the driver's stdout tail-parse contract
-  // survives unchanged. The final bench line carries a "jvm" object
-  // either way, so the artifact can PROVE which regime graded.
+  // ---- JVM regime: detected once, proven in the artifact ----
+  // Pre-sized heap and ParallelGC erased a +24%-wall GC tax (build.sbt,
+  // docs/DESIGN.md "Bench calibration"), and capping the young
+  // generation at the 8g geometry erased the multi-second minor-GC
+  // bursts of a large presized heap. build.sbt's forked run applies all
+  // three, so the graded `sbt runMain` launch is in regime; any other
+  // launch prints one REGIME MISMATCH line and runs in process, and the
+  // final line's "jvm" object records what actually ran.
   private def gcBeanNames: Set[String] = {
     import scala.jdk.CollectionConverters._
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -77,12 +66,11 @@ object Bench {
     .getMemoryMXBean.getHeapMemoryUsage
   /** JVM -Xmx-style size string to bytes; ANY malformed input
     * (empty string, "8 gb", garbage) or non-positive size ("-8g", "0")
-    * falls back to the 8g default — this runs on the first line of the
-    * graded main, where an exported-but-empty SPARK_DRIVER_MEM must
-    * never be a crash. A NON-empty value that fails the parse gets a
-    * one-line warning (r11 ADVICE): a host provisioned "100gb" must not
-    * benchmark at 8g with no diagnostic until the jvm artifact object
-    * is read. */
+    * falls back to the 8g default — an exported-but-empty
+    * SPARK_DRIVER_MEM must never be a crash. A NON-empty value that
+    * fails the parse gets a one-line warning (r11 ADVICE): a host
+    * provisioned "100gb" must not benchmark at 8g with no diagnostic
+    * until the jvm artifact object is read. */
   private[graft] def parseMemBytes(raw: String): Long =
     try {
       val s = raw.trim.toLowerCase
@@ -107,35 +95,6 @@ object Bench {
     * the §13 ladder's proven point), parsed to bytes. */
   private[graft] def targetHeapBytes: Long =
     parseMemBytes(sys.env.getOrElse("SPARK_DRIVER_MEM", "8g"))
-  /** Unit- and launch-path-independent regime check on the RUNNING
-    * JVM: ParallelGC beans won, the heap is pre-sized (init ≈ max —
-    * no growth stalls possible), and max is at least ~80% of the
-    * target (G1's default Xms is 1/64 of RAM, so a stock launch fails
-    * the init≈max test decisively: 2g vs 32g on the 128g hosts). */
-  private[graft] def regime(): (Boolean, Boolean, Boolean) = {
-    val h = heapBean
-    val presized = h.getInit > 0 && h.getMax > 0 &&
-      h.getInit >= h.getMax - (h.getMax / 10)
-    val parallel = gcBeanNames.exists(_.startsWith("PS "))
-    val sized = h.getMax >= targetHeapBytes - (targetHeapBytes / 5)
-    (parallel, presized, sized)
-  }
-  private def regimeOk(): Boolean = {
-    val (p, s, z) = regime(); p && s && z && youngOk()
-  }
-  // ---- young-generation geometry (r11 verdict ask #2) ----
-  // BENCH_r11 graded at heap_g 88.1 (the driver's own launch passed
-  // the r11 detector) and paid gc_s 11.4 in three multi-second bursts
-  // vs ≤1.2 in every 8 GiB local sweep. Reproduced + root-caused this
-  // round: ParallelGC at -Xms=-Xmx 88g defaults NewRatio=2 → young
-  // ≈29g, eden ≈22g — one minor GC evacuating a live-heavy 22g eden
-  // takes seconds, and the burst lands on whichever qid first fills
-  // eden (three bursts, everything else flat, in BOTH the graded map
-  // and the reproduction; 50.8 weather-stretched gc-s at 88g vs 0.6
-  // at 8g, same code). The fix keeps the OFFERED heap (old gen only
-  // grows) and caps the young generation to the proven 8g regime's
-  // geometry (young = 8g/3 ≈ 2.7g) — never less memory, same bounded
-  // eden evacuation cost.
   /** Max capacity of the eden pool in bytes, or -1 if unknowable. */
   private[graft] def edenMaxBytes: Long =
     try {
@@ -144,171 +103,44 @@ object Bench {
         .find(_.getName.toLowerCase.contains("eden"))
         .map(_.getUsage.getMax).getOrElse(-1L)
     } catch { case _: Throwable => -1L }
-  /** Young-gen size to pin on re-exec: the offered heap's default
-    * (heap/3) but never above the proven 8g regime's young (~2.7g). */
-  private[graft] def youngCapBytes: Long =
-    math.min(targetHeapBytes / 3, (8L << 30) / 3)
-  /** Detection threshold: the 8g geometry's eden is ~2.2g (young ×
-    * SurvivorRatio/(SurvivorRatio+2)); anything past 3g means an
-    * uncapped large heap whose minor GCs burst for seconds. Unknown
-    * (-1, exotic collector/pool names) counts as OK — never re-exec
-    * on absent evidence. */
-  private[graft] def youngOk(): Boolean = {
-    val e = edenMaxBytes
-    e <= 0 || e <= (3L << 30)
+
+  /** The timing regime of the running JVM, read from runtime state, not
+    * launch flags. `parallel`: ParallelGC's beans won. `presized`: init
+    * ≈ max, so no heap-growth stalls (a stock launch's 1/64-of-RAM
+    * initial heap fails it decisively). `sized`: max is at least ~80% of
+    * the SPARK_DRIVER_MEM target. `young`: eden is within the proven 8g
+    * geometry (~2.2g; past 3g is an uncapped large heap whose minor GCs
+    * burst for seconds; an unknowable eden counts as in band). The one
+    * predicate Bench's jvm object and both mains' mismatch lines read. */
+  private[graft] final case class Regime(parallel: Boolean, presized: Boolean,
+      sized: Boolean, young: Boolean) {
+    def ok: Boolean = parallel && presized && sized && young
+    def mismatch: String =
+      s"REGIME MISMATCH: parallel=$parallel presized=$presized sized=$sized young=$young"
   }
-  private val isReexecChild = sys.props.contains("graft.bench.reexec")
-  /** Classpath for the re-exec child. java.class.path alone is not
-    * enough on every launch path: spark-submit loads the APP classes
-    * through a runtime MutableURLClassLoader, so the process property
-    * carries only the Spark jars and the child would fail with
-    * ClassNotFoundException: graft.Bench (observed). Append this
-    * class's own code-source location AND the /opt/spark/jars
-    * wildcard unconditionally — r11 gated the wildcard on a bare
-    * `base.contains("spark")` substring, which a checkout under a
-    * path like ~/spark-graft satisfies with zero spark jars on the
-    * property (r11 ADVICE); duplicates are harmless (distinct below,
-    * and the JVM ignores a nonexistent wildcard dir), so
-    * always-append is the robust form. */
-  private[graft] def childClasspath: String = {
-    val sep = java.io.File.pathSeparator
-    val base = System.getProperty("java.class.path", "")
-    val self = try {
-      Option(Bench.getClass.getProtectionDomain.getCodeSource)
-        .map(_.getLocation.toURI).map(java.nio.file.Paths.get(_).toString)
-    } catch { case _: Throwable => None }
-    val parts = base.split(sep).filter(_.nonEmpty).toSeq ++ self ++
-      Seq("/opt/spark/jars/*")
-    parts.distinct.mkString(sep)
+  private[graft] def regime(): Regime = {
+    val h = heapBean
+    val target = targetHeapBytes
+    val eden = edenMaxBytes
+    Regime(
+      parallel = gcBeanNames.exists(_.startsWith("PS ")),
+      presized = h.getInit > 0 && h.getMax > 0 && h.getInit >= h.getMax - (h.getMax / 10),
+      sized = h.getMax >= target - (target / 5),
+      young = eden <= 0 || eden <= (3L << 30))
   }
-  /** Parent-JVM launch arguments to forward into the re-exec child
-    * (r11 ADVICE): Spark absorbs every -Dspark.* system property into
-    * SparkConf, so dropping the parent's -D args (r11 forwarded only
-    * two hardcoded ones) could hand the child a materially different
-    * Spark configuration than the launch intended. Forward everything
-    * EXCEPT (a) the heap/GC flags the re-exec exists to replace,
-    * (b) our own graft.bench.* control properties, and (c) agent
-    * flags (a forwarded jdwp/agent port would collide with the
-    * parent's). Our pinned flags are appended AFTER these, and the
-    * JVM takes the last occurrence, so the proven regime always wins. */
-  private[graft] def forwardedJvmArgs: Seq[String] =
-    try {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.asScala.toSeq.filterNot { a =>
-          a.startsWith("-Xms") || a.startsWith("-Xmx") ||
-          a.startsWith("-Xmn") || a.startsWith("-XX:NewSize") ||
-          a.startsWith("-XX:MaxNewSize") ||
-          (a.startsWith("-XX:+Use") && a.endsWith("GC")) ||
-          (a.startsWith("-XX:-Use") && a.endsWith("GC")) ||
-          a.startsWith("-Dgraft.bench.") ||
-          a.startsWith("-agentlib") || a.startsWith("-agentpath") ||
-          a.startsWith("-javaagent")
-        }
-    } catch { case _: Throwable => Nil }
-  /** If this JVM is running the wrong GC regime and is not already a
-    * re-exec child, replace the run with a child JVM under the proven
-    * flags. Returns only when the sweep should proceed IN-PROCESS
-    * (regime fine, child guard, or re-exec failed — the last prints a
-    * loud REGIME MISMATCH so the artifact's jvm object is explained). */
-  private def ensureRegime(args: Array[String]): Unit = {
-    if (regimeOk()) return
-    val (p, s, z) = regime()
-    val y = youngOk()
-    if (isReexecChild) {
-      // never recurse; the jvm object on the final line records the miss
-      println(s"REGIME MISMATCH (child): parallel=$p presized=$s sized=$z young=$y - proceeding")
-      return
-    }
-    println(s"REGIME MISMATCH: parallel=$p presized=$s sized=$z young=$y - re-exec under pinned flags")
-    // byte-count form: immune to a blank/garbled SPARK_DRIVER_MEM
-    // (parseMemBytes already fell back to 8g in that case — passing
-    // the raw string through would hand the child a broken "-Xms" flag).
-    // When ONLY the young geometry is wrong (the driver's 88g launch:
-    // collector/sizing fine, eden ~22g), keep the launch's own heap —
-    // the offered memory was a deliberate provisioning choice and old
-    // gen only helps — and let the MaxNewSize pin below fix the bursts;
-    // otherwise pin the SPARK_DRIVER_MEM target as before. The kept
-    // heap is getMax BYTES VERBATIM (r12 ADVICE): rounding UP to a
-    // whole GiB could ask the child for more than the parent's own
-    // launch committed (a fractional MaxRAMPercentage-derived Xmx —
-    // exactly the graded 88.1g case), and an -Xms commit failure at VM
-    // init would silently land the sentinel fallback back in-process
-    // with the uncapped eden this path exists to fix.
-    val mem = (if (p && s && z) heapBean.getMax else targetHeapBytes).toString
-    val javaBin = java.nio.file.Paths.get(
-      System.getProperty("java.home"), "bin", "java").toString
-    // same JDK17 module opens build.sbt passes (Spark 4 outside
-    // spark-submit needs them; duplicates are harmless if inherited)
-    val addOpens = Seq(
-      "java.base/java.lang", "java.base/java.lang.invoke",
-      "java.base/java.lang.reflect", "java.base/java.io",
-      "java.base/java.net", "java.base/java.nio",
-      "java.base/java.util", "java.base/java.util.concurrent",
-      "java.base/java.util.concurrent.atomic",
-      "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-      "java.base/sun.security.action", "java.base/sun.util.calendar",
-    ).flatMap(x => Seq("--add-opens", s"$x=ALL-UNNAMED"))
-    // Child-progress sentinel (r11 ADVICE): the r11 parent separated
-    // "VM-init death" (fall back in-process so the graded invocation
-    // still yields an artifact) from "sweep ran, then failed"
-    // (propagate — re-running would double-print artifacts) by a
-    // 20-second wall heuristic, which a loaded host breaks in both
-    // directions. Evidence instead: the child touches this file right
-    // after SparkSession creation — before ANY artifact output — so
-    // its absence on a nonzero exit PROVES nothing was printed and
-    // the in-process fallback cannot duplicate output.
-    val sentinel = try {
-      val f = java.nio.file.Files.createTempFile("graft-bench-sentinel", "").toFile
-      f.delete(); f.deleteOnExit(); Some(f)
-    } catch { case _: Throwable => None }
-    val cmd = (Seq(javaBin) ++ forwardedJvmArgs ++ addOpens ++ Seq(
-      s"-Xms$mem", s"-Xmx$mem", "-XX:+UseParallelGC",
-      s"-XX:MaxNewSize=$youngCapBytes",
-      "-Dgraft.bench.reexec=1") ++
-      sentinel.map(f => s"-Dgraft.bench.sentinel=${f.getPath}").toSeq ++ Seq(
-      "-cp", childClasspath,
-      "graft.Bench") ++ args).toArray
-    try {
-      val pb = new ProcessBuilder(cmd: _*).inheritIO()
-      val launchT0 = System.nanoTime()
-      val code = pb.start().waitFor()
-      // "did the child get past VM init?" — sentinel file is the
-      // evidence when it exists. When the sentinel could NOT be
-      // created (tmpdir unwritable), r12 treated that as "started",
-      // so a VM-init-dead child's nonzero exit propagated with no
-      // artifact at all (r12 ADVICE). Fall back to the wall-time
-      // heuristic in that case only: VM-init death is sub-second
-      // even on a loaded host; a child that lived 20+ s was running
-      // the sweep and may have printed, so re-running in-process
-      // would double-print artifacts.
-      val childStarted = sentinel.map(_.exists())
-        .getOrElse((System.nanoTime() - launchT0) / 1e9 >= 20.0)
-      sentinel.foreach(_.delete())
-      if (code == 0 || childStarted) sys.exit(code)
-      println(s"REGIME MISMATCH: child JVM died before Spark init rc=$code " +
-        "(heap likely not committable) - continuing IN-PROCESS under the wrong regime")
-    } catch {
-      case t: Throwable if !t.isInstanceOf[java.lang.InterruptedException] =>
-        println(s"REGIME MISMATCH: re-exec failed (${t.getClass.getSimpleName}) - " +
-          "continuing IN-PROCESS under the wrong regime; read gc_s accordingly")
-    }
+  /** The collector family of this JVM, as the jvm object names it. */
+  private def gcName: String = {
+    val names = gcBeanNames
+    if (names.exists(_.startsWith("PS "))) "parallel"
+    else if (names.exists(_.startsWith("G1 "))) "g1"
+    else if (names.exists(_.contains("ZGC"))) "z"
+    else names.headOption.getOrElse("?")
   }
   /** ~90-char self-identification of the graded JVM for the final
-    * bench line: collector family, actual max heap, pre-sized bit,
-    * whether this process is a regime re-exec child, and the overall
-    * verdict — the artifact-level proof VERDICT r10 ask #1 demands. */
-  private def jvmJson: String = {
-    val (p, s, z) = regime()
-    val y = youngOk()
-    val gc =
-      if (p) "parallel"
-      else if (gcBeanNames.exists(_.startsWith("G1 "))) "g1"
-      else if (gcBeanNames.exists(_.contains("ZGC"))) "z"
-      else gcBeanNames.headOption.getOrElse("?")
-    val heapG = heapBean.getMax / (1024.0 * 1024 * 1024)
-    val edenG = edenMaxBytes / (1024.0 * 1024 * 1024)
-    s""","jvm":{"gc":"$gc","heap_g":${num(heapG, 1)},"eden_g":${num(edenG, 1)},"presized":$s,"sized":$z,"young_ok":$y,"reexec":$isReexecChild,"regime_ok":${p && s && z && y}}"""
+    * line: collector family, max heap and eden, and the regime bits. */
+  private[graft] def jvmJson(r: Regime, gc: String, heapBytes: Long, edenBytes: Long): String = {
+    val g = 1024.0 * 1024 * 1024
+    s""","jvm":{"gc":"$gc","heap_g":${num(heapBytes / g, 1)},"eden_g":${num(edenBytes / g, 1)},"presized":${r.presized},"sized":${r.sized},"young_ok":${r.young},"regime_ok":${r.ok}}"""
   }
   // (user, nice, system, idle, iowait, irq, softirq, steal, ...) in
   // USER_HZ ticks (100 Hz on every mainstream Linux) summed over cores
@@ -323,15 +155,11 @@ object Bench {
     * hypervisor ticks stolen by other tenants; busy_other = non-idle
     * host CPU not charged to this JVM (a competing process on the VM).
     * Both in CPU-core-seconds; (-1,-1) when /proc/stat is unreadable
-    * (non-Linux). Used at BOTH granularities — the whole sweep and,
-    * since r13 (VERDICT r12 ask #1), EACH query's own timing window:
-    * the boundary clk/ac probes sample BETWEEN queries, so a contention
-    * burst inside a multi-second query faded before the sample
-    * (stream_live_tumble graded 4.11 s vs 1.61 floor, ac only 18.5 —
-    * unprovable). Two /proc/stat reads per query are ~free and strictly
-    * in-window. Resolution is USER_HZ (10 ms-per-core ticks): decisive
-    * for multi-second outliers, noise-level for ~50 ms qids — read it
-    * on the slow entries, where attribution actually matters. */
+    * (non-Linux). Used for the whole sweep and for EACH query's own
+    * timing window (VERDICT r12 ask #1): the boundary clk/ac probes
+    * sample BETWEEN queries, so a contention burst inside a multi-second
+    * query faded before the sample. Resolution is USER_HZ (10 ms-per-core
+    * ticks): decisive for multi-second outliers, noise for ~50 ms qids. */
   private[graft] def hostDelta(s0: Option[Array[Long]],
       s1: Option[Array[Long]], myCpu: Double): (Double, Double) =
     (for { a <- s0; b <- s1 } yield {
@@ -342,15 +170,12 @@ object Bench {
       (stealS, busyOther)
     }).getOrElse((-1.0, -1.0))
   @volatile private var calSink: Long = 0L // defeat DCE of the CPU loop
-  // Per-query clock-speed sample (~13 ms each, ~2.4 s per sweep): the
-  // CPU channel alone cannot separate "more work" from "same work at a
-  // throttled clock" — hypervisor frequency capping inflates
-  // process-CPU seconds proportionally (observed on this host class:
-  // 244 vs 23 cpu-s for the SAME qid on the SAME data in consecutive
-  // probe runs). A fixed 5e6-iteration LCG timed immediately before
-  // each query records the single-thread clock at that instant; under
-  // throttle the per-query map and this map inflate TOGETHER, which is
-  // the proof a code regression cannot fake.
+  // Per-query clock-speed sample (~13 ms): the CPU channel alone cannot
+  // separate "more work" from "same work at a throttled clock" —
+  // frequency capping inflates process-CPU seconds proportionally. A
+  // fixed 5e6-iteration LCG timed right before each query records the
+  // single-thread clock at that instant; under throttle the query and
+  // this sample inflate TOGETHER, which a code regression cannot fake.
   private def clkMs(): Double = (1 to 2).map { _ =>
     var x = 0x9E3779B97F4A7C15L
     var i = 0L
@@ -362,17 +187,11 @@ object Bench {
     (System.nanoTime() - t) / 1e6
   }.min
   // ALL-CORE clock sample (r11 verdict ask #1): the single-thread clk
-  // probe is documented blind to all-core DVFS / memory-bandwidth
-  // contention (docs/DESIGN.md decision table) — BENCH_r11 carried two
-  // queries (hier_depth +8.8 s, graph_triangles +6.1 s / +48 CPU-s)
-  // inflated at FLAT gc and flat clk, unprovable from the artifact.
-  // Same fixed LCG work, one copy per hardware thread, all released
-  // together; elapsed = the slowest core's effective speed under full
-  // load at that instant. Healthy host ≈ clk_ms (maybe ~2x under SMT);
-  // all-core throttle inflates THIS while clk stays flat — exactly the
-  // missing signal. min of 2 runs (a GC pause in one run would fake
-  // contention; a real throttle slows both). ~26 ms per query, timed
-  // OUTSIDE the per-query window, so the graded total is untouched.
+  // probe is blind to all-core DVFS / memory-bandwidth contention. Same
+  // fixed LCG work, one copy per hardware thread, all released together;
+  // elapsed = the slowest core's effective speed under full load. ac up
+  // at flat clk = all-core contention. Min of 2 runs, ~26 ms per query,
+  // timed OUTSIDE the per-query window.
   private lazy val acPool = java.util.concurrent.Executors.newFixedThreadPool(
     Runtime.getRuntime.availableProcessors(),
     new java.util.concurrent.ThreadFactory {
@@ -428,30 +247,6 @@ object Bench {
     }
     (cpuSec, sparkSec, allCoreMs())
   }
-  /** Short git tree hash of src/main in the checkout this JVM runs
-    * in, or "unknown" (no git binary, not a repo, cwd elsewhere).
-    * Minima are only comparable across sweeps of IDENTICAL measured
-    * code, so the minima file is keyed by this — the SOURCE tree, not
-    * the commit: docs/tests/artifact commits between sweeps (e.g.
-    * committing the minima file itself, or the round log) must not
-    * reset the floor, or the graded sweep could never merge with the
-    * local rehearsals that establish it. */
-  private def gitHead(): String =
-    try {
-      def run(cmd: String*): (Int, String) = {
-        val pb = new ProcessBuilder(cmd: _*)
-        pb.redirectErrorStream(true)
-        val p = pb.start()
-        val out = new String(p.getInputStream.readAllBytes(), "UTF-8").trim
-        (p.waitFor(), out)
-      }
-      // a dirty src/main runs code the tree hash doesn't describe —
-      // key as unknown so such a sweep RESETS rather than pollutes
-      val (dc, dirty) = run("git", "status", "--porcelain", "src/main")
-      if (dc != 0 || dirty.nonEmpty) return "unknown"
-      val (rc, out) = run("git", "rev-parse", "--short=12", "HEAD:src/main")
-      if (rc == 0 && out.matches("[0-9a-f]{6,40}")) out else "unknown"
-    } catch { case _: Throwable => "unknown" }
   /** `v` with `digits` decimals and a '.' point under any default
     * locale. Every number in Bench's JSON lines is formatted here: a
     * comma-decimal default locale must not make them invalid JSON. */
@@ -462,144 +257,67 @@ object Bench {
   private[graft] def numMap(kv: Seq[(String, Double)], digits: Int): String =
     kv.map { case (k, v) => s""""$k":${num(v, digits)}""" }.mkString("{", ",", "}")
 
-  /** Fold this sweep's per-query walls into the per-HEAD minima file.
-    * Keyed by git HEAD: same HEAD → per-qid min and sweeps+1; HEAD
-    * changed or unknowable → start over at this sweep (stale minima
-    * from different code would over-flag every legitimate perf-shape
-    * change as weather, or vice versa). Wrong-regime sweeps never
-    * merge — their walls carry the GC tax the regime machinery exists
-    * to remove. Failed qids fast-fail and would poison the floor, so
-    * the caller excludes them. */
-  /** Re-emit the per-query wall map as small independently-parseable
-    * JSON lines for the driver's fixed-size stdout tail capture (r13
-    * VERDICT ask #2). Entries are sorted cheapest-first so the chunks
-    * nearest EOF — the only ones a 2000-char tail can recover whole —
-    * carry the most expensive qids. 16 qids/chunk keeps every line
-    * ~400 chars: small enough that a cut chunk wastes little of the
-    * tail, large enough that the ~45-char line envelope amortizes. */
-  private[graft] def chunkQueryLines(entries: Seq[(String, Double)]): Seq[String] = {
-    val sorted = entries.sortBy { case (n, s) => (s, n) }
-    val groups = sorted.grouped(16).toSeq
-    val n = groups.size
-    groups.zipWithIndex.map { case (g, i) =>
-      s"""{"metric":"queries_${i + 1}of$n","unit":"sec","queries":${numMap(g, 3)}}"""
+  /** One measured query: wall seconds, error class if it threw, and the
+    * attribution channels (process-CPU, single-thread clk sample,
+    * stop-the-world GC, all-core sample, in-window steal / busy-other). */
+  private[graft] final case class QRes(name: String, sec: Double, err: Option[String],
+      cpu: Double, clk: Double, gc: Double, ac: Double, st: Double, bo: Double) {
+    def json: String = {
+      val errTag = err.map(e => s""","err":"$e"""").getOrElse("")
+      s"""{"query":"$name","sec":${num(sec, 3)},"cpu":${num(cpu, 3)},"gc":${num(gc, 3)},"clk_ms":${num(clk, 1)},"ac_ms":${num(ac, 1)},"st":${num(st, 2)},"bo":${num(bo, 2)}$errTag}"""
     }
   }
-  /** Parse a minima file body into (head, sweeps, per-qid floor).
-    * Deliberately regex-based (no JSON lib dependency in the graded
-    * main) and total: any malformed input degrades to the empty floor,
-    * which merely restarts the floor at the current sweep. */
-  private[graft] def parseMinFile(s: String): (String, Int, Map[String, Double]) =
-    try {
-      val h = """"head":"([^"]*)"""".r.findFirstMatchIn(s)
-        .map(_.group(1)).getOrElse("unknown")
-      val n = """"sweeps":(\d+)""".r.findFirstMatchIn(s)
-        .map(_.group(1).toInt).getOrElse(0)
-      // floors only from INSIDE the queries object: without this
-      // anchor a truncated file would harvest "sweeps":N as a floor
-      // entry (caught by the BenchRegimeSpec fixed-string unit)
-      val at = s.indexOf("\"queries\"")
-      val qs =
-        if (at < 0) Map.empty[String, Double]
-        else """"([A-Za-z0-9_]+)":(-?\d+(?:\.\d+)?)""".r
-          .findAllMatchIn(s.substring(at))
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap - "queries"
-      (h, n, qs)
-    } catch { case _: Throwable => ("unknown", 0, Map.empty[String, Double]) }
-  private def mergeMinima(walls: Seq[(String, Double)]): Unit = {
-    if (!regimeOk() || walls.isEmpty) return
-    val head = gitHead()
-    val path = java.nio.file.Paths.get("BENCH_QUERIES_MIN_LATEST.json")
-    val (oldHead, oldSweeps, oldMin) =
-      try parseMinFile(
-        new String(java.nio.file.Files.readAllBytes(path), "UTF-8"))
-      catch { case _: Throwable => ("unknown", 0, Map.empty[String, Double]) }
-    val keep = head != "unknown" && head == oldHead
-    val base = if (keep) oldMin else Map.empty[String, Double]
-    val sweeps = (if (keep) oldSweeps else 0) + 1
-    // base ++ updates, not updates alone (r12 ADVICE): a qid that errs
-    // in THIS sweep is excluded by the caller, and writing only this
-    // sweep's qids would drop its accumulated floor while the
-    // file-level sweeps counter still increments — floors claiming
-    // more sweeps of evidence than they have. Same-HEAD registry is
-    // fixed, so a preserved key is always a real qid.
-    val updates = walls.map { case (n, s) =>
-      n -> math.min(s, base.getOrElse(n, Double.MaxValue))
-    }.toMap
-    val merged = (base ++ updates).toSeq.sortBy(_._1)
-    val body = s"""{"head":"$head","sweeps":$sweeps,"queries":${numMap(merged, 3)}}"""
-    Seq(path, java.nio.file.Paths.get("target/bench_queries_min.json"))
-      .foreach { p =>
-        try java.nio.file.Files.write(p, body.getBytes("UTF-8"))
-        catch { case _: Throwable => () }
-      }
-    println(s"""{"min_merge":{"head":"$head","sweeps":$sweeps}}""")
+
+  /** The per-query map the round-over-round comparator reads from the
+    * 2,000-char stdout tail (VERDICT r14 item 1): the 40 most expensive
+    * successful qids at 2 decimals, printed just before the final line.
+    * The 189 names alone are ~2,300 chars, so the complete map is the
+    * artifact's per-qid lines. */
+  private[graft] def partialLine(rs: Seq[QRes]): String = {
+    val top = rs.filter(_.err.isEmpty).sortBy(r => (-r.sec, r.name)).take(40)
+    s"""{"metric":"queries","partial":true,"unit":"sec","queries":${numMap(top.map(r => r.name -> r.sec), 2)}}"""
+  }
+
+  /** `,"key":{"min":…,"p50":…,"max":…}` over the positive samples (a
+    * failed probe's -1 must not read as the sweep's best clock), or "". */
+  private def spread(key: String, samples: Seq[Double]): String = {
+    val s = samples.filter(_ > 0).sorted
+    if (s.isEmpty) ""
+    else s""","$key":${numMap(Seq("min" -> s.head, "p50" -> s(s.size / 2), "max" -> s.last), 1)}"""
+  }
+
+  /** The final line, LAST on stdout (the graded-run contract): round 5 inlined
+    * the per-query map here, the line outgrew the tail capture, and
+    * BENCH_r05 came back parsed:null. It carries the total, the cal
+    * start/mid/end triples, the clk and ac spreads (max/min = the
+    * throttle or contention depth during the sweep), the sweep's host
+    * accounting (steal, busy-other, own CPU, GC and wall seconds) and the
+    * jvm object. */
+  private[graft] def totalLine(rs: Seq[QRes], cal: Seq[(Double, Double, Double)],
+      host: Option[Seq[(String, Double)]], jvm: String, sf: String): String = {
+    def col(f: ((Double, Double, Double)) => String) = cal.map(f).mkString("[", ",", "]")
+    val calJson = s"""{"cpu":${col(c => num(c._1, 3))},"spark":${col(c => num(c._2, 3))},"ac":${col(c => num(c._3, 1))}}"""
+    val hostJson = host.fold("")(h => s""","host":${numMap(h, 1)}""")
+    s"""{"metric":"total","value":${num(rs.map(_.sec).sum, 3)},"unit":"sec","n_queries":${rs.size},"n_err":${rs.count(_.err.isDefined)},"cpu_total":${num(rs.map(_.cpu).sum, 1)},"cal":$calJson${spread("clk_ms", rs.map(_.clk))}${spread("ac_ms", rs.map(_.ac))}$hostJson$jvm,"sf":"$sf"}"""
   }
   // A permanently broken warm (e.g. a signature change in a warmed
   // production helper) must be VISIBLE in the bench output, not read as
-  // an unexplained cold-JIT perf regression in the round log — print a
-  // one-line marker per failed warm while still never aborting the
-  // other warms (r9 ADVICE).
+  // an unexplained cold-JIT perf regression — print a one-line marker
+  // per failed warm while still never aborting the other warms.
   private def warmed(name: String)(body: => Unit): Unit =
     try body catch {
       case t: Throwable =>
         println(s"WARM FAILED $name ${t.getClass.getSimpleName}")
     }
-  /** One measured query: wall seconds, error class if it threw, and the
-    * five attribution channels (process-CPU, single-thread clk sample,
-    * stop-the-world GC, all-core sample, in-window steal / busy-other). */
-  private case class QRes(name: String, sec: Double, err: Option[String],
-    cpu: Double, clk: Double, gc: Double, ac: Double, st: Double, bo: Double)
   def main(args: Array[String]): Unit = {
-    // regime first: everything after this line runs in the JVM whose
-    // numbers the artifact reports (either this one, proven OK, or we
-    // never get here — the child ran the sweep and we exited with it)
-    ensureRegime(args)
+    val jvmRegime = regime()
+    if (!jvmRegime.ok)
+      println(s"${jvmRegime.mismatch} - running in process; launch through tools/run_main.sh")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core (the driver contract is local[32]); the env
-    // var still pins an explicit width for controlled runs
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // keep managed-table writes (join_bucketed) off the launch CWD,
-      // and per-process so concurrent JVMs can't race the table builds
-      .config("spark.sql.warehouse.dir", Warehouse.dir)
-    // Shuffle/spill scratch on the fastest local storage available —
-    // see [[Scratch]] (guide §6): the shared-virtual-disk default
-    // charged 11–14 s of shuffle-write I/O wait to kilobyte exchanges
-    // under co-tenant disk load. Spark creates and deletes per-app
-    // subdirectories; nothing persists across runs.
-    Scratch.fastRoot.foreach(d => builder.config("spark.local.dir", d))
-    // dev A/B hook (unset on the driver): AQE partition coalescing with
-    // parallelism-first OFF — the Spark-documented busy-cluster setting.
-    // At fixture scale it collapses near-empty post-shuffle tasks; at
-    // production scale the advisory size governs and the flag is moot.
-    // Results are partitioning-independent by the Det ground rule, so
-    // this is a pure physical A/B.
-    if (sys.env.contains("SPARK_GRAFT_COALESCE")) {
-      builder.config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      builder.config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
-    }
-    val spark = builder.getOrCreate()
-    // re-exec child-progress proof: touch the parent's sentinel path
-    // the moment the session exists — past VM init (heap committed)
-    // and BEFORE any artifact output, the exact boundary the parent's
-    // fallback-vs-propagate decision needs (see ensureRegime)
-    sys.props.get("graft.bench.sentinel").foreach { p =>
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get(p), Array.emptyByteArray)
-      catch { case _: Throwable => () }
-    }
-    spark.sparkContext.setLogLevel("WARN")
-    // Scratch lifecycle (r14, VERDICT r13 ask #8): bound graft_scratch
-    // growth before the run — dead-pid transport/checkpoint dirs and
-    // >48 h-stale corpus staging go now, untimed. See Scratch.cleanupStale
-    // for the _DONE-marker race discussion.
+    val spark = obs.Diag.session()
+    // Scratch lifecycle (VERDICT r13 ask #8): bound graft_scratch growth
+    // before the run — dead-pid transport/checkpoint dirs and >48 h-stale
+    // corpus staging go now, untimed. See Scratch.cleanupStale.
     locally {
       val n = Scratch.cleanupStale()
       if (n > 0) BuildLog.log(s"scratch cleanup: removed $n stale graft_* entries")
@@ -620,13 +338,9 @@ object Bench {
       // array dot products) on a small slice so the first measured
       // documents/embeddings query isn't charged the JIT setup
       import org.apache.spark.sql.functions.{explode, md5, split}
-      // Spark 4's collation-aware string functions lazily <clinit>
-      // CollationAwareUTF8String, whose static block warms ICU
-      // title-case BreakIterator dictionaries — a multi-second one-time
-      // stall that every executor thread blocks on the first time a
-      // non-ASCII string hits lower()/initcap(). local[..] runs in this
-      // JVM, so force the class init here, in the quiet warmup window,
-      // instead of letting it land on a measured query.
+      // Spark 4's CollationAwareUTF8String <clinit> warms ICU title-case
+      // dictionaries, a multi-second stall every executor thread blocks
+      // on at the first non-ASCII lower()/initcap(): force it here.
       Class.forName("org.apache.spark.sql.catalyst.util.CollationAwareUTF8String")
       spark.read.parquet(s"$sfDir/documents.parquet").limit(500)
         .select(md5(col("text")).as("h"), explode(split(col("text"), " ")).as("t"))
@@ -646,13 +360,9 @@ object Bench {
         .groupBy(col("id") % 3)
         .agg(min(struct(col("rk"), col("id"))))
         .count()
-      // warm the basket-build shape shared by coPurchaseAll and
-      // shingleBaskets (ObjectHashAggregate collect_list + sort_array,
-      // double Generate explode, support HashAggregate): these family
-      // ETL builds now materialize eagerly with a logged build time,
-      // and without this warm that logged figure is inflated by the
-      // one-time JIT of exactly these operators. Toy data, production
-      // operator shapes.
+      // the basket-build shape shared by coPurchaseAll and shingleBaskets
+      // (collect_list + sort_array, double explode, support agg), so the
+      // eager family builds' logged times carry no one-time JIT
       import org.apache.spark.sql.functions.{collect_list, count, explode, lit, sort_array}
       spark.range(200).selectExpr("id % 40 AS ok", "id % 13 AS pk")
         .groupBy(col("ok")).agg(sort_array(collect_list(col("pk"))).as("ps"))
@@ -664,37 +374,23 @@ object Bench {
       Seq("ps_combine", "join_bucketed", "scan_partitioned").foreach { q =>
         Registry.byId.get(q).foreach(g => g.fn(spark, sfDir).count())
       }
-      // Warm the three iterative-loop code paths on TINY inputs: their
-      // per-round shapes (LogicalRDD self-joins, star-contraction
-      // group-mins, the fused scalar probe aggs, NN-Descent's
-      // score/top-k) JIT here instead of on hier_depth /
-      // dedup_clusters / sim_knn_graph — the r7 suite maxima, whose
-      // driver numbers were dominated by cold codegen amortized over
-      // many sequential round jobs. Production code paths, toy data:
-      // plans are unchanged, only the one-time JVM compile moves.
-      // each warm's final relation is localCheckpoint blocks, which
-      // live OUTSIDE the CacheManager — free them explicitly (the
-      // loops' own regimen) so the measured suite doesn't carry them.
+      // The iterative loops on TINY inputs: their per-round shapes JIT
+      // here instead of on hier_depth / dedup_clusters / sim_knn_graph
+      // (production code paths, toy data, unchanged plans). Each warm's
+      // final relation is localCheckpoint blocks, outside the
+      // CacheManager, so they are freed explicitly.
       // Thunked + per-warm try/finally: building a warm RUNS its loop,
       // so one warm failing must not skip the free (or the run) of the
-      // others — blocks leaked here would survive every clearCache.
-      // warm the PQ chain on 64 deterministic toy vectors: sim_pq's
-      // r8 driver regression (1.61 → 2.35 s, plan unchanged) probed as
-      // pure first-run JIT — 5.23 s cold vs 1.66 s warm in one JVM
-      // (PqPhaseProbe); production operator chain, toy data
-      // per-warm guards (the warmThunks contract below): one warm
-      // failing must not skip the other warms or the prelude-final
-      // clearCache — without this, a PQ-chain regression would
-      // silently disable EVERY later warm and leak the registered
-      // warm queries' caches into the measured suite
+      // others, or the prelude-final clearCache — blocks leaked here
+      // would survive every clearCache.
+      // the PQ chain on 64 toy vectors: sim_pq's r8 graded regression
+      // (1.61 → 2.35 s, plan unchanged) was pure first-run JIT
       warmed("simPqOn")(operators.LlmPipeline.simPqOn(
         spark.range(64).selectExpr("id AS vec_id",
           "transform(sequence(1, 64), j -> cast((id * 31 + j) % 97 as float)) AS embedding")
       ).count())
-      // warm the distinct-first dedup_embed chain (r9 restatement:
-      // array-keyed groupBy/expansion joins, mirror explode) on 64 toy
-      // vectors with planted duplicates (id div 2 ⇒ every vector has a
-      // twin) so BOTH the intra-group and cross-group paths JIT here
+      // the distinct-first dedup_embed chain on 64 toy vectors with
+      // planted twins (id div 2), so both its intra- and cross-group paths JIT
       warmed("dedupEmbedOn")(operators.LlmPipeline.dedupEmbedOn(
         spark.range(64).selectExpr("id AS vec_id",
           "transform(sequence(1, 8), j -> cast(((id div 2) * 13 + j) % 19 - 9 as double)) AS v")
@@ -715,13 +411,10 @@ object Bench {
           finally operators.GraphOps.freeCheckpoint(warm)
         }
       }
-      // r9 warms, same toy-input/production-path contract: the BFS
-      // round shape (graph_shortest_path), the 3-iteration pagerank
-      // round shape, and the six-stage minhash chain — each measured
-      // at ~2x its steady-state cost in-bench from first-run JIT
-      // (MinhashProbe / PqPhaseProbe pattern). Their tiny persisted
-      // inputs are dropped by the clearCache below, BEFORE any
-      // measured query runs.
+      // the BFS round shape (graph_shortest_path), the pagerank round
+      // shape and the six-stage minhash chain, each ~2x its steady-state
+      // cost in-bench from first-run JIT; their toy persisted inputs are
+      // dropped by the clearCache below, before any measured query runs.
       locally {
         val toyCanon = spark.range(1, 32).selectExpr("id AS u", "id * 2 AS v")
           .filter(org.apache.spark.sql.functions.col("v") < 32)
@@ -744,12 +437,8 @@ object Bench {
               collect_list(col("doc_id"))).as("docs"))
           operators.LlmPipeline.dedupMinhashOn(toySh, toyBaskets).count()
         }
-        // RANGE-frame cumulative window (ts_outlier's histogram-median
-        // shape, r9): unlike row_number (warmed above, shared by ~40
-        // qids), the rangeBetween cumulative sum + whole-partition sum
-        // codegen has exactly one consumer, so its first-run JIT
-        // landed entirely on ts_outlier. Toy histogram, same operator
-        // shapes.
+        // RANGE-frame cumulative window (ts_outlier's histogram median):
+        // one consumer, so its first-run JIT landed entirely on ts_outlier
         warmed("rangeFrameWindow") {
           val wr = org.apache.spark.sql.expressions.Window
             .partitionBy(col("g")).orderBy(col("v"))
@@ -767,15 +456,10 @@ object Bench {
             .count()
         }
       }
-      // Structured Streaming machinery warm: IncrementalExecution, the
-      // HDFS-backed state store provider, the memory sink, AND the
-      // stream-stream symmetric hash join each JIT once per JVM —
-      // measured ~1.5–2 s charged to whichever stream_live_* qid runs
-      // first (session 3.32 s in first position vs 1.76 s warmed; join
-      // inherits the slot since r12). Toy 8-row parquet staged in tmp,
-      // production operator shapes: a watermarked windowed agg and a
-      // watermarked stream-stream interval join through the same
-      // runToTable path the qids use.
+      // Structured Streaming machinery (IncrementalExecution, the state
+      // store, the memory sink, the stream-stream hash join) JITs once
+      // per JVM, ~1.5–2 s charged to the first stream_live_* qid: a toy
+      // windowed agg and interval join through the qids' runToTable path.
       warmed("streamingEngine") {
         import org.apache.spark.sql.streaming.OutputMode
         val tmp = java.nio.file.Files.createTempDirectory("graft_warm_stream")
@@ -827,19 +511,21 @@ object Bench {
     // dev-only filter (unset on the driver): run just the qids whose
     // name starts with one of the comma-separated prefixes, under the
     // exact bench conditions (prelude warms, family-boundary cache
-    // clears, sorted order) — for attributing a family's driver
-    // numbers without a 3-minute full sweep
+    // clears, sorted order)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
     def family(name: String): String = name.takeWhile(_ != '_')
+    // every JSON line of the run, in print order: the run's one artifact
+    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
+    def emit(line: String): Unit = { println(line); lines += line }
     // calibration samples: start (post-prelude, pre-first-query),
     // midpoint (between queries — never inside a query's timing), end
     val cal = scala.collection.mutable.ArrayBuffer.empty[(Double, Double, Double)]
     def sampleCal(tag: String): Unit = {
       val (c, s, a) = calibrate(spark)
       cal += ((c, s, a))
-      println(s"""{"cal":"$tag","cpu_sec":${num(c, 3)},"spark_sec":${num(s, 3)},"ac_ms":${num(a, 1)}}""")
+      emit(s"""{"cal":"$tag","cpu_sec":${num(c, 3)},"spark_sec":${num(s, 3)},"ac_ms":${num(a, 1)}}""")
     }
     sampleCal("start")
     val stat0 = procStat()
@@ -852,8 +538,7 @@ object Bench {
       val clk = clkMs()
       // all-core sample immediately after the single-thread one: the
       // PAIR separates "host fine" (both flat) / "per-core throttle"
-      // (both up) / "all-core contention" (ac up, clk flat — the r11
-      // hier_depth/graph_triangles blind spot)
+      // (both up) / "all-core contention" (ac up, clk flat)
       val ac = allCoreMs()
       val c0 = processCpuSec()
       val g0 = gcSec()
@@ -867,149 +552,42 @@ object Bench {
         catch { case t: Throwable => Some(t.getClass.getSimpleName) }
       val sec = (System.nanoTime() - t0) / 1e9
       val cpu = processCpuSec() - c0
-      // per-query stop-the-world GC seconds (VERDICT r10 ask #2): the
-      // sweep-level gc_s said WHETHER a heap regime taxed the run;
-      // this says WHICH qid paid it — e.g. r10's stream_live_tumble
-      // 292 driver CPU-s was unattributable without exactly this
+      // per-query stop-the-world GC and IN-WINDOW host weather (steal +
+      // busy-other core-seconds inside this query's own timing window)
       val gc = gcDelta(g0, gcSec())
-      // per-query IN-WINDOW host weather (VERDICT r12 ask #1): steal +
-      // busy-other core-seconds inside this query's own timing window —
-      // the signal the between-query probes structurally miss
       val (st, bo) = hostDelta(hs0, procStat(), cpu)
-      val errTag = err.map(e => s""","err":"$e"""").getOrElse("")
-      println(s"""{"query":"$name","sec":${num(sec, 3)},"cpu":${num(cpu, 3)},"gc":${num(gc, 3)},"clk_ms":${num(clk, 1)},"ac_ms":${num(ac, 1)},"st":${num(st, 2)},"bo":${num(bo, 2)}$errTag}""")
+      val r = QRes(name, sec, err, cpu, clk, gc, ac, st, bo)
+      emit(r.json)
       val lastOfFamily = i + 1 >= ordered.size ||
         family(ordered(i + 1)._1) != family(name)
       if (lastOfFamily)
         try spark.catalog.clearCache() catch { case _: Throwable => () }
-      QRes(name, sec, err, cpu, clk, gc, ac, st, bo)
+      r
     }
     val sweepWall = (System.nanoTime() - sweepT0) / 1e9
     val sweepCpu = processCpuSec() - sweepCpu0
     val sweepGc = gcDelta(sweepGc0, gcSec())
     val stat1 = procStat()
     sampleCal("end")
-    val total = results.map(_.sec).sum
-    val nErr = results.count(_.err.isDefined)
-    val cpuTotal = results.map(_.cpu).sum
-    // per-query clock-sample summary for the final line (full map in
-    // the clk sibling file): a healthy host is flat at the min; the
-    // max/min spread IS the throttle depth during the sweep
-    val clkJson = if (results.nonEmpty) {
-      val cs = results.map(_.clk).sorted
-      s""","clk_ms":{"min":${num(cs.head, 1)},"p50":${num(cs(cs.size / 2), 1)},"max":${num(cs.last, 1)}}"""
-    } else ""
-    // same three-number summary for the all-core channel: ac p50 ≈ clk
-    // p50 (modulo SMT) on a healthy host; ac max/p50 spread at flat clk
-    // IS the all-core-contention depth during the sweep. Failed probes
-    // return the -1 sentinel — excluded here, or the summary's min
-    // would report the failure marker as the sweep's best clock
-    // (r12 ADVICE).
-    val acSamples = results.map(_.ac).filter(_ > 0).sorted
-    val acJson = if (acSamples.nonEmpty) {
-      s""","ac_ms":{"min":${num(acSamples.head, 1)},"p50":${num(acSamples(acSamples.size / 2), 1)},"max":${num(acSamples.last, 1)}}"""
-    } else ""
-    // sweep-level host accounting from /proc/stat (100 Hz USER_HZ
-    // ticks): steal = other-tenant hypervisor theft; busy_other =
-    // non-idle host CPU not charged to this JVM (a competing process).
-    // Both in CPU-core-seconds over the whole sweep.
-    val hostJson = if (stat0.isDefined && stat1.isDefined) {
+    // sweep-level host accounting from /proc/stat, in CPU-core-seconds
+    val host = if (stat0.isEmpty || stat1.isEmpty) None else {
       val (stealS, busyOther) = hostDelta(stat0, stat1, sweepCpu)
-      s""","host":{"steal_s":${num(stealS, 1)},"busy_other_s":${num(busyOther, 1)},"my_cpu_s":${num(sweepCpu, 1)},"gc_s":${num(sweepGc, 1)},"wall_s":${num(sweepWall, 1)}}"""
-    } else ""
-    // six calibration numbers for the final line: cpu/spark triples in
-    // start/mid/end order. ~70 chars — safely inside the 2000-char tail
-    // budget the final line must respect.
-    val calJson = {
-      val cpus3 = cal.map(c => num(c._1, 3)).mkString(",")
-      val sparks3 = cal.map(c => num(c._2, 3)).mkString(",")
-      val acs3 = cal.map(c => num(c._3, 1)).mkString(",")
-      s"""{"cpu":[$cpus3],"spark":[$sparks3],"ac":[$acs3]}"""
+      Some(Seq("steal_s" -> stealS, "busy_other_s" -> busyOther,
+        "my_cpu_s" -> sweepCpu, "gc_s" -> sweepGc, "wall_s" -> sweepWall))
     }
-    val perQuery = results
-      .map { r =>
-        s""""${r.name}":${num(r.sec, 3)}""" +
-          r.err.map(x => s""","${r.name}_err":"$x"""").getOrElse("")
-      }.mkString("{", ",", "}")
-    // per-query process-CPU / clock-sample / GC / all-core / in-window
-    // steal / in-window busy-other maps, same flat name→number shape,
-    // SEPARATE sibling files (the wall map's flat one-number-per-qid
-    // contract stays stable for tooling regardless of registry size)
-    val perQueryCpu = numMap(results.map(r => r.name -> r.cpu), 3)
-    val perQueryClk = numMap(results.map(r => r.name -> r.clk), 1)
-    val perQueryGc = numMap(results.map(r => r.name -> r.gc), 3)
-    // ac: omit failed probes (-1 sentinel) — a missing key reads as
-    // "no sample", never as a fake fast clock (r12 ADVICE)
-    val perQueryAc = numMap(results.filter(_.ac > 0).map(r => r.name -> r.ac), 1)
-    val perQuerySt = numMap(results.map(r => r.name -> r.st), 2)
-    val perQueryBo = numMap(results.map(r => r.name -> r.bo), 2)
-    // sibling artifacts with the same per-query map, for offline
-    // regression attribution (the stdout tail can truncate). TWO
-    // copies: target/ for tooling, and a repo-root BENCH_QUERIES_
-    // LATEST.json that gets committed as BENCH_QUERIES_r{N}.json at
-    // the next round's open — both r7→r8 "suite maximum arrived
-    // unnoticed" incidents trace to the full map living only in
-    // truncated stdout and an uncommitted target/ file.
-    // a SPARK_GRAFT_ONLY-filtered dev run must NOT overwrite the
-    // repo-root artifact with a partial map — committing that at round
-    // open would silently drop most qids from the regression record,
-    // recreating the exact incident the file exists to prevent
-    val sinks = if (only.isEmpty)
-      Seq("target/bench_queries.json" -> perQuery,
-        "BENCH_QUERIES_LATEST.json" -> perQuery,
-        "target/bench_queries_cpu.json" -> perQueryCpu,
-        "BENCH_QUERIES_CPU_LATEST.json" -> perQueryCpu,
-        "target/bench_queries_clk.json" -> perQueryClk,
-        "BENCH_QUERIES_CLK_LATEST.json" -> perQueryClk,
-        "target/bench_queries_gc.json" -> perQueryGc,
-        "BENCH_QUERIES_GC_LATEST.json" -> perQueryGc,
-        "target/bench_queries_ac.json" -> perQueryAc,
-        "BENCH_QUERIES_AC_LATEST.json" -> perQueryAc,
-        "target/bench_queries_st.json" -> perQuerySt,
-        "BENCH_QUERIES_ST_LATEST.json" -> perQuerySt,
-        "target/bench_queries_bo.json" -> perQueryBo,
-        "BENCH_QUERIES_BO_LATEST.json" -> perQueryBo)
-    else Seq("target/bench_queries_filtered.json" -> perQuery,
-      "target/bench_queries_cpu_filtered.json" -> perQueryCpu,
-      "target/bench_queries_clk_filtered.json" -> perQueryClk,
-      "target/bench_queries_gc_filtered.json" -> perQueryGc,
-      "target/bench_queries_ac_filtered.json" -> perQueryAc,
-      "target/bench_queries_st_filtered.json" -> perQuerySt,
-      "target/bench_queries_bo_filtered.json" -> perQueryBo)
-    sinks.foreach { case (p, body) =>
-      try java.nio.file.Files.write(
-        java.nio.file.Paths.get(p), body.getBytes("UTF-8"))
-      catch { case _: Throwable => () }
-    }
-    // per-query MINIMA across regime-proven full sweeps at one git HEAD
-    // (r11 verdict ask #1, second prong): a single graded sweep cannot
-    // distinguish "this qid regressed" from "this qid caught a weather
-    // burst" — the floor across ≥2 sweeps of identical code can. Merged
-    // opportunistically by EVERY full-sweep run on this checkout (local
-    // rehearsals + the graded run), reset whenever HEAD changes, and
-    // stamped like the other siblings at round open.
-    if (only.isEmpty)
-      mergeMinima(results.collect { case r if r.err.isEmpty => r.name -> r.sec })
-    // per-query map on its OWN line (full stdout + sibling file carry
-    // it; it is too long for the driver's 2000-char tail capture)...
-    println(s"""{"metric":"queries","queries":$perQuery}""")
-    // ...then the SAME map re-emitted in small independently-parseable
-    // chunks (r13 VERDICT ask #2: PERF n_common was 0 because the one
-    // 4 KB queries line never fit the 2000-char tail). Full fidelity in
-    // the tail is impossible — the 189 qid names alone are 2273 chars —
-    // so the chunks are ordered cheapest-first, putting the expensive
-    // qids (the ones a perf comparison needs most) in the chunks
-    // nearest EOF, which is the suffix a fixed-size tail capture
-    // actually recovers. Complete map: the queries line above + the
-    // BENCH_QUERIES_LATEST.json sibling.
-    if (only.isEmpty)
-      chunkQueryLines(results.collect { case r if r.err.isEmpty => r.name -> r.sec })
-        .foreach(println)
-    // ...and ONE SHORT parseable line LAST (driver contract): round 5
-    // inlined the 180-entry map here, the line outgrew the tail
-    // capture, and BENCH_r05 came back parsed:null. Keep this line
-    // well under 2000 chars forever.
-    println(s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","n_queries":${results.size},"n_err":$nErr,"cpu_total":${num(cpuTotal, 1)},"cal":$calJson$clkJson$acJson$hostJson$jvmJson,"sf":"$sfDir"}""")
+    emit(partialLine(results))
+    emit(totalLine(results, cal.toSeq, host,
+      jvmJson(jvmRegime, gcName, heapBean.getMax, edenMaxBytes), sfDir))
+    // The run's one artifact. A full sweep's is committed as
+    // BENCH_QUERIES_r<N>.jsonl at the next round's open
+    // (tools/round_open.sh): both r7→r8 "suite maximum arrived unnoticed"
+    // incidents trace to the full map living only in truncated stdout.
+    // A SPARK_GRAFT_ONLY run must not overwrite it with a partial map.
+    val artifact =
+      if (only.isEmpty) "BENCH_QUERIES_LATEST.jsonl" else "target/bench_queries_filtered.jsonl"
+    try java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
+      lines.map(_ + "\n").mkString.getBytes("UTF-8"))
+    catch { case _: Throwable => () }
     spark.stop()
   }
 }

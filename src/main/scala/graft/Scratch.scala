@@ -75,10 +75,10 @@ object Scratch {
     * or re-stages on miss, so deletion is always recoverable — but
     * deleting a dir another live JVM is mid-read fails that JVM's one
     * query. The age bound is the mitigation: reads don't refresh mtime,
-    * so the bound must exceed any plausible gap between a host's
-    * staging and its last use (48 h ≫ the minutes a bench/verify run
-    * lives). graft_scale (the rehearsal corpora, minutes to resynth)
-    * is excluded outright.
+    * so every reuse of corpus-keyed staging calls [[touch]], and the
+    * bound is the gap between a stage's LAST use and the next cleanup
+    * (48 h ≫ the minutes a bench/verify run lives). graft_scale (the
+    * rehearsal corpora, minutes to resynth) is excluded outright.
     *
     * Returns the number of entries deleted. Injectable root/clock/
     * liveness for the unit test. */
@@ -119,4 +119,14 @@ object Scratch {
     } catch { case _: Throwable => () } // unreadable root: nothing to bound
     deleted
   }
+
+  /** Mark a reused staging entry as used at `now`: [[cleanupStale]]
+    * ages corpus-keyed staging by its mtime, which reads never refresh,
+    * so a stage still in use would otherwise go 48 h after it was first
+    * written and be re-staged inside a timed run. Best effort: a failed
+    * touch only risks that re-stage. */
+  def touch(p: java.nio.file.Path, now: Long = System.currentTimeMillis()): Unit =
+    try java.nio.file.Files.setLastModifiedTime(p,
+      java.nio.file.attribute.FileTime.fromMillis(now))
+    catch { case _: Throwable => () }
 }

@@ -2641,7 +2641,7 @@ object LlmPipeline {
     // 0.63–0.66 at EVERY init probed up to B=12/size 16 — too thin).
     // 4 keeps a 23-hit margin and was the r7 round's single biggest
     // bench cut together with the 2-wide-ops round body (KnnProbe
-    // ladder, docs/TODO_r7.md; r14 B ladder in OPTIMIZATION_r15.md)
+    // ladder, docs/DESIGN.md "Round-7"; r14 B ladder in OPTIMIZATION_r15.md)
     val edges = knnGraphEdges(spark, dir, k = 12, rounds = 4)
     // The exact top-5 twin is the SAME relation the IVF family already
     // materializes: the full-probe (nprobe = nCells) candidate set is

@@ -360,9 +360,10 @@ object Relational {
             }
           }
         }
-        if (Files.exists(marker))
+        if (Files.exists(marker)) {
+          graft.Scratch.touch(root) // in use: Scratch.cleanupStale ages by mtime
           spark.read.option("mergeSchema", "true").parquet(root.toString)
-        else oldGen.unionByName(newGen, allowMissingColumns = true)
+        } else oldGen.unionByName(newGen, allowMissingColumns = true)
       } catch { case _: Throwable =>
         oldGen.unionByName(newGen, allowMissingColumns = true)
       }

@@ -79,6 +79,7 @@ object Snapshots {
       // call-site bug — derive a purpose-specific path, the
       // `graft_<purpose>_<hash(dir)>` convention).
       if (Files.exists(marker)) {
+        graft.Scratch.touch(path) // in use: Scratch.cleanupStale ages by mtime
         val app = spark.sparkContext.applicationId
         readMemo.filterInPlace { case ((a, _, _), _) => a == app }
         readMemo.getOrElseUpdate((app, tag, path.toString),

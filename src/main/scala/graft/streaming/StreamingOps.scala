@@ -103,6 +103,7 @@ object StreamingOps {
         } finally java.nio.file.Files.deleteIfExists(tmp)
       }
     }
+    graft.Scratch.touch(staged) // in use: Scratch.cleanupStale ages by mtime
     val raw = spark.readStream
       .schema(spark.read.parquet(s"$dir/events.parquet").schema)
       .parquet(staged.toString)
@@ -458,7 +459,7 @@ object StreamingOps {
           .parquet(staged.resolve(s"batch$b").toString)
       }
       java.nio.file.Files.createFile(staged.resolve("_DONE"))
-    }
+    } else graft.Scratch.touch(staged)
     var state = rel.mergeTarget(spark, dir).localCheckpoint()
     val stream = spark.readStream
       .schema(cdc.schema)

@@ -18,14 +18,14 @@ import org.apache.spark.sql.functions._
   * (`flatMapGroupsWithState`), the stream-stream interval join
   * (since r12, after the state-size-matched stream shuffle width
   * reopened the bench budget), and the foreachBatch CDC merge (since
-  * r13, inside the same reopened budget — the committed A/B in
-  * docs/TODO_r13.md shows the family's per-qid cost is micro-batch
-  * machinery, invariant to data volume, so each promotion is a fixed
-  * ~1–3 s buy). The rest of the streaming surface (dropDuplicates
-  * within watermark, `transformWithState` v2, timer sessions) stays
-  * test-only in [[StreamingOps]]/StreamingMlSpec: each would charge
-  * the graded bench total seconds of fixed micro-batch machinery for
-  * a capability the suite already proves batch-equal.
+  * r13, inside the same reopened budget — the r13 A/B showed the
+  * family's per-qid cost is micro-batch machinery, invariant to data
+  * volume, so each promotion is a fixed ~1–3 s buy). The rest of the
+  * streaming surface (dropDuplicates within watermark,
+  * `transformWithState` v2, timer sessions) stays test-only in
+  * [[StreamingOps]]/StreamingMlSpec: each would charge the graded bench
+  * total seconds of fixed micro-batch machinery for a capability the
+  * suite already proves batch-equal.
   *
   * Determinism contract: the fixture's events table is ONE parquet
   * file, so `Trigger.AvailableNow` runs exactly one data micro-batch

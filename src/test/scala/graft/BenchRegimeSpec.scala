@@ -2,11 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Units for the bench's self-regime machinery (round 11). The
-  * end-to-end behavior (re-exec under bare java / spark-submit, the
-  * jvm artifact object, the recursion guard) is exercised manually per
-  * docs/TODO_r11.md §3; these pin the pure logic so a refactor can't
-  * silently invert a sentinel or mis-parse the heap target.
+/** Units for the bench's regime check and its comparator-parsed lines
+  * (docs/DESIGN.md "Bench calibration"): these pin the pure logic so a
+  * refactor can't silently invert a sentinel, mis-parse the heap target
+  * or outgrow the comparator's stdout tail.
   */
 class BenchRegimeSpec extends AnyFunSuite {
 
@@ -44,13 +43,14 @@ class BenchRegimeSpec extends AnyFunSuite {
 
   test("this forked test JVM passes the bench's own regime detector") {
     // JvmRegimeSpec asserts the build.sbt flags and the beans; this
-    // closes the loop through the EXACT predicate Bench.main gates
-    // re-exec on — if the detector and the flags ever drift apart,
-    // the graded run would re-exec even on a correctly-flagged launch
-    val (parallel, presized, sized) = Bench.regime()
-    assert(parallel, "detector says ParallelGC beans did not win")
-    assert(presized, "detector says heap is not pre-sized")
-    assert(sized, "detector says heap is under the SPARK_DRIVER_MEM target")
+    // closes the loop through the EXACT predicate Bench.main and
+    // Profile.main check — if the detector and the flags ever drift
+    // apart, the graded run would print REGIME MISMATCH on a
+    // correctly-flagged launch
+    val r = Bench.regime()
+    assert(r.parallel, "detector says ParallelGC beans did not win")
+    assert(r.presized, "detector says heap is not pre-sized")
+    assert(r.sized, "detector says heap is under the SPARK_DRIVER_MEM target")
   }
 
   test("young-gen geometry: this forked JVM is in-band, the cap mirrors it") {
@@ -60,51 +60,11 @@ class BenchRegimeSpec extends AnyFunSuite {
     // -XX:MaxNewSize=min(heap/3, 8g/3) on EVERY forked JVM, so this
     // test JVM runs the proven geometry (eden ≈ 2.2g) at ANY exported
     // SPARK_DRIVER_MEM — r13's driver run exported ~88g and the
-    // then-uncapped test JVM's ~22g eden failed these asserts. The
-    // re-exec young cap must equal that proven geometry (8g/3),
-    // never scale past it with a larger SPARK_DRIVER_MEM.
+    // then-uncapped test JVM's ~22g eden failed these asserts.
     val eden = Bench.edenMaxBytes
     assert(eden > 0, "eden pool not found on ParallelGC — detection broken")
     assert(eden <= (3L << 30), f"this JVM's eden (${eden / 1e9}%.1f GB) out of band — MaxNewSize pin missing?")
-    assert(Bench.youngOk(), "the proven 8g geometry must pass youngOk")
-    assert(Bench.youngCapBytes <= (8L << 30) / 3, "young cap exceeds the proven geometry")
-    assert(Bench.youngCapBytes > 0)
-  }
-
-  test("childClasspath carries Bench's own code source and no empties") {
-    val sep = java.io.File.pathSeparator
-    val parts = Bench.childClasspath.split(sep).toSeq
-    assert(parts.nonEmpty && parts.forall(_.nonEmpty))
-    assert(parts.distinct == parts, "duplicate classpath entries")
-    val selfDir = java.nio.file.Paths.get(
-      Bench.getClass.getProtectionDomain.getCodeSource.getLocation.toURI).toString
-    assert(parts.contains(selfDir),
-      s"child classpath misses the classes dir that loaded Bench ($selfDir)")
-    // r11 ADVICE: the wildcard is appended UNCONDITIONALLY now — the
-    // old base.contains("spark") substring gate passed on any path
-    // component containing 'spark' even with zero spark jars present
-    assert(parts.contains("/opt/spark/jars/*"),
-      "child classpath misses the unconditional spark-jars wildcard")
-  }
-
-  test("parseMinFile: round-trips the writer's format, degrades total") {
-    // the minima floor is load-bearing for regression-vs-weather
-    // attribution: a silent parse failure would reset the floor every
-    // sweep and sweeps could never reach the >=2 the contract needs.
-    // Fixed strings in the EXACT writer format (head, sweeps, queries
-    // with %.3f values), plus the malformed classes.
-    val (h, n, q) = Bench.parseMinFile(
-      """{"head":"91c0f0c87be0","sweeps":3,"queries":{"agg_hash":0.247,"q1_pricing":0.290,"hier_depth":1.811}}""")
-    assert(h == "91c0f0c87be0" && n == 3)
-    assert(q == Map("agg_hash" -> 0.247, "q1_pricing" -> 0.290, "hier_depth" -> 1.811))
-    // the "queries" KEY itself must never appear as a floor entry, and
-    // head/sweeps live before the queries object so they never leak in
-    assert(!q.contains("queries") && !q.contains("head") && !q.contains("sweeps"))
-    // malformed inputs: empty, truncated, not-JSON — empty floor, no throw
-    assert(Bench.parseMinFile("") == (("unknown", 0, Map.empty[String, Double])))
-    assert(Bench.parseMinFile("""{"head":"abc","sweeps":2,"queri""")._3.isEmpty)
-    val garbage = Bench.parseMinFile("not json at all")
-    assert(garbage._1 == "unknown" && garbage._2 == 0 && garbage._3.isEmpty)
+    assert(Bench.regime().young, "the proven 8g geometry must pass the young check")
   }
 
   test("hostDelta: steal/busy-other arithmetic and every degradation path") {
@@ -136,58 +96,6 @@ class BenchRegimeSpec extends AnyFunSuite {
     assert(Bench.hostDelta(z, None, 0.0) == ((-1.0, -1.0)))
   }
 
-  test("forwardedJvmArgs strips heap/GC/graft-control/agent flags, keeps the rest") {
-    // this forked test JVM runs under build.sbt's -Xms/-Xmx/ParallelGC
-    // javaOptions — exactly the flags the re-exec replaces, so none may
-    // leak through to the child where they'd fight the pinned ones
-    val fwd = Bench.forwardedJvmArgs
-    assert(!fwd.exists(_.startsWith("-Xms")), s"-Xms leaked: $fwd")
-    assert(!fwd.exists(_.startsWith("-Xmx")), s"-Xmx leaked: $fwd")
-    assert(!fwd.exists(a => a.startsWith("-XX:+Use") && a.endsWith("GC")),
-      s"collector flag leaked: $fwd")
-    assert(!fwd.exists(_.startsWith("-Dgraft.bench.")),
-      s"graft control property leaked: $fwd")
-    assert(!fwd.exists(a => a.startsWith("-agentlib") ||
-      a.startsWith("-agentpath") || a.startsWith("-javaagent")),
-      s"agent flag leaked: $fwd")
-    // and it FORWARDS: build.sbt passes --add-opens + -D properties to
-    // forked JVMs; at least one non-filtered argument must survive
-    // (r11 dropped every parent -D except two hardcoded ones)
-    assert(fwd.nonEmpty, "expected this forked JVM's launch args to forward")
-  }
-
-  test("chunkQueryLines: lossless, cheapest-first, tail-sized lines") {
-    // r14 (r13 VERDICT ask #2): the per-query map re-emitted in small
-    // chunks so the driver's 2000-char stdout tail recovers the
-    // expensive suffix instead of nothing. Lossless union, every line
-    // independently parseable and short, cheap qids first.
-    val entries = (1 to 189).map(i => (f"qid_$i%03d", i / 100.0))
-    val shuffled = scala.util.Random.shuffle(entries)
-    val lines = Bench.chunkQueryLines(shuffled)
-    assert(lines.size == 12, s"expected ceil(189/16)=12 chunks, got ${lines.size}")
-    // every line is well under the tail budget and self-describing
-    lines.zipWithIndex.foreach { case (l, i) =>
-      assert(l.length < 600, s"chunk $i too long (${l.length}): $l")
-      assert(l.startsWith(s"""{"metric":"queries_${i + 1}of12","unit":"sec","queries":{"""))
-      assert(l.endsWith("}}"))
-    }
-    // lossless: parse entries back out of all chunks, compare to input
-    val entryRe = """"([^"]+)":([0-9.]+)""".r
-    val recovered = lines.flatMap { l =>
-      val body = l.substring(l.indexOf(""""queries":{""") + 11, l.length - 2)
-      entryRe.findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toDouble)
-    }
-    assert(recovered.toMap == entries.toMap, "chunk union != input map")
-    // cheapest-first: the LAST chunk (nearest EOF, always recovered)
-    // carries the most expensive qids
-    assert(recovered == recovered.sortBy { case (n, s) => (s, n) },
-      "entries not in ascending-cost order across chunks")
-    assert(recovered.last._1 == "qid_189")
-    // degenerate inputs don't throw
-    assert(Bench.chunkQueryLines(Nil).isEmpty)
-    assert(Bench.chunkQueryLines(Seq("a" -> 1.0)).size == 1)
-  }
-
   /** Runs `body` under Locale.GERMANY (comma decimals), then restores
     * every default locale category. */
   private def underGermanLocale(body: => Unit): Unit = {
@@ -205,13 +113,6 @@ class BenchRegimeSpec extends AnyFunSuite {
     }
   }
 
-  test("chunkQueryLines: '.' decimals under a comma-decimal default locale") {
-    underGermanLocale {
-      assert(Bench.chunkQueryLines(Seq("a" -> 1.5, "b" -> 0.25)) ==
-        Seq("""{"metric":"queries_1of1","unit":"sec","queries":{"b":0.250,"a":1.500}}"""))
-    }
-  }
-
   test("num and numMap: '.' decimals under a comma-decimal default locale") {
     val saved = java.util.Locale.getDefault(java.util.Locale.Category.FORMAT)
     underGermanLocale {
@@ -223,5 +124,55 @@ class BenchRegimeSpec extends AnyFunSuite {
     }
     assert(java.util.Locale.getDefault(java.util.Locale.Category.FORMAT) == saved,
       "the default locale must be restored")
+  }
+
+  test("the partial queries line and a worst-case final line fit the comparator's 2,000-char tail") {
+    // VERDICT r14 item 1: the comparator reads only the exact
+    // "metric":"queries" key, and only from the last 2,000 chars of
+    // stdout. The registry's 40 longest names at 99.99 are the widest
+    // partial map; the final line gets the widest values it can print.
+    val ids = Registry.all.map(_.id)
+    val longest = ids.sortBy(q => (-q.length, q)).take(40)
+    val failed = ids.filterNot(longest.contains).head
+    def res(q: String, sec: Double, err: Option[String] = None) =
+      Bench.QRes(q, sec, err, 9999.999, 9999.9, 9999.999, 9999.9, 9999.99, 9999.99)
+    // a failed qid never enters the map, however long it ran
+    val results = ids.map {
+      case q if longest.contains(q) => res(q, 99.99)
+      case q if q == failed => res(q, 999.0, Some("IllegalStateException"))
+      case q => res(q, 1.0)
+    }
+    var partial, last = ""
+    underGermanLocale {
+      partial = Bench.partialLine(results)
+      last = Bench.totalLine(results, Seq.fill(3)((999.999, 999.999, 99999.9)),
+        Some(Seq("steal_s", "busy_other_s", "my_cpu_s", "gc_s", "wall_s").map(_ -> 999999.9)),
+        Bench.jvmJson(Bench.Regime(false, false, false, false), "Shenandoah Pauses", 1L << 40, 1L << 40),
+        "/mnt/graded/checkout/testdata/sf0.1")
+    }
+    val stdout = results.map(_.json).mkString("", "\n", "\n") + partial + "\n" + last + "\n"
+    assert(partial.length + last.length + 2 <= 2000,
+      s"partial ${partial.length} + final ${last.length} chars outgrow the tail")
+    assert(stdout.takeRight(2000).split("\n").toSeq.takeRight(2) == Seq(partial, last))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val (p, f) = (mapper.readTree(partial), mapper.readTree(last))
+    assert(p.get("metric").asText == "queries" && p.get("partial").asBoolean)
+    assert(p.get("unit").asText == "sec")
+    import scala.jdk.CollectionConverters._
+    val map = p.get("queries").properties().asScala.toSeq.map(e => e.getKey -> e.getValue)
+    assert(map.size == 40 && map.map(_._1).toSet == longest.toSet, "the partial map is not the 40 most expensive qids")
+    assert(map.forall(_._2.doubleValue == 99.99))
+    assert(f.get("metric").asText == "total" && f.get("n_queries").asInt == ids.size)
+    assert(f.get("n_err").asInt == 1)
+    // every number carries a '.' decimal: none came out as "1,5" or a bare integer
+    def numbers(path: String, n: com.fasterxml.jackson.databind.JsonNode): Seq[(String, com.fasterxml.jackson.databind.JsonNode)] =
+      if (n.isNumber) Seq(path -> n)
+      else if (n.isObject) n.properties().asScala.toSeq.flatMap(e => numbers(s"$path.${e.getKey}", e.getValue))
+      else if (n.isArray) n.values().asScala.toSeq.flatMap(numbers(s"$path[]", _))
+      else Nil
+    val counts = Set(".n_queries", ".n_err")
+    val nums = numbers("", p) ++ numbers("", f).filterNot(x => counts(x._1))
+    assert(nums.size > 60)
+    nums.foreach { case (path, n) => assert(n.isFloatingPointNumber, s"$path = $n") }
   }
 }

@@ -47,8 +47,10 @@ class DiagnosticsSpec extends SparkSpec {
 
   test("Profile's timings are taken under Bench's regime in the forked JVM") {
     // this JVM gets build.sbt's javaOptions, as tools/run_main.sh's
-    // `sbt runMain` does: ParallelGC on a pre-sized heap
-    assert(Profile.benchRegime)
+    // `sbt runMain` does: ParallelGC on a pre-sized heap of the
+    // SPARK_DRIVER_MEM size with the young generation capped, the one
+    // regime predicate Profile.main and Bench.main both check
+    assert(Bench.regime().ok)
   }
 
   private val auditQids = Seq("graph_pagerank", "join_skew_salt", "stream_live_tumble")

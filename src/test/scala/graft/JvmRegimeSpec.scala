@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Tripwire for the forked-JVM GC regime (docs/TODO_r10.md §13).
+/** Tripwire for the forked-JVM GC regime (docs/DESIGN.md "Bench
+  * calibration").
   *
   * The graded bench runs through build.sbt's javaOptions, where the
   * 8g default heap with stock flags (G1, 1/64-of-RAM initial heap)

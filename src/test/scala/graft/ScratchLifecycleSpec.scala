@@ -65,4 +65,22 @@ class ScratchLifecycleSpec extends AnyFunSuite {
     // degenerate root: no throw, zero deletions
     assert(Scratch.cleanupStale(Paths.get(root.toString, "missing")) == 0)
   }
+
+  test("a stage reused after 48 h survives cleanupStale: reuse refreshes its mtime") {
+    val root = Files.createTempDirectory("graft_scratch_spec")
+    val t0 = 1_000_000_000_000L
+    val hour = 3600L * 1000
+    // both staged at t0; one is reused 50 h later (a bench re-run on the
+    // same corpus), the other never again
+    mk(root, "graft_stream_cafe_2", t0)
+    mk(root, "graft_ratings_beef", t0)
+    Scratch.touch(root.resolve("graft_stream_cafe_2"), now = t0 + 50 * hour)
+    val n = Scratch.cleanupStale(root, maxAgeMillis = 48 * hour, now = t0 + 51 * hour,
+      isAlive = _ => true)
+    assert(n == 1, s"expected only the unused stage deleted, got $n")
+    assert(Files.exists(root.resolve("graft_stream_cafe_2")), "reused stage deleted")
+    assert(!Files.exists(root.resolve("graft_ratings_beef")), "unused stale stage survived")
+    // a missing path is a no-op, never a throw
+    Scratch.touch(root.resolve("missing"))
+  }
 }

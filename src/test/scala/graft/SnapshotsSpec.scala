@@ -28,6 +28,16 @@ class SnapshotsSpec extends SparkSpec {
     assert(builds === 1, "second call must reuse the published snapshot")
   }
 
+  test("reuse refreshes the snapshot's mtime, so Scratch.cleanupStale keeps a stage in use") {
+    val p = tmpPath("reuse")
+    Snapshots.parquet(spark, p, Seq(1L).toDF("v")).count()
+    val old = System.currentTimeMillis() - 100L * 3600 * 1000
+    Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(old))
+    assert(Snapshots.parquet(spark, p, Seq(1L).toDF("v")).count() === 1)
+    assert(Files.getLastModifiedTime(p).toMillis > System.currentTimeMillis() - 60L * 1000,
+      "a marker-validated reuse must refresh the stage's mtime")
+  }
+
   test("a partial dir without _SUCCESS is replaced, not trusted") {
     val p = tmpPath("partial")
     // simulate a JVM death mid-write: directory with a stray file,

@@ -1,27 +1,17 @@
 #!/bin/bash
-# Local bench sweep under driver-equivalent conditions.
+# Local bench sweep under the graded launch's conditions: build.sbt's
+# forked `sbt runMain graft.Bench` through tools/run_main.sh, i.e. a
+# pre-sized SPARK_DRIVER_MEM heap (default 8g), ParallelGC and the young
+# generation capped at the 8g geometry (docs/DESIGN.md "Bench
+# calibration"). Prints Bench's JSON lines and its REGIME MISMATCH /
+# WARM FAILED markers.
 # Usage: tools/bench_local.sh [qid-prefix,qid-prefix,...]
-# With a prefix list, sets SPARK_GRAFT_ONLY (dev-only filter in Bench).
-set -e
+# With a prefix list, sets SPARK_GRAFT_ONLY (dev-only filter in Bench);
+# the run's artifact then goes to target/bench_queries_filtered.jsonl
+# instead of BENCH_QUERIES_LATEST.jsonl.
+set -eo pipefail
 cd "$(dirname "$0")/.."
-ADD_OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
 ONLY="${1:-}"
-# Match the DRIVER's JVM regime (build.sbt javaOptions): 8g heap,
-# pre-sized, throughput collector — so local sweeps predict graded
-# numbers. The old -Xmx100g default hid a +24%-wall GC tax that only
-# existed at the driver's 8g (docs/TODO_r10.md §13). Override with
-# SPARK_DRIVER_MEM for heap experiments.
-MEM="${SPARK_DRIVER_MEM:-8g}"
 env ${ONLY:+SPARK_GRAFT_ONLY=$ONLY} \
   SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
-  java $ADD_OPENS -Xms"$MEM" -Xmx"$MEM" -XX:+UseParallelGC \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  graft.Bench 2>/dev/null | grep -E '^\{'
+  tools/run_main.sh graft.Bench | grep -E '^(\{|REGIME MISMATCH|WARM FAILED|\[error\])'

@@ -1,18 +1,12 @@
 #!/bin/bash
-# Round-open protocol (TODO_r9 §2, extended r10): preserve the driver's
-# post-round per-query bench maps under round-stamped names BEFORE any
-# code change. Usage: tools/round_open.sh <closing-round-number>
-# e.g. at round-11 open: tools/round_open.sh 10
+# Round-open protocol: preserve the graded post-round bench artifact
+# (BENCH_QUERIES_LATEST.jsonl, every JSON line of the graded sweep) under
+# a round-stamped name BEFORE any code change (docs/DESIGN.md "Bench
+# calibration"). Usage: tools/round_open.sh <closing-round-number>
+# e.g. at round-16 open: tools/round_open.sh 15
 set -euo pipefail
 cd "$(dirname "$0")/.."
-N="${1:?closing round number, e.g. 10}"
-cp BENCH_QUERIES_LATEST.json     "BENCH_QUERIES_r${N}.json"
-[ -f BENCH_QUERIES_CPU_LATEST.json ] && cp BENCH_QUERIES_CPU_LATEST.json "BENCH_QUERIES_r${N}_cpu.json"
-[ -f BENCH_QUERIES_CLK_LATEST.json ] && cp BENCH_QUERIES_CLK_LATEST.json "BENCH_QUERIES_r${N}_clk.json"
-[ -f BENCH_QUERIES_GC_LATEST.json ] && cp BENCH_QUERIES_GC_LATEST.json "BENCH_QUERIES_r${N}_gc.json"
-[ -f BENCH_QUERIES_AC_LATEST.json ] && cp BENCH_QUERIES_AC_LATEST.json "BENCH_QUERIES_r${N}_ac.json"
-[ -f BENCH_QUERIES_MIN_LATEST.json ] && cp BENCH_QUERIES_MIN_LATEST.json "BENCH_QUERIES_r${N}_min.json"
-[ -f BENCH_QUERIES_ST_LATEST.json ] && cp BENCH_QUERIES_ST_LATEST.json "BENCH_QUERIES_r${N}_st.json"
-[ -f BENCH_QUERIES_BO_LATEST.json ] && cp BENCH_QUERIES_BO_LATEST.json "BENCH_QUERIES_r${N}_bo.json"
-git add "BENCH_QUERIES_r${N}.json" "BENCH_QUERIES_r${N}_cpu.json" "BENCH_QUERIES_r${N}_clk.json" "BENCH_QUERIES_r${N}_gc.json" "BENCH_QUERIES_r${N}_ac.json" "BENCH_QUERIES_r${N}_min.json" "BENCH_QUERIES_r${N}_st.json" "BENCH_QUERIES_r${N}_bo.json" 2>/dev/null || true
-echo "staged round-$N bench maps; commit before touching code"
+N="${1:?closing round number, e.g. 15}"
+cp BENCH_QUERIES_LATEST.jsonl "BENCH_QUERIES_r${N}.jsonl"
+git add "BENCH_QUERIES_r${N}.jsonl"
+echo "staged the round-$N bench artifact; commit before touching code"
