@@ -309,6 +309,13 @@ object Bench {
       case t: Throwable =>
         println(s"WARM FAILED $name ${t.getClass.getSimpleName}")
     }
+  /** The prelude's toy corpus for the distinct-first dedup_embed chain:
+    * 64 vectors with planted twins (id div 2), so both its intra- and
+    * cross-group paths JIT. They have the fixture's 64 dimensions: the
+    * sign-LSH key reads at least 12 of them. */
+  private[graft] def embedWarmCorpus(spark: SparkSession) =
+    spark.range(64).selectExpr("id AS vec_id",
+      "transform(sequence(1, 64), j -> cast(((id div 2) * 13 + j) % 19 - 9 as double)) AS v")
   def main(args: Array[String]): Unit = {
     val jvmRegime = regime()
     if (!jvmRegime.ok)
@@ -389,12 +396,7 @@ object Bench {
         spark.range(64).selectExpr("id AS vec_id",
           "transform(sequence(1, 64), j -> cast((id * 31 + j) % 97 as float)) AS embedding")
       ).count())
-      // the distinct-first dedup_embed chain on 64 toy vectors with
-      // planted twins (id div 2), so both its intra- and cross-group paths JIT
-      warmed("dedupEmbedOn")(operators.LlmPipeline.dedupEmbedOn(
-        spark.range(64).selectExpr("id AS vec_id",
-          "transform(sequence(1, 8), j -> cast(((id div 2) * 13 + j) % 19 - 9 as double)) AS v")
-      ).count())
+      warmed("dedupEmbedOn")(operators.LlmPipeline.dedupEmbedOn(embedWarmCorpus(spark)).count())
       val warmThunks: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
         "rootedDepth" -> (() => operators.GraphOps.rootedDepth(
           spark.range(1, 65).selectExpr("id AS node",

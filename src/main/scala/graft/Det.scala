@@ -31,4 +31,12 @@ object Det {
     s"CAST(CAST(SUM(${oCents(x)}) AS BIGINT) AS DOUBLE)/100.0"
   def oAvg2(x: String): String =
     s"${oSum2(x)}/CAST(COUNT($x) AS DOUBLE)"
+
+  /** 32-bit portable seeded hash of a string expression, as SQL text for
+    * Spark: the first 8 hex chars of md5(seed || ':' || s) read as an
+    * unsigned int. [[oH32]] is its DuckDB twin. */
+  def h32(sexpr: String, seed: Int): String =
+    s"cast(conv(substring(md5(concat('$seed:', $sexpr)), 1, 8), 16, 10) as bigint)"
+  def oH32(sexpr: String, seed: Int): String =
+    s"CAST(('0x' || substr(md5(concat('$seed:', $sexpr)), 1, 8)) AS BIGINT)"
 }

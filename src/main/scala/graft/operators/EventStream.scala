@@ -240,9 +240,9 @@ object EventStream {
     * before probes at equal us so F is inclusive) + the carry-in of
     * earlier bands' totals (an unpartitioned prefix window over ONE
     * row per band — bounded by time-range/60 s, one row per minute of
-    * history, NOT by data volume; Round5PlanSpec-allowlisted with
-    * this argument). Total cost: two shuffles and a per-band sort —
-    * O(n log n) at ANY density. Query: per purchase, how many view
+    * history, NOT by data volume; allowlisted in PlanLockSpec's
+    * window sweep with this argument). Total cost: two shuffles and a
+    * per-band sort — O(n log n) at ANY density. Query: per purchase, how many view
     * events ACROSS ALL USERS landed within ±60 s. The ORACLE states
     * the naive range semantics directly; only the plan differs.
     */

@@ -142,10 +142,10 @@ object GraphOps {
   /** One large-star + small-star contraction round over a canonical
     * (u < v, distinct) edge relation — extracted from the loop so its
     * plan shape is lockable by test BEFORE the localCheckpoint cuts it
-    * out of the inspectable lineage (Round8PlanSpec holds it to
-    * exactly three Aggregates: the two star group-mins and the final
-    * set-restoring distinct; a re-added intermediate dedup would be a
-    * fourth). */
+    * out of the inspectable lineage (PlanLockSpec's "CC round body" row
+    * holds its one pure-distinct Aggregate at the root: the final
+    * set-restoring distinct; the two star group-mins carry min(), and a
+    * re-added intermediate dedup would be a second distinct). */
   private[graft] def ccRound(cur: DataFrame): DataFrame = {
     // Large-star: every node u connects its strictly-larger neighbors
     // to min(N(u) ∪ {u}). Work from both edge directions so each

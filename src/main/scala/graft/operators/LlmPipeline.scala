@@ -3,6 +3,7 @@ package graft.operators
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import graft.Det.{h32, oH32}
 import graft.GQuery
 import graft.blocks.Blocks
 import graft.functions.VectorExprs
@@ -53,14 +54,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * the training-data-pipeline extensions the north star mandates.
   */
 object LlmPipeline {
-
-  /** 32-bit portable hash of a string expression with a seed, as a
-    * SQL-expression string usable in both engines: first 8 hex chars of
-    * md5(seed || ':' || s) read as an unsigned int. */
-  private def h32(sexpr: String, seed: Int): String =
-    s"cast(conv(substring(md5(concat('$seed:', $sexpr)), 1, 8), 16, 10) as bigint)"
-  private def oH32(sexpr: String, seed: Int): String =
-    s"CAST(('0x' || substr(md5(concat('$seed:', $sexpr)), 1, 8)) AS BIGINT)"
 
   /** Word 3-gram shingles of a text column (distinct per doc).
     * The corpus parquet is a single small file → a single input split,
@@ -2874,7 +2867,7 @@ object LlmPipeline {
     // (per-partition top-10, driver merge), never a single-task global
     // sort; the rank window then runs over the 10 SURVIVORS only, so
     // its unpartitioned stage is O(k) by construction (allowlisted in
-    // Round5PlanSpec with exactly this bound argument)
+    // PlanLockSpec's window sweep with exactly this bound argument)
     scored.orderBy(col("score_e6").desc, col("doc_id")).limit(10)
       .withColumn("rk", row_number().over(
         org.apache.spark.sql.expressions.Window

@@ -20,10 +20,10 @@ import org.apache.spark.sql.functions._
   * is the static complement to AQE: the decision happens at plan time,
   * before a single shuffle partition is written.
   *
-  * Round4PlanSpec locks both directions (no-CBO ⇒ SortMergeJoin,
-  * CBO+stats ⇒ BroadcastHashJoin) with AQE off so the assertion tests
-  * the cost model, not the runtime fallback; the executed-plan snapshot
-  * lives in docs/PLANS.txt.
+  * PlanLockSpec's "CBO: ANALYZE'd stats flip…" row locks both
+  * directions (no-CBO ⇒ SortMergeJoin, CBO+stats ⇒ BroadcastHashJoin)
+  * with AQE off so the assertion tests the cost model, not the runtime
+  * fallback; the executed-plan snapshot lives in docs/PLANS.txt.
   */
 object CboDemo {
 

@@ -31,12 +31,6 @@ import org.apache.spark.sql.functions._
   */
 object PsQueries {
 
-  /** 32-bit portable seeded hash (same scheme as LlmPipeline). */
-  private def h32(sexpr: String, seed: Int): String =
-    s"cast(conv(substring(md5(concat('$seed:', $sexpr)), 1, 8), 16, 10) as bigint)"
-  private def oH32(sexpr: String, seed: Int): String =
-    s"CAST(('0x' || substr(md5(concat('$seed:', $sexpr)), 1, 8)) AS BIGINT)"
-
   /** Ratings matrix from the star schema (FIXTURES.md mapping):
     * user = o_custkey, item = l_partkey, rating = l_quantity.
     *

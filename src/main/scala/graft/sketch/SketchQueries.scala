@@ -1,5 +1,6 @@
 package graft.sketch
 
+import graft.Det.{h32, oH32}
 import graft.GQuery
 import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -25,11 +26,6 @@ import org.apache.spark.sql.functions._
   * the ScalaTest suite instead.)
   */
 object SketchQueries {
-
-  private def h32(sexpr: String, seed: Int): String =
-    s"cast(conv(substring(md5(concat('$seed:', $sexpr)), 1, 8), 16, 10) as bigint)"
-  private def oH32(sexpr: String, seed: Int): String =
-    s"CAST(('0x' || substr(md5(concat('$seed:', $sexpr)), 1, 8)) AS BIGINT)"
 
   /** Tug-of-War (AMS) sketch: d=8 counters per group; counter j sums
     * ±1 signs of the keyed value. Mergeable by vector add — the PS

@@ -117,6 +117,10 @@ object StreamingOps {
     }
   }
 
+  /** Shuffle width, and so state-store count, of every stateful stream
+    * run through [[runToTable]]. */
+  private[graft] val StateParts = 8
+
   /** Run a streaming DF to completion (AvailableNow) into a memory sink
     * and return the final table. An existing temp view under `name` is
     * dropped first, so DETERMINISTIC names (one per capability × source
@@ -143,10 +147,10 @@ object StreamingOps {
     // never changes results (the Det ground rule); on a real cluster
     // this is the same knob sized UP to state volume ÷ executor
     // memory — it is per-deployment state sizing either way, not a
-    // fixture hack, and SPARK_GRAFT_STREAM_PARTS overrides it.
+    // fixture hack.
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8"))
+    spark.conf.set(key, StateParts.toString)
     // Explicit per-run checkpoint dir on fast scratch (guide §6 /
     // [[graft.Scratch]]): without it Spark places the temp checkpoint
     // under java.io.tmpdir — the contended shared disk — and every

@@ -116,4 +116,12 @@ class DistinctFirstTwinSpec extends SparkSpec {
     assert(nProd >= base.count(), s"intra-group path looks vacuous: $nProd pairs")
     assert(sortedRows(prod) === sortedRows(naive))
   }
+
+  test("dedup_embed: the Bench prelude's toy corpus runs, one pair per planted twin at least") {
+    // the sign-LSH key reads at least 12 dimensions: a narrower toy corpus
+    // throws, and the failed warm leaves dedup_embed's first-run JIT
+    // inside its timed window
+    val n = operators.LlmPipeline.dedupEmbedOn(Bench.embedWarmCorpus(spark)).count()
+    assert(n >= 32, s"the 32 planted twin pairs gave $n pairs")
+  }
 }

@@ -209,7 +209,7 @@ class DocTermsSpec extends SparkSpec {
   test("dedup_simhash: a cold construct plus count runs at most 4 jobs") {
     spark.catalog.clearCache()
     val q = LlmPipeline.queries.find(_.id == "dedup_simhash").get
-    val (jobs, _) = SchedulerCount(spark)(q.fn(spark, sfDir).count())
+    val jobs = SchedulerCount(spark)(q.fn(spark, sfDir).count()).jobs
     info(s"$jobs jobs")
     assert(jobs <= 4, s"cold dedup_simhash ran $jobs jobs")
     spark.catalog.clearCache()
@@ -219,7 +219,7 @@ class DocTermsSpec extends SparkSpec {
     spark.catalog.clearCache()
     LlmPipeline.docTerms(spark, sfDir)
     val q = LlmPipeline.queries.find(_.id == "text_tfidf").get
-    val (jobs, _) = SchedulerCount(spark)(q.fn(spark, sfDir).count())
+    val jobs = SchedulerCount(spark)(q.fn(spark, sfDir).count()).jobs
     info(s"$jobs jobs")
     assert(jobs <= 3, s"text_tfidf on a built memo ran $jobs jobs")
     spark.catalog.clearCache()

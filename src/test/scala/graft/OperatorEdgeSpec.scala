@@ -351,201 +351,6 @@ class ScaleJoinSpec extends SparkSpec {
   }
 }
 
-/** Round-2 plan-shape locks: the rewritten queries must keep the plans
-  * that made them fast. */
-class Round2PlanSpec extends SparkSpec {
-  test("pa_multi broadcasts the class-prototype table") {
-    val plan = ps.PsQueries.queries.find(_.id == "pa_multi").get
-      .fn(spark, sfDir).queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastExchange"), plan)
-    assert(plan.contains("array_dot_product"), plan)
-  }
-
-  test("dedup_simhash reads the cached docTerms build, no join") {
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.sql.execution.LogicalRDD
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    spark.catalog.clearCache()
-    val df = operators.LlmPipeline.queries.find(_.id == "dedup_simhash").get.fn(spark, sfDir)
-    // the docTerms cache entry the query was built over
-    val entry = operators.LlmPipeline.docTerms(spark, sfDir).queryExecution.withCachedData
-      .collect { case r: InMemoryRelation => r }
-    assert(entry.size == 1)
-    val cached = entry.head.cacheBuilder.cachedColumnBuffers
-    // the query scans one RDD lineage, and that lineage reads the entry
-    val leaves = df.queryExecution.analyzed.collectLeaves()
-    assert(leaves.size == 1, df.queryExecution.analyzed.toString)
-    def lineage(r: RDD[_]): Seq[RDD[_]] = r +: r.dependencies.flatMap(d => lineage(d.rdd))
-    val scanned = leaves.collect { case l: LogicalRDD => l.rdd }
-    assert(scanned.flatMap(lineage).exists(_.id == cached.id), "dedup_simhash does not read the docTerms entry")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), plan)
-    spark.catalog.clearCache()
-  }
-
-  test("source_orc pushes the price predicate into the ORC scan") {
-    val plan = operators.Relational.sourceOrc(spark, sfDir)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("Format: orc") || plan.contains("Scan orc"), plan)
-    assert(plan.contains("PushedFilters: [IsNotNull(o_totalprice), " +
-      "GreaterThan(o_totalprice,200000.0)]"), plan)
-  }
-
-  test("dedup_near reads the cached block build, no postings join") {
-    import org.apache.spark.sql.execution.RDDScanExec
-    import org.apache.spark.sql.execution.columnar.InMemoryRelation
-    val df = operators.LlmPipeline.queries.find(_.id == "dedup_near").get.fn(spark, sfDir)
-    val cached = df.queryExecution.withCachedData.collect { case r: InMemoryRelation => r }
-    assert(cached.size == 1, df.queryExecution.withCachedData.toString)
-    // the cache entry scans the pair-stats RDD lineage, with no plan of
-    // its own: one leaf, no exchange
-    val built = cached.head.cacheBuilder.cachedPlan
-    assert(built.collectLeaves().map(_.getClass) == Seq(classOf[RDDScanExec]), built.toString)
-    assert(!built.toString.contains("Exchange"), built.toString)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), plan)
-    spark.catalog.clearCache()
-  }
-
-  test("sketch_cms probes join the 1024-cell sketch by broadcast") {
-    val plan = sketch.SketchQueries.queries.find(_.id == "sketch_cms").get
-      .fn(spark, sfDir).queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan)
-  }
-
-  test("agg_percentile runs as a partial+final object hash aggregate") {
-    val plan = operators.Relational.aggPercentile(spark, sfDir)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate"), plan)
-    assert(plan.contains("partial_percentile"), plan)
-  }
-
-  test("sample_split is one map-side-combined aggregation pass") {
-    val plan = operators.LlmPipeline.sampleSplit(spark, sfDir)
-      .queryExecution.executedPlan.toString
-    // exchanges: one for the 3-group agg, one for the final total order
-    assert("Exchange".r.findAllIn(plan).size <= 2, plan)
-    assert(plan.contains("partial_count") || plan.contains("HashAggregate"), plan)
-  }
-}
-
-/** Round-3 plan-shape locks. */
-class Round3PlanSpec extends SparkSpec {
-  test("sample_stratified rides WindowGroupLimit (no full per-lang sort)") {
-    val plan = operators.LlmPipeline.sampleStratified(spark, sfDir)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("WindowGroupLimit"), plan)
-  }
-
-  test("text_entropy is join-free (single-pass entropy formula)") {
-    val plan = operators.LlmPipeline.textEntropy(spark, sfDir)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), plan)
-    assert(plan.contains("partial_"), plan) // map-side combine present
-  }
-
-  test("sim_ann_ivf broadcasts the query band against the corpus") {
-    val plan = operators.LlmPipeline.queries.find(_.id == "sim_ann_ivf").get
-      .fn(spark, sfDir).queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastExchange"), plan)
-    assert(plan.contains("array_dot_product"), plan)
-  }
-}
-
-/** Round-4 plan-shape locks: statistics-informed planning (CBO) and the
-  * single-scan sketch_quantile shape. */
-class Round4PlanSpec extends SparkSpec {
-  test("CBO: ANALYZE'd stats flip the hint-free dim join to broadcast") {
-    plans.CboDemo.setup(spark, sfDir)
-    // same query, same threshold, AQE off — only the cost model differs
-    val without = plans.CboDemo.plan(spark, sfDir, cbo = false)
-    assert(without.contains("SortMergeJoin"),
-      s"expected SMJ when only file sizes are known:\n$without")
-    val withCbo = plans.CboDemo.plan(spark, sfDir, cbo = true)
-    assert(withCbo.contains("BroadcastHashJoin"),
-      s"expected stats-driven broadcast under CBO:\n$withCbo")
-    // and the two plans agree on the data
-    val a = plans.CboDemo.filteredDimJoin(spark, sfDir).collect().map(_.toString)
-    assert(a.nonEmpty)
-  }
-
-  test("sketch_quantile scans lineitem once (windowed audit, no re-join)") {
-    val df = sketch.SketchQueries.queries.find(_.id == "sketch_quantile").get
-      .fn(spark, sfDir)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("BroadcastHashJoin"),
-      plan)
-    assert("Scan parquet".r.findAllIn(plan).size == 1, plan)
-    assert(plan.contains("Window"), plan)
-  }
-
-  test("ps_pull carries no broadcast hint (AQE/CBO decide at runtime)") {
-    val analyzed = ps.PsQueries.queries.find(_.id == "ps_pull").get
-      .fn(spark, sfDir).queryExecution.analyzed.toString
-    assert(!analyzed.contains("ResolvedHint"), analyzed)
-  }
-
-  test("ts_resample: window and groupBy share one exchange on (h, type)") {
-    val plan = operators.EventStream.tsResample(spark, sfDir)
-      .queryExecution.executedPlan.toString
-    // scan -> exchange (h, type) -> window -> hash agg -> final sort:
-    // the agg reuses the window's partitioning, so exactly 2 exchanges
-    assert("Exchange".r.findAllIn(plan).size <= 2, plan)
-    assert(plan.contains("Window"), plan)
-  }
-
-  test("event_pattern is one window pass, no self-join") {
-    val plan = operators.EventStream.eventPattern(spark, sfDir)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), plan)
-    assert(plan.contains("Window"), plan)
-  }
-
-  test("event_pattern matches a NON-EMPTY set on the real fixture") {
-    // Round-7 regression lock: through rounds 1–6 the 2 h completion
-    // bound matched zero fixture rows at every SF, so the driver's
-    // oracle pass was 0 = 0 — vacuous. The synthetic-data test above
-    // proves the operator; THIS pins that the fixture predicate keeps
-    // producing evidence (5 rows at sf0.001 under the 24 h bound).
-    assert(operators.EventStream.eventPattern(spark, sfDir).count() > 0,
-      "event_pattern matches nothing on the fixture again — its oracle " +
-        "check is vacuous; widen the completion bound")
-  }
-
-  test("agg_incremental merges partials map-side before the key join") {
-    val plan = operators.Relational.aggIncremental(spark, sfDir)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("partial_count") || plan.contains("partial_sum"), plan)
-    assert(plan.contains("FullOuter"), plan)
-  }
-
-  test("sketch_heavy_hitters folds MG in an object hash aggregate") {
-    val plan = sketch.SketchQueries.sketchHeavyHitters(spark, sfDir)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("ObjectHashAggregate"), plan)
-  }
-
-  test("agg_corr_matrix: all 9 moments in ONE scan, join-free") {
-    val plan = operators.Relational.aggCorrMatrix(spark, sfDir)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), plan)
-    assert("Scan parquet".r.findAllIn(plan).size == 1, plan)
-    assert(plan.contains("partial_"), plan) // map-side combine present
-  }
-
-  test("ts_acf: all 3 lags from one window pass, join-free single scan") {
-    val plan = operators.EventStream.tsAcf(spark, sfDir)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), plan)
-    assert("Scan parquet".r.findAllIn(plan).size == 1, plan)
-    // hourly agg exchange + per-series exchange (SHARED by the window
-    // and the moment aggregate — no exchange between them) + the final
-    // presentation sort's range exchange
-    assert("Exchange".r.findAllIn(plan).size <= 3, plan)
-    assert(plan.contains("Window"), plan)
-  }
-}
-
 /** Partition pruning proof for the partitioned-layout scan. */
 class PartitionPruneSpec extends SparkSpec {
   test("filtered read of the partitioned layout prunes partitions") {

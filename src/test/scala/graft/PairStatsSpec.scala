@@ -120,7 +120,7 @@ class PairStatsSpec extends SparkSpec {
 
   test("shinglePairStats: a cold build runs at most 6 jobs") {
     spark.catalog.clearCache()
-    val (jobs, _) = SchedulerCount(spark)(operators.LlmPipeline.shinglePairStats(spark, sfDir))
+    val jobs = SchedulerCount(spark)(operators.LlmPipeline.shinglePairStats(spark, sfDir)).jobs
     info(s"$jobs jobs")
     assert(jobs <= 6, s"cold shinglePairStats build ran $jobs jobs")
     spark.catalog.clearCache()

@@ -38,7 +38,7 @@ class StreamingMlSpec extends SparkSpec {
   test("runToTable pins stream shuffle width for the run, then restores") {
     // r11 state-store hygiene: one state store per shuffle partition
     // per micro-batch means the stream's width is a state-sizing knob,
-    // pinned (default 8, SPARK_GRAFT_STREAM_PARTS) only for the
+    // pinned (StreamingOps.StateParts) only for the
     // duration of the streaming query. The session's batch width must
     // come back EXACTLY — a leaked pin would silently re-plan every
     // later batch query in the suite/bench at streaming width.
@@ -52,7 +52,7 @@ class StreamingMlSpec extends SparkSpec {
       // the streaming agg ACTUALLY ran at the pinned width, not the
       // session's 23 — read from the query's own StateOperatorProgress
       // (deleting the pin would leave this at 23 and fail here)
-      val pinned = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", "8").toLong
+      val pinned = StreamingOps.StateParts.toLong
       assert(StreamingOps.lastStateStoreParts === Some(pinned),
         s"state operator ran at ${StreamingOps.lastStateStoreParts}, expected the pinned $pinned")
       assert(spark.conf.get(key) === sentinel,

@@ -18,7 +18,10 @@ import org.apache.spark.sql.functions._
   */
 class TrainerBudgetSpec extends SparkSpec {
 
-  private def count(body: => Unit): (Int, Int) = SchedulerCount(spark)(body)
+  private def count(body: => Unit): (Int, Int) = {
+    val c = SchedulerCount(spark)(body)
+    (c.jobs, c.shuffleStages)
+  }
 
   test("MfTrainer: <= 3 jobs and <= 2 shuffle stages per extra iteration") {
     val ratings = Tables0.ratings(spark, sfDir)
@@ -49,25 +52,35 @@ class TrainerBudgetSpec extends SparkSpec {
 /** Scheduler work while a body runs, from a SparkListener. */
 object SchedulerCount {
 
-  /** (jobs started, shuffle-map stages run) while `body` runs
-    * (listener delivery is async, so poll until stable). */
-  def apply(spark: org.apache.spark.sql.SparkSession)(body: => Unit): (Int, Int) = {
+  /** Jobs started, shuffle-map stages run, and distinct SQL execution
+    * ids among the started jobs: the job-launching actions, which unlike
+    * raw job counts do not depend on how AQE splits an action's stages. */
+  final case class Counts(jobs: Int, shuffleStages: Int, executions: Int)
+
+  /** The counts while `body` runs (listener delivery is async, so poll
+    * until stable). */
+  def apply(spark: org.apache.spark.sql.SparkSession)(body: => Unit): Counts = {
     val jobs = new AtomicInteger
     val shuffleStages = ConcurrentHashMap.newKeySet[Int]()
+    val executions = ConcurrentHashMap.newKeySet[String]()
     val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet()
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+          .foreach(executions.add)
+      }
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
         if (t.taskType == "ShuffleMapTask") shuffleStages.add(t.stageId)
     }
     spark.sparkContext.addSparkListener(l)
     try {
       body
-      var last = (-1, -1)
+      var last = Counts(-1, -1, -1)
       var stable = 0
       val deadline = System.nanoTime() + 5_000_000_000L
       while (stable < 3 && System.nanoTime() < deadline) {
         Thread.sleep(100)
-        val now = (jobs.get, shuffleStages.size)
+        val now = Counts(jobs.get, shuffleStages.size, executions.size)
         if (now == last) stable += 1 else { stable = 0; last = now }
       }
       last
