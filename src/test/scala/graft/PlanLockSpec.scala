@@ -365,11 +365,7 @@ class PlanLockSpec extends SparkSpec {
     def jobs: SchedulerCount.Counts = s.jobs
     def at(other: Phase): View = new View(s, other)
     def pairs: Set[(Long, Long)] = rows.map(r => (r.getLong(0), r.getLong(1))).toSet
-    def nodes: Seq[QueryPlan[_]] = plan match {
-      case p: SparkPlan => obs.Plans.live(p)
-      case l: LogicalPlan => l.collect { case n => n }
-    }
-    def all[T: ClassTag]: Seq[T] = nodes.collect { case t: T => t }
+    def all[T: ClassTag]: Seq[T] = nodes(plan).collect { case t: T => t }
     def scans: Int = obs.Plans.liveScans(physical).size
     def hits(s: String): Int = Regex.quote(s).r.findAllIn(text).size
     def has(ss: String*): Unit = ss.foreach(x => assert(text.contains(x), text))
@@ -403,16 +399,17 @@ object PlanLockSpec {
   case object Executed extends Phase
   case object Jobs extends Phase
 
-  /** ScalaUDFs in the expressions of `p`'s nodes. Physical plans are
-    * walked through `obs.Plans.live`; a cached relation or cached scan
-    * is entered through its cached physical plan, which the optimizer
-    * shows as a leaf. */
-  def udfs(p: QueryPlan[_]): Seq[ScalaUDF] = {
-    val nodes: Seq[QueryPlan[_]] = p match {
-      case s: SparkPlan => obs.Plans.live(s)
-      case l: LogicalPlan => l.collect { case n => n }
-    }
-    nodes.flatMap { n =>
+  /** The nodes of `p`: a logical tree's own, a physical plan's live ones. */
+  def nodes(p: QueryPlan[_]): Seq[QueryPlan[_]] = p match {
+    case s: SparkPlan => obs.Plans.live(s)
+    case l: LogicalPlan => l.collect { case n => n }
+  }
+
+  /** ScalaUDFs in the expressions of `p`'s nodes. A cached relation or
+    * cached scan is entered through its cached physical plan, which the
+    * optimizer shows as a leaf. */
+  def udfs(p: QueryPlan[_]): Seq[ScalaUDF] =
+    nodes(p).flatMap { n =>
       val cached = n match {
         case r: InMemoryRelation => udfs(r.cachedPlan)
         case s: InMemoryTableScanExec => udfs(s.relation.cachedPlan)
@@ -420,7 +417,6 @@ object PlanLockSpec {
       }
       n.expressions.flatMap(_.collect { case u: ScalaUDF => u }) ++ cached
     }
-  }
 
   def md5OnShingle(e: Expression): Boolean = e.exists {
     case m: Md5 => m.references.exists(_.name == "shingle")
@@ -448,12 +444,12 @@ object PlanLockSpec {
     case _ => false
   }
 
-  /** True when `plan` is a literal Range of at most `cap` rows. */
-  def boundedRange(plan: LogicalPlan, cap: Long = 64L): Boolean = plan match {
-    case Project(_, child) => boundedRange(child, cap)
-    case Filter(_, child) => boundedRange(child, cap)
-    case SubqueryAlias(_, child) => boundedRange(child, cap)
-    case r: Range => (r.end - r.start).abs <= cap
+  /** True when `plan` is a literal Range of at most 64 rows. */
+  def boundedRange(plan: LogicalPlan): Boolean = plan match {
+    case Project(_, child) => boundedRange(child)
+    case Filter(_, child) => boundedRange(child)
+    case SubqueryAlias(_, child) => boundedRange(child)
+    case r: Range => (r.end - r.start).abs <= 64
     case _ => false
   }
 }
