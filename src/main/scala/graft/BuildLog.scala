@@ -16,7 +16,7 @@ object BuildLog {
   // a reader separates runs by header instead of trusting truncation.
   // (An earlier truncate-on-first-write draft destroyed a concurrent
   // JVM's in-flight lines — two graft JVMs on one host is a supported
-  // topology, see Warehouse — and append-only can't.) Every line also
+  // topology, see Scratch.own — and append-only can't.) Every line also
   // carries the pid, so even interleaved concurrent runs attribute
   // cleanly.
   private val pid = ProcessHandle.current().pid()

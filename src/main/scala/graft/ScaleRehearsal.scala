@@ -1,7 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -23,8 +21,14 @@ import org.apache.spark.sql.functions._
   * only: the ANN query band (vec_id < 30) stays fixed while the corpus
   * grows, the real 100-TB shape (queries don't scale with the corpus).
   *
+  * A corpus is regenerated in place, and the stages derived from it
+  * (graft.sources.Snapshots) are named by its tables' content: a
+  * regenerated corpus simply gets new stages, so synth deletes none.
+  *
   * Output: one JSON line per (qid, scale) with seconds, result rows,
   * and CC rounds where relevant; `tools/scale_rehearsal.sh` wraps it.
+  * SPARK_GRAFT_ONLY prefixes pick a subset of the qids, as in every
+  * other main; `SPARK_GRAFT_ONLY=none` synthesizes only.
   */
 object ScaleRehearsal {
   private val baseDir = "/root/testdata/sf0.1"
@@ -89,32 +93,6 @@ object ScaleRehearsal {
     // PREVIOUS corpus (dirs are "upgraded in place" in the same JVM,
     // and Tables.table memoizes the file index per (app, dir, table))
     graft.sources.Tables.invalidate(outDir)
-    // this dir is being (re)generated: derived snapshots keyed by the
-    // dir PATH (the ratings materialized view, the binaryFile staging,
-    // the csv/orc/jsonl re-encodes, the partitioned/sink/evolve
-    // staging) would otherwise keep serving the previous corpus
-    // forever — Snapshots trusts _SUCCESS and has no content key. Drop
-    // EVERY graft_*_<hash(outDir)> tmp dir by glob rather than by a
-    // prefix list that silently goes stale when a new snapshot
-    // consumer joins the rehearsal.
-    val tmpRoot = java.nio.file.Paths.get(graft.Scratch.tmpRoot)
-    val hash = Integer.toHexString(outDir.hashCode)
-    val matcher = tmpRoot.getFileSystem
-      .getPathMatcher(s"glob:graft_*_$hash")
-    val listing = java.nio.file.Files.list(tmpRoot)
-    try {
-      listing.iterator().asScala
-        .filter(p => matcher.matches(p.getFileName))
-        .foreach { p =>
-          graft.sources.Snapshots.deleteRecursively(p)
-          // and drop any read memoized over the now-deleted layout —
-          // without this a consumer in this JVM that already
-          // materialized the snapshot would keep a plan over deleted
-          // files (Snapshots' "never deleted" invariant has exactly
-          // this one rehearsal-regeneration exception)
-          graft.sources.Snapshots.invalidate(p)
-        }
-    } finally listing.close()
     val docs = spark.read.parquet(s"$baseDir/documents.parquet")
     val embs = spark.read.parquet(s"$baseDir/embeddings.parquet")
     val docReps = (0 until scale).map { r =>
@@ -317,9 +295,7 @@ object ScaleRehearsal {
       .select(md5(col("text")).as("h"), explode(split(col("text"), " ")).as("t"))
       .groupBy("h", "t").count().count()
     Class.forName("org.apache.spark.sql.catalyst.util.CollationAwareUTF8String")
-    // optional family filter for partial re-runs after a fix
-    val only = sys.env.get("SPARK_GRAFT_REHEARSE_QIDS")
-      .map(_.split(",").toSet).getOrElse(qids.toSet)
+    val only = obs.Diag.selected(qids).toSet
     for (scale <- scales) {
       val dir = if (skewMode) s"/tmp/graft_scale/zx$scale"
         else s"/tmp/graft_scale/x$scale"

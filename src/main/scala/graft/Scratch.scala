@@ -1,8 +1,12 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
 /** Scratch-storage policy for every non-artifact byte the engine writes
-  * (shuffle files, streaming state/checkpoints, staged stream sources,
-  * snapshot materializations, managed-table warehouses).
+  * (shuffle files, streaming checkpoints, staged sources, snapshot
+  * materializations, managed-table warehouses).
   *
   * Guide §6: local scratch belongs on the fastest local storage the
   * host offers. The default java.io.tmpdir here sits on the host's
@@ -21,9 +25,15 @@ package graft
   *      corpora ≲ 1 GiB, both far under the guard).
   *   3. None — Spark/JVM defaults stand.
   *
-  * Everything written under the fast root is rebuildable scratch keyed
-  * by content/existence markers, so a reboot-cleared tmpfs merely
-  * causes a re-stage, exactly like a reaped /tmp.
+  * Every entry under [[tmpRoot]] is named graft_* and is one of two
+  * kinds (docs/DESIGN.md "Scratch"):
+  *  - a *stage*, a layout derived from a corpus dir, shared by every
+  *    JVM on that corpus: named by the content of its source tables and
+  *    published atomically by [[graft.sources.Snapshots]];
+  *  - a *per-process entry* ([[own]]), graft_<kind>_<pid>[_<suffix>],
+  *    read and written by its owner JVM only.
+  * Both are rebuildable, so a reboot-cleared tmpfs merely causes a
+  * re-stage, exactly like a reaped /tmp.
   */
 object Scratch {
   /** Fast scratch root, if this host offers one (see resolution order). */
@@ -31,102 +41,113 @@ object Scratch {
     sys.env.get("SPARK_GRAFT_LOCAL_DIR").map(_.trim).filter(_.nonEmpty)
       .orElse {
         try {
-          val shm = java.nio.file.Paths.get("/dev/shm")
-          if (java.nio.file.Files.isDirectory(shm) &&
-              java.nio.file.Files.isWritable(shm) &&
-              java.nio.file.Files.getFileStore(shm)
-                .getUsableSpace >= (8L << 30)) {
+          val shm = Paths.get("/dev/shm")
+          if (Files.isDirectory(shm) && Files.isWritable(shm) &&
+              Files.getFileStore(shm).getUsableSpace >= (8L << 30)) {
             val root = shm.resolve("graft_scratch")
-            java.nio.file.Files.createDirectories(root)
+            Files.createDirectories(root)
             Some(root.toString)
           } else None
         } catch { case _: Throwable => None }
       }
 
-  /** Temp root for the engine's staged/derived data: the fast root when
-    * available, else the JVM default — a drop-in replacement for
-    * the java.io.tmpdir system property in scratch paths. */
-  lazy val tmpRoot: String =
+  /** Root of every graft_* entry: the fast root when available, else
+    * java.io.tmpdir. Read only here and by Snapshots, which derive
+    * every entry's name. */
+  private[graft] lazy val tmpRoot: String =
     fastRoot.getOrElse(System.getProperty("java.io.tmpdir"))
 
-  /** Owner pid of a per-process scratch entry, if the name carries one
-    * (graft_transport_<pid>_..., graft_chk_<pid>_...). */
-  private val PidName = "graft_(?:transport|chk)_([0-9]+)(?:_.*)?".r
+  /** The per-process entry kinds. A stage purpose is never one of them,
+    * so a stage name can never parse as pid-owned. */
+  private[graft] val ProcessKinds =
+    Seq("transport", "chk", "warehouse", "cbo", "sink", "warm")
+
+  /** The per-process entry `graft_<kind>_<pid>[_<suffix>]` of this JVM.
+    * Only this JVM reads or writes it: two JVMs on one host never share
+    * a warehouse, a transport channel or a sink (they once raced
+    * join_bucketed's clear-and-recreate of the bucketed tables). It is
+    * deleted when the JVM exits normally, and [[cleanupStale]] reaps a
+    * killed JVM's once the pid is dead — never by age: a long-lived JVM
+    * keeps its warehouse and transport however old they are. */
+  def own(kind: String, suffix: String = ""): Path = {
+    require(ProcessKinds.contains(kind), s"not a per-process scratch kind: $kind")
+    deleteOwnAtExit
+    Paths.get(tmpRoot, s"graft_${kind}_${ProcessHandle.current().pid()}" +
+      (if (suffix.isEmpty) "" else "_" + suffix))
+  }
+
+  private lazy val deleteOwnAtExit: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      val self = ProcessHandle.current().pid()
+      entries(Paths.get(tmpRoot))
+        .filter(p => pidOf(p.getFileName.toString).contains(self))
+        .foreach(deleteRecursively)
+    }))
+
+  /** Owner pid of a per-process entry or of a stage's in-flight
+    * `.tmp.<pid>` publish dir; None for a published stage. */
+  private val PidName =
+    s"graft_(?:(?:${ProcessKinds.mkString("|")})_|.*\\.tmp\\.)([0-9]+)(?:_.*)?".r
   private[graft] def pidOf(name: String): Option[Long] = name match {
     case PidName(p) => p.toLongOption
     case _ => None
   }
 
-  /** Bound graft_scratch growth (r14, VERDICT r13 ask #8). Everything
-    * under [[tmpRoot]] named graft_* is rebuildable staging, but two
-    * classes used to accumulate forever on a long-lived host:
-    * per-process dirs (graft_transport_<pid>_*, leaked checkpoint dirs
-    * from crashed runs) — one per JVM ever run — and corpus-keyed
-    * staging whose corpus was regenerated under a new key (the
-    * per-source supersede logic only covers the same source). This
-    * pass deletes (a) pid-keyed entries whose owner process is dead —
-    * immediately safe, the owner is the only JVM that ever reads its
-    * own transport/checkpoint staging — and (b) any other graft_*
-    * entry older than `maxAgeMillis` (default 48 h).
-    *
-    * The _DONE-marker race, documented: corpus-keyed staging dirs are
-    * written by the first JVM to need them and gated on a _DONE/marker
-    * file; a CONCURRENT second JVM that loses the staging race re-reads
-    * or re-stages on miss, so deletion is always recoverable — but
-    * deleting a dir another live JVM is mid-read fails that JVM's one
-    * query. The age bound is the mitigation: reads don't refresh mtime,
-    * so every reuse of corpus-keyed staging calls [[touch]], and the
-    * bound is the gap between a stage's LAST use and the next cleanup
-    * (48 h ≫ the minutes a bench/verify run lives). graft_scale (the
-    * rehearsal corpora, minutes to resynth) is excluded outright.
-    *
-    * Returns the number of entries deleted. Injectable root/clock/
-    * liveness for the unit test. */
-  def cleanupStale(root: java.nio.file.Path = java.nio.file.Paths.get(tmpRoot),
+  /** Bound graft_scratch growth; the bench runs it before its sweep.
+    * Deletes every graft_* entry under `root` that is
+    *  - pid-owned (a per-process entry or an in-flight stage tmp) by a
+    *    dead process other than this one, whatever its age: nobody else
+    *    ever reads it; or
+    *  - a published stage unused for `maxAgeMillis` (default 48 h):
+    *    each reuse calls [[touch]], so the bound is the gap since the
+    *    stage's last use, and a stage still in use is never aged out
+    *    inside a run. A regenerated corpus's old stages are already
+    *    superseded at publish time; this catches corpora that are gone.
+    * graft_scale (the rehearsal corpora, minutes to resynth) is never
+    * touched. Returns the number of entries deleted. Injectable root,
+    * clock and liveness for the unit test. */
+  def cleanupStale(root: Path = Paths.get(tmpRoot),
       maxAgeMillis: Long = 48L * 3600 * 1000,
       now: Long = System.currentTimeMillis(),
       isAlive: Long => Boolean =
         pid => ProcessHandle.of(pid).map[Boolean](_.isAlive).orElse(false)): Int = {
-    import scala.jdk.CollectionConverters._
     val self = ProcessHandle.current().pid()
-    var deleted = 0
-    try {
-      val listing = java.nio.file.Files.list(root)
-      val entries =
-        try listing.iterator().asScala.toSeq finally listing.close()
-      entries.foreach { p =>
-        val name = p.getFileName.toString
-        val owned = name.startsWith("graft_") && name != "graft_scale"
-        if (owned) {
-          val stale = pidOf(name) match {
-            case Some(pid) => pid != self && !isAlive(pid)
-            case None =>
-              try java.nio.file.Files.getLastModifiedTime(p).toMillis <
-                now - maxAgeMillis
-              catch { case _: Throwable => false }
-          }
-          if (stale) {
-            try {
-              val files = java.nio.file.Files.walk(p)
-              try files.iterator().asScala.toSeq.reverseIterator
-                .foreach(f => java.nio.file.Files.deleteIfExists(f))
-              finally files.close()
-              deleted += 1
-            } catch { case _: Throwable => () } // another JVM won the race
-          }
-        }
-      }
-    } catch { case _: Throwable => () } // unreadable root: nothing to bound
-    deleted
+    entries(root).count { p =>
+      val name = p.getFileName.toString
+      val stale = name.startsWith("graft_") && name != "graft_scale" &&
+        (pidOf(name) match {
+          case Some(pid) => pid != self && !isAlive(pid)
+          case None =>
+            try Files.getLastModifiedTime(p).toMillis < now - maxAgeMillis
+            catch { case _: Throwable => false }
+        })
+      stale && deleteRecursively(p)
+    }
   }
 
-  /** Mark a reused staging entry as used at `now`: [[cleanupStale]]
-    * ages corpus-keyed staging by its mtime, which reads never refresh,
-    * so a stage still in use would otherwise go 48 h after it was first
-    * written and be re-staged inside a timed run. Best effort: a failed
-    * touch only risks that re-stage. */
-  def touch(p: java.nio.file.Path, now: Long = System.currentTimeMillis()): Unit =
-    try java.nio.file.Files.setLastModifiedTime(p,
-      java.nio.file.attribute.FileTime.fromMillis(now))
+  /** The entries directly under `dir`; none if it cannot be listed. */
+  private[graft] def entries(dir: Path): Seq[Path] =
+    try {
+      val listing = Files.list(dir)
+      try listing.iterator().asScala.toSeq finally listing.close()
+    } catch { case _: java.io.IOException => Nil }
+
+  /** Delete `p` and everything under it; false if it was absent or a
+    * file could not be deleted (another JVM racing the same delete). */
+  def deleteRecursively(p: Path): Boolean =
+    Files.exists(p) && {
+      try {
+        val files = Files.walk(p)
+        try files.iterator().asScala.toSeq.reverseIterator.foreach(Files.deleteIfExists(_))
+        finally files.close()
+        true
+      } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => false }
+    }
+
+  /** Mark a reused stage as used at `now`: [[cleanupStale]] ages stages
+    * by their mtime, which reads never refresh. Best effort: a failed
+    * touch only risks a re-stage after 48 h. */
+  def touch(p: Path, now: Long = System.currentTimeMillis()): Unit =
+    try Files.setLastModifiedTime(p, java.nio.file.attribute.FileTime.fromMillis(now))
     catch { case _: Throwable => () }
 }

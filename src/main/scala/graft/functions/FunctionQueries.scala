@@ -593,10 +593,7 @@ object FunctionQueries {
     * difference between scanning one year and scanning the decade. The
     * oracle checks the logical result of the pruned read. */
   def scanPartitioned(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Paths.get(
-      graft.Scratch.tmpRoot,
-      "graft_part_orders_" + Integer.toHexString(dir.hashCode))
-    graft.sources.Snapshots.parquet(spark, out,
+    graft.sources.Snapshots.parquet(spark, "partitioned", dir, Seq("orders"),
       Tables.orders(spark, dir).withColumn("o_year", year(col("o_orderdate"))),
       (df, p) => df.write.mode("overwrite").partitionBy("o_year").parquet(p))
       .filter(col("o_year") === 1997)

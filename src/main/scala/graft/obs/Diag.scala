@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.{Registry, Scratch, Warehouse}
+import graft.{Registry, Scratch}
 
 /** The harness under the diagnostic mains (`graft.Audit`,
   * `graft.Profile`, `ExplainAudit`, `ScaleRehearsal`, `Verify`) and
@@ -16,7 +16,7 @@ import graft.{Registry, Scratch, Warehouse}
 object Diag {
   /** `local[cpus]` with one shuffle partition per core, UTC, parquet
     * TIMESTAMP(NANOS) read as long (`Tables.events` converts it), no UI,
-    * a per-process warehouse and shuffle/spill scratch on
+    * a per-process warehouse (`Scratch.own`) and shuffle/spill scratch on
     * [[Scratch.fastRoot]] when the host has one (the shared-disk default
     * charged 11–14 s of shuffle-write I/O wait to kilobyte exchanges
     * under co-tenant disk load). `cpus` defaults to SPARK_GRAFT_CPUS or
@@ -30,7 +30,7 @@ object Diag {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Warehouse.dir)
+      .config("spark.sql.warehouse.dir", Scratch.own("warehouse").toString)
     Scratch.fastRoot.foreach(builder.config("spark.local.dir", _))
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -258,10 +258,7 @@ object Relational {
     * survives the text round trip because the aggregation integerizes
     * to cents before summing (Det contract). */
   def sourceCsv(spark: SparkSession, dir: String): DataFrame = {
-    val staged = java.nio.file.Paths.get(
-      graft.Scratch.tmpRoot,
-      "graft_csv_supplier_" + Integer.toHexString(dir.hashCode))
-    val csv = graft.sources.Snapshots.materialize(spark, staged,
+    val csv = graft.sources.Snapshots.materialize(spark, "csv", dir, Seq("supplier"),
       Tables.supplier(spark, dir)
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal"),
       // parallel staging write — no coalesce(1): SerialStageAudit (r9)
@@ -275,8 +272,7 @@ object Relational {
         .option("header", "true").option("sep", "|").csv(p),
       (s, p) => s.read
         .schema("s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE")
-        .option("header", "true").option("sep", "|").csv(p),
-      tag = "csv")
+        .option("header", "true").option("sep", "|").csv(p))
     csv.groupBy(col("s_nationkey"))
       .agg(count(lit(1)).as("n_suppliers"),
         sum(cents(col("s_acctbal"))).as("bal_cents"))
@@ -300,14 +296,11 @@ object Relational {
     * re-read with a pushed filter, and aggregated. At 100 TB this is the
     * "engine reads the lake format you already have" capability. */
   def sourceOrc(spark: SparkSession, dir: String): DataFrame = {
-    val staged = java.nio.file.Paths.get(
-      graft.Scratch.tmpRoot,
-      "graft_orc_orders_" + Integer.toHexString(dir.hashCode))
-    val orc = graft.sources.Snapshots.materialize(spark, staged,
+    val orc = graft.sources.Snapshots.materialize(spark, "orc", dir, Seq("orders"),
       Tables.orders(spark, dir)
         .select("o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"),
       (df, p) => df.write.mode("overwrite").orc(p),
-      (s, p) => s.read.orc(p), tag = "orc")
+      (s, p) => s.read.orc(p))
     orc.filter(col("o_totalprice") > 200000)
       .groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
@@ -331,43 +324,20 @@ object Relational {
     * columnar and pruned.
     */
   def scanSchemaEvolve(spark: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val base = Tables.nation(spark, dir)
       .select("n_nationkey", "n_name", "n_regionkey")
     val oldGen = base.filter(col("n_nationkey") % 2 === 0)
     val newGen = base.filter(col("n_nationkey") % 2 =!= 0)
       .withColumn("n_zone", (col("n_regionkey") * 10L).cast("long"))
-    val root = Paths.get(graft.Scratch.tmpRoot,
-      "graft_evolve_nation_" + Integer.toHexString(dir.hashCode))
-    val merged =
-      try {
-        val marker = root.resolve("_SUCCESS")
-        if (!Files.exists(marker)) {
-          // same temp-dir + atomic-rename + marker protocol as Snapshots
-          val tmp = root.resolveSibling(
-            root.getFileName.toString + ".tmp." + ProcessHandle.current().pid())
-          oldGen.write.mode("overwrite").parquet(s"$tmp/gen=1")
-          newGen.write.mode("overwrite").parquet(s"$tmp/gen=2")
-          Files.createFile(tmp.resolve("_SUCCESS"))
-          // marker re-check + lost-race tmp cleanup, as in
-          // Snapshots.materialize: never delete a published layout, and
-          // never leave the pid-tagged tmp behind on the losing side.
-          if (Files.exists(marker)) graft.sources.Snapshots.deleteRecursively(tmp)
-          else {
-            try Files.move(tmp, root, StandardCopyOption.ATOMIC_MOVE)
-            catch { case _: java.io.IOException =>
-              graft.sources.Snapshots.deleteRecursively(tmp) // lost publish race
-            }
-          }
-        }
-        if (Files.exists(marker)) {
-          graft.Scratch.touch(root) // in use: Scratch.cleanupStale ages by mtime
-          spark.read.option("mergeSchema", "true").parquet(root.toString)
-        } else oldGen.unionByName(newGen, allowMissingColumns = true)
-      } catch { case _: Throwable =>
-        oldGen.unionByName(newGen, allowMissingColumns = true)
-      }
-    merged
+    // both generations land in one stage; `live` is the same rows
+    // without the on-disk schema merge
+    graft.sources.Snapshots.materialize(spark, "evolve", dir, Seq("nation"),
+        oldGen.unionByName(newGen, allowMissingColumns = true),
+        (_, p) => {
+          oldGen.write.mode("overwrite").parquet(s"$p/gen=1")
+          newGen.write.mode("overwrite").parquet(s"$p/gen=2")
+        },
+        (s, p) => s.read.option("mergeSchema", "true").parquet(p))
       .select(col("n_nationkey"), col("n_name"),
         coalesce(col("n_zone"), lit(-1L)).as("zone_or_default"))
       .orderBy(col("n_nationkey"))
@@ -438,10 +408,7 @@ object Relational {
     * (single-line UTF-8 text + the writer's trailing newline).
     */
   def sourceBinaryFile(spark: SparkSession, dir: String): DataFrame = {
-    val staged = java.nio.file.Paths.get(
-      graft.Scratch.tmpRoot,
-      "graft_binfile_docs_" + Integer.toHexString(dir.hashCode))
-    val files = graft.sources.Snapshots.materialize(spark, staged,
+    val files = graft.sources.Snapshots.materialize(spark, "binfile", dir, Seq("documents"),
       Tables.documents(spark, dir)
         .filter(col("doc_id") < 100)
         .select(col("doc_id"), col("text").as("value")),
@@ -450,8 +417,7 @@ object Relational {
       (s, p) => s.read.format("binaryFile")
         .option("pathGlobFilter", "part-*")
         .option("recursiveFileLookup", "true")
-        .load(p),
-      tag = "binaryfile")
+        .load(p))
     files.select(
         regexp_extract(col("path"), "doc_id=(\\d+)", 1).cast("long")
           .as("doc_id"),
@@ -467,17 +433,13 @@ object Relational {
       |FROM documents WHERE doc_id < 100 ORDER BY doc_id""".stripMargin
 
   def sourceJsonl(spark: SparkSession, dir: String): DataFrame = {
-    val staged = java.nio.file.Paths.get(
-      graft.Scratch.tmpRoot,
-      "graft_jsonl_customer_" + Integer.toHexString(dir.hashCode))
-    val jsonl = graft.sources.Snapshots.materialize(spark, staged,
+    val jsonl = graft.sources.Snapshots.materialize(spark, "jsonl", dir, Seq("customer"),
       Tables.customer(spark, dir)
         .select("c_custkey", "c_mktsegment", "c_acctbal"),
       (df, p) => df.write.mode("overwrite").json(p),
       (s, p) => s.read
         .schema("c_custkey BIGINT, c_mktsegment STRING, c_acctbal DOUBLE")
-        .json(p),
-      tag = "jsonl")
+        .json(p))
     jsonl.groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n_cust"),
         sum(cents(col("c_acctbal"))).as("bal_cents"))
@@ -1465,17 +1427,12 @@ object Relational {
     val lt = s"graft_bkt_lineitem_$tag"
     val ot = s"graft_bkt_orders_$tag"
     if (!spark.catalog.tableExists(lt)) {
-      // the in-memory catalog forgets tables across JVMs but their
-      // warehouse directories survive — clear them before re-creating
+      // a new session forgets the catalog's tables but their warehouse
+      // directories survive — clear them before re-creating
       val wh = spark.conf.get("spark.sql.warehouse.dir")
         .stripPrefix("file:")
       Seq(lt, ot).foreach { t =>
-        val p = java.nio.file.Paths.get(wh, t)
-        if (java.nio.file.Files.exists(p)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.deleteIfExists(_))
-        }
+        graft.Scratch.deleteRecursively(java.nio.file.Paths.get(wh, t))
       }
       Tables.lineitem(spark, dir)
         .select("l_orderkey", "l_quantity")

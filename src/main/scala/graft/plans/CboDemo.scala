@@ -31,13 +31,12 @@ object CboDemo {
 
   /** One-time: publish the orders snapshot as a catalog table and
     * ANALYZE it (table stats + column stats for the join/filter keys).
-    * The table is external with an explicit tmp-dir location so test
-    * and tool sessions never write into the launch CWD, and any stale
-    * location from a previous JVM is replaced, not tripped over. */
+    * The table is external at a per-process scratch entry, so test and
+    * tool sessions never write into the launch CWD and two JVMs never
+    * write one location. */
   def setup(spark: SparkSession, dir: String): Unit = {
     if (!spark.catalog.tableExists(dimTable)) {
-      val loc = java.nio.file.Paths.get(
-        graft.Scratch.tmpRoot, dimTable).toString
+      val loc = graft.Scratch.own("cbo").toString
       spark.sql(s"DROP TABLE IF EXISTS $dimTable")
       graft.sources.Tables.orders(spark, dir)
         .write.mode("overwrite").option("path", loc).saveAsTable(dimTable)

@@ -35,7 +35,7 @@ object PsQueries {
     * user = o_custkey, item = l_partkey, rating = l_quantity.
     *
     * A dozen PS/algorithm queries start from this join, so it is
-    * materialized once per (scale factor, JVM) as a parquet snapshot —
+    * staged once per corpus content as a parquet snapshot —
     * the engine-side analog of a materialized view: later queries scan
     * the narrow 3-column snapshot instead of re-joining the base
     * tables. At 100 TB this snapshot would also be bucketed by item so
@@ -50,10 +50,7 @@ object PsQueries {
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("user"), col("l_partkey").as("item"),
           col("l_quantity").as("rating"))
-    val snap = java.nio.file.Paths.get(
-      graft.Scratch.tmpRoot,
-      "graft_ratings_" + Integer.toHexString(dir.hashCode))
-    graft.sources.Snapshots.parquet(spark, snap, live)
+    graft.sources.Snapshots.parquet(spark, "ratings", dir, Seq("orders", "lineitem"), live)
   }
 
   private val oRatings =
@@ -273,8 +270,9 @@ object PsQueries {
     * driver's DuckDB hash verifies the ENTIRE cycle bit-for-bit —
     * the oracle computes the same algebra with no file hops, proving
     * the transport is semantically invisible (exactly what a transport
-    * must be). Staging is pid-suffixed (the Warehouse convention), so
-    * concurrent JVMs cannot race a shared channel directory.
+    * must be). The channel is a per-process scratch entry
+    * (Scratch.own), so concurrent JVMs cannot race a shared channel
+    * directory.
     *
     * At scale: `send` is a parallel partitioned write (no
     * single-partition funnel — SerialStageAudit's class), `receive` is
@@ -282,10 +280,7 @@ object PsQueries {
     * aggregations the in-dataflow qids use. */
   def psTransport(spark: SparkSession, dir: String): DataFrame = {
     val t: ModelTransport = ParquetShardTransport
-    val stage = java.nio.file.Paths.get(
-      graft.Scratch.tmpRoot,
-      s"graft_transport_${ProcessHandle.current().pid()}_" +
-        Integer.toHexString(dir.hashCode)).toString
+    val stage = graft.Scratch.own("transport", Integer.toHexString(dir.hashCode)).toString
     val r = ratings(spark, dir)
     val push = r.groupBy(col("item"))
       .agg(sum(cents(col("rating"))).as("delta_cents"),
@@ -943,12 +938,11 @@ object PsQueries {
   // --------------------------------------------------------------- sink_parquet
   /** Parquet sink + re-scan round trip (also the `ps_transport`
     * "external transport" path: one job persists the model, the next
-    * consumes it). Written to a session-scoped temp dir; the oracle
+    * consumes it). Written to a per-process scratch entry, so two JVMs
+    * on one corpus never overwrite each other's output; the oracle
     * checks the logical content that survived the round trip. */
   def sinkParquet(spark: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Paths.get(
-      graft.Scratch.tmpRoot,
-      "graft_sink_" + Integer.toHexString(dir.hashCode)).toString
+    val out = graft.Scratch.own("sink", Integer.toHexString(dir.hashCode)).toString
     ratings(spark, dir)
       .groupBy("item").agg(sum(cents(col("rating"))).as("sum_cents"))
       // model-sized output: write a handful of right-sized files, not one

@@ -1,107 +1,131 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.BasicFileAttributes
 
-/** Crash-safe local parquet snapshots (materialized-view style reuse of
-  * a derived layout across queries in one JVM or across JVMs).
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.Scratch
+
+/** Stages: layouts derived from a corpus dir (a re-encode, a
+  * materialized view, a stream's landing dir), shared by every JVM on
+  * that corpus and reused across queries (docs/DESIGN.md "Scratch").
   *
-  * A snapshot is only ever trusted when Spark's `_SUCCESS` marker is
-  * present; the data is written to a pid-tagged temp directory first
-  * and atomically renamed into place. A JVM dying mid-write therefore
-  * can never leave a partial directory that a later run would silently
-  * read as complete (the round-1 advisory: `Files.exists` on the bare
-  * directory validated half-written snapshots). Unwritable locations
-  * and publish races fall back to the live plan.
+  * A stage of `tables` under `dir` is named
+  * `graft_<purpose>_<hex(dir)>_<hex(content)>`, content being the
+  * tables' data file names, sizes and mtimes (file attributes, never a
+  * parquet footer). A rewritten or regenerated table therefore gets a
+  * new stage, never a replay of the old one. A purpose names one
+  * derivation; changing what a stage holds renames its purpose.
+  *
+  * One publish protocol: the layout is written into a pid-tagged
+  * `.tmp.<pid>` dir, marked `_SUCCESS`, and atomically moved into place.
+  * Only a marked stage is ever read, so a JVM dying mid-write leaves
+  * nothing a later run would trust. The marker is re-checked after the
+  * (slow) write: a JVM that lost the race discards its own tmp and uses
+  * the winner's stage, which is never deleted under a reader. The
+  * publisher supersedes the older stages of the same (purpose, dir) —
+  * the previous content of that corpus — and their memoized reads, but
+  * never another JVM's in-flight tmp. (A JVM still reading the previous
+  * content's stage loses it; its corpus has changed under it anyway.)
+  * Every reuse touches the stage (Scratch.cleanupStale ages stages by
+  * mtime).
   */
 object Snapshots {
 
-  def parquet(spark: SparkSession, path: Path, live: => DataFrame,
-      write: (DataFrame, String) => Unit =
-        (df, p) => df.write.mode("overwrite").parquet(p)): DataFrame =
-    materialize(spark, path, live, write,
-      (s, p) => s.read.parquet(p), tag = "parquet")
-
-  /** Format-agnostic core: publish `write`'s output atomically at
-    * `path`, read it back with `read` when the `_SUCCESS` marker proves
-    * the layout is complete, fall back to `live` otherwise. `tag` names
-    * the reader/format ("csv", "orc", …) and is part of the read-memo
-    * key: two call sites accidentally sharing a path with different
-    * readers now get a cache MISS (each reads with its own closure)
-    * instead of silently sharing the first caller's DataFrame. */
-  def materialize(spark: SparkSession, path: Path, live: => DataFrame,
-      write: (DataFrame, String) => Unit,
-      read: (SparkSession, String) => DataFrame,
-      tag: String): DataFrame = {
-    try {
-      val marker = path.resolve("_SUCCESS")
-      if (!Files.exists(marker)) {
-        val tmp = path.resolveSibling(
-          path.getFileName.toString + ".tmp." + ProcessHandle.current().pid())
-        write(live, tmp.toString)
-        // Re-check the marker AFTER the (slow) write, immediately before
-        // touching `path`: a concurrent JVM may have published while we
-        // wrote. A marker-validated layout is never deleted — a reader
-        // that validated `_SUCCESS` moments ago may already be executing
-        // a job against those files — so a late loser discards its own
-        // tmp instead of clearing the winner's snapshot.
-        if (Files.exists(marker)) {
-          deleteRecursively(tmp)
-        } else {
-          deleteRecursively(path) // a stale PARTIAL dir (no marker)
-          try Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: java.io.IOException =>
-            // lost the publish race to another JVM — use theirs
-            deleteRecursively(tmp)
-          }
-        }
-      }
-      // marker-validated reads are memoized per (application, tag,
-      // path): a published snapshot is immutable for the life of the
-      // app — a validated layout is never deleted, per the race note
-      // above, with ONE exception: ScaleRehearsal.synth regenerates a
-      // rehearsal corpus in place and deletes that corpus's derived
-      // snapshot dirs, calling [[invalidate]] on each so this memo
-      // cannot keep a plan over deleted files. That exception is safe
-      // within one JVM by call ordering (synth runs before any read of
-      // the regenerated dir); a CONCURRENT JVM that memoized the path
-      // keeps its plan — rehearsal regeneration is a single-JVM
-      // protocol, not a cross-JVM one (synth's _DONE guard makes
-      // steady-state concurrent runs skip regeneration entirely).
-      // Re-deriving the scan costs ~60 ms of driver file listing +
-      // footer read per call — the ratings view alone is consumed by
-      // ~20 qids. The fallback (`live`, marker absent) is NEVER
-      // memoized, so a snapshot published later is still picked up.
-      // The `tag` in the key downgrades the old path-uniqueness HARD
-      // CONTRACT to a convention: distinct readers on one path now
-      // miss instead of sharing wrong data (each still re-reads the
-      // same on-disk layout, so distinct SCHEMAS on one path remain a
-      // call-site bug — derive a purpose-specific path, the
-      // `graft_<purpose>_<hash(dir)>` convention).
-      if (Files.exists(marker)) {
-        graft.Scratch.touch(path) // in use: Scratch.cleanupStale ages by mtime
-        val app = spark.sparkContext.applicationId
-        readMemo.filterInPlace { case ((a, _, _), _) => a == app }
-        readMemo.getOrElseUpdate((app, tag, path.toString),
-          read(spark, path.toString))
-      } else live
-    } catch { case _: Throwable => live }
+  /** The data files of table `name` under `dir`: the `<name>.parquet`
+    * file itself, or a multi-part directory's files by name (`_`/`.`
+    * entries are metadata, not data). */
+  def dataFiles(dir: String, name: String): Seq[Path] = {
+    val src = Paths.get(dir, s"$name.parquet")
+    if (Files.isDirectory(src))
+      Scratch.entries(src).filter { p =>
+        val n = p.getFileName.toString
+        Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith(".")
+      }.sortBy(_.getFileName.toString)
+    else Seq(src)
   }
 
-  private val readMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
+  /** Where the stage of `tables` under `dir` for `purpose` lives. */
+  private[graft] def stagePath(purpose: String, dir: String, tables: Seq[String]): Path = {
+    require(purpose.matches("[a-z]+") && !Scratch.ProcessKinds.contains(purpose),
+      s"bad stage purpose: $purpose")
+    val content = tables.flatMap(t => dataFiles(dir, t).map { p =>
+      val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+      (t, p.getFileName.toString, a.size(), a.lastModifiedTime().toMillis)
+    })
+    Paths.get(Scratch.tmpRoot, s"graft_${purpose}_${hex(dir)}_${hex(content)}")
+  }
 
-  /** Drop every memoized read of `path` (any app, any tag) — called by
-    * ScaleRehearsal.synth immediately after deleting a regenerated
-    * corpus's snapshot dir, so no caller in THIS JVM can be served a
-    * plan over deleted files. */
-  private[graft] def invalidate(path: Path): Unit =
-    readMemo.filterInPlace { case ((_, _, p), _) => p != path.toString }
+  private def hex(key: Any): String = Integer.toHexString(key.hashCode)
 
-  private[graft] def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(Files.deleteIfExists(_))
+  /** The published stage of `tables` under `dir` for `purpose`, written
+    * by `write` into the tmp dir it is given when absent. Throws when no
+    * stage can be published (an unwritable root, a failed write). */
+  def stage(purpose: String, dir: String, tables: Seq[String])(write: Path => Unit): Path = {
+    val path = stagePath(purpose, dir, tables)
+    val marker = path.resolve("_SUCCESS")
+    if (!Files.exists(marker)) {
+      val tmp = path.resolveSibling(
+        s"${path.getFileName}.tmp.${ProcessHandle.current().pid()}")
+      try {
+        Files.createDirectories(tmp)
+        write(tmp)
+        if (!Files.exists(tmp.resolve("_SUCCESS"))) Files.createFile(tmp.resolve("_SUCCESS"))
+        if (!Files.exists(marker)) {
+          Scratch.deleteRecursively(path) // an unmarked dir is nobody's stage
+          try {
+            Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
+            supersede(path)
+          } catch { case _: java.io.IOException => () } // lost the race: use theirs
+        }
+      } finally Scratch.deleteRecursively(tmp)
     }
+    if (!Files.exists(marker)) throw new java.io.IOException(s"stage $path not published")
+    Scratch.touch(path)
+    path
+  }
+
+  /** Delete the other published stages of `path`'s (purpose, dir) and
+    * forget their reads. */
+  private def supersede(path: Path): Unit = {
+    val name = path.getFileName.toString
+    val prefix = name.substring(0, name.lastIndexOf('_') + 1)
+    Scratch.entries(path.getParent).foreach { p =>
+      val n = p.getFileName.toString
+      if (n.startsWith(prefix) && n != name && !n.contains(".tmp.")) {
+        Scratch.deleteRecursively(p)
+        readMemo.filterInPlace { case ((_, q), _) => q != p.toString }
+      }
+    }
+  }
+
+  /** A parquet stage of `live`, read back; `live` itself when no stage
+    * can be published. */
+  def parquet(spark: SparkSession, purpose: String, dir: String, tables: Seq[String],
+      live: => DataFrame,
+      write: (DataFrame, String) => Unit =
+        (df, p) => df.write.mode("overwrite").parquet(p)): DataFrame =
+    materialize(spark, purpose, dir, tables, live, write, (s, p) => s.read.parquet(p))
+
+  /** The stage `write` makes of `live`, read with `read`; `live` itself
+    * when no stage can be published. Reads are memoized per
+    * (application, stage): a published stage never changes, and
+    * re-deriving the scan costs ~60 ms of driver file listing + footer
+    * read per call (the ratings view alone is read by ~20 qids). */
+  def materialize(spark: SparkSession, purpose: String, dir: String, tables: Seq[String],
+      live: => DataFrame,
+      write: (DataFrame, String) => Unit,
+      read: (SparkSession, String) => DataFrame): DataFrame =
+    try {
+      val path = stage(purpose, dir, tables)(tmp => write(live, tmp.toString)).toString
+      val app = spark.sparkContext.applicationId
+      readMemo.filterInPlace { case ((a, _), _) => a == app }
+      readMemo.getOrElseUpdate((app, path), read(spark, path))
+    } catch { case NonFatal(_) => live }
+
+  private val readMemo =
+    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
 }

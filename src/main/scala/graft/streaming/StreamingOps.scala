@@ -1,7 +1,5 @@
 package graft.streaming
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
@@ -29,83 +27,22 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
   */
 object StreamingOps {
 
-  /** Read the events table as a file stream (schema pinned from a batch
-    * read; ns timestamps normalized the same way as Tables.events).
-    * The file-stream source watches a directory, so the fixture's single
-    * parquet file is staged into a temp dir once per (dir) — in
-    * production this is simply the landing directory new files arrive in.
+  /** Read the events table as a file stream (schema pinned from the
+    * batch scan; ns timestamps normalized the same way as Tables.events).
+    * The file-stream source watches a directory, so the table's data
+    * files — the fixtures' single parquet file or a multi-part directory
+    * (the rehearsal corpora, any Spark-written table) — are staged into
+    * one (graft.sources.Snapshots); in production this is simply the
+    * landing directory new files arrive in.
     */
   def eventStream(spark: SparkSession, dir: String): DataFrame = {
-    val src = java.nio.file.Paths.get(dir, "events.parquet")
-    // the source may be a single parquet FILE (the fixtures) or a
-    // multi-part parquet DIRECTORY (the rehearsal corpora, any real
-    // Spark-written table): enumerate the data files either way.
-    // Files.copy on a directory copies NO entries (javadoc) — the
-    // single-file-only staging silently produced an EMPTY stream for
-    // directory sources (caught by the r10 continuation code review).
-    val srcFiles: Seq[java.nio.file.Path] =
-      if (java.nio.file.Files.isDirectory(src)) {
-        val listing = java.nio.file.Files.list(src)
-        try listing.iterator().asScala
-          .filter { p =>
-            val n = p.getFileName.toString
-            java.nio.file.Files.isRegularFile(p) &&
-              !n.startsWith("_") && !n.startsWith(".")
-          }.toSeq.sortBy(_.getFileName.toString)
-        finally listing.close()
-      } else Seq(src)
-    require(srcFiles.nonEmpty, s"no parquet data files under $src")
-    // key the staging dir by the source's (names, sizes, mtimes) so a
-    // regenerated fixture restages instead of replaying a stale copy
-    // under a pinned schema
-    val stageKey = (dir +: srcFiles.map { p =>
-      val a = java.nio.file.Files.readAttributes(
-        p, classOf[java.nio.file.attribute.BasicFileAttributes])
-      (p.getFileName.toString, a.size(), a.lastModifiedTime().toMillis)
-    }).hashCode()
-    val tmpRoot = java.nio.file.Paths.get(graft.Scratch.tmpRoot)
-    // a regenerated fixture gets a NEW key: drop superseded stage dirs
-    // for this source so regenerations don't leak temp disk forever
-    val prefix = "graft_stream_" + Integer.toHexString(dir.hashCode) + "_"
-    val stageName = prefix + Integer.toHexString(stageKey)
-    try {
-      val listing = java.nio.file.Files.list(tmpRoot)
-      try listing.iterator().asScala
-        .filter(p => p.getFileName.toString.startsWith(prefix) &&
-          p.getFileName.toString != stageName)
-        .foreach { stale =>
-          val files = java.nio.file.Files.walk(stale)
-          try files.iterator().asScala.toSeq.reverseIterator
-            .foreach(f => java.nio.file.Files.deleteIfExists(f))
-          finally files.close()
-        }
-      finally listing.close()
-    } catch { case _: java.io.IOException => () }
-    val staged = tmpRoot.resolve(stageName)
-    java.nio.file.Files.createDirectories(staged)
-    srcFiles.foreach { f =>
-      // a directory source's part files keep their names; a file source
-      // stages as events.parquet (the historical single-file layout)
-      val target = staged.resolve(
-        if (srcFiles.size == 1) "events.parquet" else f.getFileName.toString)
-      if (!java.nio.file.Files.exists(target)) {
-        // copy to a unique temp name, then ATOMIC_MOVE into place: the
-        // target either doesn't exist or is a complete copy, even if a
-        // JVM dies mid-copy or two JVMs stage concurrently (the loser's
-        // move just finds the target already present)
-        val tmp = java.nio.file.Files.createTempFile(staged, ".stage_", ".tmp")
-        try {
-          java.nio.file.Files.copy(f, tmp,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          try java.nio.file.Files.move(tmp, target,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          catch { case _: java.nio.file.FileAlreadyExistsException => () }
-        } finally java.nio.file.Files.deleteIfExists(tmp)
-      }
+    val files = graft.sources.Snapshots.dataFiles(dir, "events")
+    require(files.nonEmpty, s"no parquet data files under $dir/events.parquet")
+    val staged = graft.sources.Snapshots.stage("stream", dir, Seq("events")) { tmp =>
+      files.foreach(f => java.nio.file.Files.copy(f, tmp.resolve(f.getFileName)))
     }
-    graft.Scratch.touch(staged) // in use: Scratch.cleanupStale ages by mtime
     val raw = spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
+      .schema(graft.sources.Tables.table(spark, dir, "events").schema)
       .parquet(staged.toString)
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
@@ -156,13 +93,12 @@ object StreamingOps {
     // under java.io.tmpdir — the contended shared disk — and every
     // micro-batch pays state-store delta/commit fsync latency there
     // (the streaming family's fixed cost is exactly this machinery).
-    // UNIQUE per run (pid + counter), never reused: a reused
-    // checkpoint would make a re-run resume from committed offsets
-    // and process nothing. Deleted in the finally — on tmpfs the
-    // recursive delete is microseconds, and leaking it would slowly
-    // eat the RAM-backed mount.
-    val chk = java.nio.file.Paths.get(graft.Scratch.tmpRoot,
-      s"graft_chk_${ProcessHandle.current().pid()}_${chkSeq.incrementAndGet()}")
+    // A per-process entry UNIQUE per run (pid + counter), never reused:
+    // a reused checkpoint would make a re-run resume from committed
+    // offsets and process nothing. Deleted in the finally — on tmpfs
+    // the recursive delete is microseconds, and leaking it would
+    // slowly eat the RAM-backed mount.
+    val chk = graft.Scratch.own("chk", chkSeq.incrementAndGet().toString)
     try {
       val q = sdf.writeStream
         .format("memory")
@@ -179,8 +115,7 @@ object StreamingOps {
         .flatMap(_.stateOperators).lastOption.map(_.numShufflePartitions)
     } finally {
       spark.conf.set(key, prev)
-      try graft.sources.Snapshots.deleteRecursively(chk)
-      catch { case _: Throwable => () }
+      graft.Scratch.deleteRecursively(chk)
     }
     spark.table(name)
   }
@@ -447,23 +382,14 @@ object StreamingOps {
     * merge on the same input.
     */
   def streamingCdcMerge(spark: SparkSession, dir: String): DataFrame = {
-    val staged = java.nio.file.Paths.get(
-      graft.Scratch.tmpRoot,
-      // v2: staged content changed when cdcBatch moved to max-derived
-      // insert keys — version the path so a pre-change staging (the
-      // _DONE marker outlives the JVM) can never be replayed
-      "graft_cdc_v2_" + Integer.toHexString(dir.hashCode))
     val rel = graft.operators.Relational
     val cdc = rel.cdcBatch(spark, dir)
-    if (!java.nio.file.Files.exists(staged.resolve("_DONE"))) {
-      java.nio.file.Files.createDirectories(staged)
-      for (b <- 0 to 1) {
+    val staged = graft.sources.Snapshots.stage("cdc", dir, Seq("orders")) { tmp =>
+      for (b <- 0 to 1)
         cdc.filter(pmod(xxhash64(col("o_orderkey")), lit(2)) === b)
           .coalesce(1).write.mode("overwrite")
-          .parquet(staged.resolve(s"batch$b").toString)
-      }
-      java.nio.file.Files.createFile(staged.resolve("_DONE"))
-    } else graft.Scratch.touch(staged)
+          .parquet(tmp.resolve(s"batch$b").toString)
+    }
     var state = rel.mergeTarget(spark, dir).localCheckpoint()
     val stream = spark.readStream
       .schema(cdc.schema)

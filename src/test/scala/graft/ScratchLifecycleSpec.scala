@@ -23,6 +23,14 @@ class ScratchLifecycleSpec extends AnyFunSuite {
     assert(Scratch.pidOf("graft_transport_12345_abc").contains(12345L))
     assert(Scratch.pidOf("graft_chk_7_99").contains(7L))
     assert(Scratch.pidOf("graft_chk_42").contains(42L))
+    assert(Scratch.pidOf("graft_warehouse_42").contains(42L))
+    assert(Scratch.pidOf("graft_sink_42_f03e707").contains(42L))
+    assert(Scratch.pidOf("graft_cbo_42").contains(42L))
+    assert(Scratch.pidOf("graft_warm_42").contains(42L))
+    // a stage's in-flight publish dir belongs to its writer
+    assert(Scratch.pidOf("graft_ratings_f03e707_1a2b.tmp.42").contains(42L))
+    // a published stage has no owner, even when its dir hash is all digits
+    assert(Scratch.pidOf("graft_ratings_12345678_1a2b").isEmpty)
     assert(Scratch.pidOf("graft_ratings_abc").isEmpty)
     assert(Scratch.pidOf("graft_stream_f03e707").isEmpty)
     assert(Scratch.pidOf("graft_scale").isEmpty)
@@ -64,6 +72,35 @@ class ScratchLifecycleSpec extends AnyFunSuite {
       isAlive = pid => pid == 222L) == 0)
     // degenerate root: no throw, zero deletions
     assert(Scratch.cleanupStale(Paths.get(root.toString, "missing")) == 0)
+    Scratch.deleteRecursively(root)
+  }
+
+  test("own names this JVM's per-process entry, which pidOf reads back") {
+    val self = ProcessHandle.current().pid()
+    assert(Scratch.own("sink", "ab").getFileName.toString == s"graft_sink_${self}_ab")
+    assert(Scratch.pidOf(Scratch.own("warehouse").getFileName.toString).contains(self))
+    assertThrows[IllegalArgumentException](Scratch.own("ratings"))
+  }
+
+  test("a dead pid's warehouse and sink entries are reaped at once") {
+    val root = Files.createTempDirectory("graft_scratch_spec")
+    val now = 1_000_000_000_000L
+    mk(root, "graft_warehouse_111", now)
+    mk(root, "graft_sink_111_f03e707", now)
+    mk(root, "graft_cbo_111", now)
+    assert(Scratch.cleanupStale(root, now = now, isAlive = _ => false) == 3)
+    assert(Scratch.entries(root).isEmpty, "a dead JVM's per-process entry survived")
+    Scratch.deleteRecursively(root)
+  }
+
+  test("a live pid's warehouse older than 48 h is kept") {
+    val root = Files.createTempDirectory("graft_scratch_spec")
+    val now = 1_000_000_000_000L
+    mk(root, "graft_warehouse_222", now - 100L * 3600 * 1000)
+    mk(root, "graft_sink_222_f03e707", now - 100L * 3600 * 1000)
+    assert(Scratch.cleanupStale(root, now = now, isAlive = _ == 222L) == 0)
+    assert(Files.exists(root.resolve("graft_warehouse_222")), "a live JVM's warehouse was aged out")
+    Scratch.deleteRecursively(root)
   }
 
   test("a stage reused after 48 h survives cleanupStale: reuse refreshes its mtime") {
@@ -82,5 +119,6 @@ class ScratchLifecycleSpec extends AnyFunSuite {
     assert(!Files.exists(root.resolve("graft_ratings_beef")), "unused stale stage survived")
     // a missing path is a no-op, never a throw
     Scratch.touch(root.resolve("missing"))
+    Scratch.deleteRecursively(root)
   }
 }

@@ -3,23 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (same config the driver's
-  * Verify/Bench mains use: UTC, ns-timestamps as long, small shuffle
-  * parallelism).
+/** Shared local SparkSession for all suites: the Verify/Bench mains'
+  * own session (`obs.Diag.session`) at local[4] with 4 shuffle
+  * partitions, so tests run on the same per-process warehouse and fast
+  * scratch and never write a spark-warehouse/ into the launch dir.
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = obs.Diag.session(cpus = "4")
   val sfDir = "/root/testdata/sf0.001"
 }
 

@@ -19,7 +19,7 @@ RUN="tools/run_main.sh"
 
 # corpora (synth is _DONE-gated, so this is a no-op when present).
 # The first call also compiles; its log holds either failure.
-if ! SPARK_GRAFT_REHEARSE_QIDS=none $RUN graft.ScaleRehearsal 1 10 \
+if ! SPARK_GRAFT_ONLY=none $RUN graft.ScaleRehearsal 1 10 \
   > "$OUT/synth.log" 2>&1; then
   echo "compile or synth FAILED:" >&2
   tail -20 "$OUT/synth.log" >&2
@@ -55,12 +55,12 @@ SPARK_GRAFT_NO_BCAST=1 $RUN graft.Audit serial 2>/dev/null \
 # ---- skewed corpora (r10): zipf event keys + Pareto-duplicate docs.
 # The namespaced replicas hold per-key group sizes constant; these
 # exercise the group-size axis real crawl data has. Same audits, zx dirs.
-SPARK_GRAFT_REHEARSE_SKEW=1 SPARK_GRAFT_REHEARSE_QIDS=none \
+SPARK_GRAFT_REHEARSE_SKEW=1 SPARK_GRAFT_ONLY=none \
   $RUN graft.ScaleRehearsal 1 10 > "$OUT/synth_skew.log" 2>&1
 Z1=/tmp/graft_scale/zx1; Z10=/tmp/graft_scale/zx10
 
 # The skew SERIAL legs run BEFORE the shuffle audit deliberately
-# (r13): snapshot-backed relations (graft_ratings_* in java.io.tmpdir)
+# (r13): snapshot-backed relations (the graft_ratings_* stages)
 # are built by each corpus dir's FIRST consumer, and the uniform
 # family's snapshots already exist by now (built during the uniform
 # serial-stage legs above). If the shuffle audit were the zx
