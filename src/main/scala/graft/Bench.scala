@@ -352,14 +352,8 @@ object Bench {
     if (!jvmRegime.ok)
       println(s"${jvmRegime.mismatch} - running in process; launch through tools/run_main.sh")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = obs.Diag.session()
-    // Scratch lifecycle (VERDICT r13 ask #8): bound graft_scratch growth
-    // before the run — dead processes' entries and stages unused for
-    // 48 h go now, untimed. See Scratch.cleanupStale.
-    locally {
-      val n = Scratch.cleanupStale()
-      if (n > 0) BuildLog.log(s"scratch cleanup: removed $n stale graft_* entries")
-    }
+    // the session build reaps stale scratch first, untimed
+    val spark = GraftSession.builder().local().build()
     // Warm the session once (codegen compiler, broadcast/shuffle thread
     // pools, parquet reader init) so the first measured query isn't
     // charged several seconds of one-time JVM setup, and build the
@@ -511,13 +505,12 @@ object Bench {
     // are intentionally reused across a family's queries, while storage
     // still never outlives a family — bounded memory AND no repeated
     // subplans. Sorted order also makes run-to-run timings comparable.
-    // dev-only filter (unset on the driver): run just the qids whose
-    // name starts with one of the comma-separated prefixes, under the
-    // exact bench conditions (prelude warms, family-boundary cache
-    // clears, sorted order)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+    // dev-only filter (SPARK_GRAFT_ONLY through Diag.selected, unset on
+    // the driver): run just the qids whose name starts with one of the
+    // comma-separated prefixes, under the exact bench conditions
+    // (prelude warms, family-boundary cache clears, sorted order)
+    val ordered = obs.Diag.selected(obs.Diag.allQids).map(q => q -> Registry.byId(q).fn)
+    val filtered = ordered.size < obs.Diag.allQids.size
     def family(name: String): String = name.takeWhile(_ != '_')
     // every JSON line of the run, in print order: the run's one artifact
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -585,9 +578,10 @@ object Bench {
     // BENCH_QUERIES_r<N>.jsonl at the next round's open
     // (tools/round_open.sh): both r7→r8 "suite maximum arrived unnoticed"
     // incidents trace to the full map living only in truncated stdout.
-    // A SPARK_GRAFT_ONLY run must not overwrite it with a partial map.
+    // A run over fewer qids (SPARK_GRAFT_ONLY) must not overwrite it
+    // with a partial map.
     val artifact =
-      if (only.isEmpty) "BENCH_QUERIES_LATEST.jsonl" else "target/bench_queries_filtered.jsonl"
+      if (filtered) "target/bench_queries_filtered.jsonl" else "BENCH_QUERIES_LATEST.jsonl"
     try java.nio.file.Files.write(java.nio.file.Paths.get(artifact),
       lines.map(_ + "\n").mkString.getBytes("UTF-8"))
     catch { case _: Throwable => () }

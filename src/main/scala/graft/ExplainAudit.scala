@@ -17,7 +17,7 @@ object ExplainAudit {
     // a fixed width of 4, whatever the host: the hashpartitioning
     // counts and skew splits in the committed docs/PLANS.txt then
     // compare across machines
-    val spark = obs.Diag.session(cpus = "4")
+    val spark = GraftSession.builder().local(4).build()
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val qids = if (args.nonEmpty) args.toSeq else Seq(
       "scan_pruned", "join_broadcast", "q1_pricing", "sim_cosine",
@@ -94,20 +94,11 @@ object SkewDemo {
     "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16k",
     "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8k")
 
-  /** Run `body` with the fixture-scale skew confs set, restoring the
-    * previous values afterwards. */
+  /** Run `body` with the fixture-scale skew confs (and `extra`) set,
+    * restoring the previous values afterwards. */
   def withSkewConfs[A](spark: SparkSession, extra: Map[String, String] = Map.empty)(
-      body: => A): A = {
-    val conf = spark.conf
-    val all = skewConfs ++ extra
-    val saved = all.keys.map(k => k -> conf.getOption(k)).toMap
-    all.foreach { case (k, v) => conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
-    }
-  }
+      body: => A): A =
+    GraftSession.withConfs(spark, (skewConfs ++ extra).toSeq: _*)(body)
 
   /** Execute the skewed join and return the final adaptive plan text. */
   def executedPlan(spark: SparkSession, dir: String): String =

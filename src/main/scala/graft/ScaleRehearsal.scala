@@ -89,10 +89,6 @@ object ScaleRehearsal {
     // with the stale marker still vouching — the exact hazard this
     // retraction exists to close)
     java.nio.file.Files.deleteIfExists(new java.io.File(out, "_DONE").toPath)
-    // drop any memoized base-table scans of this dir taken over the
-    // PREVIOUS corpus (dirs are "upgraded in place" in the same JVM,
-    // and Tables.table memoizes the file index per (app, dir, table))
-    graft.sources.Tables.invalidate(outDir)
     val docs = spark.read.parquet(s"$baseDir/documents.parquet")
     val embs = spark.read.parquet(s"$baseDir/embeddings.parquet")
     val docReps = (0 until scale).map { r =>
@@ -279,9 +275,6 @@ object ScaleRehearsal {
     }.reduce(_ unionByName _)
       .repartition(32).write.mode("overwrite")
       .parquet(s"$outDir/documents.parquet")
-    // the overwritten tables invalidate any memoized file index taken
-    // during synth()'s own writes in this JVM
-    graft.sources.Tables.invalidate(outDir)
     new java.io.File(out, "_DONE").createNewFile()
     new java.io.File(out, "_DONE_SKEW").createNewFile()
   }
@@ -289,7 +282,7 @@ object ScaleRehearsal {
   def main(args: Array[String]): Unit = {
     val skewMode = sys.env.contains("SPARK_GRAFT_REHEARSE_SKEW")
     val scales = if (args.nonEmpty) args.map(_.toInt).toSeq else Seq(1, 2, 5, 10)
-    val spark = obs.Diag.session()
+    val spark = GraftSession.builder().local().build()
     // warm codegen/ICU once so x1 isn't charged JVM setup
     spark.read.parquet(s"$baseDir/documents.parquet").limit(200)
       .select(md5(col("text")).as("h"), explode(split(col("text"), " ")).as("t"))

@@ -93,7 +93,8 @@ object Scratch {
     case _ => None
   }
 
-  /** Bound graft_scratch growth; the bench runs it before its sweep.
+  /** Bound graft_scratch growth; [[GraftSession]] runs it when it starts
+    * an application, before the first query.
     * Deletes every graft_* entry under `root` that is
     *  - pid-owned (a per-process entry or an in-flight stage tmp) by a
     *    dead process other than this one, whatever its age: nobody else

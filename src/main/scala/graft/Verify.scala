@@ -10,7 +10,7 @@ object Verify {
     val only = args.drop(2).toSet
     // every core by default: results are parallelism-independent by the
     // Det contract; this only shortens the wall time of the dump
-    val spark = obs.Diag.session()
+    val spark = GraftSession.builder().local().build()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => only.isEmpty || only(q._1)).foreach { case (name, fn) =>
       try {

@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    failure unless handed over to the caller ([[scope]]);
   *  - a family-shared build is a persisted DataFrame, materialized and
   *    timed once ([[cached]]) and memoized while its storage is live
-  *    ([[Memo]]);
+  *    ([[graft.Memo]]);
   *  - ids travel as Long or String and come back in their column's type
   *    ([[idType]], [[catalystId]]).
   */
@@ -84,23 +84,6 @@ object Blocks {
       case e: Throwable =>
         frame.unpersist(blocking = false)
         throw e
-    }
-  }
-
-  /** A family memo: one persisted DataFrame per (application, key). A
-    * hit requires a live storage level, so a clearCache just causes a
-    * rebuild and correctness never depends on cache residency. Each
-    * miss is logged to [[graft.BuildLog]] as "memo miss: `what`". */
-  final class Memo[K] {
-    private val built = scala.collection.concurrent.TrieMap.empty[(String, K), DataFrame]
-    def apply(spark: SparkSession, key: K, what: => String)(build: => DataFrame): DataFrame = {
-      val k = (spark.sparkContext.applicationId, key)
-      built.get(k).filter(_.storageLevel != StorageLevel.NONE).getOrElse {
-        graft.BuildLog.log(s"memo miss: $what")
-        val df = build
-        built.put(k, df)
-        df
-      }
     }
   }
 

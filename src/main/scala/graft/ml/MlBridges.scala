@@ -196,8 +196,6 @@ object MlBridges {
           (col("qn") * col("c.n")), 6).as("cos"))
   }
 
-  private val ivfMemo = new graft.blocks.Blocks.Memo[(String, Int, Option[Int])]
-
   /** FAMILY-SHARED full IVF candidate relation: [[ivfCandidates]] at
     * nprobeMax = nCells — every (query, candidate≠query) pair tagged
     * with its probe rank `pr` and exact rounded cosine. One
@@ -212,7 +210,7 @@ object MlBridges {
     * persisted SER (build-once, read-per-qid). */
   def ivfCandidatesShared(spark: SparkSession, dir: String, nCells: Int,
       qidBound: Option[Int]): DataFrame =
-    ivfMemo(spark, (dir, nCells, qidBound), s"ivfCandidatesShared ($dir, nCells=$nCells, band=$qidBound)") {
+    graft.Memo(spark, ("ivfCandidatesShared", dir, nCells, qidBound), s"ivfCandidatesShared ($dir, nCells=$nCells, band=$qidBound)") {
       ivfCandidates(spark, dir, nCells, nCells, qidBound)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     }

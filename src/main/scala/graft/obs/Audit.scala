@@ -83,7 +83,7 @@ object Audit {
 
   def main(args: Array[String]): Unit = {
     val audit = args.headOption.getOrElse("")
-    val spark = Diag.session()
+    val spark = graft.GraftSession.builder().local().build()
     if (sys.env.contains("SPARK_GRAFT_NO_BCAST")) {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
       spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
@@ -267,18 +267,16 @@ object Audit {
 
   private def shj(spark: SparkSession, dir1: String, dirK: String, k: Int, qids: Seq[String]): Int = {
     val w1 = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    def sweep(dir: String, width: Int): Map[String, Long] = {
-      spark.conf.set("spark.sql.shuffle.partitions", width)
-      Diag.sweep(spark, dir, qids, new ShjMeter)(_.collect()).map { case (q, builds) =>
-        println(s"  $q @ $dir width=$width shj_builds=${builds.size} " +
-          s"bytes/task=${builds.sorted.reverse.mkString(",")}")
-        q -> (if (builds.isEmpty) -1L else builds.max)
-      }.toMap
-    }
+    def sweep(dir: String, width: Int): Map[String, Long] =
+      graft.GraftSession.withConfs(spark, "spark.sql.shuffle.partitions" -> width.toString) {
+        Diag.sweep(spark, dir, qids, new ShjMeter)(_.collect()).map { case (q, builds) =>
+          println(s"  $q @ $dir width=$width shj_builds=${builds.size} " +
+            s"bytes/task=${builds.sorted.reverse.mkString(",")}")
+          q -> (if (builds.isEmpty) -1L else builds.max)
+        }.toMap
+      }
     println(s"== ShjBuildAudit 1x=$dir1 (width $w1) vs ${k}x=$dirK (width ${w1 * k})")
-    val (at1, atK) =
-      try (sweep(dir1, w1), sweep(dirK, w1 * k))
-      finally spark.conf.set("spark.sql.shuffle.partitions", w1)
+    val (at1, atK) = (sweep(dir1, w1), sweep(dirK, w1 * k))
     var bad = 0
     qids.foreach { q =>
       val (b1, bK) = (at1(q), atK(q))

@@ -6,37 +6,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-import graft.{Registry, Scratch}
+import graft.Registry
 
 /** The harness under the diagnostic mains (`graft.Audit`,
-  * `graft.Profile`, `ExplainAudit`, `ScaleRehearsal`, `Verify`) and
-  * `graft.Bench`: one session, one settle, one qid selection and one
-  * sweep. The live-plan walker and the plan measures are in [[Plans]].
+  * `graft.Profile`, `ScaleRehearsal`) and `graft.Bench`: one settle, one
+  * qid selection and one sweep, on the session `graft.GraftSession`
+  * builds. The live-plan walker and the plan measures are in [[Plans]].
   */
 object Diag {
-  /** `local[cpus]` with one shuffle partition per core, UTC, parquet
-    * TIMESTAMP(NANOS) read as long (`Tables.events` converts it), no UI,
-    * a per-process warehouse (`Scratch.own`) and shuffle/spill scratch on
-    * [[Scratch.fastRoot]] when the host has one (the shared-disk default
-    * charged 11–14 s of shuffle-write I/O wait to kilobyte exchanges
-    * under co-tenant disk load). `cpus` defaults to SPARK_GRAFT_CPUS or
-    * max(4, nproc). The engine's own extensions are not installed (that
-    * is `GraftSession`). `graft.Bench` runs on this session. */
-  def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.max(4, Runtime.getRuntime.availableProcessors()).toString)): SparkSession = {
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Scratch.own("warehouse").toString)
-    Scratch.fastRoot.foreach(builder.config("spark.local.dir", _))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
-
   /** Listener delivery is async and the bus drain is private API: poll
     * `count` every 30 ms until three reads in a row agree, at most 3 s. */
   def settle(count: => Int): Unit = {

@@ -40,7 +40,7 @@ object Profile {
     val regime = Bench.regime()
     if (!regime.ok) System.err.println(s"${regime.mismatch} - these timings carry a GC tax " +
       "graft.Bench's do not; launch through tools/run_main.sh")
-    val spark = Diag.session()
+    val spark = graft.GraftSession.builder().local().build()
     try run(spark, args.head, args.drop(1).toSeq) finally spark.stop()
   }
 

@@ -104,10 +104,9 @@ object LlmPipeline {
     * deserialized rows on the contended grading host, and reading a fat
     * deserialized spill cost more than recomputing; SER keeps the
     * resident bytes ~3× smaller and makes the disk-backed path compact.
-    * Memo contract: [[graft.blocks.Blocks.Memo]]. */
-  private val shingleBaseMemo = new Blocks.Memo[String]
+    * Memo contract: [[graft.Memo]]. */
   private[graft] def shingleBase(spark: SparkSession, dir: String): DataFrame =
-    shingleBaseMemo(spark, dir, s"shingleBase ($dir)") {
+    graft.Memo(spark, ("shingleBase", dir), s"shingleBase ($dir)") {
       // persisted ALREADY HASH-PARTITIONED on the shingle — the
       // inverted-index layout. Every shingle-keyed consumer (the df
       // census, the hot-set anti join, the basket groupBy, minhash's
@@ -145,9 +144,8 @@ object LlmPipeline {
     * the aggregation buffer exists) and per-basket pair volume is
     * ≤ DfCap² via the streaming double explode, never an in-row
     * materialized pair array. */
-  private val shingleBasketsMemo = new Blocks.Memo[String]
   private[graft] def shingleBaskets(spark: SparkSession, dir: String): DataFrame =
-    shingleBasketsMemo(spark, dir, s"shingleBaskets ($dir)") {
+    graft.Memo(spark, ("shingleBaskets", dir), s"shingleBaskets ($dir)") {
       // hot-set built inline, un-persisted: this aggregation runs
       // exactly once per basket build (itself memoized), so caching
       // the full (shingle, df) relation for the family's lifetime
@@ -229,13 +227,12 @@ object LlmPipeline {
     * (VERDICT r4 §Performance #4).
     *
     * Built by [[pairStatsOn]] from the documents table and memoized
-    * per (application, dir) ([[graft.blocks.Blocks.Memo]]): the second
+    * per (application, dir) ([[graft.Memo]]): the second
     * family member reuses it, a clearCache between the two calls
     * (Verify's per-query hygiene) just rebuilds, and the caller's
     * clearCache frees it (pageRank's contract). */
-  private val pairStatsMemo = new Blocks.Memo[String]
   private[graft] def shinglePairStats(spark: SparkSession, dir: String): DataFrame =
-    pairStatsMemo(spark, dir, s"shinglePairStats ($dir)")(pairStatsOn(Tables.documents(spark, dir), DfCap))
+    graft.Memo(spark, ("shinglePairStats", dir), s"shinglePairStats ($dir)")(pairStatsOn(Tables.documents(spark, dir), DfCap))
 
   /** [[shinglePairStats]] over any (doc_id, text) relation with df cap
     * `cap`, as ONE RDD lineage over the owner blocks of
@@ -727,10 +724,9 @@ object LlmPipeline {
     * term). dedup_simhash, dedup_simhash_recall and text_tfidf read this
     * ONE relation, so the documents are scanned and tokenized once per
     * family sweep. Built by [[docTermsOn]]; memo contract:
-    * [[graft.blocks.Blocks.Memo]]. */
-  private val docTermsMemo = new Blocks.Memo[String]
+    * [[graft.Memo]]. */
   private[graft] def docTerms(spark: SparkSession, dir: String): DataFrame =
-    docTermsMemo(spark, dir, s"docTerms ($dir)")(docTermsOn(Tables.documents(spark, dir)))
+    graft.Memo(spark, ("docTerms", dir), s"docTerms ($dir)")(docTermsOn(Tables.documents(spark, dir)))
 
   /** [[docTerms]] over any (doc_id, text) relation, in the doc-block
     * layout of [[pairStatsOn]]: the documents are spread once over

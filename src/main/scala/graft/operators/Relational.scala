@@ -1740,9 +1740,8 @@ object Relational {
     * real corpus scale this relation is exactly what a production
     * pipeline materializes ONCE per corpus as an ETL table; the
     * family-scope disk-backed cache is the single-node analog. */
-  private val coAllMemo = new graft.blocks.Blocks.Memo[String]
   private[graft] def coPurchaseAll(spark: SparkSession, dir: String): DataFrame =
-    coAllMemo(spark, dir, s"coPurchaseAll ($dir)") {
+    graft.Memo(spark, ("coPurchaseAll", dir), s"coPurchaseAll ($dir)") {
       val li = Tables.lineitem(spark, dir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       // Pair generation via per-order baskets, not a self-join: the
@@ -1802,9 +1801,8 @@ object Relational {
     * the cached [[coPurchaseAll]], the first canon consumer no longer
     * pays a full self-join. Memoized per (application, dir), the
     * shinglePairStats live-storage contract. */
-  private val coCanonMemo = new graft.blocks.Blocks.Memo[String]
   private[graft] def coPurchaseCanon(spark: SparkSession, dir: String): DataFrame =
-    coCanonMemo(spark, dir, s"coPurchaseCanon ($dir)") {
+    graft.Memo(spark, ("coPurchaseCanon", dir), s"coPurchaseCanon ($dir)") {
       coPurchasePairs(spark, dir)
         .filter(col("support") >= 2)
         .select(col("u"), col("v"))

@@ -63,18 +63,6 @@ object CboDemo {
         sum(round(col("l_quantity") * 100).cast("long")).as("qty_cents"))
       .orderBy(col("o_orderpriority"))
 
-  /** Run `body` with the given SQL confs, restoring previous values. */
-  def withConfs[A](spark: SparkSession, confs: Map[String, String])(body: => A): A = {
-    val conf = spark.conf
-    val saved = confs.keys.map(k => k -> conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => conf.set(k, v) }
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => conf.set(k, v)
-      case (k, None)    => conf.unset(k)
-    }
-  }
-
   /** Static (pre-execution) plan of the hint-free join with AQE off and
     * a threshold calibrated from the dim's ANALYZE'd size, with CBO on
     * or off. totalSize/8 sits between the pruned-but-unfiltered
@@ -87,10 +75,10 @@ object CboDemo {
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(dimTable))
       .stats.map(_.sizeInBytes.toLong)
       .getOrElse(sys.error(s"$dimTable has no ANALYZE'd stats — run setup first"))
-    withConfs(spark, Map(
+    graft.GraftSession.withConfs(spark,
       "spark.sql.adaptive.enabled" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> (totalSize / 8).toString,
-      "spark.sql.cbo.enabled" -> cbo.toString)) {
+      "spark.sql.cbo.enabled" -> cbo.toString) {
       filteredDimJoin(spark, dir).queryExecution.executedPlan.toString
     }
   }

@@ -37,7 +37,7 @@ object Snapshots {
 
   /** The data files of table `name` under `dir`: the `<name>.parquet`
     * file itself, or a multi-part directory's files by name (`_`/`.`
-    * entries are metadata, not data). */
+    * entries are metadata, not data); none when the table is absent. */
   def dataFiles(dir: String, name: String): Seq[Path] = {
     val src = Paths.get(dir, s"$name.parquet")
     if (Files.isDirectory(src))
@@ -45,18 +45,23 @@ object Snapshots {
         val n = p.getFileName.toString
         Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith(".")
       }.sortBy(_.getFileName.toString)
-    else Seq(src)
+    else Seq(src).filter(Files.isRegularFile(_))
   }
+
+  /** The content of `tables` under `dir`: each data file's table, name,
+    * size and mtime, read from file attributes (never a parquet footer).
+    * It names a stage and keys a memoized table scan. */
+  private[graft] def content(dir: String, tables: Seq[String]): Seq[(String, String, Long, Long)] =
+    tables.flatMap(t => dataFiles(dir, t).map { p =>
+      val a = Files.readAttributes(p, classOf[BasicFileAttributes])
+      (t, p.getFileName.toString, a.size(), a.lastModifiedTime().toMillis)
+    })
 
   /** Where the stage of `tables` under `dir` for `purpose` lives. */
   private[graft] def stagePath(purpose: String, dir: String, tables: Seq[String]): Path = {
     require(purpose.matches("[a-z]+") && !Scratch.ProcessKinds.contains(purpose),
       s"bad stage purpose: $purpose")
-    val content = tables.flatMap(t => dataFiles(dir, t).map { p =>
-      val a = Files.readAttributes(p, classOf[BasicFileAttributes])
-      (t, p.getFileName.toString, a.size(), a.lastModifiedTime().toMillis)
-    })
-    Paths.get(Scratch.tmpRoot, s"graft_${purpose}_${hex(dir)}_${hex(content)}")
+    Paths.get(Scratch.tmpRoot, s"graft_${purpose}_${hex(dir)}_${hex(content(dir, tables))}")
   }
 
   private def hex(key: Any): String = Integer.toHexString(key.hashCode)
@@ -97,7 +102,7 @@ object Snapshots {
       val n = p.getFileName.toString
       if (n.startsWith(prefix) && n != name && !n.contains(".tmp.")) {
         Scratch.deleteRecursively(p)
-        readMemo.filterInPlace { case ((_, q), _) => q != p.toString }
+        graft.Memo.forget(("stage", p.toString))
       }
     }
   }
@@ -112,20 +117,16 @@ object Snapshots {
 
   /** The stage `write` makes of `live`, read with `read`; `live` itself
     * when no stage can be published. Reads are memoized per
-    * (application, stage): a published stage never changes, and
-    * re-deriving the scan costs ~60 ms of driver file listing + footer
-    * read per call (the ratings view alone is read by ~20 qids). */
+    * (application, stage) in [[graft.Memo]]: a published stage never
+    * changes, and re-deriving the scan costs ~60 ms of driver file
+    * listing + footer read per call (the ratings view alone is read by
+    * ~20 qids). */
   def materialize(spark: SparkSession, purpose: String, dir: String, tables: Seq[String],
       live: => DataFrame,
       write: (DataFrame, String) => Unit,
       read: (SparkSession, String) => DataFrame): DataFrame =
     try {
       val path = stage(purpose, dir, tables)(tmp => write(live, tmp.toString)).toString
-      val app = spark.sparkContext.applicationId
-      readMemo.filterInPlace { case ((a, _), _) => a == app }
-      readMemo.getOrElseUpdate((app, path), read(spark, path))
+      graft.Memo(spark, ("stage", path), s"stage $path")(read(spark, path))
     } catch { case NonFatal(_) => live }
-
-  private val readMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
 }

@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
 /** Parquet readers for the driver-generated star schema + event/LLM tables
   * (`/root/testdata/sf*`; schemas in FIXTURES.md).
@@ -19,38 +21,20 @@ object Tables {
     Seq("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
   val allTables: Seq[String] = starTables ++ Seq("events", "documents", "embeddings")
 
-  /** Base relations are memoized per (application, dir, table):
-    * `spark.read.parquet` costs ~60 ms of driver-side file listing +
-    * footer schema read EVERY call (measured: 200 reads = 11.7 s), and
-    * a 183-query bench re-derives each base table hundreds of times —
-    * ~20 s of pure planning overhead for relations whose files never
-    * change during a run (the fixture dirs are read-only; rehearsal
-    * corpora are synthesized before first read in the same JVM). The
-    * memoized DataFrame is an unpersisted scan plan — no storage to
-    * invalidate, and reusing the SAME plan instance also lets Spark
-    * reuse plan fragments across queries. Keyed by applicationId so a
-    * fresh session never sees a stale index. */
-  private val tableMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String, String), DataFrame]
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val app = spark.sparkContext.applicationId
-    // evict dead applications' entries on the way in: a stopped
-    // session's memoized plans would otherwise pin its file-index
-    // state for the JVM lifetime (probe mains and test JVMs cycle
-    // sessions); only one application is ever live per JVM here, so
-    // other-app entries are garbage by construction
-    tableMemo.filterInPlace { case ((a, _, _), _) => a == app }
-    tableMemo.getOrElseUpdate((app, dir, name),
-      spark.read.parquet(s"$dir/$name.parquet"))
-  }
-
-  /** Drop every memoized scan under `dir` (any app, any table) —
-    * called by ScaleRehearsal.synth right after it retracts a
-    * rehearsal dir's _DONE marker, so the regeneration that follows
-    * can never race a memoized file index taken over the previous
-    * corpus ("upgraded in place" happens within one JVM). */
-  private[graft] def invalidate(dir: String): Unit =
-    tableMemo.filterInPlace { case ((_, d, _), _) => d != dir }
+  /** Base relations are memoized in [[graft.Memo]] per (application,
+    * table content): `spark.read.parquet` costs ~60 ms of driver-side
+    * file listing + footer schema read EVERY call (measured: 200 reads =
+    * 11.7 s), and a 183-query bench re-derives each base table hundreds
+    * of times. The memoized DataFrame is an unpersisted scan plan, and
+    * reusing the SAME plan instance also lets Spark reuse plan fragments
+    * across queries. The key carries the table's data file names, sizes
+    * and mtimes (file attributes, as a stage's name does), so a table
+    * rewritten in place is read again, never through a stale file
+    * index. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    graft.Memo(spark, ("table", dir, name, Snapshots.content(dir, Seq(name))), s"table $name ($dir)") {
+      spark.read.parquet(s"$dir/$name.parquet")
+    }
 
   def region(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "nation")
@@ -59,9 +43,10 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame      = table(spark, dir, "part")
   def orders(spark: SparkSession, dir: String): DataFrame    = table(spark, dir, "orders")
   def lineitem(spark: SparkSession, dir: String): DataFrame  = table(spark, dir, "lineitem")
-  /** events.ts arrives in whatever physical shape the fixture generator
-    * chose; normalize every shape to TimestampType (µs, UTC session) so the
-    * rest of the engine sees ONE type:
+  def events(spark: SparkSession, dir: String): DataFrame = timestamped(table(spark, dir, "events"))
+
+  /** `df` with its events `ts` column as TimestampType (µs, UTC session),
+    * whatever physical shape the fixture generator chose:
     *  - TIMESTAMP(NANOS,false) + `spark.sql.legacy.parquet.nanosAsLong=true`
     *    → LongType nanos-since-epoch → truncate to µs (same floor DuckDB
     *    applies when it down-converts ns),
@@ -69,18 +54,11 @@ object Tables {
     *    NTZ inference → reinterpret as UTC instant (sessions here pin
     *    session.timeZone=UTC, so the wall values are unchanged),
     *  - already TimestampType → pass through.
-    */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    val df = table(spark, dir, "events")
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
-          org.apache.spark.sql.functions.expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        df.withColumn("ts", org.apache.spark.sql.functions.col("ts")
-          .cast(org.apache.spark.sql.types.TimestampType))
-      case _ => df
-    }
+    * The batch scan and the event stream both read events through it. */
+  private[graft] def timestamped(df: DataFrame): DataFrame = df.schema("ts").dataType match {
+    case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
+    case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
+    case _ => df
   }
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")

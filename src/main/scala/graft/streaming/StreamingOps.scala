@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{ExpiredTimerInfo, GroupState,
-  GroupStateTimeout, OutputMode, StatefulProcessor, TTLConfig, TimeMode,
+import org.apache.spark.sql.streaming.{DataStreamWriter, ExpiredTimerInfo, GroupState,
+  GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TTLConfig, TimeMode,
   TimerValues, Trigger, ValueState}
 
 /** True Structured Streaming restatements of the reference's streaming
@@ -41,17 +41,9 @@ object StreamingOps {
     val staged = graft.sources.Snapshots.stage("stream", dir, Seq("events")) { tmp =>
       files.foreach(f => java.nio.file.Files.copy(f, tmp.resolve(f.getFileName)))
     }
-    val raw = spark.readStream
+    graft.sources.Tables.timestamped(spark.readStream
       .schema(graft.sources.Tables.table(spark, dir, "events").schema)
-      .parquet(staged.toString)
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
+      .parquet(staged.toString))
   }
 
   /** Shuffle width, and so state-store count, of every stateful stream
@@ -85,43 +77,45 @@ object StreamingOps {
     // this is the same knob sized UP to state volume ÷ executor
     // memory — it is per-deployment state sizing either way, not a
     // fixture hack.
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, StateParts.toString)
-    // Explicit per-run checkpoint dir on fast scratch (guide §6 /
-    // [[graft.Scratch]]): without it Spark places the temp checkpoint
-    // under java.io.tmpdir — the contended shared disk — and every
-    // micro-batch pays state-store delta/commit fsync latency there
-    // (the streaming family's fixed cost is exactly this machinery).
-    // A per-process entry UNIQUE per run (pid + counter), never reused:
-    // a reused checkpoint would make a re-run resume from committed
-    // offsets and process nothing. Deleted in the finally — on tmpfs
-    // the recursive delete is microseconds, and leaking it would
-    // slowly eat the RAM-backed mount.
+    val q = graft.GraftSession.withConfs(spark,
+        "spark.sql.shuffle.partitions" -> StateParts.toString) {
+      runAvailableNow(sdf)(_.format("memory").queryName(name).outputMode(mode))
+    }
+    // execution evidence of the pin for the spec: the state operator's
+    // partition count as the stream ACTUALLY ran it (None for stateless
+    // streams)
+    lastStateStoreParts = q.recentProgress.toSeq
+      .flatMap(_.stateOperators).lastOption.map(_.numShufflePartitions)
+    spark.table(name)
+  }
+
+  /** Start `sdf` on the sink `sink` sets up, run it to completion
+    * (AvailableNow) and return the stopped query: every stream the
+    * engine runs starts here. Its checkpoint is an explicit per-run dir
+    * on fast scratch (guide §6 / [[graft.Scratch]]): without one Spark
+    * places a temporary checkpoint under java.io.tmpdir — the contended
+    * shared disk — and every micro-batch pays state-store delta/commit
+    * fsync latency there (the streaming family's fixed cost is exactly
+    * this machinery). A per-process entry UNIQUE per run (pid +
+    * counter), never reused: a reused checkpoint would make a re-run
+    * resume from committed offsets and process nothing. Deleted in the
+    * finally — on tmpfs the recursive delete is microseconds, and
+    * leaking it would slowly eat the RAM-backed mount. */
+  private def runAvailableNow(sdf: DataFrame)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
     val chk = graft.Scratch.own("chk", chkSeq.incrementAndGet().toString)
     try {
-      val q = sdf.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
+      val q = sink(sdf.writeStream)
         .option("checkpointLocation", chk.toString)
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      // execution evidence of the pin for the spec: the state
-      // operator's partition count as the stream ACTUALLY ran it
-      // (None for stateless streams)
-      lastStateStoreParts = q.recentProgress.toSeq
-        .flatMap(_.stateOperators).lastOption.map(_.numShufflePartitions)
-    } finally {
-      spark.conf.set(key, prev)
-      graft.Scratch.deleteRecursively(chk)
-    }
-    spark.table(name)
+      q
+    } finally graft.Scratch.deleteRecursively(chk)
   }
 
-  /** Monotone suffix for [[runToTable]] checkpoint dirs — pid alone is
-    * not unique across the many runs inside one JVM. */
+  /** Monotone suffix for [[runAvailableNow]] checkpoint dirs — pid alone
+    * is not unique across the many runs inside one JVM. */
   private val chkSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** numShufflePartitions of the most recent stateful stream run
@@ -286,15 +280,16 @@ object StreamingOps {
     }
   }
 
+  /** The state store provider the state-v2 API requires, set for the
+    * duration of each `transformWithState` run. */
+  private val StateStoreProvider = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDb = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
   /** Run [[SessionProcessor]] (2-hour gap) over the event stream and
     * return every session closed either in-batch or by timer expiry. */
   def timerSessions(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    graft.GraftSession.withConfs(spark, StateStoreProvider -> RocksDb) {
       val gapUs = 2L * 3600 * 1000000
       val ev = eventStream(spark, dir)
         .withWatermark("ts", "10 minutes")
@@ -306,11 +301,6 @@ object StreamingOps {
         .toDF("user_id", "sess_start_us", "sess_end_us", "n_events")
       runToTable(spark, out, sinkName("timer_sessions", dir),
         OutputMode.Append())
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
     }
   }
 
@@ -318,11 +308,7 @@ object StreamingOps {
     * `transformWithState` and return the final per-user table. */
   def statefulUserAggV2(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    graft.GraftSession.withConfs(spark, StateStoreProvider -> RocksDb) {
       val ev: Dataset[(Long, Double)] = eventStream(spark, dir)
         .select(col("user_id"), col("value")).as[(Long, Double)]
       val out = ev.groupByKey(_._1)
@@ -331,11 +317,6 @@ object StreamingOps {
         .toDF("user_id", "n_events", "max_value")
       runToTable(spark, out, sinkName("stateful_v2", dir),
         OutputMode.Update())
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
     }
   }
 
@@ -395,16 +376,12 @@ object StreamingOps {
       .schema(cdc.schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(staged.toString + "/batch*")
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val next = rel.mergeStep(state, batch).localCheckpoint()
-        graft.operators.GraphOps.freeCheckpoint(state)
-        state = next
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    runAvailableNow(stream)(_.foreachBatch { (batch: DataFrame, _: Long) =>
+      val next = rel.mergeStep(state, batch).localCheckpoint()
+      graft.operators.GraphOps.freeCheckpoint(state)
+      state = next
+      ()
+    })
     state.groupBy(col("o_orderpriority"))
       .agg(count(lit(1)).as("n"), sum(col("price_cents")).as("total_cents"))
       .orderBy(col("o_orderpriority"))

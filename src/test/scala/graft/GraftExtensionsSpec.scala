@@ -83,16 +83,3 @@ class FuseDotSpec extends SparkSpec {
     } finally spark.experimental.extraOptimizations = prev
   }
 }
-
-/** GraftSession builder produces a working, function-registered session. */
-class GraftSessionSpec extends SparkSpec {
-  test("builder yields a session with graft functions registered") {
-    spark.range(1).count() // ensure the shared fixture session exists
-    // getOrCreate returns the shared test session; registration and
-    // configs must still apply to it
-    val s = GraftSession.builder().name("graft-test").build()
-    assert(s.conf.get("spark.sql.session.timeZone") === "UTC")
-    val d = s.sql("SELECT array_l2_norm(array(3.0D, 4.0D))").head().getDouble(0)
-    assert(d === 5.0)
-  }
-}

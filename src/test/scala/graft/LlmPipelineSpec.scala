@@ -72,11 +72,11 @@ class LlmPipelineSpec extends SparkSpec {
     ).toDF("id", "v")
     val n = df.withColumn("n",
       expr("sqrt(aggregate(transform(v, x -> x * x), 0D, (a, x) -> a + x))"))
-    val cos = n.as("a").join(n.as("b"), col("a.id") < col("b.id"))
+    val cos = unfused(n.as("a").join(n.as("b"), col("a.id") < col("b.id"))
       .select(col("a.id"), col("b.id"),
         (expr("aggregate(zip_with(a.v, b.v, (x, y) -> x * y), 0D, (acc, x) -> acc + x)") /
           (col("a.n") * col("b.n"))).as("cos"))
-      .orderBy(col("a.id"), col("b.id")).collect()
+      .orderBy(col("a.id"), col("b.id")))
     assert(cos(0).getDouble(2) === 0.0) // 1 vs 2
     assert(cos(1).getDouble(2) === 1.0) // 1 vs 3
     assert(cos(2).getDouble(2) === 0.0) // 2 vs 3

@@ -18,7 +18,7 @@ class PsAlgebraSpec extends SparkSpec {
       .withColumn("loss", greatest(lit(0.0), lit(1.0) - col("y") * col("wx")))
       .withColumn("tau", least(lit(0.5), col("loss") / col("xx")))
       .withColumn("new_margin", col("y") * col("wx") + col("tau") * col("xx"))
-    val r = df.head()
+    val r = unfused(df).head
     assert(r.getAs[Double]("loss") === 1.5)
     assert(r.getAs[Double]("tau") === 0.5)
     assert(r.getAs[Double]("new_margin") === 0.0)
@@ -33,7 +33,7 @@ class PsAlgebraSpec extends SparkSpec {
       .withColumn("q_new", expr(
         "transform(sequence(0, 1), j -> element_at(q, j + 1) + " +
           "0.1 * (e * element_at(p, j + 1) - 0.0 * element_at(q, j + 1)))"))
-    val r = df.head()
+    val r = unfused(df).head
     assert(r.getAs[Double]("e") === 1.5)
     assert(r.getAs[Seq[Double]]("q_new") === Seq(0.65, 0.5))
   }

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.sources.{Snapshots, Tables}
 import graft.streaming.StreamingOps
@@ -42,7 +43,6 @@ class ScratchPolicySpec extends SparkSpec {
       val first = Snapshots.stagePath("csv", dir, Seq("supplier"))
       assert(Files.exists(first.resolve("_SUCCESS")))
       writeSupplier(col("s_suppkey") % 2 === 0)
-      Tables.invalidate(dir) // the scan memo; a new JVM has none
       assert(suppliers() === Tables.supplier(spark, sfDir).filter(col("s_suppkey") % 2 === 0).count(),
         "source_csv replayed the stage of the old table")
       assert(!Files.exists(first), "the superseded stage survived")
@@ -85,6 +85,29 @@ class ScratchPolicySpec extends SparkSpec {
     assert(used.forall(d => d.size == 1 && d.head.nonEmpty && !d.head.contains(",")),
       s"each run must see exactly its own checkpoint dir: $used")
     assert(used(0) !== used(1), "a checkpoint dir was reused")
+  }
+
+  test("stream_live_cdc checkpoints under a graft_chk_<pid>_* entry that is gone after the qid") {
+    val prefix = s"graft_chk_${ProcessHandle.current().pid()}_"
+    val used = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+    // QueryStartedEvent reaches a session's listeners on the query's own
+    // thread as it starts: the checkpoint whose metadata carries the
+    // query's id is the one it runs on
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        Scratch.entries(root).filter { p =>
+          val meta = p.resolve("metadata")
+          p.getFileName.toString.startsWith(prefix) && Files.exists(meta) &&
+            Files.readString(meta).contains(e.id.toString)
+        }.foreach(used.add)
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    try assert(Registry.byId("stream_live_cdc").fn(spark, sfDir).collect().nonEmpty)
+    finally spark.streams.removeListener(listener)
+    assert(used.size === 1, s"the CDC stream ran on no per-run checkpoint under $root")
+    assert(!Files.exists(used.peek), s"${used.peek} survived the qid")
   }
 
   test("the Bench prelude's streaming warm leaves no scratch behind") {

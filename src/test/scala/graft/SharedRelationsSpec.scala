@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 /** Contract tests for the family-shared memoized relations
-  * (graft.blocks.Blocks.Memo and its callers): within a session the same
+  * (graft.Memo and its callers): within a session the same
   * persisted instance is reused; after a clearCache the memo must
   * REBUILD (detect the dead storage level), not hand back a handle to
   * dropped blocks — Verify's per-query clearCache hygiene and the
