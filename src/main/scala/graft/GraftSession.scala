@@ -19,9 +19,13 @@ import org.apache.spark.sql.SparkSession
   * the host has one (the shared-disk default charged 11–14 s of
   * shuffle-write I/O wait to kilobyte exchanges under co-tenant disk
   * load), logs at ERROR and carries the engine's SQL functions and
-  * optimizer rules (`GraftExtensions`). Each application it starts
-  * first reaps stale scratch ([[Scratch.cleanupStale]]): a killed JVM's
-  * per-process entries and stages unused for 48 h.
+  * optimizer rules (`GraftExtensions`). It turns off per-session
+  * artifact isolation, which gave every stream's cloned session its own
+  * executor classloader and so recompiled the stream's generated code
+  * on each run, and routes `file:` through the fork-free
+  * [[sources.LocalFs]] (docs/DESIGN.md "Session"). Each application it
+  * starts first reaps stale scratch ([[Scratch.cleanupStale]]): a killed
+  * JVM's per-process entries and stages unused for 48 h.
   *
   * On a cluster, drop the master call and submit normally; every
   * operator scales through partitioning, not through session config.
@@ -51,6 +55,9 @@ object GraftSession {
         // for sessions the builder actually constructs; registerOn
         // below covers the pre-existing-session path for functions
         .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+        // the engine adds no session artifact for isolation to protect
+        .config("spark.sql.artifact.isolation.enabled", "false")
+      sources.LocalFs.hadoopConfs.foreach { case (k, v) => b.config(s"spark.hadoop.$k", v) }
       Scratch.fastRoot.foreach(b.config("spark.local.dir", _))
       masterOpt.foreach(b.master)
       // default: one shuffle partition per core locally; on a cluster

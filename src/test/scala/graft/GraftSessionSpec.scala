@@ -1,7 +1,13 @@
 package graft
 
+import java.lang.management.ManagementFactory
+import java.net.URI
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.TimeUnit
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileContext, FileSystem}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
@@ -9,6 +15,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The session builder's per-JVM policy and the per-application memo.
   * Two tests stop the shared session and build the next one, so every
   * call here goes through `TestSpark.spark`, which returns the live one.
+  * What is decided only when a session is created (extensions, static
+  * confs, the Hadoop filesystem classes) is checked in a fresh JVM
+  * ([[FreshSessionProbe]]), which the shared session cannot show.
   */
 class GraftSessionSpec extends AnyFunSuite {
   private def spark: SparkSession = TestSpark.spark
@@ -69,5 +78,57 @@ class GraftSessionSpec extends AnyFunSuite {
       assert(!spark.sparkContext.isStopped)
       assert(!Files.exists(entry), s"$entry survived the session build")
     } finally Scratch.deleteRecursively(entry)
+  }
+
+  test("a fresh JVM's session fuses dot products, has graft SQL, LocalFs, no isolation") {
+    val (out, err) = (Files.createTempFile("graft_spec_probe", ".out"), Files.createTempFile("graft_spec_probe", ".err"))
+    try {
+      val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala
+        .filterNot(a => a.startsWith("-Xm") || a.startsWith("-XX:MaxNewSize"))
+      val cmd = Seq(Paths.get(sys.props("java.home"), "bin", "java").toString, "-Xms1g", "-Xmx1g") ++
+        jvmArgs ++ Seq("-cp", sys.props("java.class.path"), FreshSessionProbe.getClass.getName.stripSuffix("$"))
+      val p = new ProcessBuilder(cmd: _*).redirectOutput(out.toFile).redirectError(err.toFile).start()
+      val exited = p.waitFor(300, TimeUnit.SECONDS)
+      if (!exited) p.destroyForcibly()
+      assert(exited && p.exitValue == 0, Files.readAllLines(err).asScala.takeRight(20).mkString("\n"))
+      val lines = Files.readAllLines(out).asScala
+      val got = lines.flatMap(_.split("\t", 2) match {
+        case Array(k, v) => Some(k -> v)
+        case _ => None
+      }).toMap
+      assert(got === Map(
+        "fused" -> "true", "dots" -> "6.0,12.0", "sql" -> "16.0",
+        "fs" -> classOf[sources.LocalFs.FileSystem].getName,
+        "afs" -> classOf[sources.LocalFs.Fs].getName,
+        "isolation" -> "false", "isolation.new" -> "false"), lines.mkString("\n"))
+    } finally Seq(out, err).foreach(Files.deleteIfExists)
+  }
+}
+
+/** Builds the mains' session in its own JVM and prints, one `key\tvalue`
+  * line each, what the builder installed. */
+object FreshSessionProbe {
+  def main(args: Array[String]): Unit = {
+    val spark = GraftSession.builder().local(2).build()
+    try {
+      // range-derived arrays: literal rows would collapse to a
+      // LocalTableScan at plan time and hide the fused expression
+      val dot = spark.range(2)
+        .selectExpr("transform(sequence(0, 2), i -> cast(i + id AS double)) AS a",
+          "transform(sequence(0, 2), i -> 2.0D) AS b")
+        .selectExpr("aggregate(zip_with(a, b, (x, y) -> x * y), 0D, (acc, v) -> acc + v) AS dot")
+      val hadoop = spark.sparkContext.hadoopConfiguration
+      val isolation = "spark.sql.artifact.isolation.enabled"
+      Seq(
+        "fused" -> dot.queryExecution.optimizedPlan.exists(
+          _.expressions.exists(_.exists(_.isInstanceOf[functions.ArrayDotProduct]))),
+        "dots" -> dot.orderBy("dot").collect().map(_.getDouble(0)).mkString(","),
+        "sql" -> spark.sql("SELECT array_dot_product(array(2.0D), array(8.0D))").head().getDouble(0),
+        "fs" -> FileSystem.get(URI.create("file:///"), hadoop).getClass.getName,
+        "afs" -> FileContext.getLocalFSFileContext(hadoop).getDefaultFileSystem.getClass.getName,
+        "isolation" -> spark.conf.get(isolation),
+        "isolation.new" -> spark.newSession().conf.get(isolation)
+      ).foreach { case (k, v) => println(s"$k\t$v") }
+    } finally spark.stop()
   }
 }

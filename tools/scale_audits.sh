@@ -12,16 +12,22 @@ cd "$(dirname "$0")/.."
 OUT="${1:-/tmp/graft_audits}"
 mkdir -p "$OUT"
 
-# run_main.sh (sbt runMain) compiles first and stops on a failure:
+# One sbt start compiles and writes the forked run's JVM options and
+# classpath (build.sbt's runArgs); every main below is a plain java call
+# with them. A failed compile stops the battery here, before any audit:
 # running the audits on stale bytecode would "confirm" a fix while
 # measuring the pre-fix code
-RUN="tools/run_main.sh"
+if ! sbt -batch --error runArgs > "$OUT/compile.log" 2>&1; then
+  echo "compile FAILED:" >&2
+  tail -20 "$OUT/compile.log" >&2
+  exit 1
+fi
+RUN="java @target/run.args"
 
-# corpora (synth is _DONE-gated, so this is a no-op when present).
-# The first call also compiles; its log holds either failure.
+# corpora (synth is _DONE-gated, so this is a no-op when present)
 if ! SPARK_GRAFT_ONLY=none $RUN graft.ScaleRehearsal 1 10 \
   > "$OUT/synth.log" 2>&1; then
-  echo "compile or synth FAILED:" >&2
+  echo "synth FAILED:" >&2
   tail -20 "$OUT/synth.log" >&2
   exit 1
 fi
