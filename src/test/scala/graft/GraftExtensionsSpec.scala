@@ -14,6 +14,14 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(r.getDouble(0) === 11.0)
     assert(r.getDouble(1) === 5.0)
   }
+
+  test("extensions class injects into a fresh session") {
+    // the shared session already carries the extension, so the builder's
+    // spark.sql.extensions entry is checked on a session built in a new JVM
+    val got = FreshSessionProbe.report.get
+    assert(got.get("sql") === Some("16.0"), got)
+    assert(got.get("fused") === Some("true"), got)
+  }
 }
 
 /** Optimizer fusion of the HOF dot-product pattern into the native
@@ -49,5 +57,13 @@ class FuseDotSpec extends SparkSpec {
       .queryExecution.analyzed
     assert(!graft.plans.FuseArrayDotProduct(sumAgg).expressions.exists(_.exists(
       _.isInstanceOf[graft.functions.ArrayDotProduct])))
+  }
+
+  test("injected at runtime, fusion preserves results end to end") {
+    // a fresh JVM's session, so the rule comes from the extension alone;
+    // the HOF over range-derived arrays is FreshSessionProbe's `dot`
+    val got = FreshSessionProbe.report.get
+    assert(got.get("fused") === Some("true"), got)
+    assert(got.get("dots") === Some("6.0,12.0"), got)
   }
 }
