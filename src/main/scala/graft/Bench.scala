@@ -509,9 +509,9 @@ object Bench {
     // the driver): run just the qids whose name starts with one of the
     // comma-separated prefixes, under the exact bench conditions
     // (prelude warms, family-boundary cache clears, sorted order)
-    val ordered = obs.Diag.selected(obs.Diag.allQids).map(q => q -> Registry.byId(q).fn)
+    val names = obs.Diag.selected(obs.Diag.allQids)
+    val ordered = names.map(q => q -> Registry.byId(q).fn)
     val filtered = ordered.size < obs.Diag.allQids.size
-    def family(name: String): String = name.takeWhile(_ != '_')
     // every JSON line of the run, in print order: the run's one artifact
     val lines = scala.collection.mutable.ArrayBuffer.empty[String]
     def emit(line: String): Unit = { println(line); lines += line }
@@ -554,10 +554,7 @@ object Bench {
       val (st, bo) = hostDelta(hs0, procStat(), cpu)
       val r = QRes(name, sec, err, cpu, clk, gc, ac, st, bo)
       emit(r.json)
-      val lastOfFamily = i + 1 >= ordered.size ||
-        family(ordered(i + 1)._1) != family(name)
-      if (lastOfFamily)
-        try spark.catalog.clearCache() catch { case _: Throwable => () }
+      obs.Diag.endFamily(spark, names, i)
       r
     }
     val sweepWall = (System.nanoTime() - sweepT0) / 1e9

@@ -1,64 +1,15 @@
 package graft.ml
 
-import org.apache.spark.ml.classification.LinearSVC
-import org.apache.spark.ml.feature.MinHashLSH
-import org.apache.spark.ml.linalg.Vectors
-import org.apache.spark.ml.recommendation.ALS
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** MLlib capability bridges (SURVEY §7.3 step 8): the batch-native
-  * equivalents of the reference's three algorithm families, wired to the
-  * same fixture tables with fixed seeds.
-  *
-  *  - online matrix factorization  → `ml.recommendation.ALS`
-  *    (`PSOnlineMatrixFactorization` [K-high] trains the same latent
-  *    factor model; ALS is the bulk-synchronous batch estimator),
-  *  - passive-aggressive binary    → `ml.classification.LinearSVC`
-  *    (both optimize a hinge-loss linear separator),
-  *  - minhash similarity sketches  → `ml.feature.MinHashLSH`
-  *    (`approxSimilarityJoin` is the scale path for dedup_near).
-  *
-  * These are deliberately NOT in `SparkEntry.queries`: MLlib training
-  * emits solver-dependent floats that no cross-engine oracle can check.
-  * The ScalaTest suite asserts capability-level invariants (RMSE/accuracy
-  * thresholds, LSH recall of planted near-dup pairs) with fixed seeds.
+/** IVF approximate nearest neighbour over the embeddings: one
+  * sampled-anchor quantization and the candidate relations the sim ANN
+  * qids read (`sim_ann_ivf`, `sim_ann_ivf_sweep`, `sim_knn_graph`'s
+  * exact twin), plus [[ivfTopK]], the ranked form `IvfSpec` holds to the
+  * IVF recall contract.
   */
 object MlBridges {
-
-  /** ALS on the (user=o_custkey, item=l_partkey, rating=l_quantity)
-    * matrix — the MF capability bridge. */
-  def alsModel(spark: SparkSession, dir: String): DataFrame = {
-    val ratings = graft.sources.Tables.orders(spark, dir)
-      .select(col("o_orderkey"), col("o_custkey"))
-      .join(graft.sources.Tables.lineitem(spark, dir)
-        .select(col("l_orderkey"), col("l_partkey"), col("l_quantity")),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").cast("int").as("user"),
-        col("l_partkey").cast("int").as("item"),
-        col("l_quantity").cast("float").as("rating"))
-    val als = new ALS()
-      .setMaxIter(5).setRank(8).setRegParam(0.1).setSeed(42L)
-      .setUserCol("user").setItemCol("item").setRatingCol("rating")
-      .setColdStartStrategy("drop")
-    val model = als.fit(ratings)
-    model.transform(ratings)
-      .select(col("user"), col("item"), col("rating"), col("prediction"))
-  }
-
-  /** LinearSVC over the embeddings (binarized label) — the PA bridge. */
-  def svcAccuracy(spark: SparkSession, dir: String): Double = {
-    val toVec = udf((a: Seq[Float]) =>
-      Vectors.dense(a.map(_.toDouble).toArray))
-    val data = graft.sources.Tables.embeddings(spark, dir)
-      .select(when(col("label") >= 5, 1.0).otherwise(0.0).as("label"),
-        toVec(col("embedding")).as("features"))
-    val svc = new LinearSVC().setMaxIter(20).setRegParam(0.01)
-    val model = svc.fit(data)
-    val scored = model.transform(data)
-    scored.filter(col("label") === col("prediction")).count().toDouble /
-      scored.count().toDouble
-  }
 
   /** IVF (inverted-file) approximate nearest neighbor: a deterministic
     * sampled-anchor coarse quantizer (round 7 — was an MLlib KMeans
@@ -214,24 +165,4 @@ object MlBridges {
       ivfCandidates(spark, dir, nCells, nCells, qidBound)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     }
-
-  /** MinHashLSH approximate-similarity join over token sets — the
-    * near-dup scale path. Returns candidate pairs at Jaccard ≥ minJ
-    * (LSH distance = 1 − Jaccard estimate). */
-  def lshNearDups(spark: SparkSession, dir: String, minJ: Double): DataFrame = {
-    import org.apache.spark.ml.feature.CountVectorizer
-    val toks = graft.sources.Tables.documents(spark, dir)
-      .select(col("doc_id"), split(col("text"), " ").as("tokens"))
-    val cv = new CountVectorizer()
-      .setInputCol("tokens").setOutputCol("features").setBinary(true)
-      .setVocabSize(1 << 16)
-    val vecs = cv.fit(toks).transform(toks)
-    val mh = new MinHashLSH().setNumHashTables(8).setSeed(42L)
-      .setInputCol("features").setOutputCol("hashes")
-    val model = mh.fit(vecs)
-    model.approxSimilarityJoin(vecs, vecs, 1.0 - minJ, "dist")
-      .select(col("datasetA.doc_id").as("da"), col("datasetB.doc_id").as("db"),
-        round(lit(1.0) - col("dist"), 4).as("est_jaccard"))
-      .filter(col("da") < col("db"))
-  }
 }

@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 
-import graft.obs.{Diag, PlanMeter, Plans, ShjMeter}
+import graft.obs.{Diag, Plans}
 
 /** The empirical scale audits: `graft.Audit <audit> [dir...]`. Each is a
   * plan measure from [[obs.Plans]], taken per qid by [[obs.Diag.sweep]],
@@ -55,7 +55,7 @@ import graft.obs.{Diag, PlanMeter, Plans, ShjMeter}
   *    family's dirs, the 10× absolute volumes are compared across
   *    families: see [[crossFamily]].
   *  - `shj [dir1x] [dir10x] [k]`: the largest per-task build of every
-  *    ShuffledHashJoin ([[obs.ShjMeter]]) at k× data AND k× shuffle
+  *    ShuffledHashJoin ([[obs.Record.largestTask]]) at k× data AND k× shuffle
   *    width. A hash-distributed build stays flat; ~k× growth means one
   *    indivisible key group tracks the corpus. Exits 1 unless every
   *    build is `FLAT-OK`.
@@ -120,11 +120,12 @@ object Audit {
           case Seq(x, y) => x.sameResult(y); case _ => true
         })
         .map(g => s"${g.size}x ${g.head.outputPartitioning}").toSeq
-    val meter = new PlanMeter(p => (Plans.liveScans(p), missedReuses(p)))
     var flagged = 0
     var mainFlagged = 0
     var exchFlagged = 0
-    Diag.sweep(spark, dir, qids, meter)(_.collect()).foreach { case (name, execs) =>
+    val sweep = Diag.sweep(spark, dir, qids)(_.collect())
+      .map { case (q, r) => q -> r.plans.map(p => (Plans.liveScans(p), missedReuses(p))) }.toSeq
+    sweep.foreach { case (name, execs) =>
       // per file slice (tag stripped): the worst single execution (the
       // redundant-read signal), the total across executions (loop
       // context) and the tag multiset, so broadcast-choice duplicates
@@ -159,8 +160,8 @@ object Audit {
 
   private def broadcast(spark: SparkSession, dir1: String, dirK: String, qids: Seq[String]): Unit = {
     def sweep(dir: String): Map[String, Long] =
-      Diag.sweep(spark, dir, qids, new PlanMeter(Plans.broadcastRows))(_.collect())
-        .map { case (q, execs) => q -> execs.flatten.foldLeft(0L)(math.max) }.toMap
+      Diag.sweep(spark, dir, qids)(_.collect())
+        .map { case (q, r) => q -> r.plans.flatMap(Plans.broadcastRows).foldLeft(0L)(math.max) }.toMap
     val (at1, atK) = (sweep(dir1), sweep(dirK))
     var flagged = 0
     qids.map(q => (q, at1(q), atK(q), ratio(at1(q), atK(q)))).sortBy(-_._4).foreach { case (q, a, b, r) =>
@@ -174,9 +175,9 @@ object Audit {
 
   private def serial(spark: SparkSession, dir1: String, dirK: String, qids: Seq[String]): Unit = {
     def sweep(dir: String): Map[String, (String, Long)] =
-      Diag.sweep(spark, dir, qids, new PlanMeter(Plans.serialRows))(_.collect())
-        .map { case (q, execs) =>
-          q -> execs.flatten.foldLeft(("", 0L)) { case (mx, (c, r)) => if (r > mx._2) (c, r) else mx }
+      Diag.sweep(spark, dir, qids)(_.collect())
+        .map { case (q, r) =>
+          q -> r.plans.flatMap(Plans.serialRows).foldLeft(("", 0L)) { case (mx, (c, n)) => if (n > mx._2) (c, n) else mx }
         }.toMap
     val (at1, atK) = (sweep(dir1), sweep(dirK))
     val rows = qids.map { q =>
@@ -201,8 +202,8 @@ object Audit {
     // ratio table + SUPERLINEAR verdicts for one family's 1x/10x pair
     def familyReport(d1: String, dK: String): Seq[(String, Long, Long, Double)] = {
       def sweep(dir: String): Map[String, Long] =
-        Diag.sweep(spark, dir, qids, new PlanMeter(Plans.shuffleRows))(_.collect())
-          .map { case (q, execs) => q -> execs.sum }.toMap
+        Diag.sweep(spark, dir, qids)(_.collect())
+          .map { case (q, r) => q -> r.plans.map(Plans.shuffleRows).sum }.toMap
       val (a1, aK) = (sweep(d1), sweep(dK))
       val rs = qids.map(q => (q, a1(q), aK(q), ratio(a1(q), aK(q))))
       var flagged = 0
@@ -269,7 +270,8 @@ object Audit {
     val w1 = spark.conf.get("spark.sql.shuffle.partitions").toInt
     def sweep(dir: String, width: Int): Map[String, Long] =
       graft.GraftSession.withConfs(spark, "spark.sql.shuffle.partitions" -> width.toString) {
-        Diag.sweep(spark, dir, qids, new ShjMeter)(_.collect()).map { case (q, builds) =>
+        Diag.sweep(spark, dir, qids)(_.collect()).map { case (q, r) =>
+          val builds = r.plans.flatMap(Plans.shjBuilds).map(r.largestTask)
           println(s"  $q @ $dir width=$width shj_builds=${builds.size} " +
             s"bytes/task=${builds.sorted.reverse.mkString(",")}")
           q -> (if (builds.isEmpty) -1L else builds.max)
@@ -295,8 +297,8 @@ object Audit {
   }
 
   private def action(spark: SparkSession, dir: String, qids: Seq[String]): Unit = {
-    val counts = Diag.sweep(spark, dir, qids, new Profile.RunMeter)(_.count())
-      .map { case (q, run) => q -> run.executions }
+    val counts = Diag.sweep(spark, dir, qids)(_.count())
+      .map { case (q, r) => q -> r.executions }.toSeq
     counts.sortBy(-_._2).foreach { case (n, c) => println(f"$c%4d  $n") }
     println(s"total actions: ${counts.map(_._2).sum} over ${counts.size} qids")
   }

@@ -1,18 +1,12 @@
 package graft.obs
 
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.physical.SinglePartition
-import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{CoalesceExec, FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 import org.apache.spark.sql.execution.metric.SQLMetric
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The live-plan walker and the plan measures the audits stand on.
   *
@@ -99,8 +93,8 @@ object Plans {
     }
 
   /** The buildDataSize metric of every live ShuffledHashJoin in `p`. Its
-    * value is the sum over the join's tasks; [[ShjMeter]] reads the
-    * largest single task's update. */
+    * value is the sum over the join's tasks; [[Record.largestTask]] reads
+    * the largest single task's update. */
   private[graft] def shjBuilds(p: SparkPlan): Seq[SQLMetric] =
     live(p).flatMap {
       case j: ShuffledHashJoinExec => j.metrics.get("buildDataSize")
@@ -137,47 +131,5 @@ object Plans {
       case (c: CoalesceExec, parent) if c.numPartitions == 1 =>
         (s"$parent <- coalesce(1)", rowsBelow(c.child).getOrElse(-1L))
     }
-  }
-}
-
-/** For each live ShuffledHashJoin of every SQL execution, the largest
-  * build one task made: the largest per-task update of the join's
-  * buildDataSize accumulator, matched on the metric's id from task-end
-  * events. The metric's value is the sum over tasks, and sum / width is
-  * the mean, which stays flat when all the growth lands in one key
-  * group's partition — the build-overflow case the SHJ audit exists for.
-  * -1 for a join none of whose task updates arrived. */
-class ShjMeter extends SparkListener with QueryExecutionListener with Meter[Seq[Long]] {
-  private val builds = new ConcurrentLinkedQueue[java.lang.Long]()
-  private val taskMax = new ConcurrentHashMap[java.lang.Long, java.lang.Long]()
-  private val events = new AtomicInteger()
-  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-    Option(e.taskInfo).foreach(_.accumulables.foreach { a =>
-      a.update match {
-        case Some(v: Long) => taskMax.merge(a.id, v, (x, y) => math.max(x, y))
-        case _ => ()
-      }
-    })
-    events.incrementAndGet()
-  }
-  override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
-    Plans.shjBuilds(qe.executedPlan).foreach(m => builds.add(m.id))
-    events.incrementAndGet()
-  }
-  override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
-  def arrived: Int = events.get()
-  def take(): Seq[Long] = {
-    val ids = Iterator.continually(builds.poll()).takeWhile(_ != null).toSeq
-    val out = ids.map(id => Option(taskMax.get(id)).map(_.longValue).getOrElse(-1L))
-    taskMax.clear()
-    out
-  }
-  def attach(spark: SparkSession): Unit = {
-    spark.sparkContext.addSparkListener(this)
-    spark.listenerManager.register(this)
-  }
-  def detach(spark: SparkSession): Unit = {
-    spark.sparkContext.removeSparkListener(this)
-    spark.listenerManager.unregister(this)
   }
 }

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   *   - `Executed`: `executedPlan` after `collect()`, walked live through
   *     `obs.Plans.live` (adaptive wrappers, query stages and subqueries
   *     entered; reused exchanges and cached scans not);
-  *   - `Jobs`: `SchedulerCount` while the subject is built and counted.
+  *   - `Jobs`: the `obs.Recorder` record of the subject's build and count.
   *
   * Each subject is built once and collected at most once for all its
   * rows; the two registry-sweep rows read one `optimizedPlan` pass over
@@ -284,14 +284,14 @@ class PlanLockSpec extends SparkSpec {
     // exceptAll breaks these bounds.
     lock("the counter itself counts one execution per action (self-test)",
         toy { spark.range(10).count(); spark.range(10).agg(sum(col("id"))) }, Jobs)(v =>
-      assert(v.jobs.executions == 2, s"expected 2 executions, counted ${v.jobs.executions}")),
+      assert(v.record.executions == 2, s"expected 2 executions, counted ${v.record.executions}")),
     // chain 1 <- 2 <- ... <- 33. Its rounds are RDD jobs with no SQL
     // execution id, so this sees only the final count; RootedDepthSpec's
     // raw job count is the per-round lock
     lock("rootedDepth: at most 2 actions per round + init pair + output",
         toy(operators.GraphOps.rootedDepth((1L to 33L).map(p => (p, math.max(1L, p - 1))).toDF("node", "parent"))),
         Jobs) { v =>
-      val n = v.jobs.executions // runs the loop, which sets lastRounds
+      val n = v.record.executions // runs the loop, which sets lastRounds
       val rounds = operators.GraphOps.lastRounds
       assert(rounds >= 2)
       assert(n <= 2 * rounds + 3, s"$n actions for $rounds rounds")
@@ -301,7 +301,7 @@ class PlanLockSpec extends SparkSpec {
     lock("connectedComponents: 2 actions per round, exceptAll at most once",
         toy(operators.GraphOps.connectedComponents((1L to 15L).map(i => (i, i + 1)).toDF("src", "dst"))),
         Jobs) { v =>
-      val n = v.jobs.executions // runs the loop, which sets lastRounds
+      val n = v.record.executions // runs the loop, which sets lastRounds
       val rounds = operators.GraphOps.lastRounds
       assert(rounds >= 2)
       assert(n <= 2 * rounds + 4, s"$n actions for $rounds rounds")
@@ -311,7 +311,7 @@ class PlanLockSpec extends SparkSpec {
     lock("knnGraphEdges: 2 actions per round + bucket count + init pair + output",
         toy(operators.LlmPipeline.knnGraphEdges(spark, sfDir, k = 3, rounds = 2, bucketings = 2,
           bucketSize = 4, capRows = Some(64))), Jobs) { v =>
-      val n = v.jobs.executions
+      val n = v.record.executions
       assert(n <= 2 * 2 + 4, s"$n actions for <= 2 rounds")
       assert(n >= 4, s"suspiciously few actions ($n): did the loop run?")
     },
@@ -344,7 +344,7 @@ class PlanLockSpec extends SparkSpec {
     private lazy val df = build
     private lazy val planned = df.queryExecution.executedPlan.toString
     lazy val rows: Array[SqlRow] = { planned; df.collect() }
-    lazy val jobs: SchedulerCount.Counts = SchedulerCount(spark)(df.count())
+    lazy val record: obs.Record = obs.Recorder.during(spark)(df.count())
     def plan(phase: Phase): QueryPlan[_] = phase match {
       case Analyzed => df.queryExecution.analyzed
       case Cached => df.queryExecution.withCachedData
@@ -362,7 +362,7 @@ class PlanLockSpec extends SparkSpec {
     def logical: LogicalPlan = plan.asInstanceOf[LogicalPlan]
     def physical: SparkPlan = plan.asInstanceOf[SparkPlan]
     def rows: Array[SqlRow] = s.rows
-    def jobs: SchedulerCount.Counts = s.jobs
+    def record: obs.Record = s.record
     def at(other: Phase): View = new View(s, other)
     def pairs: Set[(Long, Long)] = rows.map(r => (r.getLong(0), r.getLong(1))).toSet
     def all[T: ClassTag]: Seq[T] = nodes(plan).collect { case t: T => t }

@@ -12,7 +12,7 @@ class RootedDepthSpec extends SparkSpec {
   private def chain = (1L to 33L).map(p => (p, math.max(1L, p - 1))).toDF("node", "parent")
 
   test("rootedDepth: at most one job per round, plus the output") {
-    val jobs = SchedulerCount(spark)(operators.GraphOps.rootedDepth(chain).count()).jobs
+    val jobs = obs.Recorder.during(spark)(operators.GraphOps.rootedDepth(chain).count()).jobs
     val rounds = operators.GraphOps.lastRounds
     assert(rounds >= 2, s"rounds = $rounds: did the loop run?")
     // one job per round (the first also builds the blocks) + the count

@@ -126,19 +126,13 @@ class SerialStageAuditSpec extends SparkSpec {
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false")
     val saved = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    val meter = new obs.ShjMeter
-    meter.attach(spark)
     try {
-      obs.Diag.settle(meter.arrived)
-      meter.take()
-      df.collect()
-      obs.Diag.settle(meter.arrived)
-      val largest = meter.take()
+      val r = obs.Recorder.during(spark)(df.collect())
+      val largest = r.plans.flatMap(obs.Plans.shjBuilds).map(r.largestTask)
       val sums = obs.Plans.shjBuilds(df.queryExecution.executedPlan).map(_.value)
       assert(sums.size == 1 && largest.size == 1, s"$sums $largest")
       assert(largest.head > sums.head / 4, s"largest task ${largest.head}, sum ${sums.head}")
     } finally {
-      meter.detach(spark)
       saved.foreach {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None) => spark.conf.unset(k)

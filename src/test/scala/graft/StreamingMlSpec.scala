@@ -4,9 +4,8 @@ import graft.ml.MlBridges
 import graft.streaming.StreamingOps
 import org.apache.spark.sql.functions._
 
-/** Capability proofs for the true-streaming and MLlib-bridge paths
-  * (SURVEY §7.3 steps 7–8): streaming results must equal their batch
-  * analogs; ML bridges must hit quality thresholds with fixed seeds.
+/** Capability proofs for the true-streaming paths (SURVEY §7.3 step 7):
+  * streaming results must equal their batch analogs.
   */
 class StreamingMlSpec extends SparkSpec {
 
@@ -132,33 +131,6 @@ class StreamingMlSpec extends SparkSpec {
       .orderBy("user_id").collect()
     assert(streamed.nonEmpty)
     assert(streamed.map(_.toString).toSeq === batch.map(_.toString).toSeq)
-  }
-
-  test("ALS bridge fits the ratings matrix to reasonable RMSE") {
-    val scored = MlBridges.alsModel(spark, sfDir).cache()
-    val rmse = math.sqrt(scored
-      .select(pow(col("rating") - col("prediction"), 2).as("e"))
-      .agg(avg("e")).head().getDouble(0))
-    val sd = graft.sources.Tables.lineitem(spark, sfDir)
-      .agg(stddev(col("l_quantity"))).head().getDouble(0)
-    assert(rmse < sd, s"ALS rmse $rmse should beat rating stddev $sd")
-  }
-
-  test("LinearSVC bridge trains and scores above majority class") {
-    val acc = MlBridges.svcAccuracy(spark, sfDir)
-    assert(acc > 0.5, s"accuracy $acc")
-  }
-
-  test("MinHashLSH recovers the planted near-dup pairs") {
-    val exact = operators.LlmPipeline.queries.find(_.id == "dedup_near").get
-      .fn(spark, sfDir).select("da", "db").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val lsh = MlBridges.lshNearDups(spark, sfDir, 0.5)
-      .select("da", "db").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(exact.nonEmpty)
-    val recall = exact.count(lsh.contains).toDouble / exact.size
-    assert(recall >= 0.9, s"LSH recall $recall over ${exact.size} planted pairs")
   }
 }
 

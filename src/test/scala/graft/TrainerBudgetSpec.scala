@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 
 /** Per-iteration job and shuffle budget of the two trainers, as the
@@ -19,8 +15,8 @@ import org.apache.spark.sql.functions._
 class TrainerBudgetSpec extends SparkSpec {
 
   private def count(body: => Unit): (Int, Int) = {
-    val c = SchedulerCount(spark)(body)
-    (c.jobs, c.shuffleStages)
+    val r = obs.Recorder.during(spark)(body)
+    (r.jobs, r.shuffleStages)
   }
 
   test("MfTrainer: <= 3 jobs and <= 2 shuffle stages per extra iteration") {
@@ -46,44 +42,5 @@ class TrainerBudgetSpec extends SparkSpec {
     val (j4, _) = run(4)
     assert(j4 > j2, s"no extra jobs for extra iterations ($j2 -> $j4): did the loop run?")
     assert(j4 - j2 <= 2 * 2, s"PaTrainer jobs: $j2 at 2 iterations, $j4 at 4")
-  }
-}
-
-/** Scheduler work while a body runs, from a SparkListener. */
-object SchedulerCount {
-
-  /** Jobs started, shuffle-map stages run, and distinct SQL execution
-    * ids among the started jobs: the job-launching actions, which unlike
-    * raw job counts do not depend on how AQE splits an action's stages. */
-  final case class Counts(jobs: Int, shuffleStages: Int, executions: Int)
-
-  /** The counts while `body` runs (listener delivery is async, so poll
-    * until stable). */
-  def apply(spark: org.apache.spark.sql.SparkSession)(body: => Unit): Counts = {
-    val jobs = new AtomicInteger
-    val shuffleStages = ConcurrentHashMap.newKeySet[Int]()
-    val executions = ConcurrentHashMap.newKeySet[String]()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        Option(j.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-          .foreach(executions.add)
-      }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskType == "ShuffleMapTask") shuffleStages.add(t.stageId)
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var last = Counts(-1, -1, -1)
-      var stable = 0
-      val deadline = System.nanoTime() + 5_000_000_000L
-      while (stable < 3 && System.nanoTime() < deadline) {
-        Thread.sleep(100)
-        val now = Counts(jobs.get, shuffleStages.size, executions.size)
-        if (now == last) stable += 1 else { stable = 0; last = now }
-      }
-      last
-    } finally spark.sparkContext.removeSparkListener(l)
   }
 }
