@@ -16,7 +16,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    hash blocks ([[owner]]);
   *  - a shuffle record is one input partition's batch for one block,
   *    never a per-record tuple ([[spread]]); the lineages move batches
-  *    with Spark's own pair-RDD shuffles on the session serializer;
+  *    with Spark's own pair-RDD shuffles on the session serializer.
+  *    Records a block must hold sorted go one record each through
+  *    Spark's spillable sort (`repartitionAndSortWithinPartitions`), so
+  *    no task has to hold a hot key's records at once;
   *  - every RDD a lineage persists is released on success and on
   *    failure unless handed over to the caller ([[scope]]);
   *  - a family-shared build is a persisted DataFrame, materialized and

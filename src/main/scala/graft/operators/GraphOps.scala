@@ -5,7 +5,7 @@ import scala.collection.mutable
 import graft.blocks.Blocks
 import org.apache.spark.{Partitioner, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.LogicalRDD
@@ -30,150 +30,119 @@ object GraphOps {
     * contraction (Kiveris et al., "Connected Components in MapReduce
     * and Beyond", SoCC 2014 — public algorithm).
     *
-    * Input: an edge list with two long columns `src`, `dst` (undirected
-    * semantics; direction, duplicates, and self-loops are normalized
-    * internally). Output: one row per distinct endpoint — (`id`, `lab`)
-    * where `lab` is the minimum node id of the component. Exact and
-    * deterministic, so a DuckDB recursive-CTE closure can oracle it
-    * (dedup_clusters).
+    * Input: an edge list with columns `src`, `dst`, read as longs
+    * (undirected semantics; direction and duplicates do not matter, and
+    * a row with a self-loop or a null endpoint is dropped). Output: one
+    * row per distinct endpoint — (`id`, `lab`) where `lab` is the
+    * minimum node id of the component. Exact and deterministic, so a
+    * DuckDB recursive-CTE closure can oracle it (dedup_clusters).
     *
     * Why stars and not min-label propagation (the round-3 shape): label
     * propagation's per-round message volume on a hot component is
     * O(degree of the hub) EVERY round until the whole component has
-    * converged, and the shortcut relation grows by O(nodes) per round.
-    * The star operations instead REPLACE the edge relation each round
-    * and provably never grow it: each round emits at most one edge per
-    * input edge (large-star) / per input edge + node (small-star), and
-    * duplicates collapse under `distinct`, so hot components shrink the
-    * relation geometrically instead of re-broadcasting it. Convergence
-    * is O(log^2 n) rounds worst-case, O(log n) observed.
+    * converged. The star operations instead REPLACE the edge set each
+    * round and never grow it, so hot components shrink geometrically.
+    * Convergence is O(log^2 n) rounds worst-case, O(log n) observed.
+    * Min-label pointer jumping (one routed pull per round, as in
+    * [[rootedDepth]]) was simulated and rejected: 369 to 638 rounds on
+    * 1,024-node paths with random ids, where the stars took 9 or 10.
     *
-    * Per-round shape: two groupBy-mins + two co-keyed joins over the
-    * current edge relation — all map-side combinable, all on the same
-    * (long, long) pairs. Convergence decision stays EXACT — a
-    * set-difference (`next EXCEPT cur` empty AND sizes match) — but
-    * the exact check is GATED behind a cheap fingerprint
-    * (count, Σ decimal(xxhash64(u,v))) computed by the same scalar job
-    * that materializes the round (round-8 restatement): a fingerprint
-    * that differs from the previous round's proves the relation
-    * changed (equal sets ⟹ equal fingerprint, deterministically), so
-    * exceptAll runs only on a fingerprint match — in practice exactly
-    * once, at the true fixpoint. A spurious fingerprint collision
-    * (changed set, same sum — possible in principle) merely runs one
-    * exceptAll that says "not converged"; it can never stop a round
-    * early, so the label-sum-aliasing hazard the earlier shape
-    * documented does not apply to the gate. Decimal(38,0) sums keep
-    * the Σhash exact and ANSI-overflow-free to ~10¹⁸ edges.
-    *
-    * Every round localCheckpoints LAZILY and the fingerprint action
-    * doubles as the checkpoint's final-stage materialization — the
-    * eager checkpoint's dedicated count pass is gone from every round
-    * (under AQE the round's exchange stages still materialize inside
-    * the checkpoint call; the fusion removes the extra sequential
-    * scans, each of which pays full scheduling latency on a contended
-    * host). Both star ops
-    * reference the edge relation twice (the group-min side and the
-    * emit side), so an uncut lineage DOUBLES per round — exponential
-    * logical-plan growth that OOMs plan stringification long before
-    * any data is at risk; the inputs a round reads are always the
-    * PREVIOUS round's already-materialized blocks.
-    * The previous round's checkpoint blocks are unpersisted EXPLICITLY
-    * once the next round is materialized (localCheckpointed RDDs are
-    * not in the CacheManager, so without this, block cleanup would wait
-    * on driver GC + ContextCleaner — O(edges) blocks per round can
-    * accumulate during long runs). Every 8th round the checkpoint is
-    * consumed through a stats-reset view ([[statsReset]]) so plan
-    * STATISTICS can't compound without bound either — with inherited
-    * stats an open-ended fixpoint squares sizeInBytes per round until
-    * BigInt stats arithmetic, not data, is the bottleneck. On a real
-    * cluster the same loop uses reliable checkpoint() to DFS every few
-    * rounds (the GraphFrames/GraphX iteration contract).
-    */
-  def connectedComponents(edges: DataFrame): DataFrame = {
-    val canonical = edges
-      .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
-      .filter(col("src") =!= col("dst"))
-      .select(least(col("src"), col("dst")).as("u"),
-        greatest(col("src"), col("dst")).as("v"))
-      .distinct()
-    // ck is the checkpointed handle (owns the blocks, freed per round);
-    // cur is its periodically stats-reset view (see statsReset: without
-    // it an open-ended fixpoint's plan statistics square every round)
-    // (count, Σ decimal-hash) change-gate — the one scalar job per
-    // round, doubling as the lazy checkpoint's materialization
-    def fingerprint(df: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = df.agg(count(lit(1)),
-        coalesce(sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")),
-          lit(java.math.BigDecimal.ZERO).cast("decimal(38,0)"))).first()
-      (r.getLong(0), r.getDecimal(1))
-    }
-    var ck = canonical.localCheckpoint(false)
-    var cur: DataFrame = ck
-    var (curSize, curHash) = fingerprint(ck)
+    * Layout ([[graft.blocks.Blocks]]): the edge set is held as arcs,
+    * (node, neighbour) records for both directions of each edge, at the
+    * owner block of the node and sorted there by Spark's spillable sort
+    * ([[sortedArcs]]). A round is two streaming passes over each node's
+    * run of distinct neighbours, each followed by one shuffle:
+    *  - large-star, at u: m = min(u, first neighbour), and every
+    *    neighbour v > u goes to owner(v) as (v, m);
+    *  - small-star, at v over those m's: with mn the first, (mn, v) and
+    *    (mn, u) for every other u are the next round's edges.
+    * A repeated arc is skipped where a run is read, so each round yields
+    * exactly the distinct edge set of one star round, and no per-node
+    * neighbour list is built: a hub's run streams through the task.
+    * The round's one job merges each block's new run against the
+    * previous round's; the loop stops at the first round that changes
+    * no block (the first round's job also builds the blocks). Each
+    * round's arcs are locally checkpointed and the previous round's are
+    * released once the merge has read them. At the fixpoint the edges
+    * are a star forest rooted at each component's minimum, so a node's
+    * label is the smaller of itself and its first neighbour. The
+    * returned frame reads the last round's blocks; [[freeCheckpoint]]
+    * on it releases them. */
+  def connectedComponents(edges: DataFrame): DataFrame = Blocks.scope { live =>
+    val spark = edges.sparkSession
+    val part = Blocks.owner(spark)
+    var cur = live.checkpoint(arcs(edges, part))
     var rounds = 0
-    var converged = curSize == 0L
-    while (!converged) {
-      val nextCk = ccRound(cur).localCheckpoint(false)
-      val next = statsResetEvery(rounds, nextCk)
-      val (nextSize, nextHash) = fingerprint(nextCk)
-      // exceptAll (the exact decider) runs ONLY on a fingerprint match —
-      // in practice once, at the true fixpoint; a differing fingerprint
-      // already proves the relation changed
-      val unchanged = nextSize == curSize && nextHash.compareTo(curHash) == 0 &&
-        next.exceptAll(cur).isEmpty
-      freeCheckpoint(ck)
-      ck = nextCk
+    var done = false
+    while (!done) {
+      val next = live.checkpoint(starRound(cur, part))
+      // the round's one job: per block, (no arc before it, no arc changed)
+      val probe = cur.zipPartitions(next) { (was, is) =>
+        val before = distinct(was).buffered
+        Iterator((!before.hasNext, before.sameElements(distinct(is))))
+      }.collect()
+      // an empty edge set takes no round
+      if (!probe.forall(_._1)) rounds += 1
+      done = probe.forall(_._2)
+      live.release(cur)
       cur = next
-      curSize = nextSize
-      curHash = nextHash
-      rounds += 1
-      converged = unchanged
     }
     lastRounds = rounds
-    // At the fixpoint the relation is a star forest rooted at each
-    // component's minimum: every edge is (root, member).
-    // roots needs no pre-distinct: the union's final distinct collapses
-    // the duplicate (root, root) rows — one exchange instead of two.
-    val leaves = cur.select(col("v").as("id"), col("u").as("lab"))
-    val roots = cur.select(col("u").as("id"), col("u").as("lab"))
-    leaves.unionByName(roots).distinct()
+    live.handOver(cur)
+    readout(spark, cur.mapPartitions(byNode(_) { (x, nbrs) =>
+      Iterator(new GenericInternalRow(Array[Any](x, math.min(x, nbrs.next()))))
+    }), cur, longs("id", "lab"))
   }
 
-  /** One large-star + small-star contraction round over a canonical
-    * (u < v, distinct) edge relation — extracted from the loop so its
-    * plan shape is lockable by test BEFORE the localCheckpoint cuts it
-    * out of the inspectable lineage (PlanLockSpec's "CC round body" row
-    * holds its one pure-distinct Aggregate at the root: the final
-    * set-restoring distinct; the two star group-mins carry min(), and a
-    * re-added intermediate dedup would be a second distinct). */
-  private[graft] def ccRound(cur: DataFrame): DataFrame = {
-    // Large-star: every node u connects its strictly-larger neighbors
-    // to min(N(u) ∪ {u}). Work from both edge directions so each
-    // node's full neighborhood is in one group.
-    val dirs = cur.unionByName(
-      cur.select(col("v").as("u"), col("u").as("v")))
-    val largeMin = dirs.groupBy("u").agg(min(col("v")).as("mn"))
-      .select(col("u"), least(col("mn"), col("u")).as("m"))
-    // m <= u < v, so (m, v) is already canonical and never a self-loop.
-    // NO intermediate distinct (round 8, −1 exchange/round): small-star's
-    // min-aggregation ignores duplicate rows and the round's FINAL
-    // distinct restores the set, so the result is identical; the
-    // duplicate multiset stays bounded (each `dirs` row emits ≤ 1 row
-    // here, so |afterLarge| ≤ 2·|cur| rows into the next two keyed ops —
-    // the star contraction's no-growth guarantee is about the SET, which
-    // the end-of-round distinct still enforces before the checkpoint).
-    val afterLarge = dirs.join(largeMin, "u")
-      .filter(col("v") > col("u"))
-      .select(col("m").as("u"), col("v"))
-    // Small-star: every node v connects its smaller-or-equal
-    // neighborhood N<=(v) ∪ {v} to its minimum. In canonical form the
-    // smaller neighbors of v are exactly the u's of edges (u, v).
-    val smallMin = afterLarge.groupBy("v").agg(min(col("u")).as("m"))
-    val attachSelf = smallMin.select(col("m").as("u"), col("v"))
-    val attachPeers = afterLarge.join(smallMin, "v")
-      .filter(col("u") =!= col("m"))
-      .select(col("m").as("u"), col("u").as("v"))
-    attachSelf.unionByName(attachPeers).distinct()
+  /** One large-star + small-star round: sorted arcs in, the next
+    * round's sorted arcs out. */
+  private[graft] def starRound(arcs: RDD[(Long, Long)], part: Partitioner): RDD[(Long, Long)] = {
+    val large = sortedArcs(arcs.mapPartitions(byNode(_) { (u, nbrs) =>
+      val first = nbrs.next()
+      val m = math.min(u, first)
+      (Iterator(first) ++ nbrs).filter(_ > u).map(v => (v, m))
+    }), part)
+    sortedArcs(large.mapPartitions(byNode(_) { (v, ms) =>
+      val mn = ms.next()
+      (Iterator(v) ++ ms).flatMap(x => Iterator((mn, x), (x, mn)))
+    }), part)
+  }
+
+  /** The edges (`src`, `dst`, cast to long) as sorted arcs, both
+    * directions of each; a row with a self-loop or a null endpoint is
+    * dropped, and a repeated edge repeats its arcs. */
+  private[graft] def arcs(edges: DataFrame, part: Partitioner): RDD[(Long, Long)] =
+    sortedArcs(edges.select(col("src").cast(LongType).as("src"), col("dst").cast(LongType).as("dst"))
+      .filter(col("src") =!= col("dst")).rdd
+      .flatMap(r => Iterator((r.getLong(0), r.getLong(1)), (r.getLong(1), r.getLong(0)))), part)
+
+  /** (node, neighbour) arcs at the owner block of the node, sorted by
+    * (node, neighbour) with Spark's spillable external sort. */
+  private def sortedArcs(arcs: RDD[(Long, Long)], part: Partitioner): RDD[(Long, Long)] =
+    arcs.map((_, ())).repartitionAndSortWithinPartitions(new Partitioner {
+      def numPartitions: Int = part.numPartitions
+      def getPartition(arc: Any): Int = part.getPartition(arc.asInstanceOf[(Long, Long)]._1)
+    }).keys
+
+  /** Sorted arcs without repeats. */
+  private def distinct(arcs: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    var last: (Long, Long) = null
+    arcs.filter(a => a != last && { last = a; true })
+  }
+
+  /** Per node of sorted arcs, `f(node, its distinct neighbours in
+    * increasing order)`. The neighbours stream from `arcs`, and what `f`
+    * leaves of a run is skipped. */
+  private def byNode[X](arcs: Iterator[(Long, Long)])(f: (Long, Iterator[Long]) => Iterator[X]): Iterator[X] = {
+    val in = distinct(arcs).buffered
+    Iterator.continually(in.hasNext).takeWhile(identity).flatMap { _ =>
+      val node = in.head._1
+      val run = new Iterator[Long] {
+        def hasNext: Boolean = in.hasNext && in.head._1 == node
+        def next(): Long = in.next()._2
+      }
+      f(node, run) ++ { run.foreach(_ => ()); Iterator.empty }
+    }
   }
 
   /** Fixed-iteration PageRank in e6-scaled integer arithmetic.
@@ -192,8 +161,8 @@ object GraphOps {
     * Scale: one co-keyed join + one groupBy-sum per iteration, the
     * canonical Pregel round as relational algebra. The caller fixes
     * the iteration count (the qid unrolls the SAME three rounds in its
-    * DuckDB oracle); an open-ended convergence loop would add the
-    * localCheckpoint regimen of [[connectedComponents]]. Σ(85·r) stays
+    * DuckDB oracle); an open-ended convergence loop would run on owner
+    * blocks, as [[connectedComponents]] does. Σ(85·r) stays
     * far under Long range until ~10¹¹ nodes; a decimal widening is the
     * escape hatch beyond. */
   def pageRank(edges: DataFrame, iters: Int): DataFrame = {
@@ -367,10 +336,13 @@ object GraphOps {
         "a dangling parent orphaned a subtree (input is not a closed " +
         "forest) — validate parents against nodes upstream")
       live.handOver(cur)
-      val nodeField = parents.schema("node")
-      GraftColumnBridge.dataFrame(spark, new DepthRows(cur, nodeType),
-        StructType(Seq(nodeField, StructField("root", nodeType, nullable = false),
-          StructField("depth", LongType, nullable = false))))
+      val typed = Blocks.catalystId(nodeType)
+      readout(spark, cur.mapPartitions(_.flatMap { b =>
+        b.nodes.indices.iterator.filter(b.anc(_) != null).map { i =>
+          new GenericInternalRow(Array[Any](typed(b.nodes(i)), typed(b.anc(i)), b.d(i)))
+        }
+      }), cur, StructType(Seq(parents.schema("node"), StructField("root", nodeType, nullable = false),
+        StructField("depth", LongType, nullable = false))))
     })
 
   /** One hash block of [[rootedDepth]]'s state: its node keys with a
@@ -453,95 +425,75 @@ object GraphOps {
     }
   }
 
-  /** The (node, root, depth) rows of converged blocks, node and root
-    * converted back to `nodeType`. Unpersisting it releases the blocks,
-    * so [[freeCheckpoint]] on the frame over it frees them. */
-  private final class DepthRows(blocks: RDD[NodeBlock], nodeType: DataType)
-      extends RDD[InternalRow](blocks) {
-    override protected def getPartitions: Array[Partition] = blocks.partitions
-    override def compute(split: Partition, ctx: TaskContext): Iterator[InternalRow] = {
-      val typed = Blocks.catalystId(nodeType)
-      blocks.iterator(split, ctx).flatMap { b =>
-        b.nodes.indices.iterator.filter(b.anc(_) != null).map { i =>
-          new GenericInternalRow(Array[Any](typed(b.nodes(i)), typed(b.anc(i)), b.d(i)))
-        }
-      }
-    }
-    override def unpersist(blocking: Boolean): this.type = {
-      blocks.unpersist(blocking)
-      super.unpersist(blocking)
-    }
+  /** A frame of `schema` whose rows are `rows`, read off `blocks` that
+    * a lineage handed over: unpersisting its RDD releases `blocks`, so
+    * [[freeCheckpoint]] on the frame frees them. The one readout of
+    * [[rootedDepth]], [[connectedComponents]] and [[boundedBfs]]. */
+  private def readout(spark: SparkSession, rows: RDD[InternalRow], blocks: RDD[_],
+      schema: StructType): DataFrame =
+    GraftColumnBridge.dataFrame(spark, new BlockRows(rows, blocks), schema)
+
+  private final class BlockRows(rows: RDD[InternalRow], @transient blocks: RDD[_]) extends RDD[InternalRow](rows) {
+    override protected def getPartitions: Array[Partition] = rows.partitions
+    override def compute(split: Partition, ctx: TaskContext): Iterator[InternalRow] = rows.iterator(split, ctx)
+    override def unpersist(blocking: Boolean): this.type = { blocks.unpersist(blocking); super.unpersist(blocking) }
   }
 
-  /** Bounded-hop BFS frontier relaxation from `srcDf` (a 1-row (node)
-    * relation) over undirected edges `und` (u, v; the caller persists
-    * it — all `hops` rounds read it): each round is one co-keyed join
-    * + one min-groupBy (the Bellman-Ford round as relational algebra).
-    * Returns (node, dist) for every node reached within `hops`.
+  private def longs(names: String*): StructType = StructType(names.map(StructField(_, LongType, nullable = false)))
+
+  /** Hop distances within `hops` hops from a source over undirected
+    * `edges` (`src`, `dst`, read as in [[connectedComponents]]):
+    * (node, dist) for every node reached, the source at 0. With no
+    * `source`, it is the node of most distinct neighbours, ties to the
+    * smallest id (graph_shortest_path's rule), and an edge set with no
+    * edge gives no row.
     *
-    * localCheckpoint every SECOND round: without any cut the rounds
-    * nest into a ~40-operator plan that Catalyst re-optimizes
-    * wholesale (measured 15.7 s -> ~4 s at sf0.1 when per-round
-    * checkpoints were introduced), because each round references the
-    * previous frontier TWICE (join side + union side) — plan size
-    * doubles per uncut round. But a per-ROUND eager checkpoint buys
-    * that cut with one sequential Spark action per round, and two
-    * nested rounds are only ~4x one round's operators — well inside
-    * Catalyst's budget. Checkpointing on even rounds keeps the
-    * doubling bounded at one level while halving the loop's action
-    * count (8 -> 5 job-bearing actions for graph_shortest_path,
-    * measured by ActionAudit — the contended-driver axis, same
-    * motivation as the r8 fused probes). Blocks of the previous
-    * checkpoint are freed only after the next eager checkpoint has
-    * materialized (the lazy in-between round still reads them until
-    * then). Split out of graph_shortest_path (r9) so the bench
-    * prelude can warm the round shape on a toy graph. */
-  private[graft] def boundedBfs(und: DataFrame, srcDf: DataFrame,
-      hops: Int): DataFrame = {
-    var ck = srcDf.select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint()
-    var dist = ck
-    for (r <- 1 to hops) {
-      val nxt = dist.join(und, col("node") === col("u"))
-        .select(col("v").as("node"), (col("dist") + 1).as("dist"))
-      val stepped = dist.unionByName(nxt)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-      if (r % 2 == 0) {
-        val next = stepped.localCheckpoint()
-        freeCheckpoint(ck)
-        ck = next
-        dist = next
-      } else dist = stepped
+    * Layout: the sorted arcs of [[connectedComponents]], persisted; the
+    * build job materializes them and picks the source (a given source
+    * needs no build job). Each block holds the reached nodes it owns
+    * with their distance. A hop is one pass over each block's arcs: a
+    * frontier node (at distance hop - 1) pushes its neighbours at
+    * distance hop to their owner blocks, in one batch per block with
+    * the block's own reached nodes, and each owner keeps a node's least
+    * distance: one shuffle. The hops are one RDD lineage, run by the
+    * first action on the result, and have no plan to re-optimize. The
+    * arcs are the only persisted RDD; [[freeCheckpoint]] on the result
+    * releases them. */
+  private[graft] def boundedBfs(edges: DataFrame, hops: Int, source: Option[Long] = None): DataFrame =
+    Blocks.scope { live =>
+      val spark = edges.sparkSession
+      val part = Blocks.owner(spark)
+      val adj = live.persist(arcs(edges, part))
+      // the most neighbours, then the smallest id: the least (-degree, node)
+      val src = source.orElse(adj.mapPartitions(byNode(_)((x, nbrs) => Iterator((-nbrs.size.toLong, x)))
+        .minOption.iterator).collect().minOption.map(_._2))
+      val start = adj.mapPartitionsWithIndex((b, _) =>
+        Iterator(mutable.LongMap.from(src.filter(part.getPartition(_) == b).map(_ -> 0L))))
+      val reached = (1L to hops).foldLeft(start)(bfsHop(adj, _, _, part))
+      live.handOver(adj)
+      readout(spark, reached.mapPartitions(_.next().iterator.map { case (x, d) =>
+        new GenericInternalRow(Array[Any](x, d))
+      }), adj, longs("node", "dist"))
     }
-    dist
-  }
 
-  /** Rebuild a checkpointed DataFrame from its RDD, RESETTING inherited
-    * statistics. LogicalRDD carries the checkpointed plan's stats, and
-    * an iterative loop whose round plan self-joins the previous round
-    * SQUARES sizeInBytes every round — past ~25 rounds Catalyst's
-    * BigInt stats arithmetic dominates wall time outright (found as a
-    * hang in SizeInBytesOnlyStatsPlanVisitor on a cyclic input to a
-    * self-joining pointer-doubling loop, round 5). The rebuilt
-    * Dataset's stats fall back to the session default CONSTANT.
-    * Cost: one row-encoder pass over the
-    * relation at next materialization — measured +20–50% per ROUND on
-    * the converging fixpoints (dedup_clusters 10.5 → 12.6 s at sf0.1
-    * when applied every round), which is why callers apply it
-    * PERIODICALLY ([[statsResetPeriod]]): rounds between resets
-    * compound the ~60-bit base by at most 2^8 — a ≤ 15 Kbit integer,
-    * microseconds of BigInt math — so converging loops (≤ 7 rounds)
-    * pay nothing and open-ended 100 TB fixpoints still get flat
-    * planning cost. The returned plan still reads the checkpoint
-    * blocks; free them via [[freeCheckpoint]] on the ORIGINAL
-    * checkpointed handle. */
-  private def statsReset(ck: DataFrame): DataFrame =
-    ck.sparkSession.createDataFrame(ck.rdd, ck.schema)
-
-  /** Apply [[statsReset]] on every `statsResetPeriod`-th round. */
-  private val statsResetPeriod = 8
-  private def statsResetEvery(round: Int, ck: DataFrame): DataFrame =
-    if (round % statsResetPeriod == statsResetPeriod - 1) statsReset(ck) else ck
+  /** One hop: each block's frontier pushes its neighbours at distance
+    * `hop`, batched per owner block with the block's reached nodes, and
+    * each owner keeps a node's least distance. */
+  private def bfsHop(adj: RDD[(Long, Long)], reached: RDD[mutable.LongMap[Long]], hop: Long,
+      part: Partitioner): RDD[mutable.LongMap[Long]] =
+    adj.zipPartitions(reached) { (as, rs) =>
+      val r = rs.next()
+      Blocks.spread(part)(mutable.LongMap[Long]()) { to =>
+        r.foreachEntry((x, d) => to(x)(x) = d)
+        as.foreach { case (x, y) => if (r.getOrElse(x, -1L) == hop - 1) to(y).getOrElseUpdate(y, hop) }
+      }(m => (m.keys.toArray, m.values.toArray))
+    }.partitionBy(part).mapPartitions { batches =>
+      val r = mutable.LongMap[Long]()
+      batches.foreach { case (_, (xs, ds)) =>
+        xs.indices.foreach(i => r(xs(i)) = math.min(ds(i), r.getOrElse(xs(i), Long.MaxValue)))
+      }
+      Iterator(r)
+    }
 
   /** Free the block store of a localCheckpointed DataFrame explicitly
     * (its RDD is persisted outside the CacheManager, so `unpersist` on

@@ -2687,9 +2687,9 @@ object LlmPipeline {
     * edge set is a filter + projection of the one cached basket
     * relation, with no pair join at all. Labels
     * converge via [[GraphOps.connectedComponents]] (alternating
-    * large-star/small-star contraction, O(log² n) rounds worst case
-    * with per-round edge volume that never grows, localCheckpoint
-    * lineage truncation — scale contract documented there). Output:
+    * large-star/small-star contraction on owner blocks, O(log² n)
+    * rounds worst case with per-round edge volume that never grows,
+    * one job per round — scale contract documented there). Output:
     * (doc_id, cluster_id = min doc in component, cluster_size) —
     * engine-independent, so the DuckDB recursive-CTE closure oracles
     * the whole fixpoint exactly.
@@ -2700,10 +2700,10 @@ object LlmPipeline {
     // pair — no rare-postings subset, no self-join, just a filter +
     // projection of the family's shared basket relation. (df=2 ≤ DfCap,
     // so the capped universe contains every rare shingle.)
-    // NO distinct here: connectedComponents canonicalizes AND distincts
-    // its input as round 0 (two shingles sharing the same 2-doc basket
-    // collapse there), so a pre-dedup is one extra exchange of the edge
-    // relation for an identical result.
+    // NO distinct here: connectedComponents skips repeated edges where
+    // it reads its sorted arcs (two shingles sharing the same 2-doc
+    // basket collapse there), so a pre-dedup is one extra exchange of
+    // the edge relation for an identical result.
     val edges = shingleBaskets(spark, dir)
       .filter(size(col("docs")) === 2)
       .select(col("docs").getItem(0).as("src"),

@@ -1981,33 +1981,18 @@ object Relational {
     * tie-broken — the hub anchors the giant component; the min-id
     * anchor tried first sat in a 2-node islet and proved nothing) —
     * "how many co-purchase steps away is everything from this anchor".
-    * Six rounds of frontier relaxation, each one co-keyed join + one
-    * min-groupBy (the Bellman-Ford round as relational algebra; same
-    * bounded-iteration contract as graph_pagerank — an open-ended
-    * variant would add connectedComponents' localCheckpoint regimen).
-    * The source is carried as a BROADCAST 1-row aggregate, never a
-    * driver-side scalar. The oracle is a DuckDB recursive CTE whose
-    * UNION-distinct frontier mirrors the same 6-hop bound; output is
-    * the per-distance census with an order-free node checksum.
-    * Unreached-within-6 nodes are absent on both sides by construction. */
-  def graphShortestPath(spark: SparkSession, dir: String): DataFrame = {
-    val canon = coPurchaseCanon(spark, dir)
-    val und = canon.unionByName(
-        canon.select(col("v").as("u"), col("u").as("v")))
-      // six relaxation rounds read it; also feeds the RETURNED lazy
-      // plan's final join, so freed by the caller's clearCache / LRU
-      // eviction (pageRank's contract), not by this operator
-      .persist()
-    val srcDf = und.groupBy(col("u")).agg(count(lit(1)).as("d"))
-      .orderBy(col("d").desc, col("u")).limit(1)
-      .select(col("u").as("node"))
-    // loop body (and its biennial-checkpoint regimen) lives in
-    // GraphOps.boundedBfs so the bench prelude can warm it on a toy
-    // graph; the measured trade-offs are documented there
-    GraphOps.boundedBfs(und, srcDf, hops = 6).groupBy(col("dist"))
+    * Six hops of frontier push on owner blocks ([[GraphOps.boundedBfs]],
+    * which also picks the source, in its block build job; same
+    * bounded-iteration contract as graph_pagerank). The oracle is a
+    * DuckDB recursive CTE whose UNION-distinct frontier mirrors the
+    * same 6-hop bound; output is the per-distance census with an
+    * order-free node checksum. Unreached-within-6 nodes are absent on
+    * both sides by construction. */
+  def graphShortestPath(spark: SparkSession, dir: String): DataFrame =
+    GraphOps.boundedBfs(coPurchaseCanon(spark, dir).select(col("u").as("src"), col("v").as("dst")), hops = 6)
+      .groupBy(col("dist"))
       .agg(count(lit(1)).as("n_nodes"), sum(col("node")).as("node_sum"))
       .orderBy(col("dist"))
-  }
 
   private val graphShortestPathOracle =
     """WITH RECURSIVE li AS (

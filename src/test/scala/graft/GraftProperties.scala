@@ -226,6 +226,33 @@ object GraftProperties extends Properties("graft") {
       got == expected
     }
 
+  /** Reference bounded BFS: hop distances within `hops` of `source`, or
+    * of the node of most distinct neighbours (ties to the smallest id),
+    * none if there is no edge. */
+  private def bfsDist(edges: List[(Long, Long)], source: Option[Long], hops: Int): Map[Long, Long] = {
+    val adj = edges.filter(e => e._1 != e._2).flatMap { case (a, b) => List(a -> b, b -> a) }
+      .distinct.groupMap(_._1)(_._2)
+    source.orElse(adj.toSeq.map { case (x, ns) => (-ns.size, x) }.minOption.map(_._2)).fold(Map.empty[Long, Long]) { s =>
+      (1 to hops).foldLeft((Map(s -> 0L), Set(s))) { case ((dist, frontier), h) =>
+        val next = frontier.flatMap(adj.getOrElse(_, Nil)).filterNot(dist.contains)
+        (dist ++ next.map(_ -> h.toLong), next)
+      }._1
+    }
+  }
+
+  property("GraphOps.boundedBfs == sequential BFS on random graphs") =
+    // nodes 0..9 (10 and 11 never have an edge), 0..3 hops, sometimes no
+    // edge at all, sometimes the max-degree source
+    forAll(Gen.frequency(1 -> Gen.const(Nil), 9 -> Gen.chooseNum(1, 15).flatMap(m =>
+          Gen.listOfN(m, Gen.zip(Gen.chooseNum(0L, 9L), Gen.chooseNum(0L, 9L))))),
+        Gen.option(Gen.chooseNum(0L, 11L)), Gen.chooseNum(0, 3)) { (edges, source, hops) =>
+      import spark.implicits._
+      val dist = operators.GraphOps.boundedBfs(edges.toDF("src", "dst"), hops, source)
+      val got = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      operators.GraphOps.freeCheckpoint(dist)
+      got == bfsDist(edges, source, hops)
+    }
+
   property("GraphOps.rootedDepth == sequential walk on random forests") =
     // parent(i) uniform below i (node 0 is the root): the same random
     // recursive tree family hier_depth derives from md5 — here against

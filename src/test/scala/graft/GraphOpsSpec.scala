@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Unit semantics for GraphOps.connectedComponents on synthetic graphs
+/** Unit semantics for the GraphOps operators on synthetic graphs
   * where the answer is known by construction (the dedup_clusters qid
   * then cross-engine-verifies the same loop against a DuckDB recursive
   * CTE on real fixture data).
@@ -25,10 +25,31 @@ class GraphOpsSpec extends SparkSpec {
     assert(lab === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L))
   }
 
+  test("one star round turns the fork 1-2, 1-3, 2-4 into the star at 1") {
+    import operators.GraphOps
+    // large-star sends 2 and 3 to 1, and 4 to min(2, 1) = 1; small-star
+    // then gives each (1, leaf) edge as arcs in both directions
+    val part = blocks.Blocks.owner(spark)
+    val round = GraphOps.starRound(GraphOps.arcs(edges(1L -> 2L, 1L -> 3L, 2L -> 4L), part), part)
+    assert(round.collect().toSet === Set(1L -> 2L, 2L -> 1L, 1L -> 3L, 3L -> 1L, 1L -> 4L, 4L -> 1L))
+  }
+
   test("disjoint components keep separate minimum labels") {
     val lab = labelsOf(edges(10L -> 11L, 11L -> 12L, 20L -> 21L, 30L -> 31L))
     assert(lab === Map(10L -> 10L, 11L -> 10L, 12L -> 10L,
       20L -> 20L, 21L -> 20L, 30L -> 30L, 31L -> 30L))
+  }
+
+  test("the star-forest readout labels paths 1-2-3 and 5-6 with no plan aggregate") {
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    val out = operators.GraphOps.connectedComponents(edges(1L -> 2L, 2L -> 3L, 5L -> 6L))
+    try {
+      // the readout skips repeated arcs in the block stream; a DataFrame
+      // distinct on it would add an exchange to every call
+      assert(out.queryExecution.optimizedPlan.collect { case a: Aggregate => a }.isEmpty)
+      assert(out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+        Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L))
+    } finally operators.GraphOps.freeCheckpoint(out)
   }
 
   test("direction, duplicates, and self-loops do not matter") {
@@ -42,9 +63,12 @@ class GraphOpsSpec extends SparkSpec {
     assert(lab.values.toSet === Set(1L))
     assert(lab.size === 64)
     // diameter 63; alternating stars must beat label propagation's
-    // ~diameter rounds by a wide margin (observed: ~6)
+    // ~diameter rounds by a wide margin (observed: 7)
     assert(operators.GraphOps.lastRounds <= 16,
       s"took ${operators.GraphOps.lastRounds} rounds for a 64-node path")
+    // a 40-node path still takes several rounds
+    assert(labelsOf(edges((1L until 40L).map(i => i -> (i + 1)): _*)) === (1L to 40L).map(_ -> 1L).toMap)
+    assert(operators.GraphOps.lastRounds >= 3, s"rounds = ${operators.GraphOps.lastRounds}")
   }
 
   test("a hot hub component (star of 200 leaves) converges in few rounds") {
@@ -166,19 +190,11 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("bounded BFS relaxation: exact hop distances on a lollipop graph") {
-    import spark.implicits._
     // triangle 1-2-3 with a tail 3-4-5-6: dist from 1 = 0,1,1,2,3,4
-    val canon = Seq(1L -> 2L, 2L -> 3L, 1L -> 3L, 3L -> 4L, 4L -> 5L,
-      5L -> 6L).toDF("u", "v")
-    val und = canon.unionByName(canon.select(col("v").as("u"), col("u").as("v")))
-    var dist = und.agg(min(col("u")).as("node")).select(col("node"), lit(0L).as("dist"))
-    for (_ <- 1 to 6) {
-      val nxt = dist.join(und, col("node") === col("u"))
-        .select(col("v").as("node"), (col("dist") + 1).as("dist"))
-      dist = dist.unionByName(nxt)
-        .groupBy(col("node")).agg(min(col("dist")).as("dist"))
-    }
+    val lollipop = edges(1L -> 2L, 2L -> 3L, 1L -> 3L, 3L -> 4L, 4L -> 5L, 5L -> 6L)
+    val dist = operators.GraphOps.boundedBfs(lollipop, hops = 6, source = Some(1L))
     val got = dist.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    operators.GraphOps.freeCheckpoint(dist)
     assert(got === Map(1L -> 0L, 2L -> 1L, 3L -> 1L, 4L -> 2L,
       5L -> 3L, 6L -> 4L))
   }

@@ -7,7 +7,6 @@ import scala.util.matching.Regex
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row => SqlRow}
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, Md5, ScalaUDF}
-import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateExpression
 import org.apache.spark.sql.catalyst.plans.{Cross, Inner, QueryPlan}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.{LogicalRDD, RDDScanExec, SparkPlan}
@@ -182,27 +181,6 @@ class PlanLockSpec extends SparkSpec {
     },
 
     // ---- optimized plans of toy inputs -----------------------------------
-    // the star-forest readout is leaves ∪ roots under a single distinct; a
-    // pre-distinct on either branch re-adds an exchange to every CC call
-    lock("connectedComponents epilogue: exactly one Aggregate (one distinct)",
-        toy(operators.GraphOps.connectedComponents(Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("src", "dst"))),
-        Optimized) { v =>
-      assert(v.all[Aggregate].size == 1, "a redundant pre-distinct is back, or the final distinct was dropped")
-      assert(v.pairs == Set((1L, 1L), (2L, 1L), (3L, 1L), (5L, 5L), (6L, 5L)))
-    },
-    // the loop checkpoints each round, so the round body is locked directly.
-    // The logical tree duplicates shared subplans, so the stable property is
-    // the kind: the star group-mins carry min(), a distinct carries no
-    // aggregate function, and the only distinct is the round's root
-    lock("CC round body: the only pure-distinct Aggregate is the final one",
-        toy(operators.GraphOps.ccRound(Seq((1L, 2L), (1L, 3L), (2L, 4L)).toDF("u", "v"))), Optimized) { v =>
-      val pureDistincts = v.all[Aggregate].filterNot(_.aggregateExpressions.exists(
-        _.exists(_.isInstanceOf[AggregateExpression])))
-      assert(pureDistincts.size == 1, "an intermediate dedup is back (>1) or the final distinct was dropped (0)")
-      assert(v.logical.isInstanceOf[Aggregate] && pureDistincts.head.eq(v.logical),
-        "the pure-distinct Aggregate is not the plan root")
-      assert(v.pairs == Set((1L, 2L), (1L, 3L), (1L, 4L)))
-    },
     // pins the UDF scan's descent into cached plans, so the family row
     // cannot go blind if Spark's cache substitution changes shape
     lock("the lock actually sees through InMemoryRelation (self-test)",
@@ -279,9 +257,10 @@ class PlanLockSpec extends SparkSpec {
     },
 
     // ---- job budgets: distinct job-launching SQL executions --------------
-    // Each loop round spends two: the lazy checkpoint call and the fused
-    // probe. A third per-round action, an eager count pass or a per-round
-    // exceptAll breaks these bounds.
+    // A knnGraphEdges round spends two: the lazy checkpoint call and the
+    // fused probe; a third per-round action or an eager count pass breaks
+    // its bound. The block loops' rounds are RDD jobs: their raw job
+    // budgets are in RootedDepthSpec and GraphBlocksSpec.
     lock("the counter itself counts one execution per action (self-test)",
         toy { spark.range(10).count(); spark.range(10).agg(sum(col("id"))) }, Jobs)(v =>
       assert(v.record.executions == 2, s"expected 2 executions, counted ${v.record.executions}")),
@@ -295,16 +274,6 @@ class PlanLockSpec extends SparkSpec {
       val rounds = operators.GraphOps.lastRounds
       assert(rounds >= 2)
       assert(n <= 2 * rounds + 3, s"$n actions for $rounds rounds")
-    },
-    // 16-node path: init pair + rounds x (ckpt, fingerprint) + ONE
-    // fingerprint-gated exceptAll + the output
-    lock("connectedComponents: 2 actions per round, exceptAll at most once",
-        toy(operators.GraphOps.connectedComponents((1L to 15L).map(i => (i, i + 1)).toDF("src", "dst"))),
-        Jobs) { v =>
-      val n = v.record.executions // runs the loop, which sets lastRounds
-      val rounds = operators.GraphOps.lastRounds
-      assert(rounds >= 2)
-      assert(n <= 2 * rounds + 4, s"$n actions for $rounds rounds")
     },
     // bucket count + init pair + rounds x (ckpt, probe) + the output;
     // early convergence only lowers it
@@ -364,7 +333,6 @@ class PlanLockSpec extends SparkSpec {
     def rows: Array[SqlRow] = s.rows
     def record: obs.Record = s.record
     def at(other: Phase): View = new View(s, other)
-    def pairs: Set[(Long, Long)] = rows.map(r => (r.getLong(0), r.getLong(1))).toSet
     def all[T: ClassTag]: Seq[T] = nodes(plan).collect { case t: T => t }
     def scans: Int = obs.Plans.liveScans(physical).size
     def hits(s: String): Int = Regex.quote(s).r.findAllIn(text).size
